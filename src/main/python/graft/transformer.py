@@ -56,19 +56,16 @@ _PARAMS = {
     # grid-strategy extensions (beyond the reference's 12-param surface)
     "gridCellDeg": ("grid cell size in degrees for broadcast='none'; "
                     "empty = density-derived", "setGridCellDeg", ""),
-    "gridFallbackBelow": ("grid nearest: unresolved-row count below which "
-                          "the exhaustive fallback runs; empty = default",
-                          "setGridFallbackBelow", ""),
-    "gridInitialHorizon": ("grid nearest: first-round search horizon in "
-                           "cells; empty = default",
-                           "setGridInitialHorizon", ""),
     "gridKnn": ("grid nearest: k for k-nearest — up to k ranked rows per "
                 "input row plus a trailing knn_rank column; empty/1 = "
                 "plain nearest; requires predicate=nearest and "
                 "broadcast='none'", "setGridKnn", ""),
-    "joinType": ("'inner' (default) or 'left': keep every input row, "
+    "joinType": ("'inner' (default); 'left': keep every input row, "
                  "nulling the appended external columns (and distance) "
-                 "when nothing matches; requires broadcast != 'input'",
+                 "when nothing matches; 'semi' / 'anti': input rows with / "
+                 "without a match, input schema only (not with "
+                 "predicate=nearest); non-inner types require "
+                 "broadcast != 'input'",
                  "setJoinType", "inner"),
 }
 

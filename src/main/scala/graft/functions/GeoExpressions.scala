@@ -37,14 +37,6 @@ object GeoExpressions {
   def gridCells(wkb: Column, cellDeg: Double, expandMeters: Double = 0): Column =
     ColumnBridge.column(GridCells(ColumnBridge.expression(wkb), cellDeg, expandMeters))
 
-  /** The unique "emit" cell of a candidate pair: the cell containing the
-    * reference point (max of the two expanded-envelope minima). A pair
-    * sharing k cells passes `gridCells` k times; filtering on
-    * `cell === refCell` keeps exactly one copy with no extra shuffle. */
-  def refCell(lwkb: Column, rwkb: Column, cellDeg: Double, lExpandMeters: Double = 0): Column =
-    ColumnBridge.column(RefCell(ColumnBridge.expression(lwkb), ColumnBridge.expression(rwkb),
-      cellDeg, lExpandMeters))
-
   /** Annulus cell ids (lo < Chebyshev distance <= hi) around a center
     * cell id, clamped to the grid bounds — the expanding-ring nearest
     * join's probe set. A native expression, NOT a literal (dx, dy) offset
@@ -73,9 +65,12 @@ object GeoExpressions {
   def stEnvelope(wkb: Column): Column =
     ColumnBridge.column(StEnvelope(ColumnBridge.expression(wkb)))
 
-  /** Reference-cell dedup id from the two per-ROW envelope arrays —
-    * bit-identical to [[refCell]] (same helpers on the same doubles)
-    * without the two per-PAIR WKB parses. */
+  /** The unique "emit" cell of a candidate pair: the cell containing the
+    * reference point (max of the two expanded-envelope minima). A pair
+    * sharing k cells passes `gridCells` k times; filtering on
+    * `cell === refCellEnv` keeps exactly one copy with no extra shuffle.
+    * Computed from the two per-ROW envelope arrays (stEnvelope columns),
+    * so no pair parses WKB. */
   def refCellEnv(lenv: Column, renv: Column, cellDeg: Double,
       lExpandMeters: Double = 0): Column =
     ColumnBridge.column(RefCellEnv(ColumnBridge.expression(lenv),
@@ -179,14 +174,6 @@ object GeoExpressions {
     new GenericArrayData(java.util.Arrays.copyOf(out.asInstanceOf[Array[AnyRef]], i))
   }
 
-  def computeRefCell(lwkb: Array[Byte], rwkb: Array[Byte], cellDeg: Double,
-      lExpandMeters: Double): Long = {
-    val lg = GeoKit.wkbToGeomMemo(lwkb); val rg = GeoKit.wkbToGeomMemo(rwkb)
-    val (lMinX, _, lMinY, _) = expandedBounds(lg.getEnvelopeInternal, lExpandMeters)
-    val re = rg.getEnvelopeInternal
-    cellOf(math.max(lMinX, re.getMinX), math.max(lMinY, re.getMinY), cellDeg)
-  }
-
   def computeRelates(lwkb: Array[Byte], rwkb: Array[Byte], predOrdinal: Int): Boolean = {
     val lg = GeoKit.wkbToGeomMemo(lwkb); val rg = GeoKit.wkbToGeomMemo(rwkb)
     if (lg == null || rg == null) false
@@ -200,9 +187,9 @@ object GeoExpressions {
 
   def computeRefCellEnv(lenv: ArrayData, renv: ArrayData, cellDeg: Double,
       lExpandMeters: Double): Long = {
-    // same arithmetic as computeRefCell, on the per-ROW envelope arrays
-    // instead of per-PAIR WKB parses — stEnvelope carries exactly
-    // getEnvelopeInternal's doubles, so the cell id is bit-identical
+    // the per-ROW envelope arrays instead of per-PAIR WKB parses —
+    // stEnvelope carries exactly getEnvelopeInternal's doubles, and the
+    // left side expands by the same bounds gridCells binned it with
     val le = new Envelope(lenv.getDouble(0), lenv.getDouble(2),
       lenv.getDouble(1), lenv.getDouble(3))
     val (lMinX, _, lMinY, _) = expandedBounds(le, lExpandMeters)
@@ -329,21 +316,6 @@ case class RingCells(child: Expression, lo: Int, hi: Int)
     defineCodeGen(ctx, ev, c => s"graft.functions.GeoExpressions.computeRingCells($c, $lo, $hi)")
   override protected def withNewChildInternal(n: Expression): RingCells = copy(child = n)
   override def prettyName: String = "ring_cells"
-}
-
-case class RefCell(left: Expression, right: Expression, cellDeg: Double, lExpandMeters: Double)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(l: Any, r: Any): Any =
-    GeoExpressions.computeRefCell(l.asInstanceOf[Array[Byte]], r.asInstanceOf[Array[Byte]],
-      cellDeg, lExpandMeters)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.GeoExpressions.computeRefCell($a, $b, $cellDeg, $lExpandMeters)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RefCell =
-    copy(left = l, right = r)
-  override def prettyName: String = "grid_ref_cell"
 }
 
 case class StRelates(left: Expression, right: Expression, predicate: String)

@@ -27,16 +27,17 @@ import graft.functions.GeoExpressions
  *     least margin away — the current best cannot be beaten. (Strict
  *     comparison: a candidate at exactly the margin could still win on
  *     tie-break, so such rows fall through to the next ring.)
- *  4. rows still unresolved after `maxRings` fall back to one full
- *     cross-cell pass (correct, never silently dropped). A left row whose
- *     envelope is wider than the largest examined cell block can never
- *     achieve a positive margin, so such rows skip the ring rounds and
- *     go straight to the fallback instead of being re-exploded and
- *     re-aggregated every round. The fallback also runs up front whenever
- *     `unresolved · |right|` is under `fallbackPairs` — at that size one
- *     exhaustive (broadcast-able) pass beats any number of fixed-cost
- *     ring jobs, which is exactly what a cost-based planner would pick;
- *     at genuinely large |right| the budget never triggers and the rings
+ *  4. rows still unresolved once the horizon reaches its cap of 16
+ *     cells fall back to one full cross-cell pass (correct, never
+ *     silently dropped). A left row whose envelope is wider than the
+ *     largest examined cell block can never achieve a positive margin,
+ *     so such rows skip the ring rounds and go straight to the fallback
+ *     instead of being re-exploded and re-aggregated every round. The
+ *     fallback also runs up front whenever `unresolved · |right|` is
+ *     under `fallbackPairs` — at that size one exhaustive
+ *     (broadcast-able) pass beats any number of fixed-cost ring jobs,
+ *     which is exactly what a cost-based planner would pick; at
+ *     genuinely large |right| the budget never triggers and the rings
  *     carry the work.
  *
  * Coordinate domain: WGS84 lon/lat, lon in [-180, 180], lat in [-90, 90].
@@ -84,6 +85,15 @@ import graft.functions.GeoExpressions
  */
 object GridNearestJoin {
 
+  /** Largest search horizon (Chebyshev cell radius) of a ring round:
+    * horizons double from `initialHorizon`, and past this cap one
+    * exhaustive pass is cheaper than exploding each row into the
+    * (2·hi+1)² cells of a wider block. */
+  private val MaxHorizon = 16
+
+  /** Rows per cell that [[autoCellDeg]] sizes the grid for. */
+  private val TargetRowsPerCell = 2.0
+
   /** Session-local materializer: fast, but blocks die with executors. */
   val LocalMaterialize: DataFrame => DataFrame = _.localCheckpoint(false)
 
@@ -94,7 +104,7 @@ object GridNearestJoin {
   /** Density-derived default cell size: one cheap (column-pruned,
     * map-side-combined) agg over the candidate side computes its
     * envelope-center extent, count, AND mean per-geometry envelope size,
-    * and the cell is sized so a cell holds ~`targetRowsPerCell` rows —
+    * and the cell is sized so a cell holds ~2 rows (TargetRowsPerCell) —
     * the expanding-ring search then resolves typical rows in the first
     * round or two instead of burning rounds on near-empty cells (or
     * flooding dense ones). The mean geometry extent is a lower bound on
@@ -105,8 +115,7 @@ object GridNearestJoin {
     * explicit `cellDeg`. Degenerate sides (empty or a single geometry —
     * any cell works, the adaptive fallback resolves them in one pass)
     * get 1 degree; the result is clamped to [0.001, 45] degrees. */
-  def autoCellDeg(right: DataFrame, rightWkb: Column,
-      targetRowsPerCell: Double = 2.0): Double = {
+  def autoCellDeg(right: DataFrame, rightWkb: Column): Double = {
     val e = GeoExpressions.stEnvelope(rightWkb)
     val cx = (element_at(e, 1) + element_at(e, 3)) / 2.0d
     val cy = (element_at(e, 2) + element_at(e, 4)) / 2.0d
@@ -120,7 +129,7 @@ object GridNearestJoin {
     else {
       val w = math.max(row.getDouble(1) - row.getDouble(0), 1e-6)
       val h = math.max(row.getDouble(3) - row.getDouble(2), 1e-6)
-      val cells = math.max(1.0, n / math.max(targetRowsPerCell, 1e-3))
+      val cells = math.max(1.0, n / TargetRowsPerCell)
       val density = math.sqrt(w * h / cells)
       val meanExtent = math.max(row.getDouble(5), row.getDouble(6))
       math.min(45.0, math.max(1e-3, math.max(density, meanExtent)))
@@ -137,17 +146,15 @@ object GridNearestJoin {
       left: DataFrame, right: DataFrame,
       leftWkb: Column, rightWkb: Column,
       cellDeg: Double = 1.0,
-      maxRings: Int = 8,
       tieBreak: Option[Column] = None,
       initialHorizon: Int = 2,
       fallbackBelow: Long = 2000L,
-      maxHorizon: Int = 16,
       condition: Option[Column] = None,
       materialize: DataFrame => DataFrame = LocalMaterialize,
       fallbackPairs: Long = 32000000L,
       joinType: String = "inner"): DataFrame =
-    run(left, right, leftWkb, rightWkb, 1, "__g_unused_rank", cellDeg, maxRings,
-      tieBreak, initialHorizon, fallbackBelow, maxHorizon, condition,
+    run(left, right, leftWkb, rightWkb, 1, "__g_unused_rank", cellDeg,
+      tieBreak, initialHorizon, fallbackBelow, condition,
       materialize, fallbackPairs, leftOuter = parseJoinType(joinType))
 
   private def parseJoinType(joinType: String): Boolean =
@@ -175,11 +182,9 @@ object GridNearestJoin {
       k: Int,
       rankCol: String = "knn_rank",
       cellDeg: Double = 1.0,
-      maxRings: Int = 8,
       tieBreak: Option[Column] = None,
       initialHorizon: Int = 2,
       fallbackBelow: Long = 2000L,
-      maxHorizon: Int = 16,
       condition: Option[Column] = None,
       materialize: DataFrame => DataFrame = LocalMaterialize,
       fallbackPairs: Long = 32000000L,
@@ -187,8 +192,8 @@ object GridNearestJoin {
     require(k >= 1, s"k must be >= 1, got $k")
     require(!(left.columns ++ right.columns).contains(rankCol),
       s"rank column `$rankCol` collides with an input column")
-    run(left, right, leftWkb, rightWkb, k, rankCol, cellDeg, maxRings,
-      tieBreak, initialHorizon, fallbackBelow, maxHorizon, condition,
+    run(left, right, leftWkb, rightWkb, k, rankCol, cellDeg,
+      tieBreak, initialHorizon, fallbackBelow, condition,
       materialize, fallbackPairs, leftOuter = parseJoinType(joinType))
   }
 
@@ -198,16 +203,18 @@ object GridNearestJoin {
       k: Int,
       rankCol: String,
       cellDeg: Double,
-      maxRings: Int,
       tieBreak: Option[Column],
       initialHorizon: Int,
       fallbackBelow: Long,
-      maxHorizon: Int,
       condition: Option[Column],
       materialize: DataFrame => DataFrame,
       fallbackPairs: Long,
       leftOuter: Boolean = false): DataFrame = {
 
+    // a zero, negative or non-finite cell clamps every row into one
+    // boundary cell: the search would silently degrade to an exhaustive pass
+    require(cellDeg > 0 && cellDeg < Double.PositiveInfinity,
+      s"cellDeg must be a positive finite number of degrees, got $cellDeg")
     val dup = left.columns.toSet.intersect(right.columns.toSet)
     require(dup.isEmpty, s"column names must be disjoint, both sides have: ${dup.mkString(", ")}")
     // every internal working column here carries the __g_ prefix and is
@@ -222,54 +229,24 @@ object GridNearestJoin {
     val cell = "__g_cell"; val dist = "__g_dist"; val best = "__g_best"
     val env = "__g_env"; val rid = "__g_rid"; val ekey = "__g_ekey"
 
-    // equi-conjunct key composition (round-12 scale fix; see
-    // PairCondition.equiKeys): `leftExpr = rightExpr` conjuncts of the
-    // condition ride as ONE struct join key beside the cell, so ring
-    // candidates and the exhaustive fallback only ever pair key-equal
-    // rows — the fallback becomes a HASH join (a never-matching
-    // condition costs O(L+R), not L·R pairs). The key join is a
-    // SUPERSET filter, not an equivalent one: struct equality treats
-    // null-valued fields as equal (struct(null) = struct(null) is
-    // TRUE) where SQL `=` is never true on null, so null-keyed pairs
-    // OVER-match at the join — safe only because candOk re-evaluates
-    // the FULL condition per candidate. Never add a pure-equi fast
-    // path here that skips that recheck. Factoring engages only when
-    // both key structs resolve to identical field types — else
-    // behavior is byte-identical to the unfactored path. ANSI note:
-    // the keys evaluate eagerly frame-wide (see PairCondition.equiKeys
-    // scaladoc) — under ANSI mode only statically throw-free conjuncts
-    // factor (PairCondition.neverThrows), so a throwing key on a row
-    // the unfactored path never pairs cannot fail the query (r14,
-    // mirroring the broadcast kernel's flat-path fallback).
-    val ansiOn = scala.util.Try(
-      left.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean).getOrElse(true)
-    val equiPairs = condition
-      .map(c => PairCondition.equiKeys(
-        left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        c, left.schema, right.schema, ansiSafeOnly = ansiOn))
-      .getOrElse(Nil)
-    // single-sided deterministic conjuncts (literal IN-lists, range
-    // guards — round-13 breadth): a right-only conjunct pre-filters the
-    // binned side BEFORE the cell explode (rows failing it can never
-    // pass candOk), a left-only one pre-filters probes on INNER joins
+    // the condition, analyzed once (PairCondition.factor).
+    // Equi conjuncts (round-12 scale fix) ride as ONE struct join key
+    // beside the cell, so ring candidates and the exhaustive fallback
+    // only ever pair key-equal rows — the fallback becomes a HASH join
+    // (a never-matching condition costs O(L+R), not L·R pairs). The key
+    // join over-matches null-keyed pairs (struct equality), safe only
+    // because candOk re-evaluates the FULL condition per candidate: never
+    // add a pure-equi fast path here that skips that recheck.
+    // Single-sided conjuncts (literal IN-lists, range guards — round-13
+    // breadth): a right-only one pre-filters the binned side BEFORE the
+    // cell explode, a left-only one pre-filters probes on INNER joins
     // (outer rows must survive null-padded, so outer keeps them).
-    // Superset discipline as ever: candOk still evaluates the FULL
-    // condition per candidate.
-    val (leftOnlyCond, rightOnlyCond) = condition
-      .map(c => PairCondition.sideOnly(
-        left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        c, left.schema, right.schema, ansiSafeOnly = ansiOn))
-      .getOrElse((None, None))
-    val useEkey = equiPairs.nonEmpty &&
-      // never engage over a user column that collides with the
-      // conditional reserved name (withColumn would overwrite it)
-      !left.columns.contains(ekey) && !right.columns.contains(ekey) &&
-      scala.util.Try {
-        def fieldTypes(df: DataFrame, ks: Seq[Column]) =
-          df.select(struct(ks: _*)).schema.head.dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType].fields.map(_.dataType).toSeq
-        fieldTypes(left, equiPairs.map(_._1)) == fieldTypes(right, equiPairs.map(_._2))
-      }.getOrElse(false)
+    val factored = condition.fold(PairCondition.Unfactored)(c =>
+      PairCondition.factor(left.sparkSession, c, left.schema, right.schema))
+    // never engage over a user column that collides with the conditional
+    // reserved name (withColumn would overwrite it)
+    val useEkey = factored.equiKeys.nonEmpty &&
+      !left.columns.contains(ekey) && !right.columns.contains(ekey)
     val ekeyCols: Seq[String] = if (useEkey) Seq(ekey) else Nil
 
     // right side binned once to every overlapped cell. For k > 1 each
@@ -279,9 +256,9 @@ object GridNearestJoin {
     // The id-stamped base is SNAPSHOTTED so the ring path and the
     // exhaustive fallback see the same ids (monotonically_increasing_id
     // re-planned twice could renumber)
-    val r0pre = rightOnlyCond.fold(right)(right.where)
+    val r0pre = factored.rightOnly.fold(right)(right.where)
       .withColumn(rw, rightWkb).where(col(rw).isNotNull)
-    val r0 = if (useEkey) r0pre.withColumn(ekey, struct(equiPairs.map(_._2): _*))
+    val r0 = if (useEkey) r0pre.withColumn(ekey, struct(factored.equiKeys.map(_._2): _*))
       else r0pre
     val rBase = if (k == 1) r0
       else materialize(r0.withColumn(rid, monotonically_increasing_id()))
@@ -294,9 +271,9 @@ object GridNearestJoin {
     val maxC = lit(GeoExpressions.MaxCell.toLong)
     def axisCell(coord: Column, offset: Double): Column =
       least(maxC, greatest(lit(0L), floor((coord + lit(offset)) / cellDeg).cast("long")))
-    val l0pre = (if (leftOuter) left else leftOnlyCond.fold(left)(left.where))
+    val l0pre = (if (leftOuter) left else factored.leftOnly.fold(left)(left.where))
       .withColumn(lw, leftWkb).where(col(lw).isNotNull)
-    val l0 = (if (useEkey) l0pre.withColumn(ekey, struct(equiPairs.map(_._1): _*))
+    val l0 = (if (useEkey) l0pre.withColumn(ekey, struct(factored.equiKeys.map(_._1): _*))
       else l0pre)
       .withColumn(env, GeoExpressions.stEnvelope(col(lw)))
       .where(col(env).isNotNull)
@@ -440,12 +417,12 @@ object GridNearestJoin {
     //    snapshot-side exchange per round — its skew/coalesce benefits
     //    come at that price; the layout is correct either way.)
     val rMat = materialize(r.repartition(col(cell)))
-    // a left envelope spanning >= 2·(maxHorizon+1) cells on either axis
+    // a left envelope spanning >= 2·(MaxHorizon+1) cells on either axis
     // can never sit strictly inside any examined block, so its margin is
     // <= 0 at every horizon — ring rounds would re-explode and
     // re-aggregate it each round for nothing; route such rows straight
     // to the exhaustive fallback
-    val maxSpan = 2.0 * (maxHorizon + 1) * cellDeg
+    val maxSpan = 2.0 * (MaxHorizon + 1) * cellDeg
     val hopelessPred =
       (element_at(col(env), 3) - element_at(col(env), 1) >= maxSpan) ||
         (element_at(col(env), 4) - element_at(col(env), 2) >= maxSpan)
@@ -516,23 +493,18 @@ object GridNearestJoin {
     // ring rounds (each round costs one Spark job)
     var lo = -1
     var hi = math.max(1, initialHorizon)
-    var round = 0
-    // hard horizon cap: annulus offset literals grow quadratically with
-    // the horizon (a 512-cell horizon would mean ~800k-element literal
-    // arrays and per-row explosions of the same size) — past maxHorizon
-    // the exhaustive fallback is strictly cheaper
     val rProbe = rMat.withColumnRenamed(cell, "__g_probe")
     // records that the loop STOPPED because the pair budget chose the
     // exhaustive pass — evaluated only when the cheaper loop conditions
     // already passed, so the lazy rightN count never runs on paths that
-    // exit via fallbackBelow/maxRings/maxHorizon
+    // exit via fallbackBelow
     var budgetStopped = false
     def ringsStillPayTracked: Boolean = {
       val pay = ringsStillPay
       if (!pay) budgetStopped = true
       pay
     }
-    while (round <= maxRings && unresolvedLeft > fallbackBelow && ringsStillPayTracked && hi <= maxHorizon) {
+    while (unresolvedLeft > fallbackBelow && ringsStillPayTracked && hi <= MaxHorizon) {
       val cands = unresolved
         .withColumn("__g_probe", explode(ringCells(lo, hi)))
         .join(rProbe, Seq("__g_probe") ++ ekeyCols, "left_outer")
@@ -548,18 +520,8 @@ object GridNearestJoin {
       carried = scored.where(!resolvedPred(margin) && hasAny)
         .select(col(lid), col(best).as("__g_carry"))
       unresolvedLeft = unresolved.count()
-      if (sys.env.contains("GRAFT_DEBUG_RINGS")) {
-        val kDist: Column =
-          if (k == 1) col(best)(dist) else try_element_at(col(best), lit(k))(dist)
-        val nullBest = scored.where(!hasAny).count()
-        val mFail = scored.where(hasAny && !resolvedPred(margin)).count()
-        val mstats = scored.where(hasAny)
-          .agg(min(kDist), max(kDist), avg(kDist), min(margin), max(margin)).head()
-        println(s"[gnj] round=$round hi=$hi unresolved=$unresolvedLeft nullBest=$nullBest marginFail=$mFail dist=[${mstats.get(0)},${mstats.get(1)},avg=${mstats.get(2)}] margin=[${mstats.get(3)},${mstats.get(4)}] t=${System.nanoTime()/1e9}")
-      }
       lo = hi
       hi = hi * 2
-      round += 1
     }
     // the binned-right snapshot only feeds the ring rounds (every round's
     // result is itself a snapshot, and the fallback reads `right` raw) —
@@ -591,7 +553,7 @@ object GridNearestJoin {
       // well under the 8 GB broadcast hard limit — a row count alone
       // ignores row width), so Spark plans BroadcastNestedLoopJoin
       // instead of a full CartesianProduct shuffle. On the exhaustion
-      // path (rings ran out of horizon/rounds, or the budget is
+      // path (rings ran out of horizon, or the budget is
       // disabled) the right side may be arbitrarily large: leave the
       // strategy to Spark.
       val rightHinted =

@@ -41,7 +41,7 @@ object GridSpatialJoin {
    * @param leftWkb      WKB geometry column for `left` rows
    * @param rightWkb     WKB geometry column for `right` rows
    * @param predicate    within | contains | intersects | overlaps | withindist N
-   * @param cellDeg      grid cell size in degrees
+   * @param cellDeg      grid cell size in degrees (positive, finite)
    * @param extraCondition optional extra join condition over the two sides'
    *                     columns (applied after the spatial refine)
    * @param distanceCol  if set, append geodesic centroid metres (Int)
@@ -68,6 +68,10 @@ object GridSpatialJoin {
       distanceCol: Option[String] = None,
       joinType: String = "inner"): DataFrame = {
 
+    // a zero, negative or non-finite cell clamps every row into one
+    // boundary cell: the join would silently degrade to an exhaustive pass
+    require(cellDeg > 0 && cellDeg < Double.PositiveInfinity,
+      s"cellDeg must be a positive finite number of degrees, got $cellDeg")
     val dup = left.columns.toSet.intersect(right.columns.toSet)
     require(dup.isEmpty, s"column names must be disjoint, both sides have: ${dup.mkString(", ")}")
     // internal working columns are added with withColumn and dropped
@@ -130,34 +134,19 @@ object GridSpatialJoin {
 
     val lw = "__graft_lwkb"; val rw = "__graft_rwkb"; val cell = "__graft_cell"
 
-    // equi-conjunct key composition (round-12; the GridNearestJoin
-    // __g_ekey discipline): factorable `leftExpr = rightExpr` conjuncts
-    // of the extra condition join beside the cell, so key-mismatched
-    // pairs never reach the geodesic/relates refine — a guaranteed
-    // early filter Catalyst's own predicate placement can't promise.
-    // Pure join restriction: the FULL condition still filters below.
+    // the extra condition, analyzed once (PairCondition.factor): its
+    // equi conjuncts join beside the cell (round-12; the GridNearestJoin
+    // __g_ekey discipline), so key-mismatched pairs never reach the
+    // geodesic/relates refine — a guaranteed early filter Catalyst's own
+    // predicate placement can't promise. Pure join restriction: the FULL
+    // condition still filters below.
     val ekey = "__graft_ekey"
-    // ANSI: only statically throw-free conjuncts factor — the ekey
-    // struct evaluates eagerly over every frame row, where the
-    // unfactored path only evaluates the condition on cell-co-located
-    // pairs (PairCondition.neverThrows; r14, ADVICE r13)
-    val ansiOn = scala.util.Try(
-      left.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean).getOrElse(true)
-    val equiPairs = extraCondition
-      .map(c => PairCondition.equiKeys(
-        left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        c, left.schema, right.schema, ansiSafeOnly = ansiOn))
-      .getOrElse(Nil)
-    val useEkey = equiPairs.nonEmpty &&
-      // never engage over a user column that collides with the
-      // conditional reserved name (withColumn would overwrite it)
-      !left.columns.contains(ekey) && !right.columns.contains(ekey) &&
-      scala.util.Try {
-        def fieldTypes(df: DataFrame, ks: Seq[Column]) =
-          df.select(struct(ks: _*)).schema.head.dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType].fields.map(_.dataType).toSeq
-        fieldTypes(left, equiPairs.map(_._1)) == fieldTypes(right, equiPairs.map(_._2))
-      }.getOrElse(false)
+    val factored = extraCondition.fold(PairCondition.Unfactored)(c =>
+      PairCondition.factor(left.sparkSession, c, left.schema, right.schema))
+    // never engage over a user column that collides with the conditional
+    // reserved name (withColumn would overwrite it)
+    val useEkey = factored.equiKeys.nonEmpty &&
+      !left.columns.contains(ekey) && !right.columns.contains(ekey)
     val joinCols = if (useEkey) Seq(cell, ekey) else Seq(cell)
 
     // per-ROW envelope columns (round 13): the reference-cell dedup id
@@ -168,11 +157,11 @@ object GridSpatialJoin {
 
     val lPre = l0.withColumn(lw, leftWkb).where(col(lw).isNotNull)
       .withColumn(lenv, GeoExpressions.stEnvelope(col(lw)))
-    val l = (if (useEkey) lPre.withColumn(ekey, struct(equiPairs.map(_._1): _*)) else lPre)
+    val l = (if (useEkey) lPre.withColumn(ekey, struct(factored.equiKeys.map(_._1): _*)) else lPre)
       .withColumn(cell, explode(GeoExpressions.gridCells(col(lw), cellDeg, radius)))
     val rPre = r0.withColumn(rw, rightWkb).where(col(rw).isNotNull)
       .withColumn(renv, GeoExpressions.stEnvelope(col(rw)))
-    val r = (if (useEkey) rPre.withColumn(ekey, struct(equiPairs.map(_._2): _*)) else rPre)
+    val r = (if (useEkey) rPre.withColumn(ekey, struct(factored.equiKeys.map(_._2): _*)) else rPre)
       .withColumn(cell, explode(GeoExpressions.gridCells(col(rw), cellDeg)))
 
     val spatialRefine: Column = predicate match {
@@ -198,26 +187,19 @@ object GridSpatialJoin {
     // (JTS relate / Vincenty distance) is additionally wrapped as
     // gatedAnd(condition, refine) — one opaque conjunct whose
     // evaluation order no optimizer rule can flip, so condition-failing
-    // pairs never reach the refine kernel. The plain `.where(condition)`
-    // stays alongside: Catalyst still pushes its side-only conjuncts
-    // below the join (the fused copy is invisible to pushdown), at the
-    // cost of one duplicate cheap evaluation per surviving pair. Gated
-    // on determinism (a second evaluation of a nondeterministic
-    // condition changes results) and ANSI throw-safety (the fused gate
-    // runs on pairs the unfused order may never have evaluated it on).
-    // `spark.graft.grid.fuseResidual=false` is the measurement/escape
-    // lever (A/B'd in ScaleBench's j2_band_grid_unfused twin).
-    val fuseResidual = extraCondition.exists { c =>
-      scala.util.Try(left.sparkSession.conf
-          .get("spark.graft.grid.fuseResidual", "true").toBoolean).getOrElse(true) &&
-        PairCondition.fusionSafe(
-          left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          c, left.schema, right.schema, ansiOn)
-    }
+    // pairs never reach the refine kernel (round-14 A/B in BASELINE.md).
+    // The plain `.where(condition)` stays alongside: Catalyst still
+    // pushes its side-only conjuncts below the join (the fused copy is
+    // invisible to pushdown), at the cost of one duplicate cheap
+    // evaluation per surviving pair. Gated on
+    // `factored.fusable`: determinism (a second evaluation of a
+    // nondeterministic condition changes results) and ANSI throw-safety
+    // (the fused gate runs on pairs the unfused order may never have
+    // evaluated it on).
     val joined0 = l.join(r, joinCols)
     val conditioned = extraCondition.fold(joined0)(joined0.where)
       .where(GeoExpressions.refCellEnv(col(lenv), col(renv), cellDeg, radius) === col(cell))
-      .where(if (fuseResidual)
+      .where(if (factored.fusable)
           graft.functions.GatedAndExpr.gatedAnd(extraCondition.get, spatialRefine)
         else spatialRefine)
     val withDist = distanceCol.fold(conditioned)(name =>

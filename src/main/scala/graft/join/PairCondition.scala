@@ -1,10 +1,12 @@
 package graft.join
 
-import org.apache.spark.sql.{Row, functions => F}
+import org.apache.spark.sql.{Column, Row, functions => F}
 import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.classic.SparkSession
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
+
+import scala.util.Try
 
 /**
  * Generalized extra join condition: an arbitrary Spark SQL boolean
@@ -120,119 +122,126 @@ object PairCondition {
   }
 
   /**
-   * Equi-conjunct extraction for the GRID path (round-12 scale fix,
-   * the DataFrame-level twin of BroadcastSpatialJoinExec.equiSplit):
-   * every conjunct of a condition Column shaped
-   * `leftOnlyExpr = rightOnlyExpr` (sides detected by referenced
-   * column NAME against the two frames' disjoint column sets) yields a
-   * (leftKey, rightKey) Column pair the caller composes into its JOIN
-   * keys — restricting candidate generation to key-equal rows, which
-   * is a pure superset-filter optimization when the caller KEEPS the
-   * full condition as the per-candidate predicate. Note the null
-   * semantics do NOT match on their own: Spark struct equality treats
-   * null-valued fields as equal (struct(null) = struct(null) is TRUE)
-   * while SQL `=` is never true on null — the key join OVER-matches on
-   * null keys, and correctness rests entirely on the caller
-   * re-evaluating the full condition per candidate. Never drop that
-   * recheck (no pure-equi fast path on this DataFrame-level kernel).
-   * Conjuncts whose reference sets straddle sides, reference neither
-   * side, or fail to resolve are simply not factored — the caller's
-   * behavior without any factorable conjunct is unchanged.
+   * The grid kernels' factoring of an extra join condition (the
+   * DataFrame-level twin of BroadcastSpatialJoinExec.equiSplit), from
+   * ONE analysis of `cond`: the Spark 4 Column API carries a lazy
+   * column-node tree whose catalyst shape only exists post-analysis, so
+   * the condition is analyzed over an empty frame with the concatenated
+   * (disjoint-name) schema, as in [[compile]], implicit casts included.
+   * Conjunct sides are detected by referenced column against the two
+   * schemas; a conjunct straddling sides, referencing neither, or a
+   * condition that fails to resolve is never factored.
    *
-   * ANSI caveat: callers evaluate the returned key columns EAGERLY
-   * over every row of their frames, while the unfactored path only
-   * evaluates the condition on spatial-candidate pairs — a key
-   * sub-expression that throws under ANSI mode (e.g. a cast overflow)
-   * on a row the unfactored path would never pair would fail the whole
-   * query. The row-level broadcast kernel degrades to its flat path at
-   * runtime (BroadcastSpatialJoinExec catches and falls back); this
-   * DataFrame-level path cannot wrap per-row evaluation, so grid
-   * callers pass `ansiSafeOnly = true` under ANSI mode and only
-   * conjuncts whose moved expressions statically [[neverThrows]] are
-   * factored — the rest stay in the full condition, byte-identical to
-   * the unfactored path (ADVICE r13).
+   * Every part is a pure SUPERSET restriction: the caller must still
+   * evaluate the FULL condition per candidate pair. Equi keys compose
+   * into one struct join key, and struct equality treats null fields as
+   * equal (struct(null) = struct(null) is TRUE) where SQL `=` never
+   * holds on null, so `=` keys over-match on nulls; `<=>` keys match
+   * struct-equality semantics exactly. Never add a pure-equi fast path
+   * that skips the recheck.
+   *
+   * Callers evaluate the keys and side filters EAGERLY over every row of
+   * their frames, where the unfactored path only evaluates the
+   * condition on spatial-candidate pairs, so under ANSI mode
+   * (`spark.sql.ansi.enabled`, read here) only conjuncts whose moved
+   * expressions statically [[neverThrows]] are factored: a throwing key
+   * on a row the unfactored path never pairs cannot fail the query.
+   * Nondeterministic conjuncts never move.
    */
-  def equiKeys(spark: SparkSession, cond: org.apache.spark.sql.Column,
-      leftSchema: StructType, rightSchema: StructType,
-      ansiSafeOnly: Boolean = false)
-      : Seq[(org.apache.spark.sql.Column, org.apache.spark.sql.Column)] = {
-    import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
-    splitAnalyzed(spark, cond, leftSchema, rightSchema) match {
-      case None => Nil
-      case Some((cs, sides, toColumn)) =>
-        // `=` keys over-match on null struct fields (superset filter;
-        // the caller's full-condition recheck makes them exact); `<=>`
-        // keys match Spark struct-equality semantics EXACTLY (null
-        // fields compare equal on both), so null-safe equality factors
-        // under the same discipline with zero extra machinery
-        def pick(a: Expression, b: Expression)
-            : Option[(org.apache.spark.sql.Column, org.apache.spark.sql.Column)] =
-          if (!a.deterministic || !b.deterministic) None
-          else if (ansiSafeOnly && !(neverThrows(a) && neverThrows(b))) None
-          else (sides(a), sides(b)) match {
-            case ((true, false), (false, true)) => Some((toColumn(a), toColumn(b)))
-            case ((false, true), (true, false)) => Some((toColumn(b), toColumn(a)))
-            case _ => None
-          }
-        cs.flatMap {
-          case EqualTo(a, b) => pick(a, b)
-          case EqualNullSafe(a, b) => pick(a, b)
+  def factor(spark: org.apache.spark.sql.SparkSession, cond: Column,
+      leftSchema: StructType, rightSchema: StructType): Factored = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo}
+    import org.apache.spark.sql.graft.ColumnBridge
+    val session = spark.asInstanceOf[SparkSession]
+    val ansiOn = Try(session.conf.get("spark.sql.ansi.enabled").toBoolean).getOrElse(true)
+    val analyzed =
+      try {
+        val merged = StructType(leftSchema.fields ++ rightSchema.fields)
+        val empty = session.createDataFrame(java.util.Collections.emptyList[Row](), merged)
+        empty.filter(cond).queryExecution.analyzed.collectFirst {
+          case f: logical.Filter => (f.condition, f.child.output)
+        }
+      } catch { case _: Exception => None }
+    analyzed.fold(Unfactored) { case (condExpr, childOutput) =>
+      val leftIds = childOutput.take(leftSchema.length).map(_.exprId).toSet
+      val rightIds = childOutput.drop(leftSchema.length).map(_.exprId).toSet
+      def conjuncts(e: Expression): Seq[Expression] = e match {
+        case And(a, b) => conjuncts(a) ++ conjuncts(b)
+        case x => Seq(x)
+      }
+      // (references left?, references right?) — an attribute from
+      // neither side counts as both, so it is never factored
+      def sides(e: Expression): (Boolean, Boolean) = {
+        var hasL = false; var hasR = false
+        e.foreach {
+          case a: AttributeReference =>
+            if (leftIds(a.exprId)) hasL = true
+            else if (rightIds(a.exprId)) hasR = true
+            else { hasL = true; hasR = true }
+          case _ =>
+        }
+        (hasL, hasR)
+      }
+      // resolved attrs → by-name columns (names are plain and disjoint by
+      // the grid kernels' contract), keeping the analyzer's casts. Quoted:
+      // UnresolvedAttribute(name) would parse dots as path separators, so
+      // a column named "u.k" could re-resolve to a struct FIELD u.k
+      def toColumn(e: Expression): Column =
+        ColumnBridge.column(e.transformUp {
+          case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
+        })
+      def movable(e: Expression): Boolean =
+        e.deterministic && (!ansiOn || neverThrows(e))
+      def pick(a: Expression, b: Expression): Option[(Expression, Expression)] =
+        if (!movable(a) || !movable(b)) None
+        else (sides(a), sides(b)) match {
+          case ((true, false), (false, true)) => Some((a, b))
+          case ((false, true), (true, false)) => Some((b, a))
           case _ => None
         }
+      val cs = conjuncts(condExpr)
+      val keys = cs.flatMap {
+        case EqualTo(a, b) => pick(a, b)
+        case EqualNullSafe(a, b) => pick(a, b)
+        case _ => None
+      }
+      // the kernels join on struct(left keys) = struct(right keys), which
+      // needs identical field types on both sides
+      val keysJoinable = keys.forall { case (l, r) => l.dataType == r.dataType }
+      def sideOnly(side: (Boolean, Boolean)): Option[Column] =
+        cs.filter(e => movable(e) && sides(e) == side).map(toColumn).reduceOption(_ && _)
+      Factored(
+        equiKeys = if (keysJoinable) keys.map { case (l, r) => (toColumn(l), toColumn(r)) } else Nil,
+        leftOnly = sideOnly((true, false)),
+        rightOnly = sideOnly((false, true)),
+        fusable = cs.forall(movable))
     }
   }
 
   /**
-   * Single-sided deterministic conjuncts of the condition, rebuilt as
-   * standalone Columns: (`AND` of left-only conjuncts, `AND` of
-   * right-only conjuncts). A right-only conjunct (e.g. a literal
-   * IN-list `right.k IN (1, 2, 3)`) can pre-filter the indexed side —
-   * rows failing it can never satisfy the full condition — and a
-   * left-only one can pre-filter probes on an INNER join. Pure
-   * superset-filter restrictions under the same discipline as
-   * equiKeys: the caller must still evaluate the full condition per
-   * candidate, and null evaluates as NOT-matching (SQL boolean filter
-   * semantics) on both the pre-filter and the full condition, so the
-   * split cannot change the result. Conjuncts with no column
-   * references at all (constants, nondeterministic) are never moved.
-   * Same ANSI eager-evaluation caveat as equiKeys.
+   * An extra join condition factored by [[factor]].
+   *
+   * @param equiKeys  (left key, right key) pairs from `leftExpr = rightExpr`
+   *                  and `<=>` conjuncts; empty unless every pair's key
+   *                  types agree
+   * @param leftOnly  AND of the left-only conjuncts: pre-filters probes on
+   *                  an INNER join
+   * @param rightOnly AND of the right-only conjuncts (e.g. a literal
+   *                  IN-list): pre-filters the candidate side
+   * @param fusable   whether the condition may gate an expensive refine
+   *                  as a [[graft.functions.GatedAnd]]: fusing runs it on
+   *                  every candidate pair, so every conjunct must be
+   *                  deterministic and, under ANSI mode, throw-free
    */
-  def sideOnly(spark: SparkSession, cond: org.apache.spark.sql.Column,
-      leftSchema: StructType, rightSchema: StructType,
-      ansiSafeOnly: Boolean = false)
-      : (Option[org.apache.spark.sql.Column], Option[org.apache.spark.sql.Column]) =
-    splitAnalyzed(spark, cond, leftSchema, rightSchema) match {
-      case None => (None, None)
-      case Some((cs, sides, toColumn)) =>
-        val det = cs.filter(_.deterministic)
-          .filter(e => !ansiSafeOnly || neverThrows(e))
-        val ls = det.filter(e => sides(e) == ((true, false))).map(toColumn)
-        val rs = det.filter(e => sides(e) == ((false, true))).map(toColumn)
-        (ls.reduceOption(_ && _), rs.reduceOption(_ && _))
-    }
+  final case class Factored(
+      equiKeys: Seq[(Column, Column)],
+      leftOnly: Option[Column],
+      rightOnly: Option[Column],
+      fusable: Boolean)
 
-  /**
-   * Whether an extra join condition may be FUSED as the gate of a
-   * [[graft.functions.GatedAnd]] around an expensive refine expression
-   * (round 14): fusing makes the condition run on every
-   * candidate-surviving pair where the unfused path's optimizer-chosen
-   * conjunct order might have evaluated it on fewer (behind the
-   * refine's short-circuit). Safe only when every conjunct is
-   * deterministic (a second per-pair evaluation of a nondeterministic
-   * condition changes results) and, under ANSI mode, statically
-   * throw-free (the eager-evaluation regression class of equiKeys: a
-   * throwing conjunct on a pair the unfused order never evaluated it
-   * on would fail the whole query). Unresolvable conditions are
-   * conservatively unsafe.
-   */
-  def fusionSafe(spark: SparkSession, cond: org.apache.spark.sql.Column,
-      leftSchema: StructType, rightSchema: StructType,
-      ansiOn: Boolean): Boolean =
-    splitAnalyzed(spark, cond, leftSchema, rightSchema) match {
-      case None => false
-      case Some((cs, _, _)) =>
-        cs.forall(e => e.deterministic && (!ansiOn || neverThrows(e)))
-    }
+  /** No condition, or one that does not resolve: nothing to factor. */
+  val Unfactored: Factored = Factored(Nil, None, None, fusable = false)
 
   /**
    * Conservative static throw-safety: true only when evaluating `e`
@@ -277,62 +286,6 @@ object PairCondition {
         e.children.forall(neverThrows)
       case _ => false
     }
-  }
-
-  /** Analyzed-conjunct machinery shared by equiKeys/sideOnly. The Spark
-    * 4 Column API carries a LAZY column-node tree (its catalyst shape
-    * only exists post-analysis), so every split runs on the ANALYZED
-    * condition — the compile() discipline above: filter an empty frame
-    * with the concatenated (disjoint-name) schema and take the Filter's
-    * condition, with implicit casts already placed. Returns the
-    * conjunct list, a side classifier (references left? / right? — an
-    * attribute from neither side counts as both: never factored), and
-    * a rebuilder from resolved sub-expressions to by-name Columns. */
-  private def splitAnalyzed(spark: SparkSession, cond: org.apache.spark.sql.Column,
-      leftSchema: StructType, rightSchema: StructType)
-      : Option[(Seq[Expression], Expression => (Boolean, Boolean),
-                Expression => org.apache.spark.sql.Column)] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference}
-    import org.apache.spark.sql.graft.ColumnBridge
-    try {
-      val merged = StructType(leftSchema.fields ++ rightSchema.fields)
-      val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), merged)
-      val analyzed = empty.filter(cond).queryExecution.analyzed
-      analyzed.collectFirst {
-        case f: logical.Filter => (f.condition, f.child.output)
-      }.map { case (condExpr, childOutput) =>
-        val leftIds = childOutput.take(leftSchema.length).map(_.exprId).toSet
-        def conjuncts(e: Expression): Seq[Expression] = e match {
-          case And(a, b) => conjuncts(a) ++ conjuncts(b)
-          case x => Seq(x)
-        }
-        val rightIds = childOutput.drop(leftSchema.length).map(_.exprId).toSet
-        def sides(e: Expression): (Boolean, Boolean) = {
-          var hasL = false; var hasR = false
-          e.foreach {
-            case a: AttributeReference =>
-              if (leftIds(a.exprId)) hasL = true
-              else if (rightIds(a.exprId)) hasR = true
-              else { hasL = true; hasR = true }
-            case _ =>
-          }
-          (hasL, hasR)
-        }
-        // resolved attrs → by-name unresolved columns (names are plain
-        // and disjoint by the grid operator's contract), preserving the
-        // analyzer's casts inside the sub-expression
-        def toColumn(e: Expression): org.apache.spark.sql.Column =
-          ColumnBridge.column(e.transformUp {
-            // quoted: UnresolvedAttribute(name) would parse dots as path
-            // separators, so a literal column name like "u.k" could
-            // silently re-resolve to a same-typed struct FIELD u.k and
-            // key-restrict the join on the wrong values
-            case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-          })
-        (conjuncts(condExpr), sides _, toColumn _)
-      }
-    } catch { case _: Exception => None }
   }
 }
 

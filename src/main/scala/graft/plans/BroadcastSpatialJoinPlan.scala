@@ -41,12 +41,8 @@ case class BroadcastSpatialJoinPlan(
   require(!(distAttr.isDefined && (mode == Semi || mode == Anti)),
     "semi/anti spatial joins emit the left schema only — no distance column")
 
-  override def output: Seq[Attribute] = mode match {
-    case Semi | Anti => left.output
-    case LeftOuter =>
-      left.output ++ right.output.map(_.withNullability(true)) ++ distAttr.toSeq
-    case Inner => left.output ++ right.output ++ distAttr.toSeq
-  }
+  override def output: Seq[Attribute] =
+    BroadcastSpatialJoinPlan.output(left.output, right.output, distAttr, mode)
 
   // the probe consumes whole child rows (the condition is ordinal-bound),
   // so column pruning must not reshape the children
@@ -57,13 +53,28 @@ case class BroadcastSpatialJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: install via `spark.experimental.extraStrategies` (the
-  * transformer self-registers) or GraftExtensions. */
+object BroadcastSpatialJoinPlan {
+
+  /** Output of the logical node and its exec, by join mode (see the
+    * class doc). */
+  private[plans] def output(left: Seq[Attribute], right: Seq[Attribute],
+      distAttr: Option[AttributeReference], mode: graft.spatial.SpatialJoinMode): Seq[Attribute] = {
+    import graft.spatial.SpatialJoinMode._
+    mode match {
+      case Semi | Anti => left
+      case LeftOuter => left ++ right.map(_.withNullability(true)) ++ distAttr.toSeq
+      case Inner => left ++ right ++ distAttr.toSeq
+    }
+  }
+}
+
 /** Sentinel standing in for a null `<=>` key component — one instance
   * per JVM, so build-side and probe-side nulls hash-match inside each
   * executor's partitioned index. */
 private[plans] object NullSafeKey
 
+/** Planner strategy, installed via `spark.experimental.extraStrategies`:
+  * the transformer registers it on its session before building a plan. */
 object SpatialJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: BroadcastSpatialJoinPlan =>
@@ -88,16 +99,29 @@ case class BroadcastSpatialJoinExec(
 
   import graft.spatial.SpatialJoinMode._
 
-  override def output: Seq[Attribute] = mode match {
-    case Semi | Anti => left.output
-    case LeftOuter =>
-      left.output ++ right.output.map(_.withNullability(true)) ++ distAttr.toSeq
-    case Inner => left.output ++ right.output ++ distAttr.toSeq
-  }
+  override def output: Seq[Attribute] =
+    BroadcastSpatialJoinPlan.output(left.output, right.output, distAttr, mode)
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): BroadcastSpatialJoinExec =
     copy(left = newLeft, right = newRight)
+
+  /** Factored condition: composite equi keys (`=` and `<=>` conjuncts),
+    * single-sided pre-filters, and the per-candidate residual.
+    * `nullSafe(i)` marks a `<=>` key component: a null there is a REAL
+    * key value (both sides map to the NullSafeKey sentinel and hash-match,
+    * mirroring Catalyst's null-safe equality) where a `=` component's
+    * null means no-match. `leftOnly` / `rightOnly` carry deterministic
+    * conjuncts referencing one side only (literal IN-lists, range
+    * guards): right-only ones exclude rows from the index at build,
+    * left-only ones short-circuit probes to O(1) no-match — both pure
+    * superset restrictions (a filtered row/probe could never pass the
+    * full condition; SQL filter semantics drop null evaluations on
+    * either path). */
+  private case class EquiSplit(
+      lKeys: Seq[Expression], rKeys: Seq[Expression], nullSafe: Array[Boolean],
+      leftOnly: Option[Expression], rightOnly: Option[Expression],
+      residual: Option[Expression])
 
   /**
    * Equi-conjunct factoring (round-12 scale fix): every conjunct of
@@ -119,23 +143,6 @@ case class BroadcastSpatialJoinExec(
    * must agree with Catalyst EqualTo; ±0.0 normalized like Spark's own
    * hash joins; boxed NaN is canonical under Double.hashCode).
    */
-  /** Factored condition: composite equi keys (`=` and `<=>` conjuncts),
-    * single-sided pre-filters, and the per-candidate residual.
-    * `nullSafe(i)` marks a `<=>` key component: a null there is a REAL
-    * key value (both sides map to the NullKey sentinel and hash-match,
-    * mirroring Catalyst's null-safe equality) where a `=` component's
-    * null means no-match. `leftOnly` / `rightOnly` carry deterministic
-    * conjuncts referencing one side only (literal IN-lists, range
-    * guards): right-only ones exclude rows from the index at build,
-    * left-only ones short-circuit probes to O(1) no-match — both pure
-    * superset restrictions (a filtered row/probe could never pass the
-    * full condition; SQL filter semantics drop null evaluations on
-    * either path). */
-  private case class EquiSplit(
-      lKeys: Seq[Expression], rKeys: Seq[Expression], nullSafe: Array[Boolean],
-      leftOnly: Option[Expression], rightOnly: Option[Expression],
-      residual: Option[Expression])
-
   @transient private lazy val equiSplit: Option[EquiSplit] = {
     import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualNullSafe, EqualTo}
     val leftWidth = left.output.length
@@ -238,6 +245,15 @@ case class BroadcastSpatialJoinExec(
           java.lang.Float.valueOf(0.0f)
         case x => x
       }
+      // the flat probe: the whole index under the full condition. With no
+      // condition it passes the AlwaysTrue sentinel BY REFERENCE, which
+      // enables the unconditioned-nearest fast path inside the probe kernel
+      lazy val flatProbe = new SpatialProbe(idx.geoms, idx.tree)
+      def flatHits(lrow: InternalRow, g: org.locationtech.jts.geom.Geometry) =
+        flatProbe.matches(g, pred, condPred match {
+          case None => SpatialProbe.AlwaysTrue
+          case Some(p) => i => p.eval(joined(lrow, idx.rows(i)))
+        }, needDist)
       val hitsOf: InternalRow => Iterator[(Int, Int)] = split match {
         case Some(EquiSplit(lKeys, rKeys, nullSafe, leftOnly, rightOnly, residual)) =>
           // key-partitioned probes: the equi conjuncts become ONE
@@ -279,11 +295,6 @@ case class BroadcastSpatialJoinExec(
           // kernel's, and a genuinely-throwing candidate still throws
           // where the flat path would (the condition contains the same
           // sub-expression).
-          lazy val flatProbe = new SpatialProbe(idx.geoms, idx.tree)
-          def flatEvalFor(lrow: InternalRow): Int => Boolean = condPred match {
-            case None => SpatialProbe.AlwaysTrue
-            case Some(p) => i => p.eval(joined(lrow, idx.rows(i)))
-          }
           val keyProbes = {
             val rightPred = rightOnly.map(Predicate.create)
             rightPred.foreach(_.initialize(0))
@@ -315,9 +326,8 @@ case class BroadcastSpatialJoinExec(
           lrow => {
             val g = graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx))
             if (g == null) Iterator.empty
-            else if (keyProbes == null) {
-              flatProbe.matches(g, pred, flatEvalFor(lrow), needDist)
-            } else {
+            else if (keyProbes == null) flatHits(lrow, g)
+            else {
               var keyThrew = false
               var leftFails = false
               val k =
@@ -327,7 +337,7 @@ case class BroadcastSpatialJoinExec(
                   else keyOf(lKeys, lj)
                 }
                 catch { case scala.util.control.NonFatal(_) => keyThrew = true; null }
-              if (keyThrew) flatProbe.matches(g, pred, flatEvalFor(lrow), needDist)
+              if (keyThrew) flatHits(lrow, g)
               else if (leftFails || k == null) Iterator.empty
               else {
                 val probe = keyProbes.get(k)
@@ -337,16 +347,7 @@ case class BroadcastSpatialJoinExec(
             }
           }
         case None =>
-          val probe = new SpatialProbe(idx.geoms, idx.tree)
-          def condEvalFor(lrow: InternalRow): Int => Boolean = condPred match {
-            case None => SpatialProbe.AlwaysTrue // sentinel: enables the
-            // unconditioned-nearest fast path inside the probe kernel
-            case Some(p) => i => p.eval(joined(lrow, idx.rows(i)))
-          }
-          lrow => {
-            val g = graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx))
-            probe.matches(g, pred, condEvalFor(lrow), needDist)
-          }
+          lrow => flatHits(lrow, graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx)))
       }
 
       joinMode match {

@@ -36,7 +36,7 @@ import graft.transformer.BroadcastSpatialJoin
  * factor 1, `unresolved·|right|` of the nearest joins fits the default
  * 32M pair budget and the planner picks the one-job exhaustive pass; at
  * ×4/×8 the budget no longer fits and the expanding-ring rounds engage
- * (one job per round). Run with GRAFT_DEBUG_RINGS=1 to see the rounds.
+ * (one job per round).
  *
  * Measurement: one `count()` per (factor, query) — joins/aggregations
  * cannot be pruned under count, rows come for free, and the growth
@@ -360,14 +360,6 @@ object ScaleBench {
       // cell-matched pairs before the expensive WKB-parse + geodesic
       "j2_band_grid" -> (() => bandGrid(f, late = false)),
       "j2_band_grid_late" -> (() => bandGrid(f, late = true)),
-      // round-14 residual-fusion A/B twin: identical engine call with
-      // the gatedAnd(condition, refine) fusion conf'd OFF at plan-build
-      // time, so fused vs unfused interleave inside ONE JVM/run
-      "j2_band_grid_unfused" -> (() => {
-        spark.conf.set("spark.graft.grid.fuseResidual", "false")
-        try bandGrid(f, late = false)
-        finally spark.conf.set("spark.graft.grid.fuseResidual", "true")
-      }),
       "dedup_minhash" -> (() =>
         Dedup.minhashPairs(docs(f), "doc_id", "text", tau = 0.8)),
       "dedup_clusters" -> (() =>

@@ -88,15 +88,10 @@ class GatedAndSpec extends AnyFlatSpec with Matchers {
       .select("cid", "sid")
   }
 
-  it should "produce identical rows fused, unfused, and late-filtered" in {
+  it should "produce identical rows fused and late-filtered" in {
     val band = col("s_bal").between(col("c_bal") - 10.0, col("c_bal") + 10.0)
     val fused = gridJoin(Some(band))
       .collect().map(x => (x.getInt(0), x.getInt(1))).toSet
-    val unfused = {
-      spark.conf.set("spark.graft.grid.fuseResidual", "false")
-      try gridJoin(Some(band)).collect().map(x => (x.getInt(0), x.getInt(1))).toSet
-      finally spark.conf.set("spark.graft.grid.fuseResidual", "true")
-    }
     val late = {
       val (l, r) = sides
       graft.join.GridSpatialJoin.join(
@@ -111,22 +106,19 @@ class GatedAndSpec extends AnyFlatSpec with Matchers {
     // but band-excluded (|90-15|>10); point 3 in rect 200 band-excluded
     // (|10-80|>10)
     fused shouldBe Set((1, 100))
-    unfused shouldBe fused
     late shouldBe fused
   }
 
   it should "disengage fusion for nondeterministic or ANSI-throwing conditions, staying correct" in {
-    import org.apache.spark.sql.classic.SparkSession
-    val cs = spark.asInstanceOf[SparkSession]
+    spark.conf.get("spark.sql.ansi.enabled") shouldBe "true" // Spark 4 default
     val (l, r) = sides
+    def fusable(c: org.apache.spark.sql.Column) =
+      graft.join.PairCondition.factor(spark, c, l.schema, r.schema).fusable
     // nondeterministic: a second per-pair evaluation could flip — must not fuse
-    graft.join.PairCondition.fusionSafe(cs,
-      rand() < 2.0, l.schema, r.schema, ansiOn = true) shouldBe false
+    fusable(rand() < 2.0) shouldBe false
     // string→int cast can throw under ANSI — must not fuse when ANSI is on
-    graft.join.PairCondition.fusionSafe(cs,
-      expr("CAST(wkt AS INT) IS NULL"), l.schema, r.schema, ansiOn = true) shouldBe false
-    graft.join.PairCondition.fusionSafe(cs,
-      col("s_bal") >= col("c_bal"), l.schema, r.schema, ansiOn = true) shouldBe true
+    fusable(expr("CAST(wkt AS INT) IS NULL")) shouldBe false
+    fusable(col("s_bal") >= col("c_bal")) shouldBe true
     // and the join with a non-fusable condition still answers correctly:
     // the always-true condition keeps all three containments (points 1
     // and 2 in rect 100, point 3 in rect 200)

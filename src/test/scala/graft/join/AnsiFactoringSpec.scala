@@ -61,7 +61,7 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
   // `castExpr = attr` conjuncts into join keys evaluated frame-wide
   // during shuffle partitioning — plain `l.join(r, cell).where(cond)`
   // throws under ANSI on a malformed never-paired row EXACTLY like the
-  // factored plan did. The ansiSafeOnly gate there keeps the engine's
+  // factored plan did. PairCondition.factor's ANSI gate keeps the engine's
   // own factoring from being the one introducing the eager eval, but
   // observable behavior matches stock Spark either way, so there is no
   // completion to assert. The ring kernel below is different: its

@@ -517,4 +517,31 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     out.select("id", "poi_id").collect().map(r => (r.getString(0), r.getString(1))).toSet shouldBe
       Set(("i0", "far"), ("i1", "far"))
   }
+
+  it should "reject a zero, negative or non-finite cellDeg in both grid kernels" in {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.GeoExpressions
+    import graft.spatial.SpatialPredicate
+    // such a cell clamps every row into one boundary cell, which would
+    // silently turn the grid into an exhaustive pass
+    val l = pts(4, "i")
+    val r = pts(3, "d").toDF("poi_id", "plon", "plat")
+    val lw = GeoExpressions.wkbPoint(col("lon"), col("lat"))
+    val rw = GeoExpressions.wkbPoint(col("plon"), col("plat"))
+    for (bad <- Seq(0.0, -1.0, Double.NaN, Double.PositiveInfinity)) withClue(s"cellDeg=$bad: ") {
+      an[IllegalArgumentException] should be thrownBy
+        GridSpatialJoin.join(l, r, lw, rw, SpatialPredicate.Intersects, cellDeg = bad)
+      an[IllegalArgumentException] should be thrownBy
+        GridNearestJoin.nearest(l, r, lw, rw, cellDeg = bad)
+      an[IllegalArgumentException] should be thrownBy
+        GridNearestJoin.knearest(l, r, lw, rw, k = 2, cellDeg = bad)
+    }
+    // the transformer's gridCellDeg reaches the kernels as given
+    r.createOrReplaceTempView("grid_poi_badcell")
+    an[IllegalArgumentException] should be thrownBy
+      new BroadcastSpatialJoin().setDataset("grid_poi_badcell")
+        .setDatasetPoint("plon, plat").setInputPoint("lon, lat")
+        .setDataColumns("poi_id").setBroadcast("none").setGridCellDeg("0")
+        .transform(l)
+  }
 }

@@ -293,6 +293,16 @@ class BroadcastSpatialJoinSpec extends AnyFlatSpec with Matchers {
     run("none") shouldBe Seq("i1")
   }
 
+  it should "expose the reference's 12 params plus the grid and join-type extensions" in {
+    new BroadcastSpatialJoin().params.map(_.name).toSet shouldBe Set(
+      // the reference transformer's surface
+      "condition", "filter", "broadcast", "predicate", "dataset", "dataColumns",
+      "distanceColumnAlias", "datasetWKT", "datasetPoint", "inputWKT", "inputPoint",
+      "numPartitions",
+      // extensions
+      "gridCellDeg", "gridKnn", "joinType")
+  }
+
   it should "reject invalid parameter combinations" in {
     val data = pois("d1, 1.1, 1.1")
     data.createOrReplaceTempView("poi_badparams")

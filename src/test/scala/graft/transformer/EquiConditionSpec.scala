@@ -266,33 +266,41 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     import org.apache.spark.sql.types._
     val ls = StructType(Seq(StructField("a", LongType), StructField("x", DoubleType)))
     val rs = StructType(Seq(StructField("b", LongType), StructField("y", DoubleType)))
-    def keys(c: org.apache.spark.sql.Column) =
-      graft.join.PairCondition.equiKeys(spark, c, ls, rs)
-    keys(col("b") % 4 === col("a") % 5).size shouldBe 1
-    keys(col("a") === col("b") && col("b") % 2 === col("a") % 2).size shouldBe 2
-    // residual-only / straddling / non-equi conjuncts extract nothing
-    keys(col("a") =!= col("b")).size shouldBe 0
-    keys(col("a") + col("b") === lit(3)).size shouldBe 0
-    // mixed: one factorable + one not
-    keys(col("a") === col("b") && col("b") > col("a")).size shouldBe 1
-    // nondeterministic keys never factor
-    keys(org.apache.spark.sql.functions.rand() * col("a") === col("b")).size shouldBe 0
-    // null-safe equality factors too (struct-join semantics match <=>)
-    keys(col("a") <=> col("b")).size shouldBe 1
-    keys(col("a") <=> col("b") && col("x") === col("y")).size shouldBe 2
+    // ANSI off: every deterministic conjunct may move (factoring under
+    // ANSI moves only throw-free ones — graft.join.AnsiFactoringSpec)
+    val prev = spark.conf.get("spark.sql.ansi.enabled", "true")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      def keys(c: org.apache.spark.sql.Column) =
+        graft.join.PairCondition.factor(spark, c, ls, rs).equiKeys
+      keys(col("b") % 4 === col("a") % 5).size shouldBe 1
+      keys(col("a") === col("b") && col("b") % 2 === col("a") % 2).size shouldBe 2
+      // residual-only / straddling / non-equi conjuncts extract nothing
+      keys(col("a") =!= col("b")).size shouldBe 0
+      keys(col("a") + col("b") === lit(3)).size shouldBe 0
+      // mixed: one factorable + one not
+      keys(col("a") === col("b") && col("b") > col("a")).size shouldBe 1
+      // nondeterministic keys never factor
+      keys(org.apache.spark.sql.functions.rand() * col("a") === col("b")).size shouldBe 0
+      // null-safe equality factors too (struct-join semantics match <=>)
+      keys(col("a") <=> col("b")).size shouldBe 1
+      keys(col("a") <=> col("b") && col("x") === col("y")).size shouldBe 2
 
-    // single-sided extraction: left-only and right-only conjuncts split
-    // out; straddling/constant/nondeterministic ones never move
-    def sideOnly(c: org.apache.spark.sql.Column) =
-      graft.join.PairCondition.sideOnly(spark, c, ls, rs)
-    val (lo1, ro1) = sideOnly(col("a").isin(1, 2) && col("b") > 3 && col("a") === col("b"))
-    lo1.isDefined shouldBe true
-    ro1.isDefined shouldBe true
-    val (lo2, ro2) = sideOnly(col("a") === col("b"))
-    lo2 shouldBe None
-    ro2 shouldBe None
-    val (lo3, ro3) = sideOnly(org.apache.spark.sql.functions.rand() < 0.5 && lit(1) === lit(1))
-    lo3 shouldBe None
-    ro3 shouldBe None
+      // single-sided extraction: left-only and right-only conjuncts split
+      // out; straddling/constant/nondeterministic ones never move
+      def sideOnly(c: org.apache.spark.sql.Column) = {
+        val f = graft.join.PairCondition.factor(spark, c, ls, rs)
+        (f.leftOnly, f.rightOnly)
+      }
+      val (lo1, ro1) = sideOnly(col("a").isin(1, 2) && col("b") > 3 && col("a") === col("b"))
+      lo1.isDefined shouldBe true
+      ro1.isDefined shouldBe true
+      val (lo2, ro2) = sideOnly(col("a") === col("b"))
+      lo2 shouldBe None
+      ro2 shouldBe None
+      val (lo3, ro3) = sideOnly(org.apache.spark.sql.functions.rand() < 0.5 && lit(1) === lit(1))
+      lo3 shouldBe None
+      ro3 shouldBe None
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 }
