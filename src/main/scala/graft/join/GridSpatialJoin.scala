@@ -193,8 +193,8 @@ object GridSpatialJoin {
     // invisible to pushdown), at the cost of one duplicate cheap
     // evaluation per surviving pair. Gated on
     // `factored.fusable`: determinism (a second evaluation of a
-    // nondeterministic condition changes results) and ANSI throw-safety
-    // (the fused gate runs on pairs the unfused order may never have
+    // nondeterministic condition changes results) and throw-safety (the
+    // fused gate runs on pairs the unfused order may never have
     // evaluated it on).
     val joined0 = l.join(r, joinCols)
     val conditioned = extraCondition.fold(joined0)(joined0.where)

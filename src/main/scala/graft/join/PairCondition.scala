@@ -1,7 +1,7 @@
 package graft.join
 
 import org.apache.spark.sql.{Column, Row, functions => F}
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSeq, BindReferences, EqualNullSafe, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.types.StructType
@@ -76,42 +76,25 @@ object PairCondition {
     replaceSideRefs(condition)(m =>
       if (m.group(1).equalsIgnoreCase("left")) leftRef(m.group(2)) else rightRef(m.group(2)))
 
-  /** Compile on the driver; None for an empty condition string. */
+  /** Compile on the driver for the broadcast kernel: the [[Split]] of the
+    * condition, every part bound over the concatenated (left ++ right)
+    * row. None for an empty condition string. */
   def compile(
       spark: SparkSession,
       condition: String,
       leftSchema: StructType,
-      rightSchema: StructType): Option[CompiledCondition] = {
+      rightSchema: StructType): Option[Split] = {
     val trimmed = condition.trim
     if (trimmed.isEmpty) None
     else {
       val rewritten = replaceSideRefs(trimmed)(m =>
         (if (m.group(1).equalsIgnoreCase("left")) "`__l_" else "`__r_") + m.group(2) + "`")
-      val merged = StructType(
-        leftSchema.fields.map(f => f.copy(name = "__l_" + f.name)) ++
-          rightSchema.fields.map(f => f.copy(name = "__r_" + f.name)))
+      def prefixed(schema: StructType, p: String) =
+        StructType(schema.fields.map(f => f.copy(name = p + f.name)))
       try {
-        val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), merged)
-        val analyzed = empty.filter(F.expr(rewritten)).queryExecution.analyzed
-        val (cond, childOutput) = analyzed.collectFirst {
-          case f: logical.Filter => (f.condition, f.child.output)
-        }.getOrElse(throw new IllegalStateException("no Filter in analyzed plan"))
-        // RuntimeReplaceable nodes (between, ilike, …) only run through their
-        // replacement, and the replacement may use With/CommonExpressionRef
-        // (subexpression sharing) — normally optimizer rules substitute both;
-        // we interpret the expression directly, so inline them here.
-        val executable = cond.transformDown {
-          case r: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable => r.replacement
-        }.transformUp {
-          case w: org.apache.spark.sql.catalyst.expressions.With =>
-            val defs = w.defs.map(d => d.id -> d.child).toMap
-            w.child.transformUp {
-              case ref: org.apache.spark.sql.catalyst.expressions.CommonExpressionRef
-                  if defs.contains(ref.id) => defs(ref.id)
-            }
-        }
-        val bound = BindReferences.bindReference(executable, AttributeSeq(childOutput))
-        Some(CompiledCondition(bound, leftSchema, rightSchema))
+        val (parts, childOutput) = split(spark, F.expr(rewritten),
+          prefixed(leftSchema, "__l_"), prefixed(rightSchema, "__r_"))
+        Some(parts.map(BindReferences.bindReference(_, AttributeSeq(childOutput))))
       } catch {
         case e: IllegalArgumentException => throw e
         case e: Exception =>
@@ -121,118 +104,166 @@ object PairCondition {
     }
   }
 
-  /**
-   * The grid kernels' factoring of an extra join condition (the
-   * DataFrame-level twin of BroadcastSpatialJoinExec.equiSplit), from
-   * ONE analysis of `cond`: the Spark 4 Column API carries a lazy
-   * column-node tree whose catalyst shape only exists post-analysis, so
-   * the condition is analyzed over an empty frame with the concatenated
-   * (disjoint-name) schema, as in [[compile]], implicit casts included.
-   * Conjunct sides are detected by referenced column against the two
-   * schemas; a conjunct straddling sides, referencing neither, or a
-   * condition that fails to resolve is never factored.
-   *
-   * Every part is a pure SUPERSET restriction: the caller must still
-   * evaluate the FULL condition per candidate pair. Equi keys compose
-   * into one struct join key, and struct equality treats null fields as
-   * equal (struct(null) = struct(null) is TRUE) where SQL `=` never
-   * holds on null, so `=` keys over-match on nulls; `<=>` keys match
-   * struct-equality semantics exactly. Never add a pure-equi fast path
-   * that skips the recheck.
-   *
-   * Callers evaluate the keys and side filters EAGERLY over every row of
-   * their frames, where the unfactored path only evaluates the
-   * condition on spatial-candidate pairs, so under ANSI mode
-   * (`spark.sql.ansi.enabled`, read here) only conjuncts whose moved
-   * expressions statically [[neverThrows]] are factored: a throwing key
-   * on a row the unfactored path never pairs cannot fail the query.
-   * Nondeterministic conjuncts never move.
-   */
+  /** The grid kernels' view of [[split]]: the moved parts as by-name
+    * Columns over the two frames (plain, disjoint column names by the
+    * grid kernels' contract). A condition that fails to resolve is not
+    * factored. */
   def factor(spark: org.apache.spark.sql.SparkSession, cond: Column,
       leftSchema: StructType, rightSchema: StructType): Factored = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo}
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graft.ColumnBridge
-    val session = spark.asInstanceOf[SparkSession]
-    val ansiOn = Try(session.conf.get("spark.sql.ansi.enabled").toBoolean).getOrElse(true)
-    val analyzed =
-      try {
-        val merged = StructType(leftSchema.fields ++ rightSchema.fields)
-        val empty = session.createDataFrame(java.util.Collections.emptyList[Row](), merged)
-        empty.filter(cond).queryExecution.analyzed.collectFirst {
-          case f: logical.Filter => (f.condition, f.child.output)
-        }
-      } catch { case _: Exception => None }
-    analyzed.fold(Unfactored) { case (condExpr, childOutput) =>
-      val leftIds = childOutput.take(leftSchema.length).map(_.exprId).toSet
-      val rightIds = childOutput.drop(leftSchema.length).map(_.exprId).toSet
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(a, b) => conjuncts(a) ++ conjuncts(b)
-        case x => Seq(x)
-      }
-      // (references left?, references right?) — an attribute from
-      // neither side counts as both, so it is never factored
-      def sides(e: Expression): (Boolean, Boolean) = {
-        var hasL = false; var hasR = false
-        e.foreach {
-          case a: AttributeReference =>
-            if (leftIds(a.exprId)) hasL = true
-            else if (rightIds(a.exprId)) hasR = true
-            else { hasL = true; hasR = true }
-          case _ =>
-        }
-        (hasL, hasR)
-      }
-      // resolved attrs → by-name columns (names are plain and disjoint by
-      // the grid kernels' contract), keeping the analyzer's casts. Quoted:
-      // UnresolvedAttribute(name) would parse dots as path separators, so
-      // a column named "u.k" could re-resolve to a struct FIELD u.k
-      def toColumn(e: Expression): Column =
-        ColumnBridge.column(e.transformUp {
-          case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-        })
-      def movable(e: Expression): Boolean =
-        e.deterministic && (!ansiOn || neverThrows(e))
-      def pick(a: Expression, b: Expression): Option[(Expression, Expression)] =
-        if (!movable(a) || !movable(b)) None
-        else (sides(a), sides(b)) match {
-          case ((true, false), (false, true)) => Some((a, b))
-          case ((false, true), (true, false)) => Some((b, a))
-          case _ => None
-        }
-      val cs = conjuncts(condExpr)
-      val keys = cs.flatMap {
-        case EqualTo(a, b) => pick(a, b)
-        case EqualNullSafe(a, b) => pick(a, b)
-        case _ => None
-      }
-      // the kernels join on struct(left keys) = struct(right keys), which
-      // needs identical field types on both sides
-      val keysJoinable = keys.forall { case (l, r) => l.dataType == r.dataType }
-      def sideOnly(side: (Boolean, Boolean)): Option[Column] =
-        cs.filter(e => movable(e) && sides(e) == side).map(toColumn).reduceOption(_ && _)
+    // resolved attrs -> by-name columns, keeping the analyzer's casts.
+    // Quoted: UnresolvedAttribute(name) would parse dots as path
+    // separators, so a column named "u.k" could re-resolve to a struct
+    // FIELD u.k
+    def toColumn(e: Expression): Column =
+      ColumnBridge.column(e.transformUp {
+        case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
+      })
+    Try(split(spark, cond, leftSchema, rightSchema)._1).fold(_ => Unfactored, s =>
       Factored(
-        equiKeys = if (keysJoinable) keys.map { case (l, r) => (toColumn(l), toColumn(r)) } else Nil,
-        leftOnly = sideOnly((true, false)),
-        rightOnly = sideOnly((false, true)),
-        fusable = cs.forall(movable))
-    }
+        equiKeys = s.equiKeys.map(k => (toColumn(k.left), toColumn(k.right))),
+        leftOnly = s.leftOnly.map(toColumn),
+        rightOnly = s.rightOnly.map(toColumn),
+        fusable = s.fusable))
   }
 
   /**
-   * An extra join condition factored by [[factor]].
+   * The one factoring of an extra join condition, shared by both
+   * kernels. The Spark 4 Column API carries a lazy column-node tree whose
+   * catalyst shape only exists post-analysis, so `cond` is analyzed ONCE
+   * over an empty frame with the concatenated (disjoint-name) schema,
+   * implicit casts included. Returns the split and the analyzed
+   * left ++ right attributes it refers to.
+   *
+   * Conjunct sides are detected by referenced attribute; a conjunct
+   * straddling sides or referencing neither is never moved. Every moved
+   * part is evaluated EAGERLY over whole frames (every broadcast row,
+   * every probe row), where the condition itself only runs on spatial
+   * candidate pairs, so a conjunct moves only when it is deterministic
+   * and its expressions statically [[neverThrows]]: an eager key
+   * throwing on a row that never pairs would fail the query.
+   */
+  private def split(spark: org.apache.spark.sql.SparkSession, cond: Column,
+      leftSchema: StructType, rightSchema: StructType): (Split, Seq[Attribute]) = {
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, CommonExpressionRef, EqualNullSafe, EqualTo, RuntimeReplaceable, With}
+    val session = spark.asInstanceOf[SparkSession]
+    val merged = StructType(leftSchema.fields ++ rightSchema.fields)
+    val empty = session.createDataFrame(java.util.Collections.emptyList[Row](), merged)
+    val (analyzed, childOutput) = empty.filter(cond).queryExecution.analyzed.collectFirst {
+      case f: logical.Filter => (f.condition, f.child.output)
+    }.getOrElse(throw new IllegalStateException("no Filter in analyzed plan"))
+    // RuntimeReplaceable nodes (between, ilike, ...) only run through their
+    // replacement, and the replacement may use With/CommonExpressionRef
+    // (subexpression sharing) — normally optimizer rules substitute both;
+    // the broadcast kernel interprets the expression directly, so inline
+    // them here
+    val condExpr = analyzed.transformDown {
+      case r: RuntimeReplaceable => r.replacement
+    }.transformUp {
+      case w: With =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transformUp {
+          case ref: CommonExpressionRef if defs.contains(ref.id) => defs(ref.id)
+        }
+    }
+    val leftIds = childOutput.take(leftSchema.length).map(_.exprId).toSet
+    val rightIds = childOutput.drop(leftSchema.length).map(_.exprId).toSet
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case x => Seq(x)
+    }
+    // (references left?, references right?) — an attribute from
+    // neither side counts as both, so it is never moved
+    def sides(e: Expression): (Boolean, Boolean) = {
+      var hasL = false; var hasR = false
+      e.foreach {
+        case a: AttributeReference =>
+          if (leftIds(a.exprId)) hasL = true
+          else if (rightIds(a.exprId)) hasR = true
+          else { hasL = true; hasR = true }
+        case _ =>
+      }
+      (hasL, hasR)
+    }
+    def movable(e: Expression): Boolean = e.deterministic && neverThrows(e)
+    // both kernels compare key values of one type per key (struct
+    // equality on the grid, boxed equality in the broadcast index)
+    def key(a: Expression, b: Expression, nullSafe: Boolean): Option[EquiKey] =
+      if (!movable(a) || !movable(b) || a.dataType != b.dataType) None
+      else (sides(a), sides(b)) match {
+        case ((true, false), (false, true)) => Some(EquiKey(a, b, nullSafe))
+        case ((false, true), (true, false)) => Some(EquiKey(b, a, nullSafe))
+        case _ => None
+      }
+    val cs = conjuncts(condExpr)
+    val keyed = cs.map {
+      case EqualTo(a, b) => key(a, b, nullSafe = false)
+      case EqualNullSafe(a, b) => key(a, b, nullSafe = true)
+      case _ => None
+    }
+    val rest = cs.zip(keyed).collect { case (c, None) => c }
+    def sideOnly(side: (Boolean, Boolean)): Seq[Expression] =
+      rest.filter(e => movable(e) && sides(e) == side)
+    val (lOnly, rOnly) = (sideOnly((true, false)), sideOnly((false, true)))
+    (Split(
+      condition = condExpr,
+      equiKeys = keyed.flatten,
+      leftOnly = lOnly.reduceOption(And),
+      rightOnly = rOnly.reduceOption(And),
+      residual = rest.filterNot(e => lOnly.contains(e) || rOnly.contains(e)).reduceOption(And),
+      fusable = cs.forall(movable)), childOutput)
+  }
+
+  /** One equality conjunct moved into a join key: `left = right`, or
+    * `left <=> right` when `nullSafe`, with `left` over the left side
+    * only and `right` over the right side only, of one data type. */
+  final case class EquiKey(left: Expression, right: Expression, nullSafe: Boolean) {
+    def conjunct: Expression = if (nullSafe) EqualNullSafe(left, right) else EqualTo(left, right)
+  }
+
+  /**
+   * An extra join condition split by [[split]]: its conjuncts are the
+   * equi keys, the left-only and the right-only conjuncts, and the
+   * residual (everything that moved nowhere).
+   *
+   * The parts are pure SUPERSET restrictions: a pair passes `condition`
+   * exactly when it is key-equal under SQL semantics, passes both side
+   * filters and passes the residual. Composing the keys into one struct
+   * join key (the grid kernels) treats null fields as equal
+   * (struct(null) = struct(null) is TRUE) where SQL `=` never holds on
+   * null, so a caller that joins on the struct must still evaluate the
+   * FULL condition per candidate pair; `<=>` keys match struct
+   * equality exactly.
+   *
+   * @param fusable whether the condition may gate an expensive refine
+   *                as a [[graft.functions.GatedAnd]]: fusing runs it on
+   *                every candidate pair, so every conjunct must be
+   *                movable (deterministic and throw-free)
+   */
+  final case class Split(
+      condition: Expression,
+      equiKeys: Seq[EquiKey],
+      leftOnly: Option[Expression],
+      rightOnly: Option[Expression],
+      residual: Option[Expression],
+      fusable: Boolean) {
+    def map(f: Expression => Expression): Split = Split(f(condition),
+      equiKeys.map(k => k.copy(left = f(k.left), right = f(k.right))),
+      leftOnly.map(f), rightOnly.map(f), residual.map(f), fusable)
+  }
+
+  /**
+   * The grid kernels' Column view of a [[Split]], built by [[factor]].
    *
    * @param equiKeys  (left key, right key) pairs from `leftExpr = rightExpr`
-   *                  and `<=>` conjuncts; empty unless every pair's key
-   *                  types agree
+   *                  and `<=>` conjuncts
    * @param leftOnly  AND of the left-only conjuncts: pre-filters probes on
    *                  an INNER join
    * @param rightOnly AND of the right-only conjuncts (e.g. a literal
    *                  IN-list): pre-filters the candidate side
-   * @param fusable   whether the condition may gate an expensive refine
-   *                  as a [[graft.functions.GatedAnd]]: fusing runs it on
-   *                  every candidate pair, so every conjunct must be
-   *                  deterministic and, under ANSI mode, throw-free
+   * @param fusable   see [[Split]]
    */
   final case class Factored(
       equiKeys: Seq[(Column, Column)],
@@ -245,28 +276,31 @@ object PairCondition {
 
   /**
    * Conservative static throw-safety: true only when evaluating `e`
-   * can never throw on ANY input row, so callers may evaluate it
-   * EAGERLY frame-wide under ANSI mode (the factoring regression
+   * can never throw on ANY input row, whatever the ANSI setting, so
+   * callers may evaluate it EAGERLY frame-wide (the factoring regression
    * class: an eager key throwing on a row the unfactored path never
    * pairs). Whitelist, not blacklist — attribute refs, literals,
    * always-safe casts (Cast.canUpCast), struct build/field access,
    * null predicates, boolean connectives, comparisons, IN-lists,
    * coalesce/least/greatest, simple string functions, float-typed
    * arithmetic (IEEE semantics — no ANSI error even at /0), and
-   * integral `%`/`pmod` by a non-zero literal (the one arithmetic
-   * shape with no ANSI failure case: Long.MinValue % -1 is 0 in
-   * two's complement, unlike division). Integral/decimal add, subtract,
-   * multiply, divide (overflow / divide-by-zero), down-casts, string
-   * parsing, UDFs and everything unrecognized are assumed throwing.
+   * integral `%`/`pmod` by a non-zero constant — a foldable, throw-free
+   * divisor, e.g. the analyzer's `cast(4 as bigint)` for `% 4` on a
+   * bigint (the one arithmetic shape with no ANSI failure case:
+   * Long.MinValue % -1 is 0 in two's complement, unlike division).
+   * Integral/decimal add, subtract, multiply, divide (overflow /
+   * divide-by-zero), down-casts, string parsing, UDFs and everything
+   * unrecognized are assumed throwing.
    */
   def neverThrows(e: Expression): Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
     def floatLike(dt: DataType): Boolean = dt == DoubleType || dt == FloatType
-    def nonZeroLiteral(x: Expression): Boolean = x match {
-      case Literal(n: java.lang.Number, _) => n.doubleValue != 0.0
-      case _ => false
-    }
+    def nonZeroConstant(x: Expression): Boolean =
+      x.foldable && neverThrows(x) && (x.eval() match {
+        case n: java.lang.Number => n.doubleValue != 0.0
+        case _ => false
+      })
     e match {
       case _: AttributeReference | _: BoundReference | _: Literal => true
       case a: Alias => neverThrows(a.child)
@@ -279,8 +313,8 @@ object PairCondition {
            _: Coalesce | _: Least | _: Greatest |
            _: Upper | _: Lower | _: Length =>
         e.children.forall(neverThrows)
-      case r: Remainder if nonZeroLiteral(r.right) => neverThrows(r.left)
-      case p: Pmod if nonZeroLiteral(p.right) => neverThrows(p.left)
+      case r: Remainder if nonZeroConstant(r.right) => neverThrows(r.left)
+      case p: Pmod if nonZeroConstant(p.right) => neverThrows(p.left)
       case b @ (_: Add | _: Subtract | _: Multiply | _: Divide | _: UnaryMinus)
           if floatLike(b.dataType) =>
         e.children.forall(neverThrows)
@@ -288,13 +322,3 @@ object PairCondition {
     }
   }
 }
-
-/**
- * A bound pair predicate over the concatenated (left ++ right) row —
- * `bound` contains only BoundReferences/literals/functions, evaluated
- * natively on InternalRows inside graft.plans.BroadcastSpatialJoinExec.
- */
-final case class CompiledCondition(
-    bound: Expression,
-    leftSchema: StructType,
-    rightSchema: StructType)

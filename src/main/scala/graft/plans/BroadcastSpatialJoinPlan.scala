@@ -3,10 +3,11 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, Predicate, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, Predicate, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
+import graft.join.PairCondition
 import graft.spatial.SpatialPredicate
 
 /**
@@ -23,8 +24,8 @@ import graft.spatial.SpatialPredicate
  * match-less left rows (null geometry included) with the right side +
  * distance nulled under the standard outer nullability widening;
  * Semi/Anti = left.output ONLY (existence filter — no distance).
- * `condition` is a pre-bound predicate over the concatenated
- * (left ++ right) row.
+ * `condition` is the extra condition's split (graft.join.PairCondition),
+ * every part pre-bound over the concatenated (left ++ right) row.
  */
 case class BroadcastSpatialJoinPlan(
     left: LogicalPlan,
@@ -32,7 +33,7 @@ case class BroadcastSpatialJoinPlan(
     leftWkb: Attribute,
     rightWkb: Attribute,
     predicate: SpatialPredicate,
-    condition: Option[Expression], // bound over left.output ++ right.output
+    condition: Option[PairCondition.Split], // bound over left.output ++ right.output
     distAttr: Option[AttributeReference],
     mode: graft.spatial.SpatialJoinMode = graft.spatial.SpatialJoinMode.Inner)
   extends BinaryNode {
@@ -92,7 +93,7 @@ case class BroadcastSpatialJoinExec(
     leftWkb: Attribute,
     rightWkb: Attribute,
     predicate: SpatialPredicate,
-    condition: Option[Expression],
+    condition: Option[PairCondition.Split],
     distAttr: Option[AttributeReference],
     mode: graft.spatial.SpatialJoinMode = graft.spatial.SpatialJoinMode.Inner)
   extends BinaryExecNode {
@@ -106,100 +107,34 @@ case class BroadcastSpatialJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): BroadcastSpatialJoinExec =
     copy(left = newLeft, right = newRight)
 
-  /** Factored condition: composite equi keys (`=` and `<=>` conjuncts),
-    * single-sided pre-filters, and the per-candidate residual.
-    * `nullSafe(i)` marks a `<=>` key component: a null there is a REAL
-    * key value (both sides map to the NullSafeKey sentinel and hash-match,
-    * mirroring Catalyst's null-safe equality) where a `=` component's
-    * null means no-match. `leftOnly` / `rightOnly` carry deterministic
-    * conjuncts referencing one side only (literal IN-lists, range
-    * guards): right-only ones exclude rows from the index at build,
-    * left-only ones short-circuit probes to O(1) no-match — both pure
-    * superset restrictions (a filtered row/probe could never pass the
-    * full condition; SQL filter semantics drop null evaluations on
-    * either path). */
-  private case class EquiSplit(
-      lKeys: Seq[Expression], rKeys: Seq[Expression], nullSafe: Array[Boolean],
-      leftOnly: Option[Expression], rightOnly: Option[Expression],
-      residual: Option[Expression])
-
   /**
-   * Equi-conjunct factoring (round-12 scale fix): every conjunct of
-   * the bound condition shaped `leftOnlyExpr = rightOnlyExpr` is
-   * folded into one composite key that turns the flat broadcast index
-   * into a HASH-PARTITIONED one (one sub-tree per distinct right-key
-   * tuple). Why it matters: the conditional-nearest
-   * kernel must PROVE no-match for probes whose condition nothing
-   * satisfies, and that proof is O(|right|) per probe on a flat index —
-   * measured ×239 wall at the materialized sf10 rung (`j1_nearest_left`:
-   * 300k never-matching probes × 100k broadcast rows). With the key
-   * factored out, a never-matching probe is one hash miss (O(1)), and a
-   * condition that was PURE equi leaves no residual — every probe takes
-   * the unconditioned single-walk fast path. Null keys never match
-   * (SQL `=`), matching the flat kernel's behavior exactly; per-key
-   * min-index tie-break equals the flat kernel's min-index-among-
-   * passing rule because subsets keep ascending global order.
-   * Restricted to deterministic, atomic-typed keys (hash-map equality
-   * must agree with Catalyst EqualTo; ±0.0 normalized like Spark's own
-   * hash joins; boxed NaN is canonical under Double.hashCode).
+   * The condition's equi keys the broadcast index hashes on (round-12
+   * scale fix): they fold into one composite key that turns the flat
+   * index into a HASH-PARTITIONED one (one sub-tree per distinct
+   * right-key tuple). Why it matters: the conditional-nearest kernel
+   * must PROVE no-match for probes whose condition nothing satisfies,
+   * and that proof is O(|right|) per probe on a flat index — measured
+   * ×239 wall at the materialized sf10 rung (`j1_nearest_left`: 300k
+   * never-matching probes × 100k broadcast rows). With the key hashed,
+   * a never-matching probe is one hash miss (O(1)), and a condition
+   * that was PURE equi leaves no residual — every probe takes the
+   * unconditioned single-walk fast path. Per-key min-index tie-break
+   * equals the flat kernel's min-index-among-passing rule because
+   * subsets keep ascending global order.
+   *
+   * Atomic-typed keys only: value classes whose boxed equals/hashCode
+   * agree with Catalyst EqualTo (±0.0 normalized like Spark's own hash
+   * joins; boxed NaN is canonical under Double.hashCode). Binary,
+   * struct, array and map keys stay per-candidate checks.
    */
-  @transient private lazy val equiSplit: Option[EquiSplit] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualNullSafe, EqualTo}
-    val leftWidth = left.output.length
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(a, b) => conjuncts(a) ++ conjuncts(b)
-      case x => Seq(x)
-    }
-    def sides(e: Expression): (Boolean, Boolean) = {
-      var hasL = false; var hasR = false
-      e.foreach {
-        case b: BoundReference =>
-          if (b.ordinal < leftWidth) hasL = true else hasR = true
-        case _ =>
-      }
-      (hasL, hasR)
-    }
-    def atomicKey(e: Expression): Boolean = {
-      import org.apache.spark.sql.types._
-      e.deterministic && (e.dataType match {
-        // value classes whose boxed equals/hashCode agree with Catalyst
-        // EqualTo (binary/struct/array/map do NOT — left on the flat path)
-        case _: NumericType | StringType | BooleanType | DateType |
-             TimestampType | TimestampNTZType => true
-        case _ => false
-      })
-    }
-    condition.flatMap { cond =>
-      val cs = conjuncts(cond)
-      // factor EVERY factorable equality into one composite key — a
-      // two-key condition partitions |right| / (k1·k2) per bucket
-      def pickEq(eq: Expression, a: Expression, b: Expression, ns: Boolean) =
-        (sides(a), sides(b)) match {
-          case ((true, false), (false, true)) if atomicKey(a) && atomicKey(b) =>
-            Some((eq, a, b, ns))
-          case ((false, true), (true, false)) if atomicKey(a) && atomicKey(b) =>
-            Some((eq, b, a, ns))
-          case _ => None
-        }
-      val picks = cs.flatMap {
-        case eq @ EqualTo(a, b) => pickEq(eq, a, b, ns = false)
-        case eq @ EqualNullSafe(a, b) => pickEq(eq, a, b, ns = true)
-        case _ => None
-      }
-      val picked = picks.map(_._1).toSet
-      val rest0 = cs.filterNot(picked.contains)
-      val lOnly = rest0.filter(e => e.deterministic && sides(e) == ((true, false)))
-      val rOnly = rest0.filter(e => e.deterministic && sides(e) == ((false, true)))
-      val moved = (lOnly ++ rOnly).toSet
-      val rest = rest0.filterNot(moved.contains)
-      if (picks.isEmpty && lOnly.isEmpty && rOnly.isEmpty) None
-      else Some(EquiSplit(picks.map(_._2), picks.map(_._3),
-        picks.map(_._4).toArray,
-        lOnly.reduceOption(And), rOnly.reduceOption(And),
-        rest.reduceOption(And)))
-    }
+  def hashKeys: Seq[PairCondition.EquiKey] = {
+    import org.apache.spark.sql.types._
+    condition.toSeq.flatMap(_.equiKeys).filter(_.left.dataType match {
+      case _: NumericType | StringType | BooleanType | DateType |
+           TimestampType | TimestampNTZType => true
+      case _ => false
+    })
   }
-
 
   // collect + pack + broadcast the right side once per physical plan —
   // Dataset caches its QueryExecution, so repeated actions on the same
@@ -222,17 +157,26 @@ case class BroadcastSpatialJoinExec(
 
     val needDist = distAttr.isDefined
     val outAttrs = output
-    val condExpr = condition
     val pred = predicate
 
     val joinMode = mode
     val leftWidth = left.output.length
     val rightWidth = right.output.length
-    val split = equiSplit
+    val keys = hashKeys
+    val lKeys = keys.map(_.left)
+    val rKeys = keys.map(_.right)
+    val nullSafe = keys.map(_.nullSafe).toArray
+    // the index is keyed when anything moved off the per-candidate path;
+    // then only the residual and the unhashed keys run per candidate
+    val keyed = condition.filter(c => keys.nonEmpty || c.leftOnly.isDefined || c.rightOnly.isDefined)
+    val perCandidate = condition.flatMap(c =>
+      if (keyed.isEmpty) Some(c.condition)
+      else (c.residual.toSeq ++ c.equiKeys.filterNot(keys.contains).map(_.conjunct))
+        .reduceOption(And))
 
     left.execute().mapPartitions { it =>
       val idx = bc.value
-      val condPred = condExpr.map(Predicate.create)
+      val condPred = perCandidate.map(Predicate.create)
       condPred.foreach(_.initialize(0))
       val joined = new JoinedRow
       val joinedDist = new JoinedRow
@@ -245,18 +189,16 @@ case class BroadcastSpatialJoinExec(
           java.lang.Float.valueOf(0.0f)
         case x => x
       }
-      // the flat probe: the whole index under the full condition. With no
-      // condition it passes the AlwaysTrue sentinel BY REFERENCE, which
-      // enables the unconditioned-nearest fast path inside the probe kernel
-      lazy val flatProbe = new SpatialProbe(idx.geoms, idx.tree)
-      def flatHits(lrow: InternalRow, g: org.locationtech.jts.geom.Geometry) =
-        flatProbe.matches(g, pred, condPred match {
-          case None => SpatialProbe.AlwaysTrue
-          case Some(p) => i => p.eval(joined(lrow, idx.rows(i)))
-        }, needDist)
-      val hitsOf: InternalRow => Iterator[(Int, Int)] = split match {
-        case Some(EquiSplit(lKeys, rKeys, nullSafe, leftOnly, rightOnly, residual)) =>
-          // key-partitioned probes: the equi conjuncts become ONE
+      // the per-candidate veto. With nothing to check it passes the
+      // AlwaysTrue sentinel BY REFERENCE, which enables the
+      // unconditioned-nearest fast path inside the probe kernel
+      def condEvalFor(lrow: InternalRow): Int => Boolean = condPred match {
+        case None => SpatialProbe.AlwaysTrue
+        case Some(p) => i => p.eval(joined(lrow, idx.rows(i)))
+      }
+      val hitsOf: InternalRow => Iterator[(Int, Int)] = keyed match {
+        case Some(c) =>
+          // key-partitioned probes: the hashed keys become ONE
           // composite hash lookup; only the residual (if any) rides as
           // a per-candidate predicate — none means the fast
           // unconditioned walk. A null in a `=` key component means SQL
@@ -265,8 +207,8 @@ case class BroadcastSpatialJoinExec(
           // value (NullSafeKey sentinel — both sides hash-match, which
           // is exactly Catalyst's null-safe equality). Right-only
           // conjuncts exclude rows from the index at build; left-only
-          // ones short-circuit probes to O(1) no-match. With no key
-          // conjuncts at all, every surviving row lands in the single
+          // ones short-circuit probes to O(1) no-match. With no hashed
+          // keys at all, every surviving row lands in the single
           // Nil-key bucket — a right-filtered flat index.
           val nullLeft = new GenericInternalRow(leftWidth)
           val nullRight = new GenericInternalRow(rightWidth)
@@ -284,70 +226,32 @@ case class BroadcastSpatialJoinExec(
             }
             out
           }
-          // ANSI safety: factoring evaluates key/side expressions
-          // EAGERLY — over every broadcast row at build, and per probe
-          // row — while the flat kernel only evaluates the full
-          // condition on tree-candidate pairs. A key that throws (e.g.
-          // ANSI cast overflow) on a row the flat path never pairs must
-          // not fail the query, so a throwing build falls back to the
-          // flat path wholesale and a throwing probe-side key falls
-          // back for that row: answers become exactly the flat
-          // kernel's, and a genuinely-throwing candidate still throws
-          // where the flat path would (the condition contains the same
-          // sub-expression).
-          val keyProbes = {
-            val rightPred = rightOnly.map(Predicate.create)
-            rightPred.foreach(_.initialize(0))
-            try idx.partitioned { i =>
-              val jr = keyJoin(nullLeft, idx.rows(i))
-              if (rightPred.exists(p => !p.eval(jr))) null
-              else keyOf(rKeys, jr)
-            }
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                // the fallback is CORRECT but O(candidates)-per-probe —
-                // a silent catch would mask both genuine defects and the
-                // perf cliff, so the degradation is logged once per task
-                // (ADVICE r13). Intended catches are ANSI eval errors
-                // (cast overflow on a row the flat path never pairs);
-                // anything else still falls back safely but is loud.
-                SpatialProbeLog.keyBuildFallback(e)
-                null
-            }
+          val rightPred = c.rightOnly.map(Predicate.create)
+          rightPred.foreach(_.initialize(0))
+          val keyProbes = idx.partitioned { i =>
+            val jr = keyJoin(nullLeft, idx.rows(i))
+            if (rightPred.exists(p => !p.eval(jr))) null
+            else keyOf(rKeys, jr)
           }
-          val leftPred = leftOnly.map(Predicate.create)
+          val leftPred = c.leftOnly.map(Predicate.create)
           leftPred.foreach(_.initialize(0))
-          val resPred = residual.map(Predicate.create)
-          resPred.foreach(_.initialize(0))
-          def resEvalFor(lrow: InternalRow): Int => Boolean = resPred match {
-            case None => SpatialProbe.AlwaysTrue
-            case Some(p) => i => p.eval(joined(lrow, idx.rows(i)))
-          }
           lrow => {
             val g = graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx))
-            if (g == null) Iterator.empty
-            else if (keyProbes == null) flatHits(lrow, g)
-            else {
-              var keyThrew = false
-              var leftFails = false
-              val k =
-                try {
-                  val lj = keyJoin(lrow, nullRight)
-                  if (leftPred.exists(p => !p.eval(lj))) { leftFails = true; null }
-                  else keyOf(lKeys, lj)
-                }
-                catch { case scala.util.control.NonFatal(_) => keyThrew = true; null }
-              if (keyThrew) flatHits(lrow, g)
-              else if (leftFails || k == null) Iterator.empty
+            val lj = keyJoin(lrow, nullRight)
+            val probe =
+              if (g == null || leftPred.exists(p => !p.eval(lj))) null
               else {
-                val probe = keyProbes.get(k)
-                if (probe == null) Iterator.empty
-                else probe.matches(g, pred, resEvalFor(lrow), needDist)
+                val k = keyOf(lKeys, lj)
+                if (k == null) null else keyProbes.get(k)
               }
-            }
+            if (probe == null) Iterator.empty
+            else probe.matches(g, pred, condEvalFor(lrow), needDist)
           }
         case None =>
-          lrow => flatHits(lrow, graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx)))
+          // the flat probe: the whole index under the full condition
+          lazy val flatProbe = new SpatialProbe(idx.geoms, idx.tree)
+          lrow => flatProbe.matches(graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx)),
+            pred, condEvalFor(lrow), needDist)
       }
 
       joinMode match {
@@ -387,19 +291,4 @@ case class BroadcastSpatialJoinExec(
       }
     }
   }
-}
-
-/**
- * Executor-side logger for the probe closures: a standalone object is
- * referenced statically by the task closure, so logging a degradation
- * never drags the exec node (and its whole plan subtree) into closure
- * serialization. The once-per-task shape comes for free — the guarded
- * build runs once per task attempt.
- */
-private[plans] object SpatialProbeLog extends org.apache.spark.internal.Logging {
-  def keyBuildFallback(e: Throwable): Unit =
-    logWarning(
-      "broadcast spatial join: build-side key partitioning threw; " +
-        "falling back to the flat probe path for this task " +
-        "(answers unchanged, probes no longer O(1)-keyed)", e)
 }

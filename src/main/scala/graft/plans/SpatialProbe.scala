@@ -38,7 +38,6 @@ final class PackedSpatialIndex[T](val rows: Array[T], val wkbs: Array[Array[Byte
 
   def geoms: Array[Geometry] = ensure()._1
   def tree: STRtree = ensure()._2
-  def indexedCount: Int = { ensure(); wkbs.count(_ != null) }
 
   @transient @volatile private var partCache: java.util.HashMap[Any, SpatialProbe] = _
 
@@ -89,10 +88,10 @@ final class PackedSpatialIndex[T](val rows: Array[T], val wkbs: Array[Array[Byte
  * tests (see graft.transformer.BroadcastSpatialJoinSpec).
  *
  * `subset`: when non-null, the probe serves a KEY PARTITION of the
- * index (the equi-condition factoring in BroadcastSpatialJoinExec) —
- * `tree` holds only those global indices and the conditional-nearest
- * scan fallback walks only them, so a per-partition operation is
- * bounded by the partition, never the whole broadcast side.
+ * index (BroadcastSpatialJoinExec's hashed equi keys) — `tree` holds
+ * only those global indices and the conditional-nearest scan fallback
+ * walks only them, so a per-partition operation is bounded by the
+ * partition, never the whole broadcast side.
  */
 final class SpatialProbe(geoms: Array[Geometry], tree: STRtree,
     subset: Array[Int] = null) {

@@ -1,6 +1,6 @@
 package graft.transformer
 
-import graft.join.{CompiledCondition, GridNearestJoin, GridSpatialJoin, PairCondition}
+import graft.join.{GridNearestJoin, GridSpatialJoin, PairCondition}
 import graft.spatial.{GeomSpec, SpatialPredicate}
 import graft.toolbox.StringToolbox._
 import org.apache.spark.ml.Transformer
@@ -369,8 +369,7 @@ class BroadcastSpatialJoin(override val uid: String)
     val rwName = "__graft_wkb_r"
     val leftD = iterDF.withColumn(lwName, wkbColOf(iterSpec))
     val rightD = bcDF.withColumn(rwName, wkbColOf(bcSpec))
-    val compiled: Option[CompiledCondition] =
-      PairCondition.compile(spark, cfg.conditionSql, leftD.schema, rightD.schema)
+    val condition = PairCondition.compile(spark, cfg.conditionSql, leftD.schema, rightD.schema)
 
     ensureStrategy(spark)
     val lp = leftD.queryExecution.analyzed
@@ -394,7 +393,7 @@ class BroadcastSpatialJoin(override val uid: String)
       else None
 
     val plan = graft.plans.BroadcastSpatialJoinPlan(
-      lp, rp, lAttr, rAttr, cfg.spatialPredicate, compiled.map(_.bound), distAttr,
+      lp, rp, lAttr, rAttr, cfg.spatialPredicate, condition, distAttr,
       mode = cfg.joinMode)
     val joinedDF = org.apache.spark.sql.graft.DatasetBridge.ofRows(spark, plan)
 

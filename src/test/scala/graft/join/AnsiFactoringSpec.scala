@@ -9,15 +9,14 @@ import graft.functions.GeoExpressions
 import graft.spatial.SpatialPredicate
 
 /**
- * ANSI eager-key safety on the grid kernels (r14, ADVICE r13): the
+ * Eager-key safety of the condition factoring (r14, ADVICE r13): the
  * factored equi keys / side-only prefilters evaluate EAGERLY over every
  * frame row, while the unfactored path only evaluates the condition on
- * cell-co-located pairs — so under ANSI mode only statically throw-free
- * conjuncts may factor ([[PairCondition.neverThrows]]). A key that
- * throws (cast overflow, string parse) on a row that never pairs must
- * not fail the query; it stays in the full condition instead, restoring
- * the unfactored path byte for byte — the grid twin of the broadcast
- * kernel's runtime flat-path fallback.
+ * spatial candidate pairs — so only statically throw-free conjuncts may
+ * factor ([[PairCondition.neverThrows]]), whatever the ANSI setting. A
+ * key that throws (cast overflow, string parse, a UDF) on a row that
+ * never pairs must not fail the query; it stays in the full condition
+ * instead, restoring the unfactored path byte for byte, on both kernels.
  */
 class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
 
@@ -41,6 +40,12 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
     PairCondition.neverThrows(Pmod(l, Literal(5L), EvalMode.ANSI)) shouldBe true
     PairCondition.neverThrows(Remainder(l, Literal(0L), EvalMode.ANSI)) shouldBe false
     PairCondition.neverThrows(Remainder(l, l, EvalMode.ANSI)) shouldBe false
+    // ... or by a foldable, throw-free constant: the analyzer writes
+    // `% 4` on a bigint as `% cast(4 as bigint)`
+    PairCondition.neverThrows(
+      Remainder(l, Cast(Literal(4), LongType), EvalMode.ANSI)) shouldBe true
+    PairCondition.neverThrows(
+      Remainder(l, Cast(Literal(0), LongType), EvalMode.ANSI)) shouldBe false
     // up-cast widens losslessly (never throws); down-cast / string
     // parse can throw under ANSI
     PairCondition.neverThrows(Cast(i, LongType)) shouldBe true
@@ -52,6 +57,17 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
     PairCondition.neverThrows(Divide(d, Literal(0.0), EvalMode.ANSI)) shouldBe true
     PairCondition.neverThrows(CreateNamedStruct(Seq(Literal("k"), i))) shouldBe true
     PairCondition.neverThrows(In(i, Seq(Literal(1), Literal(2)))) shouldBe true
+  }
+
+  behavior of "PairCondition.factor"
+
+  it should "factor `%` keys on bigint columns under ANSI" in {
+    import org.apache.spark.sql.types._
+    spark.conf.get("spark.sql.ansi.enabled") shouldBe "true" // Spark 4 default
+    val ls = StructType(Seq(StructField("c_custkey", LongType)))
+    val rs = StructType(Seq(StructField("s_suppkey", LongType)))
+    PairCondition.factor(spark, expr("s_suppkey % 4 = c_custkey % 5"), ls, rs)
+      .equiKeys.size shouldBe 1
   }
 
   behavior of "grid kernels under ANSI with a throwing key on a never-paired row"
@@ -94,5 +110,48 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
       .select("id", "poi_id")
       .collect().map(x => (x.getString(0), x.getString(1))).toSet
     got shouldBe Set(("a", "p1"), ("b", "p2"))
+  }
+
+  behavior of "both kernels with a throwing UDF key on a never-paired row"
+
+  it should "never move the key, with ANSI off" in {
+    val prev = spark.conf.get("spark.sql.ansi.enabled", "true")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      // deterministic, but throws on the one far-away right row (badp):
+      // no ANSI setting makes a UDF throw-free
+      spark.udf.register("graft_throwing_key", (c: Int) =>
+        if (c == 99) throw new IllegalStateException("bad key") else c)
+      val l = Seq(("a", 0.1, 0.1, 1), ("b", 0.2, 0.3, 2)).toDF("id", "lon", "lat", "code")
+      val r = Seq(
+        ("p1", 0.15, 0.12, 1),
+        ("p2", 0.22, 0.28, 2),
+        ("badp", 50.0, 50.0, 99)).toDF("poi_id", "plon", "plat", "pcode")
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.select("id", "poi_id").collect().map(x => (x.getString(0), x.getString(1))).toSet
+
+      // broadcast kernel: withindist 100 km never makes badp a candidate
+      r.createOrReplaceTempView("throwing_key_poi")
+      def broadcast(cond: String) = pairs(new graft.transformer.BroadcastSpatialJoin()
+        .setDataset("throwing_key_poi").setDatasetPoint("plon, plat")
+        .setInputPoint("lon, lat").setDataColumns("poi_id")
+        .setBroadcast("dataset").setPredicate("withindist 100000")
+        .setJoinCondition(cond)
+        .transform(l))
+      val b = broadcast("graft_throwing_key(right.pcode) = left.code")
+      b shouldBe broadcast("not (graft_throwing_key(right.pcode) != left.code)")
+      b shouldBe Set(("a", "p1"), ("b", "p2"))
+
+      // ring kernel, rings only (as above): badp's far cell is never paired
+      def ring(cond: String) = pairs(GridNearestJoin.nearest(
+        l, r,
+        GeoExpressions.wkbPoint(col("lon"), col("lat")),
+        GeoExpressions.wkbPoint(col("plon"), col("plat")),
+        cellDeg = 1.0, condition = Some(expr(cond)),
+        fallbackBelow = 0L, fallbackPairs = 0L))
+      val g = ring("graft_throwing_key(pcode) = code")
+      g shouldBe ring("not (graft_throwing_key(pcode) != code)")
+      g shouldBe Set(("a", "p1"), ("b", "p2"))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 }

@@ -7,14 +7,14 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkTestKit.spark
 
 /**
- * Equi-conjunct factoring of the broadcast kernel's extra condition
- * (BroadcastSpatialJoinExec.equiSplit): a `leftExpr = rightExpr`
- * conjunct hash-partitions the broadcast index, making never-matching
- * probes O(1) instead of O(|right|) — the round-12 sf10 find. These
- * specs pin that the FACTORED path is row-identical to the same
- * condition expressed in shapes the factoring cannot touch (`!=` twice,
- * reversed operand order, residual conjuncts, nulls, ties), across
- * inner/left/semi/anti.
+ * Equi-conjunct factoring of the extra condition (graft.join.PairCondition,
+ * shared by both kernels): on the broadcast kernel a `leftExpr = rightExpr`
+ * conjunct hash-partitions the index, making never-matching probes O(1)
+ * instead of O(|right|) — the round-12 sf10 find. These specs pin that
+ * the FACTORED path is row-identical to the same condition expressed in
+ * shapes the factoring cannot touch (`!=` twice, reversed operand order,
+ * residual conjuncts, nulls, ties), across inner/left/semi/anti, and that
+ * the executed plan really hashes the keys it should.
  */
 class EquiConditionSpec extends AnyFlatSpec with Matchers {
 
@@ -218,9 +218,10 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
   it should "fall back to the flat path when a factored key THROWS under ANSI" in {
     // Factoring evaluates keys EAGERLY (every broadcast row at index
     // build; every probe row), while the flat kernel only evaluates the
-    // condition on tree-candidate pairs. A key expression that throws
-    // under ANSI (cast overflow here) on a row the flat path never
-    // pairs must degrade to the flat path, not fail the query.
+    // condition on tree-candidate pairs. A key expression that can throw
+    // under ANSI (a down-cast here) is therefore never factored: the
+    // condition stays on the flat path, and a row the flat path never
+    // pairs cannot fail the query.
     val prev = spark.conf.get("spark.sql.ansi.enabled", "true")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
@@ -241,8 +242,8 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
         .setBroadcast("dataset").setPredicate("withindist 200000")
         .setJoinCondition(cond)
         .transform(in).collect().map(_.mkString("|")).sorted.toSeq
-      // right-side key throws at build → whole plan degrades to flat;
-      // left-side key throws per-probe (cid 12) → that row goes flat
+      // the right-side key would throw on poi 2, the left-side one on
+      // cid 12: neither is factored, so neither is ever evaluated there
       val factoredR = run("cast(right.big as int) = left.ccat")
       val flatR = run(
         "right.big is not null and not (cast(right.big as int) != left.ccat)")
@@ -250,7 +251,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
       factoredR.size shouldBe 2
       val factoredL = run("right.poi_id = cast(left.ccat as int)")
       // cid 10/11's casts are fine and DO match poi 0/1; cid 12's cast
-      // would throw but that probe row degrades to the flat path
+      // would throw but that probe row has no spatial candidate
       val flatL = run(
         "left.ccat is not null and not (right.poi_id != cast(left.ccat as int))")
       factoredL shouldBe flatL
@@ -266,41 +267,64 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     import org.apache.spark.sql.types._
     val ls = StructType(Seq(StructField("a", LongType), StructField("x", DoubleType)))
     val rs = StructType(Seq(StructField("b", LongType), StructField("y", DoubleType)))
-    // ANSI off: every deterministic conjunct may move (factoring under
-    // ANSI moves only throw-free ones — graft.join.AnsiFactoringSpec)
-    val prev = spark.conf.get("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
-      def keys(c: org.apache.spark.sql.Column) =
-        graft.join.PairCondition.factor(spark, c, ls, rs).equiKeys
-      keys(col("b") % 4 === col("a") % 5).size shouldBe 1
-      keys(col("a") === col("b") && col("b") % 2 === col("a") % 2).size shouldBe 2
-      // residual-only / straddling / non-equi conjuncts extract nothing
-      keys(col("a") =!= col("b")).size shouldBe 0
-      keys(col("a") + col("b") === lit(3)).size shouldBe 0
-      // mixed: one factorable + one not
-      keys(col("a") === col("b") && col("b") > col("a")).size shouldBe 1
-      // nondeterministic keys never factor
-      keys(org.apache.spark.sql.functions.rand() * col("a") === col("b")).size shouldBe 0
-      // null-safe equality factors too (struct-join semantics match <=>)
-      keys(col("a") <=> col("b")).size shouldBe 1
-      keys(col("a") <=> col("b") && col("x") === col("y")).size shouldBe 2
+    // only deterministic, throw-free conjuncts move, whatever the ANSI
+    // setting (graft.join.AnsiFactoringSpec)
+    def keys(c: org.apache.spark.sql.Column) =
+      graft.join.PairCondition.factor(spark, c, ls, rs).equiKeys
+    keys(col("b") % 4 === col("a") % 5).size shouldBe 1
+    keys(col("a") === col("b") && col("b") % 2 === col("a") % 2).size shouldBe 2
+    // residual-only / straddling / non-equi conjuncts extract nothing
+    keys(col("a") =!= col("b")).size shouldBe 0
+    keys(col("a") + col("b") === lit(3)).size shouldBe 0
+    // mixed: one factorable + one not
+    keys(col("a") === col("b") && col("b") > col("a")).size shouldBe 1
+    // nondeterministic keys never factor
+    keys(org.apache.spark.sql.functions.rand() * col("a") === col("b")).size shouldBe 0
+    // null-safe equality factors too (struct-join semantics match <=>)
+    keys(col("a") <=> col("b")).size shouldBe 1
+    keys(col("a") <=> col("b") && col("x") === col("y")).size shouldBe 2
 
-      // single-sided extraction: left-only and right-only conjuncts split
-      // out; straddling/constant/nondeterministic ones never move
-      def sideOnly(c: org.apache.spark.sql.Column) = {
-        val f = graft.join.PairCondition.factor(spark, c, ls, rs)
-        (f.leftOnly, f.rightOnly)
-      }
-      val (lo1, ro1) = sideOnly(col("a").isin(1, 2) && col("b") > 3 && col("a") === col("b"))
-      lo1.isDefined shouldBe true
-      ro1.isDefined shouldBe true
-      val (lo2, ro2) = sideOnly(col("a") === col("b"))
-      lo2 shouldBe None
-      ro2 shouldBe None
-      val (lo3, ro3) = sideOnly(org.apache.spark.sql.functions.rand() < 0.5 && lit(1) === lit(1))
-      lo3 shouldBe None
-      ro3 shouldBe None
-    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    // single-sided extraction: left-only and right-only conjuncts split
+    // out; straddling/constant/nondeterministic ones never move
+    def sideOnly(c: org.apache.spark.sql.Column) = {
+      val f = graft.join.PairCondition.factor(spark, c, ls, rs)
+      (f.leftOnly, f.rightOnly)
+    }
+    val (lo1, ro1) = sideOnly(col("a").isin(1, 2) && col("b") > 3 && col("a") === col("b"))
+    lo1.isDefined shouldBe true
+    ro1.isDefined shouldBe true
+    val (lo2, ro2) = sideOnly(col("a") === col("b"))
+    lo2 shouldBe None
+    ro2 shouldBe None
+    val (lo3, ro3) = sideOnly(org.apache.spark.sql.functions.rand() < 0.5 && lit(1) === lit(1))
+    lo3 shouldBe None
+    ro3 shouldBe None
+  }
+
+  it should "hash the keys on the executed broadcast exec (engagement, not just agreement)" in {
+    spark.conf.get("spark.sql.ansi.enabled") shouldBe "true" // Spark 4 default
+    Seq((0L, 0L, 0.0, 0.0), (1L, 1L, 0.5, 0.0), (2L, Long.MaxValue, 120.0, 0.0))
+      .toDF("poi_id", "big", "plon", "plat")
+      .createOrReplaceTempView("eq_poi_keys")
+    def hashKeys(cond: String) = {
+      val df = new BroadcastSpatialJoin()
+        .setDataset("eq_poi_keys").setDatasetPoint("plon, plat")
+        .setInputPoint("lon, lat").setDataColumns("poi_id")
+        // withindist: poi 2, whose big overflows an int, is never a
+        // candidate, so the unfactored condition never throws either
+        .setBroadcast("dataset").setPredicate("withindist 200000")
+        .setJoinCondition(cond)
+        .transform(input)
+      df.collect() // an adaptive plan is final once executed
+      val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      helper.collectFirst(df.queryExecution.executedPlan) {
+        case e: graft.plans.BroadcastSpatialJoinExec => e.hashKeys
+      }.get
+    }
+    // the j1_nearest_left shape on bigint columns: the analyzer writes
+    // `% 4` as `% cast(4 as bigint)`, which must still hash
+    hashKeys("right.poi_id % 4 = left.cid % 5").size shouldBe 1
+    // a down-cast can throw under ANSI: never hashed
+    hashKeys("cast(right.big as int) = left.ccat") shouldBe empty
   }
 }
