@@ -46,7 +46,8 @@ object GeoExpressions {
   def ringCells(cell: Column, lo: Int, hi: Int): Column =
     ColumnBridge.column(RingCells(ColumnBridge.expression(cell), lo, hi))
 
-  /** Exact JTS relation `left op right` (within/contains/intersects/overlaps). */
+  /** Exact relation `left op right` (within/contains/intersects/overlaps),
+    * refined by `SpatialPredicate.relates` like the broadcast kernel. */
   def stRelates(lwkb: Column, rwkb: Column, predicate: String): Column =
     ColumnBridge.column(StRelates(ColumnBridge.expression(lwkb), ColumnBridge.expression(rwkb),
       predicate))
@@ -102,8 +103,23 @@ object GeoExpressions {
     if (g == null) null else GeoKit.geomToWkb(g)
   }
 
-  def computeWkbPoint(lon: Double, lat: Double): Array[Byte] =
-    GeoKit.geomToWkb(GeoKit.point(lon, lat))
+  /** The 21 bytes `GeoKit.geomToWkb(GeoKit.point(lon, lat))` writes,
+    * built in place (the writer twin of `isPointWkb`/`readDouble`):
+    * byte order 0 = big-endian, type 1 = Point, then x and y as
+    * `doubleToLongBits` (NaN canonical, as JTS writes it). */
+  def computeWkbPoint(lon: Double, lat: Double): Array[Byte] = {
+    val b = new Array[Byte](21)
+    b(4) = 1
+    writeDouble(b, 5, lon)
+    writeDouble(b, 13, lat)
+    b
+  }
+
+  @inline private def writeDouble(b: Array[Byte], off: Int, v: Double): Unit = {
+    var bits = java.lang.Double.doubleToLongBits(v)
+    var i = off + 7
+    while (i >= off) { b(i) = bits.toByte; bits >>>= 8; i -= 1 }
+  }
 
   private def cellOf(x: Double, y: Double, cellDeg: Double): Long = {
     val cx = math.min(MaxCell, math.max(0, math.floor((x + 180.0) / cellDeg).toInt))
@@ -127,10 +143,10 @@ object GeoExpressions {
 
   def computeGridCells(wkb: Array[Byte], cellDeg: Double, expandMeters: Double): ArrayData = {
     val g = GeoKit.wkbToGeom(wkb)
-    // empty geometries (e.g. POLYGON EMPTY) have a null envelope: bin to
-    // no cell so they drop out, matching the broadcast kernel's inner-join
-    // null semantics instead of crashing on centroid access downstream
-    if (g == null || g.isEmpty) return new GenericArrayData(Array.empty[Any])
+    // null and empty geometries (e.g. POLYGON EMPTY, a NaN-ordinate
+    // point) bin to no cell so they drop out, matching the broadcast
+    // kernel's null semantics instead of crashing on centroid access
+    if (g == null) return new GenericArrayData(Array.empty[Any])
     val (minX, maxX, minY, maxY) = expandedBounds(g.getEnvelopeInternal, expandMeters)
     val cx0 = math.min(MaxCell, math.max(0, math.floor((minX + 180.0) / cellDeg).toInt))
     val cx1 = math.min(MaxCell, math.max(0, math.floor((maxX + 180.0) / cellDeg).toInt))
@@ -174,15 +190,13 @@ object GeoExpressions {
     new GenericArrayData(java.util.Arrays.copyOf(out.asInstanceOf[Array[AnyRef]], i))
   }
 
+  /** The relation predicates, indexed by the ordinal generated code carries. */
+  private val Relations: Array[SpatialPredicate] = Array(SpatialPredicate.Within,
+    SpatialPredicate.Contains, SpatialPredicate.Intersects, SpatialPredicate.Overlaps)
+
   def computeRelates(lwkb: Array[Byte], rwkb: Array[Byte], predOrdinal: Int): Boolean = {
     val lg = GeoKit.wkbToGeomMemo(lwkb); val rg = GeoKit.wkbToGeomMemo(rwkb)
-    if (lg == null || rg == null) false
-    else predOrdinal match {
-      case 0 => lg.within(rg)
-      case 1 => lg.contains(rg)
-      case 2 => lg.intersects(rg)
-      case 3 => lg.overlaps(rg)
-    }
+    lg != null && rg != null && Relations(predOrdinal).relates(lg, rg)
   }
 
   def computeRefCellEnv(lenv: ArrayData, renv: ArrayData, cellDeg: Double,
@@ -205,12 +219,11 @@ object GeoExpressions {
         lenv.getDouble(1) > renv.getDouble(3) || renv.getDouble(1) > lenv.getDouble(3)) false
     else computeRelates(lwkb, rwkb, predOrdinal)
 
-  def predOrdinal(predicate: String): Int = SpatialPredicate.parse(predicate) match {
-    case SpatialPredicate.Within     => 0
-    case SpatialPredicate.Contains   => 1
-    case SpatialPredicate.Intersects => 2
-    case SpatialPredicate.Overlaps   => 3
-    case p => throw new IllegalArgumentException(s"not a relation predicate: $p")
+  def predOrdinal(predicate: String): Int = {
+    val p = SpatialPredicate.parse(predicate)
+    val i = Relations.indexOf(p)
+    if (i < 0) throw new IllegalArgumentException(s"not a relation predicate: $p")
+    i
   }
 
   // --- zero-allocation fast path for 2-D point WKB ---------------------
@@ -262,7 +275,7 @@ object GeoExpressions {
   /** Called from generated code; null for null/empty geometries. */
   def computeEnvelope(wkb: Array[Byte]): ArrayData = {
     val g = GeoKit.wkbToGeom(wkb)
-    if (g == null || g.isEmpty) return null
+    if (g == null) return null
     val e = g.getEnvelopeInternal
     new GenericArrayData(Array[Any](e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
   }

@@ -21,7 +21,7 @@ final class PackedSpatialIndex[T](val rows: Array[T], val wkbs: Array[Array[Byte
     if (c == null) synchronized {
       c = cache
       if (c == null) {
-        val gs = wkbs.map(GeoKit.wkbToGeom) // null wkb → null geometry
+        val gs = wkbs.map(GeoKit.wkbToGeom) // null/empty wkb → null geometry
         val t = new STRtree()
         var i = 0
         while (i < gs.length) {

@@ -48,8 +48,16 @@ object GeoKit {
 
   def geomToWkt(g: Geometry): String = if (g == null) null else tlWktWriter.get().write(g)
 
+  /** WKB → Geometry; null input and empty geometries → null, as in
+    * [[wktToGeom]]. A lon/lat point with a NaN ordinate encodes to a WKB
+    * that reads back as `POINT EMPTY`; JTS puts an empty geometry at
+    * distance 0 from everything, so it must never reach a kernel. */
   def wkbToGeom(wkb: Array[Byte]): Geometry =
-    if (wkb == null || wkb.isEmpty) null else tlWkbReader.get().read(wkb)
+    if (wkb == null || wkb.isEmpty) null
+    else {
+      val g = tlWkbReader.get().read(wkb)
+      if (g.isEmpty) null else g
+    }
 
   // Per-thread direct-mapped parse cache for PAIRWISE hot paths
   // (distance / relate / ref-cell evaluate two parses per candidate

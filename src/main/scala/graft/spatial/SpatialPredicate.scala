@@ -1,6 +1,7 @@
 package graft.spatial
 
-import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.algorithm.locate.SimplePointInAreaLocator
+import org.locationtech.jts.geom.{Geometry, Location, Point, Polygon}
 
 /**
  * The six join predicates and their parser.
@@ -8,10 +9,25 @@ import org.locationtech.jts.geom.Geometry
  * Parsing is substring-based, case-insensitive, with `nearest` as the
  * catch-all fallback, and `withindist` matched before `within` (reference:
  * src/main/scala/me/valik/spatial/SpatialJoin.scala:48-56). The radius of
- * `withindist N` is the number after the first space; the coarse index
- * radius uses the reference's conservative 1° ≈ 35 km over-approximation
- * (SpatialJoin.scala:63-80) so the R-tree prefilter can only over-select,
- * never under-select, before the exact geodesic refine.
+ * `withindist N` is the number after the first space. Both kernels
+ * prefilter `withindist` with a latitude-aware envelope expansion
+ * (`SpatialProbe.matches`, `GeoExpressions.expandedBounds`): metres over
+ * the minimum meridian arc in latitude, over a·cos φ at the band edge in
+ * longitude. It can only over-select, never under-select, before the
+ * exact geodesic refine. `WithinDist.degrees` keeps the reference's flat
+ * 1° ≈ 35 km conversion (SpatialJoin.scala:63-80); no kernel uses it.
+ *
+ * `relates` is the one exact refine both kernels call (the broadcast
+ * kernel through `SpatialProbe`, the grid kernel and SQL `st_relates`
+ * through `GeoExpressions.computeRelates`). `within`/`contains` of one
+ * point and one polygon skip the DE-9IM relate: the point is labelled
+ * by one ray-crossing pass over the shell and holes
+ * (`SimplePointInAreaLocator`), the same per-ring rule relate's
+ * `PointLocator` applies, so the answer is relate's wherever relate
+ * answers. Relate throws `TopologyException` on many invalid polygons
+ * (self-crossing shells, crossing holes); for a point and one polygon
+ * the locator answers instead. Every other pair of geometry types,
+ * `MultiPolygon` included, still goes through JTS relate.
  */
 sealed trait SpatialPredicate extends Serializable {
   /** Exact relation test, `left op right` where left is the iterated side. */
@@ -30,10 +46,16 @@ object SpatialPredicate {
       Geodesic.centroidDistance(l, r) <= meters.toInt
   }
   case object Within extends SpatialPredicate {
-    def relates(l: Geometry, r: Geometry): Boolean = l.within(r)
+    def relates(l: Geometry, r: Geometry): Boolean = (l, r) match {
+      case (p: Point, a: Polygon) => pointInPolygon(p, a)
+      case _ => l.within(r)
+    }
   }
   case object Contains extends SpatialPredicate {
-    def relates(l: Geometry, r: Geometry): Boolean = l.contains(r)
+    def relates(l: Geometry, r: Geometry): Boolean = (l, r) match {
+      case (a: Polygon, p: Point) => pointInPolygon(p, a)
+      case _ => l.contains(r)
+    }
   }
   case object Intersects extends SpatialPredicate {
     def relates(l: Geometry, r: Geometry): Boolean = l.intersects(r)
@@ -41,6 +63,13 @@ object SpatialPredicate {
   case object Overlaps extends SpatialPredicate {
     def relates(l: Geometry, r: Geometry): Boolean = l.overlaps(r)
   }
+
+  /** `p.within(a)` by one ray-crossing locate. The envelope check is
+    * relate's own short-circuit; it also rejects NaN ordinates, which the
+    * locator's envelope test lets through. */
+  private def pointInPolygon(p: Point, a: Polygon): Boolean =
+    !p.isEmpty && a.getEnvelopeInternal.covers(p.getCoordinate) &&
+      SimplePointInAreaLocator.locate(p.getCoordinate, a) == Location.INTERIOR
 
   /** 1 degree ≈ 35 km: deliberately smaller than the true ~111 km/deg so the
     * radius-in-degrees over-approximates (reference: SpatialJoin.scala:63-70). */
