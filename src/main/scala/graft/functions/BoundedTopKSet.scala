@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
  * most k elements per group at every stage: partial (map-side) buffers
  * truncate to k before the shuffle, so shuffle volume is O(groups · k)
  * regardless of candidate count — the same property that makes the k = 1
- * min(struct) path scale.
+ * (distance, id) minimum ([[LexMin]]) scale.
  *
  * Why a SET (ordered, dedup-on-insert): a bounded HEAP (Spark's own
  * CollectTopK) admits duplicates, and a duplicate inside the heap can

@@ -1,5 +1,6 @@
 package graft.join
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -61,25 +62,29 @@ import graft.functions.GeoExpressions
  * (requires `sparkContext.setCheckpointDir`) survives it.
  *
  * @param left      side iterated (one output row per left row with any
- *                  right candidate passing `condition`). Right-side
- *                  columns ride through a min(struct(...)) aggregation,
- *                  so they must be orderable types (no map columns);
- *                  left-side columns ride a first() aggregate keyed by a
- *                  synthetic row id (any type)
+ *                  right candidate passing `condition`). The right side
+ *                  is sorted once by (tieBreak, right columns) to rank
+ *                  its rows, so right-side columns must be orderable
+ *                  types (no map columns); left-side columns join back
+ *                  by a synthetic row id after aggregation (any type)
  * @param right     candidate side, any geometry
  * @param condition optional extra predicate over both sides' columns;
  *                  a candidate pair failing it is skipped (the nearest
  *                  SATISFYING candidate wins — kernel semantics)
  *
- * [[nearest]] is the k = 1 case (per-left minimum struct — radix-sortable
- * single-long-key aggregation); [[knearest]] generalizes to bounded top-k:
- * the per-round aggregate becomes slice(array_distinct(array_sort(
- * collect_list(candidate))), 1, k) and a row resolves once its k-TH best
- * beats the margin (every unexamined candidate is >= margin away, so none
- * can displace any of the k). Right rows binned to several cells of one
- * annulus (or seen again by the fallback) would duplicate inside the
- * array, so each candidate carries a per-execution right-row id and
- * array_distinct collapses the rebinned copies — genuinely duplicated
+ * Every right row gets an id ranked by (tieBreak, right columns), so the
+ * smaller id wins a distance tie exactly where the smaller tie-break and
+ * payload would. [[nearest]] is the k = 1 case: the per-left aggregate is
+ * the lexicographic minimum of (distance, id) only
+ * ([[graft.functions.LexMin]], a fixed-width hash aggregate), and the
+ * right payload joins back by id once per output row. [[knearest]]
+ * generalizes to bounded top-k: the per-round aggregate keeps the k
+ * smallest distinct (distance, tieBreak, right columns, id) structs
+ * ([[graft.functions.BoundedTopKSet]]) and a row resolves once its k-TH
+ * best beats the margin (every unexamined candidate is >= margin away,
+ * so none can displace any of the k). Right rows binned to several cells
+ * of one annulus (or seen again by the fallback) would duplicate inside
+ * the set; they share their id, so they collapse — genuinely duplicated
  * right ROWS keep distinct ids and distinct output rows, matching SQL
  * row_number() semantics.
  */
@@ -119,11 +124,13 @@ object GridNearestJoin {
     val e = GeoExpressions.stEnvelope(rightWkb)
     val cx = (element_at(e, 1) + element_at(e, 3)) / 2.0d
     val cy = (element_at(e, 2) + element_at(e, 4)) / 2.0d
-    val row = right
-      .agg(min(cx), max(cx), min(cy), max(cy), count(cx),
-        avg(element_at(e, 3) - element_at(e, 1)),
-        avg(element_at(e, 4) - element_at(e, 2)))
-      .head()
+    val row = described(right.sparkSession.sparkContext, "grid.autoCellDeg") {
+      right
+        .agg(min(cx), max(cx), min(cy), max(cy), count(cx),
+          avg(element_at(e, 3) - element_at(e, 1)),
+          avg(element_at(e, 4) - element_at(e, 2)))
+        .head()
+    }
     val n = row.getLong(4)
     if (n <= 1L || row.isNullAt(0)) 1.0
     else {
@@ -153,9 +160,11 @@ object GridNearestJoin {
       materialize: DataFrame => DataFrame = LocalMaterialize,
       fallbackPairs: Long = 32000000L,
       joinType: String = "inner"): DataFrame =
-    run(left, right, leftWkb, rightWkb, 1, "__g_unused_rank", cellDeg,
-      tieBreak, initialHorizon, fallbackBelow, condition,
-      materialize, fallbackPairs, leftOuter = parseJoinType(joinType))
+    described(left.sparkSession.sparkContext, "grid.nearest setup") {
+      run(left, right, leftWkb, rightWkb, 1, "__g_unused_rank", cellDeg,
+        tieBreak, initialHorizon, fallbackBelow, condition,
+        materialize, fallbackPairs, leftOuter = parseJoinType(joinType))
+    }
 
   private def parseJoinType(joinType: String): Boolean =
     joinType.trim.toLowerCase match {
@@ -192,9 +201,11 @@ object GridNearestJoin {
     require(k >= 1, s"k must be >= 1, got $k")
     require(!(left.columns ++ right.columns).contains(rankCol),
       s"rank column `$rankCol` collides with an input column")
-    run(left, right, leftWkb, rightWkb, k, rankCol, cellDeg,
-      tieBreak, initialHorizon, fallbackBelow, condition,
-      materialize, fallbackPairs, leftOuter = parseJoinType(joinType))
+    described(left.sparkSession.sparkContext, "grid.nearest setup") {
+      run(left, right, leftWkb, rightWkb, k, rankCol, cellDeg,
+        tieBreak, initialHorizon, fallbackBelow, condition,
+        materialize, fallbackPairs, leftOuter = parseJoinType(joinType))
+    }
   }
 
   private def run(
@@ -225,6 +236,7 @@ object GridNearestJoin {
       s"column names ${reservedClash.mkString(", ")} are reserved " +
         "(__g_ prefix) by the grid nearest join")
 
+    val sc = left.sparkSession.sparkContext
     val lw = "__g_lwkb"; val rw = "__g_rwkb"; val lid = "__g_lid"
     val cell = "__g_cell"; val dist = "__g_dist"; val best = "__g_best"
     val env = "__g_env"; val rid = "__g_rid"; val ekey = "__g_ekey"
@@ -249,19 +261,30 @@ object GridNearestJoin {
       !left.columns.contains(ekey) && !right.columns.contains(ekey)
     val ekeyCols: Seq[String] = if (useEkey) Seq(ekey) else Nil
 
-    // right side binned once to every overlapped cell. For k > 1 each
-    // right ROW gets a per-execution id BEFORE the bin explode: its cell
-    // copies share the id, so the top-k array_distinct can collapse
-    // rebinned duplicates without collapsing genuinely identical rows.
-    // The id-stamped base is SNAPSHOTTED so the ring path and the
-    // exhaustive fallback see the same ids (monotonically_increasing_id
-    // re-planned twice could renumber)
+    val leftCols = left.columns
+    val rightCols = right.columns
+
+    // default tie-break = WKB bytes (deterministic; pass an explicit
+    // orderable column to control tie order, e.g. a right-side key)
+    val tb = tieBreak.getOrElse(col(rw).cast("string"))
+
+    // right side, ranked once: sorted by (tie-break, right columns) and
+    // stamped with monotonically_increasing_id BEFORE the bin explode.
+    // The sort range-partitions, so the ids increase in that order across
+    // partitions and do not depend on the input layout: among candidates
+    // at equal distance the smallest id is the smallest (tie-break,
+    // payload), and rows that tie on all of it are identical in the
+    // output. Cell copies of a row share its id, so the k > 1 top-k set
+    // collapses rebinned duplicates without collapsing genuinely
+    // identical rows. The ranked base is SNAPSHOTTED so the ring path,
+    // the exhaustive fallback and the k = 1 payload join-back see the
+    // same ids (monotonically_increasing_id re-planned could renumber)
     val r0pre = factored.rightOnly.fold(right)(right.where)
       .withColumn(rw, rightWkb).where(col(rw).isNotNull)
     val r0 = if (useEkey) r0pre.withColumn(ekey, struct(factored.equiKeys.map(_._2): _*))
       else r0pre
-    val rBase = if (k == 1) r0
-      else materialize(r0.withColumn(rid, monotonically_increasing_id()))
+    val rBase = materialize(r0.orderBy(tb +: rightCols.map(col): _*)
+      .withColumn(rid, monotonically_increasing_id()))
     val r = rBase
       .withColumn(cell, explode(GeoExpressions.gridCells(col(rw), cellDeg)))
 
@@ -283,28 +306,21 @@ object GridNearestJoin {
           GeoExpressions.CellBits)
           + axisCell((element_at(col(env), 2) + element_at(col(env), 4)) / 2.0d, 90.0))
 
-    val leftCols = left.columns
-    val rightCols = right.columns
-
-    // distance + tie-break + right payload, minimized as one struct;
-    // default tie-break = WKB bytes (deterministic; pass an explicit
-    // unique orderable column to control tie order, e.g. a right-side
-    // key). For k > 1 the right-row id rides LAST (never decides order
-    // among distinct payloads, only separates true duplicates)
-    val tb = tieBreak.getOrElse(col(rw).cast("string"))
-    def candStruct: Column = struct(
-      (col(dist) +: tb.as("__g_tb") +: rightCols.map(col))
-        ++ (if (k == 1) Nil else Seq(col(rid))): _*)
+    // k > 1 candidate: distance + tie-break + right payload as one
+    // struct; the right-row id rides LAST (never decides order among
+    // distinct payloads, only separates true duplicates)
+    def candStruct: Column =
+      struct((col(dist) +: tb.as("__g_tb") +: rightCols.map(col)) :+ col(rid): _*)
 
     // a candidate only counts when present (left-outer ring-join misses
     // keep the left row alive) AND satisfying the extra condition
     val candOk: Column =
       condition.fold(col(rw).isNotNull)(c => col(rw).isNotNull && coalesce(c, lit(false)))
 
-    // group by the synthetic row id ONLY, aggregate ONLY the candidate
-    // struct, and join the left payload back on the single long key
-    // AFTER aggregation (groups, not pairs). Two designs were measured
-    // and rejected:
+    // group by the synthetic row id ONLY, aggregate ONLY the candidate,
+    // and join the left payload back on the single long key AFTER
+    // aggregation (groups, not pairs). Two designs were measured and
+    // rejected:
     //  - grouping by the full left payload forces SortAggregate to order
     //    the entire candidate set by wide keys (WKB binary, the env
     //    double array — which Spark wraps in an interpreted
@@ -316,42 +332,36 @@ object GridNearestJoin {
     //    (JFR: UnsafeArrayData.copy / copyValue / getBinary, with the
     //    15M-pair sort spilling) — ~10x the cost of the distance math
     //    it decorated.
-    // With only (lid, dist, tb, right payload) in the aggregate input,
-    // the pre-agg sort radix-sorts slim rows, and the join-back touches
-    // one row per GROUP — pairs never carry the left payload at all.
-    // k = 1: min(struct) — radix-sortable single-long-key aggregation.
+    // k = 1: the lexicographic minimum of (dist, rid) only
+    // (graft.functions.LexMin): two fixed-width buffer slots, so Spark
+    // plans a codegen'd HashAggregateExec that updates each group in
+    // place. The right payload joins back by rid once per OUTPUT row
+    // (see the end of this method), never per pair. An object aggregate
+    // here (ObjectHashAggregateExec) turns sort-based past 128 groups
+    // per task and then sorts and spills every pair; min(struct) plans
+    // a SortAggregateExec that sorts every pair from the start.
     // k > 1: bounded top-k SET aggregate (graft.functions.BoundedTopKSet):
     // O(k) state per group at every stage, map-side truncation before the
     // shuffle, dedup-on-insert collapsing rebinned duplicates (same
     // right-row id) without letting them evict genuine candidates —
     // the collect_list-then-slice formulation materializes EVERY
     // candidate per group (measured 10× slower on the exhaustive
-    // fallback, unbounded memory at scale)
-    // Both k regimes aggregate through BoundedTopKSet (hash aggregate
-    // with a primary-key quick-reject per pair). The k = 1 case
-    // previously used min(struct) — declarative, but a struct buffer
-    // forces SortAggregateExec, which SORTS every pair row before
-    // aggregating; the object-hash path touches each pair once and
-    // rejects most on a single double compare. k = 1 unwraps the
-    // single-element array back to the nullable struct the rest of the
-    // operator (least-merge, margin test, finalize) expects.
-    val topkAgg: Column =
-      graft.functions.BoundedTopKSet.topKSet(when(candOk, candStruct), k)
-    def bestOf(cands: DataFrame): DataFrame = {
+    // fallback, unbounded memory at scale).
+    // Both yield the shape the rest of the operator (least-merge, margin
+    // test, finalize) expects: a nullable struct<__g_dist, __g_rid> for
+    // k = 1, a sorted array of candidate structs for k > 1.
+    val bestAgg: Column =
+      if (k == 1) graft.functions.LexMin.lexMin(col(dist), col(rid), dist, rid)
+      else graft.functions.BoundedTopKSet.topKSet(when(candOk, candStruct), k)
+    def bestOf(cands: DataFrame): DataFrame =
       // candidate-range pruning (round-13): evaluate the cheap condition
       // BEFORE the geodesic/JTS distance — a band or range conjunct that
       // rejects the pair skips the WKB parse + distance math entirely
-      // (the struct below is only read when candOk holds, so the null
-      // dist of a rejected pair is never observed)
-      val grouped = cands
+      // (a rejected pair's null dist never enters either aggregate)
+      cands
         .withColumn(dist, when(candOk, GeoExpressions.stDistance(col(lw), col(rw))))
         .groupBy(col(lid))
-        .agg(topkAgg.as("__g_topk0"))
-      if (k == 1)
-        grouped.select(col(lid),
-          try_element_at(col("__g_topk0"), lit(1)).as("__g_best0"))
-      else grouped.withColumnRenamed("__g_topk0", "__g_best0")
-    }
+        .agg(bestAgg.as("__g_best0"))
 
     // resolution test: the k-th best (the ONLY best for k = 1) must beat
     // the margin — unexamined candidates are >= margin away and cannot
@@ -387,13 +397,12 @@ object GridNearestJoin {
     def ringCells(lo: Int, hi: Int): Column =
       GeoExpressions.ringCells(col(cell), lo, hi)
 
-    // k = 1 emits the single best's payload; k > 1 explodes the bounded
+    // k = 1 emits the left columns and the best's rid (null when there is
+    // none; the payload joins back at the end); k > 1 explodes the bounded
     // array into up to k ranked rows (1-based rank, explode drops
     // candidate-less rows — inner-join semantics, same as k = 1)
-    def finalize(df: DataFrame, leftCols: Seq[String], rightCols: Seq[String],
-        best: String): DataFrame =
-      if (k == 1)
-        df.select((leftCols.map(col) ++ rightCols.map(c => col(best)(c).as(c))): _*)
+    def finalize(df: DataFrame): DataFrame =
+      if (k == 1) df.select(leftCols.map(col) :+ col(best)(rid).as(rid): _*)
       else df
         // prefixed generator output names — bare pos/col would collide
         // with user columns of those (common) names
@@ -448,7 +457,9 @@ object GridNearestJoin {
     // can never resolve) and key-impossible probes
     val skipPred = hopelessPred || !col(keyOk)
     // one job: total + skip counts off the same snapshot scan
-    val counts = l0m.agg(count(lit(1)), count(when(skipPred, lit(1)))).head()
+    val counts = described(sc, "grid.nearest counts") {
+      l0m.agg(count(lit(1)), count(when(skipPred, lit(1)))).head()
+    }
     val hopelessN = counts.getLong(1)
     var unresolved = l0m.where(!skipPred)
     var unresolvedLeft = counts.getLong(0) - hopelessN
@@ -457,15 +468,17 @@ object GridNearestJoin {
     // while every ring round costs a fixed job + snapshot. Below the pair
     // budget the exhaustive pass is the plan any cost-based engine would
     // pick; above it (any genuinely large right side) the rings carry the
-    // work and the budget never triggers. The count is a column-pruned
-    // scan — strictly cheaper than the ring path's bin-explode of the
-    // same side — and lazy: when the loop never starts (few left rows,
+    // work and the budget never triggers. |right| counts the side the
+    // exhaustive pass joins: the ranked snapshot, after the right-only
+    // conjuncts (the raw side would let a selective conjunct keep the
+    // rings running where one pass is cheaper). The count reads the
+    // snapshot and is lazy: when the loop never starts (few left rows,
     // budget disabled) the count job never runs. fallbackPairs = 0
     // disables the budget (spec-pinned ring coverage; fallbackBelow = 0
     // likewise forces rings).
     lazy val rightN =
       if (fallbackPairs <= 0L) Long.MaxValue
-      else math.max(1L, right.withColumn(rw, rightWkb).where(col(rw).isNotNull).count())
+      else described(sc, "grid.nearest budget")(math.max(1L, rBase.count()))
     def ringsStillPay: Boolean =
       fallbackPairs <= 0L || unresolvedLeft > fallbackPairs / rightN
     var carried: DataFrame = null // (lid, best-so-far) for unresolved rows
@@ -504,27 +517,31 @@ object GridNearestJoin {
       if (!pay) budgetStopped = true
       pay
     }
+    var round = 0
     while (unresolvedLeft > fallbackBelow && ringsStillPayTracked && hi <= MaxHorizon) {
-      val cands = unresolved
-        .withColumn("__g_probe", explode(ringCells(lo, hi)))
-        .join(rProbe, Seq("__g_probe") ++ ekeyCols, "left_outer")
-      // ONE materialization per round; the count below triggers it, so the
-      // splits are cheap filters over the snapshot and no extra job runs
-      val scored = materialize(
-        withLeft(mergeCarry(bestOf(cands)).drop("__g_best0", "__g_carry")))
-      val margin = marginOf(hi)
-      out += finalize(scored.where(resolvedPred(margin)), leftCols, rightCols, best)
-      unresolved = scored.where(!resolvedPred(margin))
-        .select((leftCols.map(col) ++ ekeyCols.map(col)
-          :+ col(lw) :+ col(env) :+ col(lid) :+ col(cell)): _*)
-      carried = scored.where(!resolvedPred(margin) && hasAny)
-        .select(col(lid), col(best).as("__g_carry"))
-      unresolvedLeft = unresolved.count()
+      round += 1
+      described(sc, s"grid.nearest round=$round hi=$hi") {
+        val cands = unresolved
+          .withColumn("__g_probe", explode(ringCells(lo, hi)))
+          .join(rProbe, Seq("__g_probe") ++ ekeyCols, "left_outer")
+        // ONE materialization per round; the count below triggers it, so the
+        // splits are cheap filters over the snapshot and no extra job runs
+        val scored = materialize(
+          withLeft(mergeCarry(bestOf(cands)).drop("__g_best0", "__g_carry")))
+        val margin = marginOf(hi)
+        out += finalize(scored.where(resolvedPred(margin)))
+        unresolved = scored.where(!resolvedPred(margin))
+          .select((leftCols.map(col) ++ ekeyCols.map(col)
+            :+ col(lw) :+ col(env) :+ col(lid) :+ col(cell)): _*)
+        carried = scored.where(!resolvedPred(margin) && hasAny)
+          .select(col(lid), col(best).as("__g_carry"))
+        unresolvedLeft = unresolved.count()
+      }
       lo = hi
       hi = hi * 2
     }
     // the binned-right snapshot only feeds the ring rounds (every round's
-    // result is itself a snapshot, and the fallback reads `right` raw) —
+    // result is itself a snapshot, and the fallback reads rBase) —
     // release its blocks before the fallback instead of holding them
     // until the result DataFrame is garbage-collected
     unpersistSnapshot(rMat)
@@ -585,14 +602,13 @@ object GridNearestJoin {
       val scored0 = withLeft(mergeCarry(bestOf(cands)).drop("__g_best0", "__g_carry"))
       if (leftOuter && k > 1) {
         val scored = materialize(scored0)
-        out += finalize(scored.where(hasAny), leftCols, rightCols, best)
+        out += finalize(scored.where(hasAny))
         out += scored.where(!hasAny)
           .select(leftCols.map(col): _*)
           .join(right.select(rightCols.map(col): _*).limit(0), lit(false), "left")
           .withColumn(rankCol, lit(null).cast("long"))
       } else {
-        out += finalize(
-          if (leftOuter) scored0 else scored0.where(hasAny), leftCols, rightCols, best)
+        out += finalize(if (leftOuter) scored0 else scored0.where(hasAny))
       }
     }
     // left-outer: rows whose GEOMETRY never entered the search (null WKB
@@ -605,13 +621,26 @@ object GridNearestJoin {
         .withColumn(env2, when(col(lw2).isNotNull, GeoExpressions.stEnvelope(col(lw2))))
         .where(col(lw2).isNull || col(env2).isNull)
         .select(leftCols.map(col): _*)
-      val missPadded = missing.join(
-        right.select(rightCols.map(col): _*).limit(0), lit(false), "left")
-      out += (if (k == 1) missPadded
-        else missPadded.withColumn(rankCol, lit(null).cast("long")))
+      out += (if (k == 1) missing.withColumn(rid, lit(null).cast("long"))
+        else missing.join(right.select(rightCols.map(col): _*).limit(0), lit(false), "left")
+          .withColumn(rankCol, lit(null).cast("long")))
     }
     if (out.isEmpty) finalizeSchemaOnly(left, right, leftCols, rightCols, k, rankCol)
+    else if (k > 1) out.reduce(_ union _)
+    // k = 1: one join-back of the right payload for all output rows; a
+    // null rid (left-outer row without a match) keeps null right columns
     else out.reduce(_ union _)
+      .join(rBase.select(col(rid) +: rightCols.map(col): _*), Seq(rid), "left")
+      .select((leftCols ++ rightCols).map(col): _*)
+  }
+
+  /** Run `body` with `desc` as the Spark job description of the jobs it
+    * starts, then restore the caller's description. */
+  private def described[T](sc: SparkContext, desc: String)(body: => T): T = {
+    val key = "spark.job.description" // what SparkContext.setJobDescription sets
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty(key, prev)
   }
 
   /** Release the storage behind a materialized snapshot. Safe only once

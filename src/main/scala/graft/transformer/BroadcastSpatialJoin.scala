@@ -481,11 +481,11 @@ class BroadcastSpatialJoin(override val uid: String)
     val needDistance = cfg.distanceAlias.nonEmpty
     val joined = cfg.spatialPredicate match {
       case SpatialPredicate.Nearest =>
-        // key-only deterministic tie-break: the min(struct) candidate
-        // ordering continues through the full right-side payload after the
-        // tie-break field, so determinism holds even when dataColumns is
-        // not unique — and narrow keys keep every ring-shuffle row slim
-        // (the full-struct tie-break duplicated the whole external row)
+        // key-only deterministic tie-break: the grid join ranks right rows
+        // by the tie-break field and then the full right-side payload, so
+        // determinism holds even when dataColumns is not unique — and
+        // narrow keys keep every kNN ring-shuffle row slim (the full-struct
+        // tie-break duplicated the whole external row)
         val tb = F.struct(cfg.dataCols.distinct.map(n => F.col(pref + n)): _*)
         val base =
           if (cfg.knn == 1)

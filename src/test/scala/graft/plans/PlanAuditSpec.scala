@@ -642,4 +642,46 @@ class PlanAuditSpec extends AnyFlatSpec with Matchers {
       }
     }
   }
+
+  behavior of "grid nearest physical plans"
+
+  it should "choose the k = 1 winner in a hash aggregate in ring rounds and fallback" in {
+    // the (distance, right-row id) minimum has fixed-width buffers, so it
+    // plans HashAggregate; an object aggregate (ObjectHashAggregate) turns
+    // sort-based past 128 groups per task, a struct min plans SortAggregate
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.functions.GeoExpressions
+    import graft.join.GridNearestJoin
+    val probes = (0 until 200).map(i =>
+      (s"p$i", (i * 37 % 300) / 100.0, (i * 53 % 300) / 100.0)).toDF("id", "lon", "lat")
+    val sites = (0 until 60).map(i =>
+      (s"s$i", (i * 41 % 300) / 100.0, (i * 29 % 300) / 100.0)).toDF("sid", "plon", "plat")
+    val ringPlans = scala.collection.mutable.ArrayBuffer[String]()
+    // materialize = a recording local checkpoint: each ring round's plan
+    // is only visible as the snapshot it becomes
+    val recording: DataFrame => DataFrame = { df =>
+      ringPlans += df.queryExecution.executedPlan.toString
+      df.localCheckpoint(false)
+    }
+    def run(fallbackBelow: Long, mat: DataFrame => DataFrame) = GridNearestJoin.nearest(
+      probes, sites,
+      GeoExpressions.wkbPoint(col("lon"), col("lat")),
+      GeoExpressions.wkbPoint(col("plon"), col("plat")),
+      cellDeg = 0.5, tieBreak = Some(col("sid")), initialHorizon = 1,
+      fallbackBelow = fallbackBelow, fallbackPairs = 0L, materialize = mat)
+    def hashAggregated(plan: String): Unit = withClue(plan) {
+      plan.linesIterator.exists(_.matches(".*(?<!Object)HashAggregate\\(.*")) shouldBe true
+      plan should not include "ObjectHashAggregate"
+      plan should not include "SortAggregate"
+    }
+    run(fallbackBelow = 0L, recording).count() shouldBe 200 // rings only
+    val rounds = ringPlans.filter(_.contains("Aggregate"))
+    rounds should not be empty
+    rounds.foreach(hashAggregated)
+    val fallback = run(fallbackBelow = Long.MaxValue, GridNearestJoin.LocalMaterialize)
+    fallback.count() shouldBe 200
+    hashAggregated(fallback.queryExecution.executedPlan.toString)
+  }
 }
