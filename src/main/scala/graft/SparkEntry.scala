@@ -2948,22 +2948,6 @@ object SparkEntry {
       .unionByName(pairs.select(col("sn").as("src"), col("c").as("dst"), col("w")))
   }
 
-  /** Deterministic real-BMP assets for the `multimodal_real_*` gates:
-    * one 8×(2+doc_id%5) 24-bit bottom-up BMP per document, assembled as
-    * a hex string by the SAME arithmetic the DuckDB oracle uses
-    * (header fields little-endian at their fixed offsets; pixel (x, y)
-    * has B = (doc_id·7 + y·31 + x·3) % 256, G/R at +85/+170), then
-    * `unhex`ed to bytes. Width 8 keeps rows 4-byte-aligned with zero
-    * padding, so the layout is exactly [[graft.multimodal.Multimodal
-    * .BmpCodec.encode]]'s canonical form. */
-  /** Deterministic real-WAV assets for the `multimodal_wav_*` gates:
-    * one canonical mono 16-bit PCM WAV per document — n = 120 +
-    * (doc_id%5)·60 samples (always even, so factor-2 decimation keeps
-    * exactly n/2), rate = 1000 + (doc_id%4)·500 Hz (always even, so
-    * rate/2 is exact), sample i = (doc_id·13 + i·7) mod 65536 as a
-    * little-endian u16. Assembled as hex by the SAME arithmetic the
-    * DuckDB oracle uses, then `unhex`ed — the byte twin of
-    * [[bmpAssets]]. */
   /** Slim per-doc id spine for the synthetic-asset builders, floored at
     * core width: asset generation (hex assembly) and the decode that
     * follows are compute-bound, and the single-file documents scan
@@ -2973,6 +2957,14 @@ object SparkEntry {
   private def spreadDocIds(docs: DataFrame): DataFrame =
     graft.toolbox.Partitions.spreadCompute(docs.select(col("doc_id")))
 
+  /** Deterministic real-WAV assets for the `multimodal_wav_*` gates:
+    * one canonical mono 16-bit PCM WAV per document — n = 120 +
+    * (doc_id%5)·60 samples (always even, so factor-2 decimation keeps
+    * exactly n/2), rate = 1000 + (doc_id%4)·500 Hz (always even, so
+    * rate/2 is exact), sample i = (doc_id·13 + i·7) mod 65536 as a
+    * little-endian u16. Assembled as hex by the SAME arithmetic the
+    * DuckDB oracle uses, then `unhex`ed — the byte twin of
+    * [[bmpAssets]]. */
   private def wavAssets(docs: DataFrame): DataFrame =
     spreadDocIds(docs)
       .withColumn("n", (lit(120) + pmod(col("doc_id"), lit(5)) * 60).cast("int"))
@@ -3051,6 +3043,14 @@ object SparkEntry {
       .select(col("doc_id"), unhex(col("hx")).as("content"))
   }
 
+  /** Deterministic real-BMP assets for the `multimodal_real_*` gates:
+    * one 8×(2+doc_id%5) 24-bit bottom-up BMP per document, assembled as
+    * a hex string by the SAME arithmetic the DuckDB oracle uses
+    * (header fields little-endian at their fixed offsets; pixel (x, y)
+    * has B = (doc_id·7 + y·31 + x·3) % 256, G/R at +85/+170), then
+    * `unhex`ed to bytes. Width 8 keeps rows 4-byte-aligned with zero
+    * padding, so the layout is exactly [[graft.multimodal.Multimodal
+    * .BmpCodec.encode]]'s canonical form. */
   private def bmpAssets(docs: DataFrame): DataFrame =
     spreadDocIds(docs)
       .withColumn("bh", (pmod(col("doc_id"), lit(5)) + 2).cast("int"))

@@ -848,9 +848,8 @@ object Dedup {
   }
 
   /** Exact Jaccard verification of candidate pairs on the bounded
-    * per-doc shingle arrays of each side. */
-  /** `gauge` is the operator's scan-rooted input frame — see
-    * [[graft.toolbox.Partitions.floorWidth]]. */
+    * per-doc shingle arrays of each side. `gauge` is the operator's
+    * scan-rooted input frame — see [[graft.toolbox.Partitions.floorWidth]]. */
   private def verifyJaccard(cands: DataFrame, shI: DataFrame, shJ: DataFrame,
       tau: Double, gauge: DataFrame): DataFrame =
     // floor the verify width at core count in the small-input regime:

@@ -239,22 +239,7 @@ object GeoExpressions {
   // by the unchanged golden/oracle rows. Anything not a plain 2-D point
   // (SRID-flagged type, Z/M dims, other geometries) falls through to
   // the JTS path.
-  @inline private def isPointWkb(b: Array[Byte]): Boolean =
-    b != null && b.length == 21 &&
-      (if (b(0) == 0) b(1) == 0 && b(2) == 0 && b(3) == 0 && b(4) == 1
-       else b(0) == 1 && b(1) == 1 && b(2) == 0 && b(3) == 0 && b(4) == 0)
-
-  @inline private def readDouble(b: Array[Byte], off: Int, bigEndian: Boolean): Double = {
-    var bits = 0L
-    if (bigEndian) {
-      var i = off; val e = off + 8
-      while (i < e) { bits = (bits << 8) | (b(i) & 0xffL); i += 1 }
-    } else {
-      var i = off + 7
-      while (i >= off) { bits = (bits << 8) | (b(i) & 0xffL); i -= 1 }
-    }
-    java.lang.Double.longBitsToDouble(bits)
-  }
+  import GeoKit.{isPointWkb, readDouble}
 
   def computeGeodesicMeters(lwkb: Array[Byte], rwkb: Array[Byte]): Int =
     if (isPointWkb(lwkb) && isPointWkb(rwkb)) {

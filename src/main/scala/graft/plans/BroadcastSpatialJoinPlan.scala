@@ -1,7 +1,9 @@
 package graft.plans
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.{SQLExecution, SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, Predicate, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -18,7 +20,9 @@ import graft.spatial.SpatialPredicate
  * everything from the optimizer; SURVEY §4).
  *
  * Left = iterated side (streamed, partitioning preserved), right =
- * broadcast side (collected once, packed as WKB, STRtree per executor).
+ * broadcast side (collected once; the driver indexes its geometries in
+ * one flat packed R-tree, graft.plans.FlatSpatialIndex, and broadcasts it
+ * with the collected rows).
  * Output by `mode` (graft.spatial.SpatialJoinMode): Inner/LeftOuter =
  * left.output ++ right.output (++ distance) — LeftOuter keeps
  * match-less left rows (null geometry included) with the right side +
@@ -107,20 +111,29 @@ case class BroadcastSpatialJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): BroadcastSpatialJoinExec =
     copy(left = newLeft, right = newRight)
 
+  /** `indexBuildTime` and `indexedRows` are taken on the driver, once per
+    * plan; the rest add up over the probe tasks. `candidates` and
+    * `refines` are [[SpatialProbe]]'s counters. */
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "indexBuildTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index build time"),
+    "indexedRows" -> SQLMetrics.createMetric(sparkContext, "number of indexed rows"),
+    "candidates" -> SQLMetrics.createMetric(sparkContext, "number of candidates"),
+    "refines" -> SQLMetrics.createMetric(sparkContext, "number of refines"),
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   /**
    * The condition's equi keys the broadcast index hashes on (round-12
    * scale fix): they fold into one composite key that turns the flat
-   * index into a HASH-PARTITIONED one (one sub-tree per distinct
+   * index into a HASH-PARTITIONED one (one packed sub-tree per distinct
    * right-key tuple). Why it matters: the conditional-nearest kernel
    * must PROVE no-match for probes whose condition nothing satisfies,
    * and that proof is O(|right|) per probe on a flat index — measured
    * ×239 wall at the materialized sf10 rung (`j1_nearest_left`: 300k
    * never-matching probes × 100k broadcast rows). With the key hashed,
    * a never-matching probe is one hash miss (O(1)), and a condition
-   * that was PURE equi leaves no residual — every probe takes the
-   * unconditioned single-walk fast path. Per-key min-index tie-break
-   * equals the flat kernel's min-index-among-passing rule because
-   * subsets keep ascending global order.
+   * that was PURE equi leaves no residual, so no probe is ever vetoed.
+   * Sub-trees hold global row indices, so the per-key min-index
+   * tie-break is the flat kernel's min-index-among-passing rule.
    *
    * Atomic-typed keys only: value classes whose boxed equals/hashCode
    * agree with Catalyst EqualTo (±0.0 normalized like Spark's own hash
@@ -136,18 +149,28 @@ case class BroadcastSpatialJoinExec(
     })
   }
 
-  // collect + pack + broadcast the right side once per physical plan —
+  // collect + index + broadcast the right side once per physical plan —
   // Dataset caches its QueryExecution, so repeated actions on the same
   // transformed DataFrame reuse one broadcast instead of re-collecting
   // (the broadcast lives as long as the plan; ContextCleaner reclaims it
   // when the Dataset is garbage-collected, as with Spark's own
-  // BroadcastExchangeExec)
+  // BroadcastExchangeExec). The index is built here, on the driver, so
+  // executors only probe it.
   @transient private lazy val packedBroadcast = {
     val rIdx = right.output.indexWhere(_.exprId == rightWkb.exprId)
     require(rIdx >= 0, "right wkb attribute must be in child output")
-    val rightRows: Array[InternalRow] = right.executeCollect().map(_.copy())
-    val wkbs = rightRows.map(r => if (r.isNullAt(rIdx)) null else r.getBinary(rIdx))
-    sparkContext.broadcast(new PackedSpatialIndex(rightRows, wkbs))
+    val rows = right.executeCollect()
+    val t0 = System.nanoTime()
+    val index = FlatSpatialIndex(rows.length, { i =>
+      val r = rows(i)
+      if (r.isNullAt(rIdx)) null else r.getBinary(rIdx)
+    })
+    metrics("indexBuildTime") += System.nanoTime() - t0
+    metrics("indexedRows") += index.size
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      Seq(metrics("indexBuildTime"), metrics("indexedRows")))
+    sparkContext.broadcast((rows, index))
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
@@ -158,6 +181,9 @@ case class BroadcastSpatialJoinExec(
     val needDist = distAttr.isDefined
     val outAttrs = output
     val pred = predicate
+    val candidatesMetric = metrics("candidates")
+    val refinesMetric = metrics("refines")
+    val numOutputRows = metrics("numOutputRows")
 
     val joinMode = mode
     val leftWidth = left.output.length
@@ -175,7 +201,12 @@ case class BroadcastSpatialJoinExec(
         .reduceOption(And))
 
     left.execute().mapPartitions { it =>
-      val idx = bc.value
+      val (rows, index) = bc.value
+      val probe = new SpatialProbe(index)
+      TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+        candidatesMetric += probe.candidates
+        refinesMetric += probe.refines
+      }
       val condPred = perCandidate.map(Predicate.create)
       condPred.foreach(_.initialize(0))
       val joined = new JoinedRow
@@ -189,21 +220,18 @@ case class BroadcastSpatialJoinExec(
           java.lang.Float.valueOf(0.0f)
         case x => x
       }
-      // the per-candidate veto. With nothing to check it passes the
-      // AlwaysTrue sentinel BY REFERENCE, which enables the
-      // unconditioned-nearest fast path inside the probe kernel
+      // the per-candidate veto; AlwaysTrue with nothing left to check
       def condEvalFor(lrow: InternalRow): Int => Boolean = condPred match {
         case None => SpatialProbe.AlwaysTrue
-        case Some(p) => i => p.eval(joined(lrow, idx.rows(i)))
+        case Some(p) => i => p.eval(joined(lrow, rows(i)))
       }
       val hitsOf: InternalRow => Iterator[(Int, Int)] = keyed match {
         case Some(c) =>
           // key-partitioned probes: the hashed keys become ONE
           // composite hash lookup; only the residual (if any) rides as
-          // a per-candidate predicate — none means the fast
-          // unconditioned walk. A null in a `=` key component means SQL
-          // `=` can never hold → no match (and the right row indexes
-          // into no bucket); a null in a `<=>` component is a real key
+          // a per-candidate predicate. A null in a `=` key component
+          // means SQL `=` can never hold → no match (and the right row
+          // indexes into no bucket); a null in a `<=>` component is a real key
           // value (NullSafeKey sentinel — both sides hash-match, which
           // is exactly Catalyst's null-safe equality). Right-only
           // conjuncts exclude rows from the index at build; left-only
@@ -228,8 +256,8 @@ case class BroadcastSpatialJoinExec(
           }
           val rightPred = c.rightOnly.map(Predicate.create)
           rightPred.foreach(_.initialize(0))
-          val keyProbes = idx.partitioned { i =>
-            val jr = keyJoin(nullLeft, idx.rows(i))
+          val keyTrees = index.partitioned { i =>
+            val jr = keyJoin(nullLeft, rows(i))
             if (rightPred.exists(p => !p.eval(jr))) null
             else keyOf(rKeys, jr)
           }
@@ -238,19 +266,18 @@ case class BroadcastSpatialJoinExec(
           lrow => {
             val g = graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx))
             val lj = keyJoin(lrow, nullRight)
-            val probe =
+            val tree =
               if (g == null || leftPred.exists(p => !p.eval(lj))) null
               else {
                 val k = keyOf(lKeys, lj)
-                if (k == null) null else keyProbes.get(k)
+                if (k == null) null else keyTrees.get(k)
               }
-            if (probe == null) Iterator.empty
-            else probe.matches(g, pred, condEvalFor(lrow), needDist)
+            if (tree == null) Iterator.empty
+            else probe.matches(g, pred, condEvalFor(lrow), needDist, tree)
           }
         case None =>
           // the flat probe: the whole index under the full condition
-          lazy val flatProbe = new SpatialProbe(idx.geoms, idx.tree)
-          lrow => flatProbe.matches(graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx)),
+          lrow => probe.matches(graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx)),
             pred, condEvalFor(lrow), needDist)
       }
 
@@ -259,9 +286,11 @@ case class BroadcastSpatialJoinExec(
         // isEmpty — isEmpty would consume the iterator's first element.
         // A null-geometry row has no match: dropped by semi, kept by anti
         case Semi =>
-          it.filter(lrow => !lrow.isNullAt(lIdx) && hitsOf(lrow).hasNext).map(proj)
+          it.filter(lrow => !lrow.isNullAt(lIdx) && hitsOf(lrow).hasNext)
+            .map { lrow => numOutputRows += 1; proj(lrow) }
         case Anti =>
-          it.filter(lrow => lrow.isNullAt(lIdx) || !hitsOf(lrow).hasNext).map(proj)
+          it.filter(lrow => lrow.isNullAt(lIdx) || !hitsOf(lrow).hasNext)
+            .map { lrow => numOutputRows += 1; proj(lrow) }
 
         case _ =>
           val outer = joinMode == LeftOuter
@@ -270,6 +299,7 @@ case class BroadcastSpatialJoinExec(
           val nullRight = new GenericInternalRow(rightWidth)
           val nullDist = new GenericInternalRow(1)
           def missRow(lrow: InternalRow): InternalRow = {
+            numOutputRows += 1
             val base = joined(lrow, nullRight)
             proj(if (needDist) joinedDist(base, nullDist) else base)
           }
@@ -280,7 +310,8 @@ case class BroadcastSpatialJoinExec(
               val hits = hitsOf(lrow)
               if (outer && !hits.hasNext) Iterator.single(missRow(lrow))
               else hits.map { case (i, d) =>
-                val base = joined(lrow, idx.rows(i))
+                numOutputRows += 1
+                val base = joined(lrow, rows(i))
                 val full: InternalRow =
                   if (needDist) { distRow.setInt(0, d); joinedDist(base, distRow) }
                   else base

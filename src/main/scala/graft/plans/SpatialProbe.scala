@@ -1,78 +1,107 @@
 package graft.plans
 
-import org.locationtech.jts.geom.{Envelope, Geometry}
-import org.locationtech.jts.index.strtree.{ItemBoundable, ItemDistance, STRtree}
+import java.util.concurrent.atomic.AtomicReferenceArray
+
+import org.locationtech.jts.geom.{Envelope, Geometry, Point}
+import org.locationtech.jts.index.strtree.STRtree
 
 import graft.spatial.{GeoKit, Geodesic, SpatialPredicate}
 
 /**
- * Broadcast-side packed spatial index: WKB payload ships once per
- * executor, JTS geometries + STRtree build lazily per executor (JTS
- * objects never serialize). `rows` is the broadcast side's row payload in
- * whatever row representation the caller uses.
+ * A [[FlatSpatialIndex]] over collected rows and their WKB, as the
+ * benchmark harness builds it, with the JTS view it times and samples.
+ * Harness-only, removed by ROADMAP item 2's benchmark PR.
  */
-final class PackedSpatialIndex[T](val rows: Array[T], val wkbs: Array[Array[Byte]])
-    extends Serializable {
+final class PackedSpatialIndex[T](rows: Array[T], wkbs: Array[Array[Byte]]) {
 
-  @transient @volatile private var cache: (Array[Geometry], STRtree) = _
+  val index: FlatSpatialIndex = FlatSpatialIndex(wkbs.length, wkbs(_))
 
-  private def ensure(): (Array[Geometry], STRtree) = {
-    var c = cache
-    if (c == null) synchronized {
-      c = cache
-      if (c == null) {
-        val gs = wkbs.map(GeoKit.wkbToGeom) // null/empty wkb → null geometry
-        val t = new STRtree()
-        var i = 0
-        while (i < gs.length) {
-          if (gs(i) != null) t.insert(gs(i).getEnvelopeInternal, Integer.valueOf(i))
-          i += 1
-        }
-        t.build() // STRtree is read-thread-safe only once built
-        c = (gs, t)
-        cache = c
-      }
+  /** Every row's geometry, null where the row is not indexed.
+    * Harness-only, removed by ROADMAP item 2's benchmark PR. */
+  lazy val geoms: Array[Geometry] = Array.tabulate(index.rowCount)(index.geom)
+
+  /** A JTS `STRtree` over [[geoms]], built on first use; nothing in the
+    * library calls it. Harness-only, removed by ROADMAP item 2's
+    * benchmark PR. */
+  lazy val tree: STRtree = {
+    val t = new STRtree()
+    geoms.zipWithIndex.foreach { case (g, i) =>
+      if (g != null) t.insert(g.getEnvelopeInternal, Integer.valueOf(i))
     }
-    c
+    t.build()
+    t
   }
+}
 
-  def geoms: Array[Geometry] = ensure()._1
-  def tree: STRtree = ensure()._2
+/**
+ * The geometry half of the broadcast index, in primitive arrays: a
+ * [[PackedRTree]] over every indexed row's envelope, plus per row either
+ * a 2-D point (its x/y are its item box, read straight from its 21-byte
+ * WKB, so no JTS object is built for an indexed point) or the WKB of any
+ * other geometry. The build decodes such a geometry once for its
+ * envelope and drops it; a probe decodes it again when it first needs it
+ * and then caches it in this JVM; the cache does not serialize.
+ *
+ * @param leafOf per row, its item entry in `rtree`; -1 for a row that is
+ *               not indexed (null or empty geometry)
+ * @param shapes per row, the WKB of a non-point geometry; null when every
+ *               indexed row is a point
+ * @param scale  the largest finite coordinate magnitude in the index
+ */
+final class FlatSpatialIndex private (
+    leafOf: Array[Int],
+    shapes: Array[Array[Byte]],
+    val rtree: PackedRTree,
+    val scale: Double) extends Serializable {
 
-  @transient @volatile private var partCache: java.util.HashMap[Any, SpatialProbe] = _
+  @transient private lazy val decoded = new AtomicReferenceArray[Geometry](leafOf.length)
 
-  /** Key-partitioned probes for the equi-condition factoring: one
-    * STRtree + subset per distinct right-key value (null keys excluded
-    * — SQL `=` never matches them). Built once per executor like the
-    * flat tree; one plan has one key function, so a single cache slot
-    * suffices. Subsets stay in ascending global-index order — the scan
-    * fallback's first-wins tie rule must match the flat probe's. */
-  def partitioned(keyOf: Int => Any): java.util.HashMap[Any, SpatialProbe] = {
+  def rowCount: Int = leafOf.length
+  /** Indexed rows: those with a non-null, non-empty geometry. */
+  def size: Int = rtree.numItems
+  def hasShapes: Boolean = shapes != null
+
+  /** Whether indexed row `i` is a point, with coordinates [[x]]/[[y]]. */
+  def isPoint(i: Int): Boolean = shapes == null || shapes(i) == null
+  def x(i: Int): Double = rtree.boxes(leafOf(i) << 2)
+  def y(i: Int): Double = rtree.boxes((leafOf(i) << 2) + 1)
+
+  /** Row `i`'s geometry, null when the row is not indexed. A point is
+    * built anew on each call; any other geometry decodes once. */
+  def geom(i: Int): Geometry =
+    if (leafOf(i) < 0) null
+    else if (isPoint(i)) GeoKit.point(x(i), y(i))
+    else {
+      var g = decoded.get(i)
+      if (g == null) { g = GeoKit.wkbToGeom(shapes(i)); decoded.lazySet(i, g) }
+      g
+    }
+
+  @transient @volatile private var partCache: java.util.HashMap[Any, PackedRTree] = _
+
+  /** Key-partitioned sub-indexes for the equi-condition factoring: one
+    * packed tree per distinct right-key value (a null key leaves its row
+    * out — SQL `=` never matches it), cut from this index's item boxes,
+    * so nothing is decoded. Built once per executor; one plan has one key
+    * function, so a single cache slot suffices. */
+  def partitioned(keyOf: Int => Any): java.util.HashMap[Any, PackedRTree] = {
     var c = partCache
     if (c == null) synchronized {
       c = partCache
       if (c == null) {
-        val gs = geoms
-        val byKey = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Int]]()
-        var i = 0
-        while (i < gs.length) {
-          if (gs(i) != null) {
-            val k = keyOf(i)
-            if (k != null) {
-              var b = byKey.get(k)
-              if (b == null) { b = new scala.collection.mutable.ArrayBuffer[Int](); byKey.put(k, b) }
-              b += i
-            }
+        val byKey = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuilder.ofInt]()
+        var e = 0
+        while (e < rtree.numItems) {
+          val k = keyOf(rtree.ids(e))
+          if (k != null) {
+            var b = byKey.get(k)
+            if (b == null) { b = new scala.collection.mutable.ArrayBuilder.ofInt; byKey.put(k, b) }
+            b += e
           }
-          i += 1
+          e += 1
         }
-        c = new java.util.HashMap[Any, SpatialProbe](byKey.size() * 2)
-        byKey.forEach { (k, idxs) =>
-          val t = new STRtree()
-          idxs.foreach(j => t.insert(gs(j).getEnvelopeInternal, Integer.valueOf(j)))
-          t.build()
-          c.put(k, new SpatialProbe(gs, t, idxs.toArray))
-        }
+        c = new java.util.HashMap[Any, PackedRTree](byKey.size() * 2)
+        byKey.forEach { (k, entries) => c.put(k, rtree.subset(entries.result())) }
         partCache = c
       }
     }
@@ -80,43 +109,112 @@ final class PackedSpatialIndex[T](val rows: Array[T], val wkbs: Array[Array[Byte
   }
 }
 
+object FlatSpatialIndex {
+
+  /** Indexes `n` rows, row `i` having the WKB `wkbOf(i)` (null for a
+    * null geometry). */
+  def apply(n: Int, wkbOf: Int => Array[Byte]): FlatSpatialIndex = {
+    val b = new Builder(n)
+    var i = 0
+    while (i < n) {
+      val w = wkbOf(i)
+      if (GeoKit.isPointWkb(w)) {
+        val be = w(0) == 0
+        b.point(i, GeoKit.readDouble(w, 5, be), GeoKit.readDouble(w, 13, be))
+      } else {
+        val g = GeoKit.wkbToGeom(w)
+        if (g != null) b.shape(i, w, g.getEnvelopeInternal)
+      }
+      i += 1
+    }
+    b.result()
+  }
+
+  private final class Builder(n: Int) {
+    private var shapes: Array[Array[Byte]] = _
+    private val boxes = new Array[Double](4 * n)
+    private val rows = new Array[Int](n)
+    private var m = 0
+
+    private def add(i: Int, minX: Double, minY: Double, maxX: Double, maxY: Double): Unit = {
+      val b = m << 2
+      boxes(b) = minX; boxes(b + 1) = minY; boxes(b + 2) = maxX; boxes(b + 3) = maxY
+      rows(m) = i
+      m += 1
+    }
+
+    /** A point with a NaN ordinate reads as `POINT EMPTY`: not indexed. */
+    def point(i: Int, x: Double, y: Double): Unit =
+      if (!x.isNaN && !y.isNaN) add(i, x, y, x, y)
+
+    def shape(i: Int, wkb: Array[Byte], env: Envelope): Unit = {
+      if (shapes == null) shapes = new Array[Array[Byte]](n)
+      shapes(i) = wkb
+      add(i, env.getMinX, env.getMinY, env.getMaxX, env.getMaxY)
+    }
+
+    def result(): FlatSpatialIndex = {
+      var scale = 0.0
+      var k = 0
+      while (k < 4 * m) {
+        val v = math.abs(boxes(k))
+        if (v > scale && !v.isInfinite) scale = v
+        k += 1
+      }
+      val tree = PackedRTree.build(m, boxes, rows)
+      val leafOf = new Array[Int](n)
+      java.util.Arrays.fill(leafOf, -1)
+      var e = 0
+      while (e < tree.numItems) { leafOf(tree.ids(e)) = e; e += 1 }
+      new FlatSpatialIndex(leafOf, shapes, tree, scale)
+    }
+  }
+}
+
 /**
- * Row-representation-agnostic probe kernel over a packed index: nearest
- * (deterministic min-index tie-break), withindist (latitude-aware strictly
- * over-approximating envelope prefilter + exact geodesic refine), and the
- * JTS relation predicates. Semantics pinned by the reference's 16 golden
- * tests (see graft.transformer.BroadcastSpatialJoinSpec).
+ * Row-representation-agnostic probe kernel over a [[FlatSpatialIndex]]:
+ * nearest, withindist (latitude-aware strictly over-approximating
+ * envelope prefilter + exact geodesic refine), and the JTS relation
+ * predicates. Semantics pinned by the reference's 16 golden tests (see
+ * graft.transformer.BroadcastSpatialJoinSpec).
  *
- * `subset`: when non-null, the probe serves a KEY PARTITION of the
- * index (BroadcastSpatialJoinExec's hashed equi keys) — `tree` holds
- * only those global indices and the conditional-nearest scan fallback
- * walks only them, so a per-partition operation is bounded by the
- * partition, never the whole broadcast side.
+ * One probe serves one thread: it owns the nearest search's heap and the
+ * `candidates`/`refines` counters. Every query runs against a tree of the
+ * index, by default the whole index and otherwise a key partition (see
+ * [[FlatSpatialIndex.partitioned]]), which bounds every per-partition
+ * operation by the partition, never the whole broadcast side.
  */
-final class SpatialProbe(geoms: Array[Geometry], tree: STRtree,
-    subset: Array[Int] = null) {
+final class SpatialProbe(index: FlatSpatialIndex) {
 
-  private val total =
-    if (subset == null) geoms.count(_ != null)
-    else subset.count(i => geoms(i) != null)
+  /** Builds the flat index from `geoms`, re-encoded as WKB; `tree` is
+    * not read. Harness-only, removed by ROADMAP item 2's benchmark PR. */
+  def this(geoms: Array[Geometry], tree: STRtree) =
+    this(FlatSpatialIndex(geoms.length, i => GeoKit.geomToWkb(geoms(i))))
 
-  def isEmpty: Boolean = total == 0
+  /** (probe, indexed row) pairs examined: the rows whose box meets the
+    * probe's search box, or that nearest took in distance order or
+    * scanned. */
+  var candidates = 0L
+  /** Exact tests run: `SpatialPredicate.relates` calls, or geodesic
+    * distances for withindist. Nearest runs none. */
+  var refines = 0L
 
-  /** (rightIndex, geodesicMetres) matches of `g` under `predicate`;
-    * `condEval` vetoes candidate indices; distance is 0 when neither the
-    * predicate nor `needDist` requires it. */
-  def matches(g: Geometry, predicate: SpatialPredicate,
-      condEval: Int => Boolean, needDist: Boolean): Iterator[(Int, Int)] = {
-    if (g == null || isEmpty) return Iterator.empty
+  /** (rightIndex, geodesicMetres) matches of `g` under `predicate` among
+    * `tree`'s rows (the whole index by default); `condEval` vetoes
+    * candidate indices; distance is 0 when neither the predicate nor
+    * `needDist` requires it. Relation and withindist matches come in
+    * ascending row order. */
+  def matches(g: Geometry, predicate: SpatialPredicate, condEval: Int => Boolean,
+      needDist: Boolean, tree: PackedRTree = index.rtree): Iterator[(Int, Int)] = {
+    if (g == null || tree.isEmpty) return Iterator.empty
     predicate match {
       case SpatialPredicate.Nearest =>
-        nearestMatch(g, condEval) match {
+        nearestMatch(g, condEval, tree) match {
           case -1 => Iterator.empty
-          case i => Iterator.single(
-            (i, if (needDist) Geodesic.centroidDistance(g, geoms(i)) else 0))
+          case i => Iterator.single((i, if (needDist) new Metres(g)(i) else 0))
         }
       case wd: SpatialPredicate.WithinDist =>
-        val env = g.getEnvelopeInternal.copy()
+        val env = g.getEnvelopeInternal
         // coarse, strictly over-approximating prefilter: latitude by the
         // minimum meridian arc (~110574 m/deg); longitude by a*cos(phi) at
         // the latitude band edge (+2x excursion margin). ~3x tighter than
@@ -128,133 +226,232 @@ final class SpatialProbe(geoms: Array[Geometry], tree: STRtree,
         val lonDeg =
           if (cosPhi <= 1e-6) 360.0
           else wd.meters / (Geodesic.SemiMajorA * cosPhi * math.Pi / 180.0)
-        env.expandBy(lonDeg, latDeg)
-        candidates(env).iterator.flatMap { i =>
-          if (!condEval(i)) None
+        val limit = wd.meters.toInt
+        val metres = new Metres(g)
+        hits(tree.search(env.getMinX - lonDeg, env.getMinY - latDeg,
+          env.getMaxX + lonDeg, env.getMaxY + latDeg), { i =>
+          if (!condEval(i)) -1
           else {
-            val d = Geodesic.centroidDistance(g, geoms(i)) // exact refine
-            if (d <= wd.meters.toInt) Some((i, d)) else None
+            refines += 1
+            val d = metres(i) // exact refine
+            if (d <= limit) d else -1
           }
-        }
+        })
       case rel =>
-        candidates(g.getEnvelopeInternal).iterator.flatMap { i =>
-          if (rel.relates(g, geoms(i)) && condEval(i))
-            Some((i, if (needDist) Geodesic.centroidDistance(g, geoms(i)) else 0))
-          else None
+        val env = g.getEnvelopeInternal
+        val metres = if (needDist) new Metres(g) else null
+        hits(tree.search(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY), { i =>
+          refines += 1
+          if (rel.relates(g, index.geom(i)) && condEval(i)) (if (needDist) metres(i) else 0)
+          else -1
+        })
+    }
+  }
+
+  /** The candidate rows in ascending order, each kept when `refine`
+    * gives a distance (>= 0), lazily: an existence test stops at the
+    * first match. */
+  private def hits(rows: Array[Int], refine: Int => Int): Iterator[(Int, Int)] = {
+    java.util.Arrays.sort(rows)
+    candidates += rows.length
+    new Iterator[(Int, Int)] {
+      private var k = 0
+      private var next0: (Int, Int) = _
+      def hasNext: Boolean = {
+        while (next0 == null && k < rows.length) {
+          val i = rows(k); k += 1
+          val d = refine(i)
+          if (d >= 0) next0 = (i, d)
         }
+        next0 != null
+      }
+      def next(): (Int, Int) = {
+        if (!hasNext) throw new NoSuchElementException
+        val out = next0; next0 = null; out
+      }
     }
   }
 
-  private def candidates(env: Envelope): Seq[Int] = {
-    val out = Seq.newBuilder[Int]
-    tree.query(env, (item: Any) => out += item.asInstanceOf[Integer].intValue())
-    out.result()
+  /** Whole geodesic metres from the probe's centroid to row `i`'s, as
+    * `Geodesic.centroidDistance`: an indexed point is its own centroid
+    * (JTS sums it onto 0.0, which turns -0.0 into 0.0). */
+  private final class Metres(g: Geometry) extends (Int => Int) {
+    private lazy val c = g.getCentroid
+    def apply(i: Int): Int =
+      if (index.isPoint(i))
+        math.round(Geodesic.inverseMeters(c.getY, c.getX, 0.0 + index.y(i), 0.0 + index.x(i))).toInt
+      else Geodesic.centroidDistance(g, index.geom(i))
   }
 
-  private object GeomDist extends ItemDistance {
-    private def geomOf(b: ItemBoundable): Geometry = b.getItem match {
-      case i: Integer  => geoms(i)
-      case g: Geometry => g
-    }
-    def distance(a: ItemBoundable, b: ItemBoundable): Double =
-      geomOf(a).distance(geomOf(b))
-  }
+  // best-first search state: a binary min-heap of (key, ref). A ref >= 0
+  // is a row at its exact distance; a ref < 0 is -1 - entry, an entry of
+  // the tree whose key is a lower bound: a node, or an item whose exact
+  // distance is still to be taken
+  private var heapKey = new Array[Double](64)
+  private var heapRef = new Array[Int](64)
+  private var heapSize = 0
 
   /**
-   * Index of the nearest (JTS coordinate distance) indexed geometry
-   * passing the condition, or -1. Deterministic under distance ties: the
-   * smallest index among tied nearest candidates wins — k grows until the
-   * k-th distance strictly exceeds the best passing distance, so every
-   * tie was seen. Starts at k=2: the common unique-nearest case is one
-   * probe.
+   * Index of the nearest (JTS `Geometry.distance`) row of `tree` (the
+   * whole index by default) passing the condition, or -1; among rows at
+   * the same distance the smallest index wins.
+   *
+   * One best-first traversal (Hjaltason and Samet, "Distance browsing in
+   * spatial databases", TODS 1999) yields the rows in (distance, row
+   * index) order, so the first row that passes the condition is the
+   * answer, ties included. The order is exact because every entry
+   * enters the heap at a lower bound of the distances it stands for, a
+   * row is re-queued at its exact distance when its entry pops, and at
+   * equal keys a bound pops before a row:
+   *  - a point row next to a point probe has the exact distance
+   *    `Math.hypot(dx, dy)`, which is what JTS 1.20's `Coordinate.distance`
+   *    computes; any other pair has JTS's `Geometry.distance`;
+   *  - a bound is [[lowerHypot]] of the clamped gaps between the probe's
+   *    box and the entry's. Rounding is monotone, so the gaps never exceed
+   *    those of any point inside the box. When the index holds any
+   *    geometry that is not a point, or the probe is not one, every bound
+   *    also drops by a slack far above the rounding error of JTS's
+   *    segment distances.
+   * A probe whose condition has rejected [[SpatialProbe.ScanAfter]] rows
+   * (a rare condition, or one no row satisfies) switches to one
+   * condition-first linear scan of the tree, so a never-matching probe
+   * costs O(n) and not O(n log n) of heap work.
    */
-  def nearestMatch(g: Geometry, condEval: Int => Boolean): Int = {
-    if (total == 0) return -1
+  def nearestMatch(g: Geometry, condEval: Int => Boolean, tree: PackedRTree = index.rtree): Int = {
+    if (g == null || tree.isEmpty) return -1
     val env = g.getEnvelopeInternal
-    // Unconditioned nearest (the common `nearest` predicate with no
-    // extra condition, recognized by the shared sentinel): one k=2 tree
-    // walk settles the unique-nearest case exactly like the loop below,
-    // and a TIE is settled by a single ranged envelope query collecting
-    // every exact tie — not by re-walking the tree with k ×4 per round.
-    // The k-growth loop is quadratic-ish under dense ties (duplicate
-    // coordinates put 10+ items at the same distance, and every
-    // nearestNeighbourK restart re-expands the whole BoundablePair
-    // frontier with JTS DistanceOp); the ranged query visits just the
-    // disc of radius bestDist once. The envelope expanded by bestDist is
-    // a provable superset of the tie set: any geometry at distance d has
-    // envelope distance <= d.
-    if (condEval eq SpatialProbe.AlwaysTrue) {
-      val found = tree.nearestNeighbour(env, g, GeomDist, math.min(2, total))
-        .map(_.asInstanceOf[Integer].intValue())
-      var bestDist = Double.MaxValue
-      var bestIdx = -1
-      var secondDist = Double.MaxValue
-      found.foreach { i =>
-        val d = g.distance(geoms(i))
-        if (d < bestDist || (d == bestDist && i < bestIdx)) {
-          secondDist = bestDist; bestDist = d; bestIdx = i
-        } else if (d < secondDist) secondDist = d
+    val pointProbe = g.isInstanceOf[Point]
+    val slack =
+      if (pointProbe && !index.hasShapes) 0.0
+      else SpatialProbe.Slack * (1.0 + math.max(index.scale, math.max(
+        math.max(math.abs(env.getMinX), math.abs(env.getMaxX)),
+        math.max(math.abs(env.getMinY), math.abs(env.getMaxY)))))
+    val qMinX = env.getMinX; val qMinY = env.getMinY
+    val qMaxX = env.getMaxX; val qMaxY = env.getMaxY
+    val boxes = tree.boxes
+    heapSize = 0
+    var start = tree.ids(tree.root) // the root's children
+    var rejected = 0
+    while (start >= 0) {
+      // queue the children of one node at their bounds
+      val end = tree.childEnd(start)
+      var e = start
+      while (e < end) {
+        val b = e << 2
+        val dx = gap(qMinX, qMaxX, boxes(b), boxes(b + 2))
+        val dy = gap(qMinY, qMaxY, boxes(b + 1), boxes(b + 3))
+        push(math.max(0.0, lowerHypot(dx, dy) - slack), -1 - e)
+        e += 1
       }
-      if (total <= 1 || secondDist > bestDist) return bestIdx
-      val tieEnv = new Envelope(env)
-      tieEnv.expandBy(bestDist)
-      candidates(tieEnv).foreach { i =>
-        if (i < bestIdx && g.distance(geoms(i)) == bestDist) bestIdx = i
-      }
-      return bestIdx
-    }
-    var k = 2
-    while (true) {
-      val kk = math.min(k, total)
-      // Conditional nearest, scan fallback: once k has grown past a few
-      // rounds (rare condition, or a probe that matches NOTHING — e.g.
-      // a join condition some probe keys cannot satisfy), stop
-      // re-walking the tree: each nearestNeighbourK restart re-expands
-      // the whole BoundablePair frontier, so a never-matching probe
-      // costs O(total · tree overhead) PER ROUND. One condition-first
-      // linear scan is strictly cheaper than the kk == total walk it
-      // replaces — condEval is a row predicate (no geometry), and JTS
-      // distance only runs on passing candidates.
-      if (kk >= 128 || kk == total) {
-        var bestDist = Double.MaxValue
-        var bestIdx = -1
-        val n = if (subset == null) geoms.length else subset.length
-        var s = 0
-        while (s < n) {
-          val i = if (subset == null) s else subset(s)
-          if (geoms(i) != null && condEval(i)) {
-            val d = g.distance(geoms(i))
-            if (d < bestDist) { bestDist = d; bestIdx = i }
-          }
-          s += 1
+      // pop until a passing row or the next node to open
+      start = -1
+      while (start < 0 && heapSize > 0) {
+        val ref = heapRef(0)
+        pop()
+        if (ref >= 0) {
+          candidates += 1
+          if (condEval(ref)) return ref
+          rejected += 1
+          if (rejected >= SpatialProbe.ScanAfter) return scan(tree, g, condEval)
+        } else {
+          val entry = -1 - ref
+          if (entry >= tree.numItems) start = tree.ids(entry)
+          else push(distanceTo(g, tree.ids(entry)), tree.ids(entry))
         }
-        return bestIdx
       }
-      val found = tree.nearestNeighbour(env, g, GeomDist, kk)
-        .map(_.asInstanceOf[Integer].intValue())
-      // JTS does not guarantee order: sort by (distance, index). Each
-      // distance is computed ONCE and carried with its index — sortBy's
-      // Ordering.by would re-run the JTS DistanceOp on every comparison
-      // (O(k log k) geometry walks instead of O(k)), which dominated
-      // dense-tie probes where k has grown large
-      val sorted = found.map(i => (g.distance(geoms(i)), i)).sortInPlace()
-      val kthDist = sorted(sorted.length - 1)._1
-      sorted.find { case (_, i) => condEval(i) } match {
-        case Some((bestDist, i)) =>
-          if (kk == total || kthDist > bestDist) return i
-        case None =>
-          if (kk == total) return -1
-      }
-      k = kk * 4
     }
     -1
+  }
+
+  /** A lower bound on `Math.hypot` of any pair at least as far out as
+    * (dx, dy), cheaper than hypot: the square root of the sum of squares,
+    * shrunk by 1e-15, far more than its few ulps of error. Where a square
+    * could underflow or overflow, hypot itself. */
+  @inline private def lowerHypot(dx: Double, dy: Double): Double = {
+    val s = dx * dx + dy * dy
+    if (s < 1e290 && s > 1e-290) Math.sqrt(s) * (1 - 1e-15)
+    else if (s == 0.0) 0.0
+    else Math.hypot(dx, dy)
+  }
+
+  /** Distance between the intervals [qMin, qMax] and [min, max]: a point
+    * probe's `x - min`-style difference, or 0 when they overlap. */
+  @inline private def gap(qMin: Double, qMax: Double, min: Double, max: Double): Double =
+    if (qMax < min) min - qMax else if (qMin > max) qMin - max else 0.0
+
+  /** JTS's distance from `g` to row `i`: for two points `Math.hypot`,
+    * as JTS 1.20's `Coordinate.distance`, without building either point. */
+  private def distanceTo(g: Geometry, i: Int): Double = g match {
+    case p: Point if index.isPoint(i) => Math.hypot(p.getX - index.x(i), p.getY - index.y(i))
+    case _ => g.distance(index.geom(i))
+  }
+
+  /** Condition first, then distance, over every row of `tree`. */
+  private def scan(tree: PackedRTree, g: Geometry, condEval: Int => Boolean): Int = {
+    var bestDist = Double.MaxValue
+    var bestIdx = -1
+    var e = 0
+    while (e < tree.numItems) {
+      val i = tree.ids(e)
+      candidates += 1
+      if (condEval(i)) {
+        val d = distanceTo(g, i)
+        if (d < bestDist || (d == bestDist && i < bestIdx)) { bestDist = d; bestIdx = i }
+      }
+      e += 1
+    }
+    bestIdx
+  }
+
+  @inline private def before(k1: Double, r1: Int, k2: Double, r2: Int): Boolean =
+    k1 < k2 || (k1 == k2 && r1 < r2)
+
+  private def push(key: Double, ref: Int): Unit = {
+    if (heapSize == heapKey.length) {
+      heapKey = java.util.Arrays.copyOf(heapKey, heapSize * 2)
+      heapRef = java.util.Arrays.copyOf(heapRef, heapSize * 2)
+    }
+    var pos = heapSize
+    heapSize += 1
+    while (pos > 0 && before(key, ref, heapKey((pos - 1) >> 1), heapRef((pos - 1) >> 1))) {
+      val parent = (pos - 1) >> 1
+      heapKey(pos) = heapKey(parent); heapRef(pos) = heapRef(parent)
+      pos = parent
+    }
+    heapKey(pos) = key; heapRef(pos) = ref
+  }
+
+  private def pop(): Unit = {
+    heapSize -= 1
+    if (heapSize == 0) return
+    val key = heapKey(heapSize); val ref = heapRef(heapSize)
+    var pos = 0
+    val half = heapSize >> 1
+    while (pos < half) {
+      var child = (pos << 1) + 1
+      val right = child + 1
+      if (right < heapSize && before(heapKey(right), heapRef(right), heapKey(child), heapRef(child)))
+        child = right
+      if (!before(heapKey(child), heapRef(child), key, ref)) {
+        heapKey(pos) = key; heapRef(pos) = ref
+        return
+      }
+      heapKey(pos) = heapKey(child); heapRef(pos) = heapRef(child)
+      pos = child
+    }
+    heapKey(pos) = key; heapRef(pos) = ref
   }
 }
 
 object SpatialProbe {
-  /** Shared no-condition sentinel: the exec passes THIS function (by
-    * reference) when the join has no extra condition, which lets
-    * [[SpatialProbe.nearestMatch]] take the single-walk + ranged-tie
-    * fast path instead of the conditional k-growth loop. */
+  /** The condition of a join without one: the exec passes this function
+    * when nothing is left to check per candidate. */
   val AlwaysTrue: Int => Boolean = _ => true
+
+  /** Rows the condition may reject before nearest scans linearly. */
+  val ScanAfter = 128
+
+  /** Relative slack under a non-exact distance bound: JTS's segment
+    * distances err by a few ulps of the coordinates, some 1e-16 of them. */
+  private val Slack = 1e-9
 }

@@ -59,6 +59,27 @@ object GeoKit {
       if (g.isEmpty) null else g
     }
 
+  /** True for the 21-byte WKB of a 2-D point (byte order, type 1, x, y),
+    * in either byte order; false for SRID-flagged, Z/M and other types. */
+  @inline def isPointWkb(b: Array[Byte]): Boolean =
+    b != null && b.length == 21 &&
+      (if (b(0) == 0) b(1) == 0 && b(2) == 0 && b(3) == 0 && b(4) == 1
+       else b(0) == 1 && b(1) == 1 && b(2) == 0 && b(3) == 0 && b(4) == 0)
+
+  /** The IEEE double at `off`; a point WKB holds x at 5 and y at 13,
+    * big-endian when its first byte is 0. */
+  @inline def readDouble(b: Array[Byte], off: Int, bigEndian: Boolean): Double = {
+    var bits = 0L
+    if (bigEndian) {
+      var i = off; val e = off + 8
+      while (i < e) { bits = (bits << 8) | (b(i) & 0xffL); i += 1 }
+    } else {
+      var i = off + 7
+      while (i >= off) { bits = (bits << 8) | (b(i) & 0xffL); i -= 1 }
+    }
+    java.lang.Double.longBitsToDouble(bits)
+  }
+
   // Per-thread direct-mapped parse cache for PAIRWISE hot paths
   // (distance / relate / ref-cell evaluate two parses per candidate
   // pair). In a broadcast nested-loop join the STREAMED row's WKB

@@ -1,0 +1,74 @@
+package graft.transformer
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.scalatest.flatspec.AnyFlatSpec
+import org.scalatest.matchers.should.Matchers
+
+import graft.SparkTestKit.spark
+import graft.plans.BroadcastSpatialJoinExec
+
+/** The SQL metrics of the broadcast spatial exec, pinned on fixed
+  * fixtures whose counts are worked out by hand below. */
+class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
+
+  import spark.implicits._
+
+  behavior of "BroadcastSpatialJoinExec metrics"
+
+  /** Runs `df` once and returns its exec's metric values. */
+  private def metricsOf(df: DataFrame): Map[String, Long] = {
+    df.collect()
+    val helper = new AdaptiveSparkPlanHelper {}
+    helper.collectFirst(df.queryExecution.executedPlan) {
+      case e: BroadcastSpatialJoinExec => e.metrics.map { case (k, m) => k -> m.value }
+    }.get
+  }
+
+  it should "count indexed rows, candidates, refines and output rows of a within join" in {
+    Seq(
+      1L -> "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))",
+      2L -> "POLYGON ((0.5 0, 2 0, 2 1, 0.5 1, 0.5 0))",
+      3L -> "POLYGON ((5 5, 6 5, 6 6, 5 6, 5 5))",
+      4L -> "POLYGON ((10 10, 12 10, 10 12, 10 10))",
+      5L -> null
+    ).toDF("zid", "wkt").createOrReplaceTempView("metrics_zones")
+    // candidates per point: zones 1+2, zone 2, none, zone 3, zone 1, and
+    // zone 4's box but not the triangle: 6 candidates, 6 refines, 5 rows
+    val points = Seq((1L, 0.75, 0.5), (2L, 1.5, 0.5), (3L, 3.0, 3.0), (4L, 5.5, 5.5),
+      (5L, 0.25, 0.25), (6L, 11.8, 11.8)).toDF("pid", "lon", "lat")
+    val m = metricsOf(new BroadcastSpatialJoin()
+      .setDataset("metrics_zones").setDatasetPoint("").setDatasetWKT("wkt")
+      .setInputPoint("lon, lat").setDataColumns("zid")
+      .setBroadcast("dataset").setPredicate("within")
+      .transform(points))
+    m("indexedRows") shouldBe 4
+    m("candidates") shouldBe 6
+    m("refines") shouldBe 6
+    m("numOutputRows") shouldBe 5
+    m("indexBuildTime") should be > 0L
+  }
+
+  it should "count the rows nearest took in distance order, with and without a condition" in {
+    // sites 1..5 at lon 0..4; a NaN-lon site is not indexed
+    ((1 to 5).map(i => (i.toLong, i - 1.0, 0.0)) :+ ((6L, Double.NaN, 0.0)))
+      .toDF("sid", "slon", "slat").createOrReplaceTempView("metrics_sites")
+    val probes = Seq((1L, 0.1, 0.0), (2L, 2.2, 0.0), (3L, 3.9, 0.0)).toDF("pid", "lon", "lat")
+    def nearest(cond: String) = metricsOf(new BroadcastSpatialJoin()
+      .setDataset("metrics_sites").setDatasetPoint("slon, slat")
+      .setInputPoint("lon, lat").setDataColumns("sid")
+      .setBroadcast("dataset").setPredicate("nearest").setJoinCondition(cond)
+      .transform(probes))
+    val plain = nearest("")
+    plain("indexedRows") shouldBe 5
+    plain("candidates") shouldBe 3 // each probe's first row passes
+    plain("refines") shouldBe 0
+    plain("numOutputRows") shouldBe 3
+    // probe 1 rejects site 1 before site 2; probes 2 and 3 take their
+    // nearest sites 3 and 5
+    val cond = nearest("right.sid > left.pid")
+    cond("candidates") shouldBe 4
+    cond("refines") shouldBe 0
+    cond("numOutputRows") shouldBe 3
+  }
+}
