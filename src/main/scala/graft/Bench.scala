@@ -52,9 +52,8 @@ object Bench {
     // warm up codegen/classloading so the first measured query isn't
     // charged for JVM startup costs
     spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
-    // ... including the spatial kernel's heavy stages (WKB + JTS +
-    // min-struct aggregation + ring explode): tiny inputs, both the
-    // exhaustive-fallback and the ring path, results discarded; the
+    // ... including the partitioned spatial kernel (WKB + JTS + leaf
+    // shuffles + per-leaf index): tiny inputs, results discarded; the
     // per-query isolation below still clears every cached block
     locally {
       import org.apache.spark.sql.functions.col
@@ -63,10 +62,7 @@ object Bench {
       val s = SparkEntry.supplierPoints(spark, sfDir)
         .select(col("s_suppkey"), col("lon").as("slon"), col("lat").as("slat")).limit(100)
       def wkb(lon: String, lat: String) = GeoExpressions.wkbPoint(col(lon), col(lat))
-      graft.join.GridNearestJoin.nearest(c, s, wkb("lon", "lat"), wkb("slon", "slat"),
-        cellDeg = 8.0).count()
-      graft.join.GridNearestJoin.nearest(c, s, wkb("lon", "lat"), wkb("slon", "slat"),
-        cellDeg = 8.0, fallbackBelow = 0L, fallbackPairs = 0L).count()
+      graft.join.GridNearestJoin.nearest(c, s, wkb("lon", "lat"), wkb("slon", "slat")).count()
     }
     // dev aid: SPARK_GRAFT_ONLY=q1,q2 restricts to named queries for
     // standalone re-measurement (the driver never sets it)

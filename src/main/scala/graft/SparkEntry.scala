@@ -314,7 +314,7 @@ object SparkEntry {
         .select(col("c_custkey"), col("s_suppkey"), col("dist_m").cast("long"))
     }),
 
-    // J1 at scale: expanding-ring grid nearest, neither side broadcast,
+    // J1 at scale: partitioned grid nearest, neither side broadcast,
     // explicit key tie-break — same oracle as j1_nearest
     "j1_nearest_gridscale" -> ((s, dir) => {
       import graft.functions.GeoExpressions
@@ -325,7 +325,7 @@ object SparkEntry {
         cust, sup,
         GeoExpressions.wkbPoint(col("lon"), col("lat")),
         GeoExpressions.wkbPoint(col("slon"), col("slat")),
-        cellDeg = 4.0, tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L)
+        tieBreak = Some(col("s_suppkey")))
         .select("c_custkey", "s_suppkey")
     }),
 
@@ -390,7 +390,7 @@ object SparkEntry {
       out
     }),
 
-    // kNN (k = 3) through the same ring machinery: up to k ranked rows
+    // kNN (k = 3) through the same partitioned operator: up to k ranked rows
     // per customer, rank 1 = the nearest — generalizes the spatial
     // family toward the ANN operators' top-k contract
     "j1_knn_grid" -> ((s, dir) => {
@@ -402,8 +402,7 @@ object SparkEntry {
         cust, sup,
         GeoExpressions.wkbPoint(col("lon"), col("lat")),
         GeoExpressions.wkbPoint(col("slon"), col("slat")),
-        k = 3, rankCol = "knn_rank",
-        cellDeg = 4.0, tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L)
+        k = 3, rankCol = "knn_rank", tieBreak = Some(col("s_suppkey")))
         .select("c_custkey", "s_suppkey", "knn_rank")
     }),
 
@@ -414,7 +413,8 @@ object SparkEntry {
     // NULL rank — the `LEFT JOIN (ranked WHERE rn <= k)` SQL shape. The
     // % -by-literal keys also regression-guard the ANSI throw-free
     // factoring whitelist (PairCondition.neverThrows): factoring must
-    // stay ENGAGED here or unmatched probes ring through every round
+    // stay ENGAGED here or every unmatched probe scans each leaf it is
+    // forwarded to instead of missing one hash bucket
     "j1_knn_grid_left" -> ((s, dir) => {
       import graft.functions.GeoExpressions
       val cust = customerPoints(s, dir).select("c_custkey", "lon", "lat")
@@ -424,8 +424,7 @@ object SparkEntry {
         cust, sup,
         GeoExpressions.wkbPoint(col("lon"), col("lat")),
         GeoExpressions.wkbPoint(col("slon"), col("slat")),
-        k = 3, rankCol = "knn_rank",
-        cellDeg = 4.0, tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L,
+        k = 3, rankCol = "knn_rank", tieBreak = Some(col("s_suppkey")),
         condition = Some(col("s_suppkey") % 4 === col("c_custkey") % 5),
         joinType = "left")
         .select("c_custkey", "s_suppkey", "knn_rank")

@@ -15,8 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 /**
  * Bounded top-k SET aggregate: the k smallest DISTINCT values of an
  * orderable column (structs included), returned as an ascending-sorted
- * array. The k-nearest grid join's aggregation kernel
- * ([[graft.join.GridNearestJoin.knearest]]).
+ * array.
  *
  * Why not `slice(array_distinct(array_sort(collect_list(...))), 1, k)`:
  * collect_list materializes EVERY candidate per group — the exhaustive
@@ -25,19 +24,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
  * candidates, and unbounded memory at scale). This aggregate holds at
  * most k elements per group at every stage: partial (map-side) buffers
  * truncate to k before the shuffle, so shuffle volume is O(groups · k)
- * regardless of candidate count — the same property that makes the k = 1
- * (distance, id) minimum ([[LexMin]]) scale.
+ * regardless of candidate count.
  *
  * Why a SET (ordered, dedup-on-insert): a bounded HEAP (Spark's own
  * CollectTopK) admits duplicates, and a duplicate inside the heap can
  * evict a genuine k-th-smallest element that is never seen again —
  * wrong results whenever one logical candidate arrives more than once
- * (the grid join re-bins a multi-cell geometry into several probed
- * cells). Tree-set insertion discards compare==0 duplicates instead, so
+ * (say, a cell join that bins a multi-cell geometry into several
+ * probed cells). Tree-set insertion discards compare==0 duplicates instead, so
  * the buffer always holds the k smallest distinct values seen. Callers
- * whose duplicates are NOT value-identical must make them so (the grid
- * join stamps a per-row id into the struct: copies collapse, genuinely
- * identical rows stay distinct).
+ * whose duplicates are NOT value-identical must make them so (stamp a
+ * per-row id into the struct: copies collapse, genuinely identical rows
+ * stay distinct).
  *
  * Non-codegen by nature (TypedImperativeAggregate ==
  * ObjectHashAggregateExec), like every collect-style aggregate in Spark

@@ -37,15 +37,6 @@ object GeoExpressions {
   def gridCells(wkb: Column, cellDeg: Double, expandMeters: Double = 0): Column =
     ColumnBridge.column(GridCells(ColumnBridge.expression(wkb), cellDeg, expandMeters))
 
-  /** Annulus cell ids (lo < Chebyshev distance <= hi) around a center
-    * cell id, clamped to the grid bounds — the expanding-ring nearest
-    * join's probe set. A native expression, NOT a literal (dx, dy) offset
-    * array: at hi=16 the offset arrays are ~800 literals whose generated
-    * (and per-round recompiled) code dwarfs the actual work, and the
-    * higher-order `transform`/`filter` fallback evaluates interpreted. */
-  def ringCells(cell: Column, lo: Int, hi: Int): Column =
-    ColumnBridge.column(RingCells(ColumnBridge.expression(cell), lo, hi))
-
   /** Exact relation `left op right` (within/contains/intersects/overlaps),
     * refined by `SpatialPredicate.relates` like the broadcast kernel. */
   def stRelates(lwkb: Column, rwkb: Column, predicate: String): Column =
@@ -234,9 +225,11 @@ object GeoExpressions {
   // decoding the two doubles in place skips the WKB parse, the parse
   // memo (which thrashes once distinct geometries exceed its 4096
   // slots), and the per-pair JTS centroid allocation. Exactness: a
-  // point's centroid IS its coordinate and JTS point distance is
-  // sqrt(dx²+dy²) on the same doubles — bit-identical results, pinned
-  // by the unchanged golden/oracle rows. Anything not a plain 2-D point
+  // point's centroid IS its coordinate and JTS point distance
+  // (`Coordinate.distance`) is `Math.hypot(dx, dy)` on the same doubles —
+  // bit-identical results (GeoExpressionsDistanceSpec), so SQL
+  // `st_distance` ranks near-ties exactly as both spatial kernels do.
+  // Anything not a plain 2-D point
   // (SRID-flagged type, Z/M dims, other geometries) falls through to
   // the JTS path.
   import GeoKit.{isPointWkb, readDouble}
@@ -252,9 +245,8 @@ object GeoExpressions {
   def computeStDistance(lwkb: Array[Byte], rwkb: Array[Byte]): Double =
     if (isPointWkb(lwkb) && isPointWkb(rwkb)) {
       val lbe = lwkb(0) == 0; val rbe = rwkb(0) == 0
-      val dx = readDouble(lwkb, 5, lbe) - readDouble(rwkb, 5, rbe)
-      val dy = readDouble(lwkb, 13, lbe) - readDouble(rwkb, 13, rbe)
-      math.sqrt(dx * dx + dy * dy)
+      Math.hypot(readDouble(lwkb, 5, lbe) - readDouble(rwkb, 5, rbe),
+        readDouble(lwkb, 13, lbe) - readDouble(rwkb, 13, rbe))
     } else GeoKit.wkbToGeomMemo(lwkb).distance(GeoKit.wkbToGeomMemo(rwkb))
 
   /** Called from generated code; null for null/empty geometries. */

@@ -29,9 +29,10 @@ import graft.spatial.SpatialPredicate
  * smaller cells → more fan-out rows but tighter candidate sets.
  *
  * `nearest` is not expressible as one cell-local pass (a point's nearest
- * neighbour may sit in a far cell); it is served by the expanding-ring
- * search in [[GridNearestJoin]] — the transformer's broadcast="none"
- * nearest mode routes there automatically.
+ * neighbour may sit in a far cell); it is served by [[GridNearestJoin]]'s
+ * partitioned operator (spatial leaves, a per-leaf index and one bounded
+ * second pass) — the transformer's broadcast="none" nearest mode routes
+ * there automatically.
  */
 object GridSpatialJoin {
 
@@ -120,7 +121,7 @@ object GridSpatialJoin {
       case SpatialPredicate.WithinDist(m) => m
       case SpatialPredicate.Nearest =>
         throw new IllegalArgumentException(
-          "nearest is served by GridNearestJoin.nearest (expanding-ring search), " +
+          "nearest is served by GridNearestJoin.nearest (partitioned leaf search), " +
             "not the cell-equi-join grid join")
       case _ => 0.0
     }

@@ -104,6 +104,19 @@ object PairCondition {
     }
   }
 
+  /** The [[Split]] of the Column `cond` over two frames with disjoint
+    * column names, every part bound over the concatenated
+    * (left ++ right) row, as [[compile]] binds it. */
+  def bind(spark: org.apache.spark.sql.SparkSession, cond: Column,
+      leftSchema: StructType, rightSchema: StructType): Split =
+    try {
+      val (parts, childOutput) = split(spark, cond, leftSchema, rightSchema)
+      parts.map(BindReferences.bindReference(_, AttributeSeq(childOutput)))
+    } catch {
+      case e: Exception => throw new IllegalArgumentException(
+        s"unknown extra condition `$cond`: ${e.getMessage}", e)
+    }
+
   /** The grid kernels' view of [[split]]: the moved parts as by-name
     * Columns over the two frames (plain, disjoint column names by the
     * grid kernels' contract). A condition that fails to resolve is not

@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.{SQLExecution, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, Predicate, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
@@ -87,7 +87,18 @@ object SpatialJoinStrategy extends SparkStrategy {
         planLater(p.left), planLater(p.right),
         p.leftWkb, p.rightWkb, p.predicate, p.condition, p.distAttr,
         p.mode) :: Nil
+    case p: PartitionedSpatialJoinPlan =>
+      PartitionedSpatialJoinExec(
+        planLater(p.left), planLater(p.right),
+        p.leftWkb, p.rightWkb, p.tieOrder, p.k, p.condition, p.leftOuter,
+        p.rankAttr) :: Nil
     case _ => Nil
+  }
+
+  /** Registers the strategy on the session (idempotent). */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val cur = spark.experimental.extraStrategies
+    if (!cur.contains(this)) spark.experimental.extraStrategies = cur :+ this
   }
 }
 
@@ -121,33 +132,9 @@ case class BroadcastSpatialJoinExec(
     "refines" -> SQLMetrics.createMetric(sparkContext, "number of refines"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
-  /**
-   * The condition's equi keys the broadcast index hashes on (round-12
-   * scale fix): they fold into one composite key that turns the flat
-   * index into a HASH-PARTITIONED one (one packed sub-tree per distinct
-   * right-key tuple). Why it matters: the conditional-nearest kernel
-   * must PROVE no-match for probes whose condition nothing satisfies,
-   * and that proof is O(|right|) per probe on a flat index — measured
-   * ×239 wall at the materialized sf10 rung (`j1_nearest_left`: 300k
-   * never-matching probes × 100k broadcast rows). With the key hashed,
-   * a never-matching probe is one hash miss (O(1)), and a condition
-   * that was PURE equi leaves no residual, so no probe is ever vetoed.
-   * Sub-trees hold global row indices, so the per-key min-index
-   * tie-break is the flat kernel's min-index-among-passing rule.
-   *
-   * Atomic-typed keys only: value classes whose boxed equals/hashCode
-   * agree with Catalyst EqualTo (±0.0 normalized like Spark's own hash
-   * joins; boxed NaN is canonical under Double.hashCode). Binary,
-   * struct, array and map keys stay per-candidate checks.
-   */
-  def hashKeys: Seq[PairCondition.EquiKey] = {
-    import org.apache.spark.sql.types._
-    condition.toSeq.flatMap(_.equiKeys).filter(_.left.dataType match {
-      case _: NumericType | StringType | BooleanType | DateType |
-           TimestampType | TimestampNTZType => true
-      case _ => false
-    })
-  }
+  /** The condition's equi keys the broadcast index hashes
+    * ([[IndexedCondition]]). */
+  def hashKeys: Seq[PairCondition.EquiKey] = IndexedCondition.hashKeys(condition)
 
   // collect + index + broadcast the right side once per physical plan —
   // Dataset caches its QueryExecution, so repeated actions on the same
@@ -188,17 +175,7 @@ case class BroadcastSpatialJoinExec(
     val joinMode = mode
     val leftWidth = left.output.length
     val rightWidth = right.output.length
-    val keys = hashKeys
-    val lKeys = keys.map(_.left)
-    val rKeys = keys.map(_.right)
-    val nullSafe = keys.map(_.nullSafe).toArray
-    // the index is keyed when anything moved off the per-candidate path;
-    // then only the residual and the unhashed keys run per candidate
-    val keyed = condition.filter(c => keys.nonEmpty || c.leftOnly.isDefined || c.rightOnly.isDefined)
-    val perCandidate = condition.flatMap(c =>
-      if (keyed.isEmpty) Some(c.condition)
-      else (c.residual.toSeq ++ c.equiKeys.filterNot(keys.contains).map(_.conjunct))
-        .reduceOption(And))
+    val cond = condition
 
     left.execute().mapPartitions { it =>
       val (rows, index) = bc.value
@@ -207,78 +184,16 @@ case class BroadcastSpatialJoinExec(
         candidatesMetric += probe.candidates
         refinesMetric += probe.refines
       }
-      val condPred = perCandidate.map(Predicate.create)
-      condPred.foreach(_.initialize(0))
+      val indexed = new IndexedCondition(cond, leftWidth, rightWidth, index, rows(_))
       val joined = new JoinedRow
       val joinedDist = new JoinedRow
       val distRow = new GenericInternalRow(1)
       val proj = UnsafeProjection.create(outAttrs, outAttrs)
-      def normKey(v: Any): Any = v match {
-        case d: java.lang.Double if d.doubleValue() == 0.0 =>
-          java.lang.Double.valueOf(0.0)
-        case f: java.lang.Float if f.floatValue() == 0.0f =>
-          java.lang.Float.valueOf(0.0f)
-        case x => x
-      }
-      // the per-candidate veto; AlwaysTrue with nothing left to check
-      def condEvalFor(lrow: InternalRow): Int => Boolean = condPred match {
-        case None => SpatialProbe.AlwaysTrue
-        case Some(p) => i => p.eval(joined(lrow, rows(i)))
-      }
-      val hitsOf: InternalRow => Iterator[(Int, Int)] = keyed match {
-        case Some(c) =>
-          // key-partitioned probes: the hashed keys become ONE
-          // composite hash lookup; only the residual (if any) rides as
-          // a per-candidate predicate. A null in a `=` key component
-          // means SQL `=` can never hold → no match (and the right row
-          // indexes into no bucket); a null in a `<=>` component is a real key
-          // value (NullSafeKey sentinel — both sides hash-match, which
-          // is exactly Catalyst's null-safe equality). Right-only
-          // conjuncts exclude rows from the index at build; left-only
-          // ones short-circuit probes to O(1) no-match. With no hashed
-          // keys at all, every surviving row lands in the single
-          // Nil-key bucket — a right-filtered flat index.
-          val nullLeft = new GenericInternalRow(leftWidth)
-          val nullRight = new GenericInternalRow(rightWidth)
-          val keyJoin = new JoinedRow
-          def keyOf(exprs: Seq[Expression], row: InternalRow): List[Any] = {
-            var out = List.empty[Any]
-            var i = exprs.length - 1
-            while (i >= 0) {
-              val v = exprs(i).eval(row)
-              if (v == null) {
-                if (!nullSafe(i)) return null
-                out = NullSafeKey :: out
-              } else out = normKey(v) :: out
-              i -= 1
-            }
-            out
-          }
-          val rightPred = c.rightOnly.map(Predicate.create)
-          rightPred.foreach(_.initialize(0))
-          val keyTrees = index.partitioned { i =>
-            val jr = keyJoin(nullLeft, rows(i))
-            if (rightPred.exists(p => !p.eval(jr))) null
-            else keyOf(rKeys, jr)
-          }
-          val leftPred = c.leftOnly.map(Predicate.create)
-          leftPred.foreach(_.initialize(0))
-          lrow => {
-            val g = graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx))
-            val lj = keyJoin(lrow, nullRight)
-            val tree =
-              if (g == null || leftPred.exists(p => !p.eval(lj))) null
-              else {
-                val k = keyOf(lKeys, lj)
-                if (k == null) null else keyTrees.get(k)
-              }
-            if (tree == null) Iterator.empty
-            else probe.matches(g, pred, condEvalFor(lrow), needDist, tree)
-          }
-        case None =>
-          // the flat probe: the whole index under the full condition
-          lrow => probe.matches(graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx)),
-            pred, condEvalFor(lrow), needDist)
+      def hitsOf(lrow: InternalRow): Iterator[(Int, Int)] = {
+        val tree = indexed.tree(lrow)
+        if (tree == null) Iterator.empty
+        else probe.matches(graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx)),
+          pred, indexed.candidate(lrow), needDist, tree)
       }
 
       joinMode match {

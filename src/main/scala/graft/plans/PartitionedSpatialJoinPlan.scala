@@ -1,0 +1,453 @@
+package graft.plans
+
+import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.locationtech.jts.geom.Envelope
+
+import graft.join.PairCondition
+import graft.spatial.GeoKit
+
+/**
+ * Catalyst-native k-nearest join with neither side broadcast: for each
+ * left row, the k right rows nearest to it (JTS `Geometry.distance`)
+ * that pass the condition, in (distance, `tieOrder`) order. Output:
+ * left.output ++ right.output (++ `rankAttr`, the 1-based rank). A
+ * left-outer join keeps a left row without a match (null or empty
+ * geometry included) once, with the right side and the rank nulled.
+ *
+ * @param tieOrder  right attributes that order rows at equal distance,
+ *                  ascending, nulls first
+ * @param condition the extra condition's split (graft.join.PairCondition),
+ *                  bound over left.output ++ right.output
+ */
+case class PartitionedSpatialJoinPlan(
+    left: LogicalPlan,
+    right: LogicalPlan,
+    leftWkb: Attribute,
+    rightWkb: Attribute,
+    tieOrder: Seq[Attribute],
+    k: Int,
+    condition: Option[PairCondition.Split],
+    leftOuter: Boolean,
+    rankAttr: Option[AttributeReference])
+  extends BinaryNode {
+
+  require(k >= 1, s"k must be >= 1, got $k")
+
+  override def output: Seq[Attribute] =
+    PartitionedSpatialJoinPlan.output(left.output, right.output, leftOuter, rankAttr)
+
+  // the probe consumes whole child rows (the condition is ordinal-bound),
+  // so column pruning must not reshape the children
+  override def references: AttributeSet = AttributeSet(left.output ++ right.output)
+
+  override protected def withNewChildrenInternal(
+      newLeft: LogicalPlan, newRight: LogicalPlan): PartitionedSpatialJoinPlan =
+    copy(left = newLeft, right = newRight)
+}
+
+object PartitionedSpatialJoinPlan {
+  private[plans] def output(left: Seq[Attribute], right: Seq[Attribute], leftOuter: Boolean,
+      rankAttr: Option[AttributeReference]): Seq[Attribute] =
+    if (leftOuter) left ++ right.map(_.withNullability(true)) ++ rankAttr.map(_.withNullability(true))
+    else left ++ right ++ rankAttr
+}
+
+/**
+ * The physical operator of [[PartitionedSpatialJoinPlan]]: one lazy plan
+ * whose work all runs in `doExecute`, as Simba's kNN join (SIGMOD 2016)
+ * and REPOSE (ICDE 2021) bound it, partition by partition:
+ *
+ *  1. Leaves. One job samples the centres of the right envelopes and
+ *     cuts KD leaves from them ([[SpatialLeaves]]): at most
+ *     min(right rows, 2 · defaultParallelism, shuffle partitions), each
+ *     holding an equal share of the sample, so a dense cluster splits.
+ *     The leaves tile the plane, so no result depends on the sample.
+ *  2. One shuffle per side: a right row goes to every leaf its envelope
+ *     meets, a left row to the leaf of its envelope centre (its home).
+ *  3. Per leaf, the right rows sorted by `tieOrder` are indexed in one
+ *     [[FlatSpatialIndex]] (equi keys hashed as in the broadcast exec,
+ *     [[IndexedCondition]]), so row index order is tie order, and
+ *     [[SpatialProbe.nearestK]] gives each probe its first k passing
+ *     rows. A probe is resolved when its k-th distance is strictly below
+ *     the clearance from its envelope to the leaf's sides: every right
+ *     row not counted here lies that far out.
+ *  4. Every other probe is forwarded once, to the leaves whose box lies
+ *     within its k-th distance (all of them when it has fewer than k
+ *     hits), and searched there up to that distance.
+ *  5. The final pass re-probes each home leaf and merges each forwarded
+ *     probe's hits by (distance, `tieOrder`).
+ *
+ * A right row replicated to several leaves counts once per probe, in its
+ * reference leaf: the leaf that owns the point of the row's envelope
+ * nearest to the probe's envelope. That point is in the row's envelope,
+ * so the row is in that leaf, and it is no farther from the probe than
+ * the row is, so a probe that the row could reach searches that leaf.
+ * Genuinely identical right rows are distinct rows and count separately.
+ */
+case class PartitionedSpatialJoinExec(
+    left: SparkPlan,
+    right: SparkPlan,
+    leftWkb: Attribute,
+    rightWkb: Attribute,
+    tieOrder: Seq[Attribute],
+    k: Int,
+    condition: Option[PairCondition.Split],
+    leftOuter: Boolean,
+    rankAttr: Option[AttributeReference])
+  extends BinaryExecNode {
+
+  import PartitionedSpatialJoinExec._
+
+  override def output: Seq[Attribute] =
+    PartitionedSpatialJoinPlan.output(left.output, right.output, leftOuter, rankAttr)
+
+  override protected def withNewChildrenInternal(
+      newLeft: SparkPlan, newRight: SparkPlan): PartitionedSpatialJoinExec =
+    copy(left = newLeft, right = newRight)
+
+  /** `leaves` is taken on the driver; the rest add up over tasks.
+    * `replicatedRows` counts right-row copies beyond each row's first
+    * leaf, `candidates` the (probe, right row) pairs the home and
+    * forwarded searches examined, and `forwardedProbes` the forwarded
+    * (probe, leaf) searches. */
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "leaves" -> SQLMetrics.createMetric(sparkContext, "number of leaves"),
+    "replicatedRows" -> SQLMetrics.createMetric(sparkContext, "number of replicated right rows"),
+    "candidates" -> SQLMetrics.createMetric(sparkContext, "number of candidates"),
+    "forwardedProbes" -> SQLMetrics.createMetric(sparkContext, "number of forwarded probes"),
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
+  private def ordinal(attrs: Seq[Attribute], a: Attribute): Int = {
+    val i = attrs.indexWhere(_.exprId == a.exprId)
+    require(i >= 0, s"attribute $a must be in child output")
+    i
+  }
+
+  // the leaves of one physical plan, cut once: Dataset caches its
+  // QueryExecution, so repeated actions reuse them
+  @transient private lazy val leaves: SpatialLeaves = {
+    val rIdx = ordinal(right.output, rightWkb)
+    val rdd = right.execute()
+    val perPartition = math.max(64, SampleSize / math.max(1, rdd.getNumPartitions))
+    val samples = described(sparkContext, "PartitionedSpatialJoinExec: sample right envelopes") {
+      rdd.mapPartitionsWithIndex { (p, it) =>
+        val xs = new Array[Double](perPartition)
+        val ys = new Array[Double](perPartition)
+        val rnd = new java.util.Random(p)
+        var seen = 0L
+        it.foreach { row =>
+          val e = envelopeOf(row, rIdx)
+          if (e != null) {
+            val x = (e.getMinX + e.getMaxX) / 2; val y = (e.getMinY + e.getMaxY) / 2
+            if (java.lang.Double.isFinite(x) && java.lang.Double.isFinite(y)) {
+              val slot = if (seen < perPartition) seen else rnd.nextLong(seen + 1)
+              if (slot < perPartition) { xs(slot.toInt) = x; ys(slot.toInt) = y }
+              seen += 1
+            }
+          }
+        }
+        val n = math.min(seen, perPartition).toInt
+        Iterator((seen, xs.take(n), ys.take(n)))
+      }.collect()
+    }
+    val rows = samples.map(_._1).sum
+    val target = math.min(rows, math.min(2L * sparkContext.defaultParallelism,
+      conf.numShufflePartitions.toLong)).toInt
+    val cut =
+      if (target <= 1) SpatialLeaves.Whole
+      else SpatialLeaves.cut(samples.flatMap(_._2), samples.flatMap(_._3), target)
+    metrics("leaves") += cut.count
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(metrics("leaves")))
+    cut
+  }
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val lIdx = ordinal(left.output, leftWkb)
+    val rIdx = ordinal(right.output, rightWkb)
+    val cut = leaves
+    val n = cut.count
+    val leftWidth = left.output.length
+    val rightWidth = right.output.length
+    val rightTypes = right.output.map(a => (a.dataType, a.nullable))
+    val kk = k
+    val outer = leftOuter
+    val withRank = rankAttr.isDefined
+    // a probe record is the left row ++ (probe id, search bound); the
+    // condition's right references move past those two fields
+    val recWidth = leftWidth + 2
+    val split = condition.map(_.map(_.transform {
+      case b: BoundReference if b.ordinal >= leftWidth => b.copy(ordinal = b.ordinal + 2)
+    }))
+    val ordering = new LazilyGeneratedOrdering(tieOrder.map(a =>
+      SortOrder(BoundReference(ordinal(right.output, a), a.dataType, a.nullable), Ascending)))
+    val outTypes = output.map(a => (a.dataType, a.nullable))
+    val replicated = metrics("replicatedRows")
+    val candidates = metrics("candidates")
+    val forwarded = metrics("forwardedProbes")
+    val numOutputRows = metrics("numOutputRows")
+
+    def shuffled(rdd: RDD[(Int, InternalRow)], fields: Int): RDD[InternalRow] =
+      new ShuffledRDD[Int, InternalRow, InternalRow](rdd, new HashPartitioner(n))
+        .setSerializer(new UnsafeRowSerializer(fields))
+        .mapPartitions(_.map(_._2), preservesPartitioning = true)
+
+    // right rows to every leaf their envelope meets
+    val rightByLeaf = shuffled(right.execute().mapPartitions { it =>
+      val unsafe = UnsafeProjection.create(rightTypes.map(_._1).toArray)
+      val to = scala.collection.mutable.ArrayBuffer[Int]()
+      var copies = 0L
+      TaskContext.get().addTaskCompletionListener[Unit](_ => replicated += copies)
+      it.flatMap { row =>
+        val e = envelopeOf(row, rIdx)
+        to.clear()
+        if (e != null) cut.meeting(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)(to += _)
+        if (to.isEmpty) Iterator.empty
+        else {
+          copies += to.length - 1
+          val u = row match { case u: UnsafeRow => u; case r => unsafe(r) }
+          to.iterator.map(j => (j, u: InternalRow))
+        }
+      }
+    }, rightWidth)
+
+    // left rows, stamped with a probe id, to their home leaf; an outer
+    // join's rows without geometry ride along to be emitted unmatched
+    val leftByLeaf = shuffled(left.execute().mapPartitionsWithIndex { (p, it) =>
+      val rec = UnsafeProjection.create(
+        (left.output.indices.map(i => BoundReference(i, left.output(i).dataType, left.output(i).nullable)) :+
+          BoundReference(leftWidth, LongType, nullable = false) :+
+          BoundReference(leftWidth + 1, DoubleType, nullable = false)).toSeq)
+      val extra = new GenericInternalRow(2)
+      val joined = new JoinedRow
+      var ordinalInPartition = 0L
+      it.flatMap { row =>
+        val id = (p.toLong << 32) | ordinalInPartition
+        ordinalInPartition += 1
+        val e = envelopeOf(row, lIdx)
+        val home =
+          if (e != null) cut.leafOf((e.getMinX + e.getMaxX) / 2, (e.getMinY + e.getMaxY) / 2)
+          else if (outer) (id % n).toInt
+          else -1
+        if (home < 0) Iterator.empty
+        else {
+          extra.setLong(0, id); extra.setDouble(1, Double.PositiveInfinity)
+          Iterator.single((home, rec(joined(row, extra)): InternalRow))
+        }
+      }
+    }, recWidth)
+
+    // each leaf's right rows with the leaf's id: the partition index, read
+    // where it is the shuffle's (a task may run several partitions, say
+    // under a downstream coalesce)
+    val leafRights = rightByLeaf.mapPartitionsWithIndex((j, it) =>
+      Iterator.single((j, it.map(_.copy()).toArray)), preservesPartitioning = true)
+    def leafOf(rights: Iterator[(Int, Array[InternalRow])]): Leaf = {
+      val (id, rows) = rights.next()
+      new Leaf(id, cut, rows, rIdx, ordering, split, kk, recWidth, rightWidth)
+    }
+
+    val hits: RDD[InternalRow] =
+      if (n == 1) null
+      else {
+        // probes not resolved in their home leaf, to every leaf they reach
+        val forwards = shuffled(leftByLeaf.zipPartitions(leafRights) { (probes, rights) =>
+          val leaf = leafOf(rights)
+          probes.flatMap { rec =>
+            val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
+            val targets = leaf.forwardTargets(rec, g)
+            if (targets.isEmpty) Iterator.empty
+            else {
+              val f = rec.copy().asInstanceOf[UnsafeRow]
+              f.setDouble(leftWidth + 1, leaf.bound)
+              targets.iterator.map(j => (j, f: InternalRow))
+            }
+          }
+        }, recWidth)
+        // the forwarded searches' hits, (probe id, distance) ++ right row,
+        // back to the probe's home leaf
+        shuffled(forwards.zipPartitions(leafRights) { (probes, rights) =>
+          val leaf = leafOf(rights)
+          val hit = UnsafeProjection.create(
+            (BoundReference(0, LongType, nullable = false) +: BoundReference(1, DoubleType, nullable = false) +:
+              rightTypes.indices.map(j => BoundReference(2 + j, rightTypes(j)._1, rightTypes(j)._2))).toSeq)
+          val head = new GenericInternalRow(2)
+          val joined = new JoinedRow
+          TaskContext.get().addTaskCompletionListener[Unit](_ => candidates += leaf.probe.candidates)
+          probes.flatMap { rec =>
+            forwarded += 1
+            val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
+            val found = leaf.search(rec, g, rec.getDouble(leftWidth + 1))
+            val e = g.getEnvelopeInternal
+            val home = cut.leafOf((e.getMinX + e.getMaxX) / 2, (e.getMinY + e.getMaxY) / 2)
+            val id = rec.getLong(leftWidth)
+            (0 until math.max(0, found)).iterator.map { h =>
+              head.setLong(0, id); head.setDouble(1, leaf.dists(h))
+              (home, hit(joined(head, leaf.rows(leaf.found(h)))): InternalRow)
+            }
+          }
+        }, 2 + rightWidth)
+      }
+
+    def finish(probes: Iterator[InternalRow], rights: Iterator[(Int, Array[InternalRow])],
+        forwardedHits: Iterator[InternalRow]): Iterator[InternalRow] = {
+      val leaf = leafOf(rights)
+      TaskContext.get().addTaskCompletionListener[Unit](_ => candidates += leaf.probe.candidates)
+      // forwarded hits by probe id, as (distance, right row)
+      val more = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Double, InternalRow)]]()
+      val rightOf = UnsafeProjection.create(rightTypes.indices.map(j =>
+        BoundReference(2 + j, rightTypes(j)._1, rightTypes(j)._2)).toSeq)
+      forwardedHits.foreach { h =>
+        more.computeIfAbsent(h.getLong(0), _ => scala.collection.mutable.ArrayBuffer())
+          .append((h.getDouble(1), rightOf(h).copy()))
+      }
+      val out = UnsafeProjection.create(outTypes.indices.map { i =>
+        val src = if (i < leftWidth) i else i + 2 // past the probe id and bound
+        BoundReference(src, outTypes(i)._1, outTypes(i)._2)
+      })
+      val nullRight = new GenericInternalRow(rightWidth)
+      val rank = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      val withRankRow = new JoinedRow
+      def emit(rec: InternalRow, r: InternalRow, pos: Int): InternalRow = {
+        numOutputRows += 1
+        val base = joined(rec, r)
+        if (!withRank) out(base)
+        else {
+          if (pos < 0) rank.setNullAt(0) else rank.setLong(0, pos + 1L)
+          out(withRankRow(base, rank))
+        }
+      }
+      probes.flatMap { rec =>
+        val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
+        val found = if (g == null) 0 else math.max(0, leaf.search(rec, g, Double.PositiveInfinity))
+        val extra = more.get(rec.getLong(leftWidth))
+        val ranked: IndexedSeq[InternalRow] =
+          if (extra == null) (0 until found).map(h => leaf.rows(leaf.found(h)))
+          else ((0 until found).map(h => (leaf.dists(h), leaf.rows(leaf.found(h)))) ++ extra)
+            .sortWith { (a, b) => a._1 < b._1 || (a._1 == b._1 && ordering.lt(a._2, b._2)) }
+            .take(kk).map(_._2)
+        if (ranked.isEmpty) {
+          if (outer) Iterator.single(emit(rec, nullRight, -1)) else Iterator.empty
+        } else ranked.iterator.zipWithIndex.map { case (r, pos) => emit(rec, r, pos) }
+      }
+    }
+
+    if (hits == null)
+      leftByLeaf.zipPartitions(leafRights)((probes, rights) => finish(probes, rights, Iterator.empty))
+    else leftByLeaf.zipPartitions(leafRights, hits)(finish)
+  }
+}
+
+object PartitionedSpatialJoinExec {
+
+  /** Right envelope centres sampled to cut the leaves. */
+  private val SampleSize = 20000
+
+  /** The envelope of the row's geometry, null for a null or empty one;
+    * a 2-D point is read in place. */
+  private[plans] def envelopeOf(row: InternalRow, idx: Int): Envelope =
+    if (row.isNullAt(idx)) null
+    else {
+      val w = row.getBinary(idx)
+      if (GeoKit.isPointWkb(w)) {
+        val be = w(0) == 0
+        val x = GeoKit.readDouble(w, 5, be); val y = GeoKit.readDouble(w, 13, be)
+        if (x.isNaN || y.isNaN) null else new Envelope(x, x, y, y)
+      } else {
+        val g = GeoKit.wkbToGeom(w)
+        if (g == null) null else g.getEnvelopeInternal
+      }
+    }
+
+  /** Run `body` with `desc` as the Spark job description of the jobs it
+    * starts, then restore the caller's description. */
+  private[graft] def described[T](sc: SparkContext, desc: String)(body: => T): T = {
+    val key = "spark.job.description" // what SparkContext.setJobDescription sets
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty(key, prev)
+  }
+
+  /** Relative tolerance under a distance bound: JTS's distances err by a
+    * few ulps of the coordinates, some 1e-16 of them. */
+  private[plans] def tolerance(e: Envelope, d: Double): Double =
+    1e-9 * (1.0 + math.max(math.max(math.abs(e.getMinX), math.abs(e.getMaxX)),
+      math.max(math.abs(e.getMinY), math.abs(e.getMaxY))) +
+      (if (java.lang.Double.isFinite(d)) d else 0.0))
+}
+
+/**
+ * One leaf's right rows, sorted by the tie order and indexed, and the
+ * searches a probe record runs against them. A search counts a row only
+ * in its reference leaf (see [[PartitionedSpatialJoinExec]]).
+ */
+private[plans] final class Leaf(
+    id: Int, cut: SpatialLeaves, val rows: Array[InternalRow], rIdx: Int,
+    ordering: LazilyGeneratedOrdering, split: Option[PairCondition.Split], k: Int,
+    recWidth: Int, rightWidth: Int) {
+
+  java.util.Arrays.sort(rows, ordering)
+  private val index = FlatSpatialIndex(rows.length, i =>
+    if (rows(i).isNullAt(rIdx)) null else rows(i).getBinary(rIdx))
+  val probe = new SpatialProbe(index)
+  private val indexed = new IndexedCondition(split, recWidth, rightWidth, index, rows(_))
+
+  /** The last search's hits: row indices and distances, nearest first. */
+  val found = new Array[Int](k)
+  val dists = new Array[Double](k)
+  /** The distance bound that [[forwardTargets]] gave its probe. */
+  var bound: Double = Double.PositiveInfinity
+
+  /** The rows `rec` (geometry `g`) counts here, at most `bound` away,
+    * into [[found]]/[[dists]]; how many, or -1 when no right row in any
+    * leaf can pass the condition with it. */
+  def search(rec: InternalRow, g: org.locationtech.jts.geom.Geometry, bound: Double): Int = {
+    val tree = indexed.tree(rec)
+    if (tree == null) return -1
+    if (g == null) return 0
+    val e = g.getEnvelopeInternal
+    val pMinX = e.getMinX; val pMinY = e.getMinY; val pMaxX = e.getMaxX; val pMaxY = e.getMaxY
+    val boxes = index.rtree.boxes
+    val cand = indexed.candidate(rec)
+    // the reference leaf of row i: the owner of the point of the row's
+    // box nearest to the probe's box
+    def counted(i: Int): Boolean = {
+      val b = index.entry(i) << 2
+      val qx = nearestIn(pMinX, pMaxX, boxes(b), boxes(b + 2))
+      val qy = nearestIn(pMinY, pMaxY, boxes(b + 1), boxes(b + 3))
+      cut.leafOf(qx, qy) == id
+    }
+    probe.nearestK(g, i => counted(i) && cand(i), k, bound, found, dists, tree)
+  }
+
+  /** The other leaves the probe must search, after its home search here;
+    * sets [[bound]] to its k-th distance plus a tolerance. */
+  def forwardTargets(rec: InternalRow, g: org.locationtech.jts.geom.Geometry): Seq[Int] = {
+    if (g == null || cut.count == 1) return Nil
+    val n = search(rec, g, Double.PositiveInfinity)
+    if (n < 0) return Nil
+    val e = g.getEnvelopeInternal
+    val dk = if (n == k) dists(k - 1) else Double.PositiveInfinity
+    val tol = PartitionedSpatialJoinExec.tolerance(e, dk)
+    if (n == k && dk < cut.clearance(id, e.getMinX, e.getMinY, e.getMaxX, e.getMaxY) - tol) Nil
+    else {
+      bound = dk + tol
+      (0 until cut.count).filter(j =>
+        j != id && cut.distance(j, e.getMinX, e.getMinY, e.getMaxX, e.getMaxY) <= bound)
+    }
+  }
+
+  /** The point of [min, max] nearest to the interval [pMin, pMax]: an end
+    * of it, or where the two overlap, the larger of the two minima. */
+  @inline private def nearestIn(pMin: Double, pMax: Double, min: Double, max: Double): Double =
+    if (pMax < min) min else if (pMin > max) max else math.max(pMin, min)
+}

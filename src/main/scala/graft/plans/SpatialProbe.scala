@@ -63,6 +63,8 @@ final class FlatSpatialIndex private (
 
   /** Whether indexed row `i` is a point, with coordinates [[x]]/[[y]]. */
   def isPoint(i: Int): Boolean = shapes == null || shapes(i) == null
+  /** Indexed row `i`'s item entry in [[rtree]], which owns its box. */
+  def entry(i: Int): Int = leafOf(i)
   def x(i: Int): Double = rtree.boxes(leafOf(i) << 2)
   def y(i: Int): Double = rtree.boxes((leafOf(i) << 2) + 1)
 
@@ -361,6 +363,95 @@ final class SpatialProbe(index: FlatSpatialIndex) {
       }
     }
     -1
+  }
+
+  /**
+   * The first `k` rows of `tree` that pass the condition, in (distance,
+   * row index) order, no farther than `maxDist`: [[nearestMatch]]'s
+   * traversal run on until the k-th passing row. Writes their row
+   * indices to `rows` and their distances to `dists` and returns how
+   * many there are. Past [[SpatialProbe.ScanAfter]] rejections, one
+   * condition-first scan of the tree gives the same rows.
+   */
+  def nearestK(g: Geometry, condEval: Int => Boolean, k: Int, maxDist: Double,
+      rows: Array[Int], dists: Array[Double], tree: PackedRTree): Int = {
+    if (g == null || tree.isEmpty) return 0
+    val env = g.getEnvelopeInternal
+    val slack =
+      if (g.isInstanceOf[Point] && !index.hasShapes) 0.0
+      else SpatialProbe.Slack * (1.0 + math.max(index.scale, math.max(
+        math.max(math.abs(env.getMinX), math.abs(env.getMaxX)),
+        math.max(math.abs(env.getMinY), math.abs(env.getMaxY)))))
+    val qMinX = env.getMinX; val qMinY = env.getMinY
+    val qMaxX = env.getMaxX; val qMaxY = env.getMaxY
+    val boxes = tree.boxes
+    heapSize = 0
+    var n = 0
+    var start = tree.ids(tree.root)
+    var rejected = 0
+    while (start >= 0) {
+      val end = tree.childEnd(start)
+      var e = start
+      while (e < end) {
+        val b = e << 2
+        val dx = gap(qMinX, qMaxX, boxes(b), boxes(b + 2))
+        val dy = gap(qMinY, qMaxY, boxes(b + 1), boxes(b + 3))
+        val key = math.max(0.0, lowerHypot(dx, dy) - slack)
+        if (key <= maxDist) push(key, -1 - e)
+        e += 1
+      }
+      start = -1
+      while (start < 0 && heapSize > 0) {
+        val key = heapKey(0)
+        val ref = heapRef(0)
+        pop()
+        if (ref >= 0) {
+          candidates += 1
+          if (condEval(ref)) {
+            rows(n) = ref; dists(n) = key; n += 1
+            if (n == k) return n
+          } else {
+            rejected += 1
+            if (rejected >= SpatialProbe.ScanAfter)
+              return scanK(tree, g, condEval, k, maxDist, rows, dists)
+          }
+        } else {
+          val entry = -1 - ref
+          if (entry >= tree.numItems) start = tree.ids(entry)
+          else {
+            val d = distanceTo(g, tree.ids(entry))
+            if (d <= maxDist) push(d, tree.ids(entry))
+          }
+        }
+      }
+    }
+    n
+  }
+
+  /** [[nearestK]] as a condition-first scan over every row of `tree`. */
+  private def scanK(tree: PackedRTree, g: Geometry, condEval: Int => Boolean, k: Int,
+      maxDist: Double, rows: Array[Int], dists: Array[Double]): Int = {
+    var n = 0
+    var e = 0
+    while (e < tree.numItems) {
+      val i = tree.ids(e)
+      candidates += 1
+      if (condEval(i)) {
+        val d = distanceTo(g, i)
+        if (d <= maxDist && (n < k || before(d, i, dists(n - 1), rows(n - 1)))) {
+          // insert in (distance, row index) order, dropping the k+1-th
+          var p = math.min(n, k - 1)
+          while (p > 0 && before(d, i, dists(p - 1), rows(p - 1))) {
+            rows(p) = rows(p - 1); dists(p) = dists(p - 1)
+            p -= 1
+          }
+          rows(p) = i; dists(p) = d
+          if (n < k) n += 1
+        }
+      }
+      e += 1
+    }
+    n
   }
 
   /** A lower bound on `Math.hypot` of any pair at least as far out as

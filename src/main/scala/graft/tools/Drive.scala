@@ -1708,8 +1708,7 @@ object Drive {
         Seq(("a", 0.1, 0.1, 1)).toDF("id", "lon", "lat", "code"), badr,
         GeoExpressions.wkbPoint(col("lon"), col("lat")),
         GeoExpressions.wkbPoint(col("plon"), col("plat")),
-        cellDeg = 1.0, condition = Some(expr("CAST(pcode AS INT) = code")),
-        fallbackBelow = 0L, fallbackPairs = 0L)
+        condition = Some(expr("CAST(pcode AS INT) = code")))
         .select("id", "poi_id2").collect().map(_.getString(1)).toSeq
       println(s"OK ansi-safe grid factoring=$ansiOk (expect List(p1), no CAST throw)")
     }

@@ -32,11 +32,8 @@ import graft.transformer.BroadcastSpatialJoin
  *    and cluster counts scale ×f, not ×f² (the suffix is applied at
  *    factor 1 too, keeping per-row work identical across factors).
  *
- * The ring-vs-fallback crossover is visible in the job counts: at
- * factor 1, `unresolved·|right|` of the nearest joins fits the default
- * 32M pair budget and the planner picks the one-job exhaustive pass; at
- * ×4/×8 the budget no longer fits and the expanding-ring rounds engage
- * (one job per round).
+ * The grid nearest joins run as two jobs at every factor (the leaf
+ * sample and the join); their work grows with the per-leaf row counts.
  *
  * Measurement: one `count()` per (factor, query) — joins/aggregations
  * cannot be pruned under count, rows come for free, and the growth
@@ -296,50 +293,24 @@ object ScaleBench {
       "j1_nearest_gridscale" -> (() =>
         graft.join.GridNearestJoin.nearest(
           custPoints(f), supPoints(f), wkb("lon", "lat"), wkb("slon", "slat"),
-          cellDeg = 4.0, tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L)
+          tieBreak = Some(col("s_suppkey")))
           .select("c_custkey", "s_suppkey")),
       "j1_knn_grid" -> (() =>
         graft.join.GridNearestJoin.knearest(
           custPoints(f), supPoints(f), wkb("lon", "lat"), wkb("slon", "slat"),
-          k = 3, rankCol = "knn_rank",
-          cellDeg = 4.0, tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L)
+          k = 3, rankCol = "knn_rank", tieBreak = Some(col("s_suppkey")))
           .select("c_custkey", "s_suppkey", "knn_rank")),
-      // the ×f-density grid at DENSITY-TUNED cell size (cellDeg ∝
-      // 1/√f keeps expected points-per-cell constant): the fixed-cell
-      // probe above measures ∝ density·N candidate work at ×100 —
-      // real deployments size the grid from the data (the LSH
-      // planes-∝-log N discipline, applied to geometry)
-      "j1_nearest_gridtuned" -> (() =>
-        graft.join.GridNearestJoin.nearest(
-          custPoints(f), supPoints(f), wkb("lon", "lat"), wkb("slon", "slat"),
-          cellDeg = 4.0 / math.sqrt(f.toDouble),
-          tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L)
-          .select("c_custkey", "s_suppkey")),
-      // ... and the ENGINE's own density derivation (autoCellDeg — what
-      // the transformer's grid path uses when gridCellDeg is unset):
-      // the hand-tuned twin above proves the mechanism, this one proves
-      // the DEFAULT path needs no hand at ×100
       // grid-nearest LEFT with the gate's modular equi condition: 1/5
       // of the probes can NEVER match (key 4 has no right rows). The
-      // round-12 __g_ekey factoring joins rings AND the exhaustive
-      // fallback on the key struct, so matchless probes hash-miss in
-      // O(1) instead of pairing against the whole right side
+      // equi key hashes inside each leaf's index, so matchless probes
+      // hash-miss in O(1) per leaf instead of scanning it
       "j1_nearest_left_grid" -> (() =>
         graft.join.GridNearestJoin.nearest(
           custPoints(f), supPoints(f), wkb("lon", "lat"), wkb("slon", "slat"),
-          cellDeg = 4.0 / math.sqrt(f.toDouble),
-          tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L,
+          tieBreak = Some(col("s_suppkey")),
           condition = Some(col("s_suppkey") % 4 === col("c_custkey") % 5),
           joinType = "left")
           .select("c_custkey", "s_suppkey")),
-      "j1_nearest_gridauto" -> (() => {
-        val sup = supPoints(f)
-        val cd = graft.join.GridNearestJoin.autoCellDeg(sup, wkb("slon", "slat"))
-        graft.join.GridNearestJoin.nearest(
-          custPoints(f), sup, wkb("lon", "lat"), wkb("slon", "slat"),
-          cellDeg = cd, tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L)
-          .select("c_custkey", "s_suppkey")
-      }),
       "j2_withindist_grid" -> (() => {
         supEq(f).createOrReplaceTempView("scale_j2_sup")
         new BroadcastSpatialJoin().setDataset("scale_j2_sup")
@@ -862,17 +833,16 @@ object ScaleBench {
       "profile_sketch" -> (() =>
         graft.text.CorpusSketch.sketch(docsPlain(f), Seq("source"), "text")
           .where(col("approx_distinct_tokens") >= 0L)),
-      // left-outer grid nearest AT FIXED CELL SIZE: same ring/fallback
-      // shape as the inner probe, plus the null-emission for
-      // condition-starved rows (1/5 of customers); rows = |left|
-      // exactly at every factor. Filter references the matched column
-      // (probe trap, third occurrence). Renamed in round 13 — this r7
-      // probe had silently shared its name with the r12 density-tuned
+      // left-outer grid nearest with a filter over the matched column:
+      // the null-emission for condition-starved rows (1/5 of customers);
+      // rows = |left| exactly at every factor. Filter references the
+      // matched column (probe trap, third occurrence). Renamed in round
+      // 13 — this r7 probe had silently shared its name with
       // `j1_nearest_left_grid` (both ran, rows collided in artifacts)
       "j1_nearest_left_grid_fixedcell" -> (() =>
         graft.join.GridNearestJoin.nearest(
           custPoints(f), supPoints(f), wkb("lon", "lat"), wkb("slon", "slat"),
-          cellDeg = 4.0, tieBreak = Some(col("s_suppkey")), fallbackBelow = 200L,
+          tieBreak = Some(col("s_suppkey")),
           condition = Some(col("s_suppkey") % 4 === col("c_custkey") % 5),
           joinType = "left")
           .where(col("s_suppkey").isNull || col("s_suppkey") >= 0)

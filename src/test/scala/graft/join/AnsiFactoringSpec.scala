@@ -80,20 +80,19 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
   // factored plan did. PairCondition.factor's ANSI gate keeps the engine's
   // own factoring from being the one introducing the eager eval, but
   // observable behavior matches stock Spark either way, so there is no
-  // completion to assert. The ring kernel below is different: its
-  // condition lives inside an aggregate guard (never a join condition),
-  // so the unfactored path genuinely evaluates it per-candidate only.
+  // completion to assert. The grid nearest kernel below is different:
+  // it evaluates the condition per candidate, in distance order, so the
+  // unfactored path genuinely evaluates it on reachable candidates only.
 
   it should "complete on GridNearestJoin (expanding-ring kernel)" in {
     spark.conf.get("spark.sql.ansi.enabled") shouldBe "true" // Spark 4 default
-    // nearest semantics pair every STRAGGLER with every candidate in the
-    // exhaustive pass, so a left-side bad row would legitimately throw
-    // on both paths. The regression class here is a bad RIGHT row the
-    // rings never examine: all probes resolve in early rings near the
-    // origin, the far bad candidate is binned but never paired — the
-    // unfactored path never evaluates the condition on it, so the
-    // factored path must not either (pre-fix, the eager ekey stamp on
-    // the binned side threw frame-wide).
+    // a left-side bad row would legitimately throw on both paths. The
+    // regression class here is a bad RIGHT row no probe reaches: every
+    // probe finds its match near the origin, far closer than the bad
+    // candidate, which is indexed but never examined — the unfactored
+    // path never evaluates the condition on it, so the factored path
+    // must not either (pre-fix, an eager key stamp on the right side
+    // threw frame-wide).
     val l = Seq(("a", 0.1, 0.1, 1), ("b", 0.2, 0.3, 2)).toDF("id", "lon", "lat", "code")
     val r = Seq(
       ("p1", 0.15, 0.12, "1"),
@@ -103,10 +102,7 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
       l, r,
       GeoExpressions.wkbPoint(col("lon"), col("lat")),
       GeoExpressions.wkbPoint(col("plon"), col("plat")),
-      cellDeg = 1.0, condition = Some(expr("CAST(pcode AS INT) = code")),
-      // rings-only: budget disabled, no early fallback — the probes must
-      // resolve via ring margins without ever touching badp's far cell
-      fallbackBelow = 0L, fallbackPairs = 0L)
+      condition = Some(expr("CAST(pcode AS INT) = code")))
       .select("id", "poi_id")
       .collect().map(x => (x.getString(0), x.getString(1))).toSet
     got shouldBe Set(("a", "p1"), ("b", "p2"))
@@ -142,13 +138,12 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
       b shouldBe broadcast("not (graft_throwing_key(right.pcode) != left.code)")
       b shouldBe Set(("a", "p1"), ("b", "p2"))
 
-      // ring kernel, rings only (as above): badp's far cell is never paired
+      // grid nearest kernel (as above): badp is never examined
       def ring(cond: String) = pairs(GridNearestJoin.nearest(
         l, r,
         GeoExpressions.wkbPoint(col("lon"), col("lat")),
         GeoExpressions.wkbPoint(col("plon"), col("plat")),
-        cellDeg = 1.0, condition = Some(expr(cond)),
-        fallbackBelow = 0L, fallbackPairs = 0L))
+        condition = Some(expr(cond))))
       val g = ring("graft_throwing_key(pcode) = code")
       g shouldBe ring("not (graft_throwing_key(pcode) != code)")
       g shouldBe Set(("a", "p1"), ("b", "p2"))

@@ -8,10 +8,10 @@ import graft.SparkTestKit.spark
 import graft.functions.GeoExpressions
 
 /**
- * Left-outer kNN (k > 1) through the grid ring machinery (r14 — was a
- * documented refusal): match-less left rows (condition-vetoed, or null
- * geometry) keep ONE row with the right columns and the rank nulled —
- * the `left LEFT JOIN (ranked rows WHERE rank <= k)` SQL shape.
+ * Left-outer kNN (k > 1) through the partitioned grid operator (r14 —
+ * was a documented refusal): match-less left rows (condition-vetoed, or
+ * null geometry) keep ONE row with the right columns and the rank
+ * nulled — the `left LEFT JOIN (ranked rows WHERE rank <= k)` SQL shape.
  */
 class GridKnnLeftOuterSpec extends AnyFlatSpec with Matchers {
 
@@ -50,17 +50,22 @@ class GridKnnLeftOuterSpec extends AnyFlatSpec with Matchers {
       .select("id", "poi_id", "rn")
       .collect().map(row).toSet
 
-    for ((fb, fp) <- Seq((0L, 0L), (Long.MaxValue, 0L))) { // rings-only, fallback-only
-      val got = GridNearestJoin.knearest(
-        input, data,
-        GeoExpressions.wkbPoint(col("lon"), col("lat")),
-        GeoExpressions.wkbPoint(col("plon"), col("plat")),
-        k = 3, cellDeg = 2.0, tieBreak = Some(col("poi_id")),
-        condition = Some(col("grp") === col("pgrp")),
-        fallbackBelow = fb, fallbackPairs = fp, joinType = "left")
-        .select("id", "poi_id", "knn_rank")
-        .collect().map(row).toSet
-      withClue(s"fallbackBelow=$fb fallbackPairs=$fp: ") { got shouldBe brute }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    for (leaves <- Seq(1, 7)) { // one leaf, seven leaves
+      spark.conf.set(key, leaves.toString)
+      val got =
+        try GridNearestJoin.knearest(
+          input, data,
+          GeoExpressions.wkbPoint(col("lon"), col("lat")),
+          GeoExpressions.wkbPoint(col("plon"), col("plat")),
+          k = 3, tieBreak = Some(col("poi_id")),
+          condition = Some(col("grp") === col("pgrp")),
+          joinType = "left")
+          .select("id", "poi_id", "knn_rank")
+          .collect().map(row).toSet
+        finally spark.conf.set(key, prev)
+      withClue(s"leaves=$leaves: ") { got shouldBe brute }
     }
   }
 
@@ -73,7 +78,7 @@ class GridKnnLeftOuterSpec extends AnyFlatSpec with Matchers {
       input, data,
       GeoExpressions.wkbPoint(col("lon"), col("lat")),
       GeoExpressions.wkbPoint(col("plon"), col("plat")),
-      k = 3, cellDeg = 2.0, tieBreak = Some(col("poi_id")),
+      k = 3, tieBreak = Some(col("poi_id")),
       condition = Some(col("grp") === col("pgrp")),
       joinType = "left")
       .select("id", "poi_id", "knn_rank")

@@ -12,11 +12,11 @@ import graft.functions.GeoExpressions
 /**
  * Tie semantics of the grid nearest join: the winner among candidates at
  * equal distance is the smallest (tieBreak, right columns), whatever the
- * execution regime, the right side's partitioning or AQE. The fixture
- * stacks sites on one coordinate with different tie-break keys, repeats
- * whole rows, has a null tie-break and ±0.0 coordinates; the oracle is a
- * brute-force `row_number() over (partition by id order by distance,
- * tieBreak, right columns)`.
+ * leaf count, the right side's partitioning or AQE. The fixture stacks
+ * sites on one coordinate with different tie-break keys, repeats whole
+ * rows, has a null tie-break and ±0.0 coordinates, and a probe cluster
+ * far from every site; the oracle is a brute-force `row_number() over
+ * (partition by id order by distance, tieBreak, right columns)`.
  */
 class GridNearestTiesSpec extends AnyFlatSpec with Matchers {
 
@@ -48,7 +48,9 @@ class GridNearestTiesSpec extends AnyFlatSpec with Matchers {
     val onSites = Seq(("at_stack", 1.0, 1.0), ("near_stack", 1.2, 1.0),
       ("at_dup", 0.5, -0.5), ("at_null", -1.5, 2.0), ("near_null", -1.5, 2.3),
       ("z_pp", 0.0, 0.0), ("z_np", -0.0, 0.0), ("z_nn", -0.0, -0.0), ("z_off", 0.1, -0.0))
-    (scatter ++ onSites).toDF("id", "lon", "lat")
+    val siteless = (0 until 8).map(i => // far outside every leaf's sites
+      (s"far$i", 14.0 + rnd.nextDouble(), -12.0 + rnd.nextDouble()))
+    (scatter ++ onSites ++ siteless).toDF("id", "lon", "lat")
   }
 
   private val lw = GeoExpressions.wkbPoint(col("lon"), col("lat"))
@@ -67,31 +69,24 @@ class GridNearestTiesSpec extends AnyFlatSpec with Matchers {
       .where(col("rn") <= k), "id" +: rightCols :+ "rn")
   }
 
-  private def withAqe[T](on: Boolean)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
+  private def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.get(key)
-    spark.conf.set(key, on.toString)
+    spark.conf.set(key, value)
     try body finally spark.conf.set(key, prev)
   }
 
-  // (cellDeg, initialHorizon, fallbackBelow, fallbackPairs)
-  private val regimes = Seq(
-    "rings-only" -> (0.5, 1, 0L, 0L),
-    "fallback-only" -> (1.0, 2, Long.MaxValue, 0L),
-    "mixed" -> (1.0, 1, 10L, 600L))
+  // the leaf count follows the shuffle width: one leaf, or seven
+  private val regimes = Seq("one leaf" -> 1, "seven leaves" -> 7)
 
-  private def grid(k: Int, right: DataFrame, tieBreak: Option[Column],
-      regime: (Double, Int, Long, Long)): Seq[String] = {
-    val (cd, ih, fb, fp) = regime
-    if (k == 1)
-      show(GridNearestJoin.nearest(probes, right, lw, rw, cellDeg = cd, tieBreak = tieBreak,
-        initialHorizon = ih, fallbackBelow = fb, fallbackPairs = fp)
-        .withColumn("rn", lit(1L)), "id" +: rightCols :+ "rn")
-    else
-      show(GridNearestJoin.knearest(probes, right, lw, rw, k = k, cellDeg = cd,
-        tieBreak = tieBreak, initialHorizon = ih, fallbackBelow = fb, fallbackPairs = fp),
-        "id" +: rightCols :+ "knn_rank")
-  }
+  private def grid(k: Int, right: DataFrame, tieBreak: Option[Column], leaves: Int): Seq[String] =
+    withConf("spark.sql.shuffle.partitions", leaves.toString) {
+      if (k == 1)
+        show(GridNearestJoin.nearest(probes, right, lw, rw, tieBreak = tieBreak)
+          .withColumn("rn", lit(1L)), "id" +: rightCols :+ "rn")
+      else
+        show(GridNearestJoin.knearest(probes, right, lw, rw, k = k, tieBreak = tieBreak),
+          "id" +: rightCols :+ "knn_rank")
+    }
 
   for (k <- Seq(1, 3)) {
     it should s"equal brute force on ties (k = $k) in every regime, layout and AQE mode" in {
@@ -100,7 +95,8 @@ class GridNearestTiesSpec extends AnyFlatSpec with Matchers {
       for ((name, regime) <- regimes; parts <- Seq(1, 7); aqe <- Seq(true, false)) {
         val right = if (parts == 1) sites.coalesce(1) else sites.repartition(parts)
         withClue(s"k=$k $name parts=$parts aqe=$aqe: ") {
-          withAqe(aqe)(grid(k, right, Some(col("tb")), regime)) shouldBe expected
+          withConf("spark.sql.adaptive.enabled", aqe.toString)(
+            grid(k, right, Some(col("tb")), regime)) shouldBe expected
         }
       }
     }

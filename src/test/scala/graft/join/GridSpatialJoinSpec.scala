@@ -23,6 +23,15 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     }.toDF("id", "lon", "lat")
   }
 
+  /** `body` with the grid nearest join cutting at most `leaves` leaves
+    * (its leaf count follows the shuffle width). */
+  private def withLeaves[T](leaves: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, leaves.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
   private def run(predicate: String, mode: String, dist: Boolean = false): Set[String] = {
     val input = pts(40, "i")
     val data = pts(25, "d").toDF("poi_id", "lon", "lat")
@@ -113,18 +122,17 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     grid shouldBe go("dataset")
   }
 
-  it should "resolve through ring rounds when fallback is disabled" in {
+  it should "equal the brute-force argmin on scattered points with seven leaves" in {
     import org.apache.spark.sql.functions.col
     import graft.functions.GeoExpressions
     val input = pts(80, "i")
     val data = pts(40, "d").toDF("poi_id", "plon", "plat")
-    val grid = GridNearestJoin.nearest(
+    val grid = withLeaves(7)(GridNearestJoin.nearest(
       input, data,
       GeoExpressions.wkbPoint(col("lon"), col("lat")),
       GeoExpressions.wkbPoint(col("plon"), col("plat")),
-      cellDeg = 0.5, tieBreak = Some(col("poi_id")),
-      initialHorizon = 1, fallbackBelow = 0L, fallbackPairs = 0L)
-      .select("id", "poi_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
+      tieBreak = Some(col("poi_id")))
+      .select("id", "poi_id").collect().map(r => (r.getString(0), r.getString(1))).toSet)
     // brute-force argmin as oracle
     val brute = input.crossJoin(data)
       .withColumn("d2", (col("lon") - col("plon")) * (col("lon") - col("plon"))
@@ -139,9 +147,8 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
 
   it should "equal brute force under randomized data and kernel configs" in {
     // seeded-random scatter (clusters + uniform noise + empty regions) x
-    // config grid covering all three execution regimes: rings only,
-    // fallback only, and the adaptive mix — every combination must equal
-    // the brute-force argmin exactly
+    // leaf counts: every combination must equal the brute-force argmin
+    // exactly
     import org.apache.spark.sql.functions.col
     import graft.functions.GeoExpressions
     for (seed <- Seq(1, 2)) {
@@ -164,21 +171,14 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
             .orderBy(col("d2"), col("poi_id"))))
         .where(col("rn") === 1)
         .select("id", "poi_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
-      val configs = Seq(
-        (0.5, 1, 0L, 0L),                  // rings only, tiny cells
-        (4.0, 2, 0L, 0L),                  // rings only, coarse cells
-        (1.0, 2, Long.MaxValue, 0L),       // immediate fallbackBelow path
-        (1.0, 2, 0L, Long.MaxValue),       // immediate fallbackPairs budget path
-        (2.0, 1, 20L, 1000L))              // adaptive mix
-      for ((cd, ih, fb, fp) <- configs) {
-        val got = GridNearestJoin.nearest(
+      for (leaves <- Seq(1, 2, 4, 7)) {
+        val got = withLeaves(leaves)(GridNearestJoin.nearest(
           input, data,
           GeoExpressions.wkbPoint(col("lon"), col("lat")),
           GeoExpressions.wkbPoint(col("plon"), col("plat")),
-          cellDeg = cd, tieBreak = Some(col("poi_id")),
-          initialHorizon = ih, fallbackBelow = fb, fallbackPairs = fp)
-          .select("id", "poi_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
-        withClue(s"seed=$seed cellDeg=$cd ih=$ih fb=$fb fp=$fp: ") {
+          tieBreak = Some(col("poi_id")))
+          .select("id", "poi_id").collect().map(r => (r.getString(0), r.getString(1))).toSet)
+        withClue(s"seed=$seed leaves=$leaves: ") {
           got shouldBe brute
         }
       }
@@ -186,9 +186,8 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "equal brute-force top-k under all three kernel regimes (knearest)" in {
-    // k = 3 through rings-only, fallback-only, and the adaptive mix —
-    // ranked rows must equal the brute-force row_number() <= 3 exactly,
-    // including ranks
+    // k = 3 with one, four and seven leaves — ranked rows must equal the
+    // brute-force row_number() <= 3 exactly, including ranks
     import org.apache.spark.sql.functions.col
     import graft.functions.GeoExpressions
     val rnd = new scala.util.Random(5)
@@ -211,21 +210,15 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
       .where(col("rn") <= 3)
       .select("id", "poi_id", "rn")
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2).toLong)).toSet
-    val configs = Seq(
-      (0.5, 1, 0L, 0L),                  // rings only
-      (1.0, 2, Long.MaxValue, 0L),       // immediate fallbackBelow path
-      (1.0, 2, 0L, Long.MaxValue),       // immediate fallbackPairs budget path
-      (2.0, 1, 20L, 1000L))              // adaptive mix
-    for ((cd, ih, fb, fp) <- configs) {
-      val got = GridNearestJoin.knearest(
+    for (leaves <- Seq(1, 4, 7)) {
+      val got = withLeaves(leaves)(GridNearestJoin.knearest(
         input, data,
         GeoExpressions.wkbPoint(col("lon"), col("lat")),
         GeoExpressions.wkbPoint(col("plon"), col("plat")),
-        k = 3, cellDeg = cd, tieBreak = Some(col("poi_id")),
-        initialHorizon = ih, fallbackBelow = fb, fallbackPairs = fp)
+        k = 3, tieBreak = Some(col("poi_id")))
         .select("id", "poi_id", "knn_rank")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-      withClue(s"cellDeg=$cd ih=$ih fb=$fb fp=$fp: ") {
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet)
+      withClue(s"leaves=$leaves: ") {
         got shouldBe brute
       }
     }
@@ -234,9 +227,8 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
   it should "apply the extra condition inside kNN ranking (nearest-satisfying, k > 1)" in {
     // kNN + condition: the k ranked rows per input must be the k nearest
     // rows SATISFYING the condition (candidates failing it never consume
-    // a rank) — the guarded when(cond, struct) aggregate shape, covering
-    // the quick-reject's guard-first path. Ring and fallback regimes
-    // must agree with the filtered brute force exactly, rank for rank.
+    // a rank). One leaf and seven leaves must agree with the filtered
+    // brute force exactly, rank for rank.
     import org.apache.spark.sql.functions.col
     import graft.functions.GeoExpressions
     val rnd = new scala.util.Random(11)
@@ -256,17 +248,16 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
       .where(col("rn") <= 2)
       .select("id", "poi_id", "rn")
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2).toLong)).toSet
-    for ((fb, fp) <- Seq((0L, 0L), (Long.MaxValue, 0L))) { // rings-only, fallback-only
-      val got = GridNearestJoin.knearest(
+    for (leaves <- Seq(1, 7)) {
+      val got = withLeaves(leaves)(GridNearestJoin.knearest(
         input, data,
         GeoExpressions.wkbPoint(col("lon"), col("lat")),
         GeoExpressions.wkbPoint(col("plon"), col("plat")),
-        k = 2, cellDeg = 2.0, tieBreak = Some(col("poi_id")),
-        condition = Some(col("grp") =!= col("pgrp")),
-        fallbackBelow = fb, fallbackPairs = fp)
+        k = 2, tieBreak = Some(col("poi_id")),
+        condition = Some(col("grp") =!= col("pgrp")))
         .select("id", "poi_id", "knn_rank")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-      withClue(s"fallbackBelow=$fb fallbackPairs=$fp: ") { got shouldBe brute }
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet)
+      withClue(s"leaves=$leaves: ") { got shouldBe brute }
     }
   }
 
@@ -313,10 +304,9 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     }
   }
 
-  it should "broadcast the right side when the pair budget picks the exhaustive pass" in {
-    // budget-entered fallback with a broadcast-sized right side must plan
-    // BroadcastNestedLoopJoin, not a CartesianProduct shuffle — the
-    // budgetStopped + stats.sizeInBytes gate (review finding, round 4)
+  it should "plan one partitioned exec and never a cartesian or nested-loop pass" in {
+    // neither side is broadcast and no pair set is enumerated: the whole
+    // join is one PartitionedSpatialJoinExec over the two scans
     import org.apache.spark.sql.functions.col
     import graft.functions.GeoExpressions
     val input = pts(200, "i")
@@ -325,13 +315,14 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
       input, data,
       GeoExpressions.wkbPoint(col("lon"), col("lat")),
       GeoExpressions.wkbPoint(col("plon"), col("plat")),
-      cellDeg = 1.0, tieBreak = Some(col("poi_id")),
-      fallbackBelow = 0L, fallbackPairs = Long.MaxValue) // budget always wins
+      tieBreak = Some(col("poi_id")))
     out.count() shouldBe 200
     val plan = out.queryExecution.executedPlan.toString
-    withClue(plan.linesIterator.filter(_.contains("Join")).mkString("\n")) {
-      plan should include("BroadcastNestedLoopJoin")
+    withClue(plan) {
+      plan should include("PartitionedSpatialJoin")
+      plan should not include "BroadcastNestedLoopJoin"
       plan should not include "CartesianProduct"
+      plan should not include "Aggregate"
     }
   }
 
@@ -344,7 +335,7 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
       input, data,
       GeoExpressions.wkbPoint(col("lon"), col("lat")),
       GeoExpressions.wkbPoint(col("plon"), col("plat")),
-      k = 3, cellDeg = 1.0, tieBreak = Some(col("poi_id")))
+      k = 3, tieBreak = Some(col("poi_id")))
       .select("id", "poi_id", "knn_rank").collect()
     got.length shouldBe 10 // 5 left rows x only 2 candidates each
     got.map(_.getLong(2)).toSet shouldBe Set(1L, 2L)
@@ -406,14 +397,14 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     grid shouldBe go("dataset")
   }
 
-  it should "run one Spark job per ring round (count rides the materialization)" in {
+  it should "run nearest as two Spark jobs: the leaf sample and the action" in {
     import org.apache.spark.sql.functions.col
     import graft.functions.GeoExpressions
     val sc = spark.sparkContext
     // AQE splits one action into a job per shuffle stage — disable it so
     // jobs == actions and the count is meaningful; auto-broadcast off so
     // no planner-version-dependent broadcast-exchange collect jobs ride
-    // along (the bound then counts only the loop's own actions)
+    // along (the count then covers only the operator's own jobs)
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -426,17 +417,13 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
         input, data,
         GeoExpressions.wkbPoint(col("lon"), col("lat")),
         GeoExpressions.wkbPoint(col("plon"), col("plat")),
-        // one big cell: every row resolves in round 1, no fallback
-        cellDeg = 10.0, tieBreak = Some(col("poi_id")),
-        initialHorizon = 1, fallbackBelow = 0L, fallbackPairs = 0L)
+        tieBreak = Some(col("poi_id")))
+      sc.statusTracker.getJobIdsForGroup("gnj-jobs") shouldBe empty // lazy
       out.count() shouldBe 50
       sc.clearJobGroup()
-      val jobs = sc.statusTracker.getJobIdsForGroup("gnj-jobs").length
-      // init agg (materializes left) + round-1 count (materializes the
-      // ring snapshot AND the binned right side) + the final count action
-      // (+1 slack for scheduler-internal jobs). The pre-fix loop cost
-      // 2 jobs/round + 2 eager init jobs (>= 6 here)
-      jobs should be <= 4
+      // the right side's envelope sample, then the count: both shuffles,
+      // the forwarded second pass and the merge are stages of one job
+      sc.statusTracker.getJobIdsForGroup("gnj-jobs").length shouldBe 2
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
@@ -531,17 +518,17 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     for (bad <- Seq(0.0, -1.0, Double.NaN, Double.PositiveInfinity)) withClue(s"cellDeg=$bad: ") {
       an[IllegalArgumentException] should be thrownBy
         GridSpatialJoin.join(l, r, lw, rw, SpatialPredicate.Intersects, cellDeg = bad)
-      an[IllegalArgumentException] should be thrownBy
-        GridNearestJoin.nearest(l, r, lw, rw, cellDeg = bad)
-      an[IllegalArgumentException] should be thrownBy
-        GridNearestJoin.knearest(l, r, lw, rw, k = 2, cellDeg = bad)
     }
-    // the transformer's gridCellDeg reaches the kernels as given
+    // the transformer rejects a bad gridCellDeg on both grid paths, also
+    // for nearest, which cuts its own leaves and ignores the cell size
     r.createOrReplaceTempView("grid_poi_badcell")
-    an[IllegalArgumentException] should be thrownBy
-      new BroadcastSpatialJoin().setDataset("grid_poi_badcell")
-        .setDatasetPoint("plon, plat").setInputPoint("lon, lat")
-        .setDataColumns("poi_id").setBroadcast("none").setGridCellDeg("0")
-        .transform(l)
+    for (pred <- Seq("nearest", "intersects"); bad <- Seq("0", "-1", "NaN", "Infinity"))
+      withClue(s"$pred gridCellDeg=$bad: ") {
+        an[IllegalArgumentException] should be thrownBy
+          new BroadcastSpatialJoin().setDataset("grid_poi_badcell")
+            .setDatasetPoint("plon, plat").setInputPoint("lon, lat")
+            .setDataColumns("poi_id").setBroadcast("none").setPredicate(pred)
+            .setGridCellDeg(bad).transform(l)
+      }
   }
 }

@@ -13,9 +13,8 @@ import graft.functions.GeoExpressions
  * operators default to `localCheckpoint` snapshots (fast, but blocks die
  * with their executor); on a real cluster callers pass
  * [[GridNearestJoin.ReliableMaterialize]] (reliable `checkpoint` into a
- * checkpoint dir). These specs run both operators through the reliable
- * path end-to-end and pin result equality with the local path — the
- * documented contract had no coverage before.
+ * checkpoint dir). This spec runs the clustering loop through the
+ * reliable path end-to-end and pins result equality with the local path.
  */
 class ReliableMaterializeSpec extends AnyFlatSpec with Matchers {
 
@@ -32,31 +31,6 @@ class ReliableMaterializeSpec extends AnyFlatSpec with Matchers {
       }
       rm(dir)
     }
-  }
-
-  behavior of "GridNearestJoin with ReliableMaterialize"
-
-  it should "produce exactly the local-checkpoint result through ring rounds" in withCheckpointDir {
-    val left = (0 until 400).map { i =>
-      (s"L$i", -10.0 + (i % 20) * 1.01, -10.0 + (i / 20) * 0.97)
-    }.toDF("lid", "llon", "llat")
-    val right = (0 until 60).map { i =>
-      (s"R$i", -9.0 + (i % 10) * 1.83, -9.0 + (i / 10) * 2.71)
-    }.toDF("rid", "rlon", "rlat")
-    def run(mat: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-      GridNearestJoin.nearest(
-        left, right,
-        GeoExpressions.wkbPoint(col("llon"), col("llat")),
-        GeoExpressions.wkbPoint(col("rlon"), col("rlat")),
-        cellDeg = 2.0, tieBreak = Some(col("rid")),
-        // force the ring rounds (the loop is where snapshots matter)
-        fallbackBelow = 0L, fallbackPairs = 0L,
-        materialize = mat)
-        .select("lid", "rid")
-    val reliable = run(GridNearestJoin.ReliableMaterialize)
-    val local = run(GridNearestJoin.LocalMaterialize)
-    reliable.count() shouldBe 400
-    assertDataFrameEquals(reliable, local)
   }
 
   behavior of "Dedup.clusterPairs with ReliableMaterialize"

@@ -457,8 +457,8 @@ class PlanAuditSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "preserve snapshot partitioning across localCheckpoint when AQE is off (iterative-join contract)" in {
-    // GridNearestJoin and Dedup.clusterPairs pre-partition their
-    // long-lived snapshots. On AQE-OFF sessions that makes every
+    // Dedup.clusterPairs pre-partitions its long-lived snapshots. On
+    // AQE-OFF sessions that makes every
     // per-round join read the snapshot exchange-free (localCheckpoint's
     // LogicalRDD keeps outputPartitioning); under AQE — the default —
     // the snapshot side is re-planned with its own exchange each round
@@ -645,11 +645,10 @@ class PlanAuditSpec extends AnyFlatSpec with Matchers {
 
   behavior of "grid nearest physical plans"
 
-  it should "choose the k = 1 winner in a hash aggregate in ring rounds and fallback" in {
-    // the (distance, right-row id) minimum has fixed-width buffers, so it
-    // plans HashAggregate; an object aggregate (ObjectHashAggregate) turns
-    // sort-based past 128 groups per task, a struct min plans SortAggregate
-    import org.apache.spark.sql.DataFrame
+  it should "plan k = 1 and k = 3 as one partitioned exec with no object or sort aggregate" in {
+    // the per-probe winners come out of each leaf's index and one merge
+    // inside the exec: no aggregate at all, so neither an object aggregate
+    // (sort-based past 128 groups per task) nor a sort aggregate
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     import graft.functions.GeoExpressions
@@ -658,30 +657,18 @@ class PlanAuditSpec extends AnyFlatSpec with Matchers {
       (s"p$i", (i * 37 % 300) / 100.0, (i * 53 % 300) / 100.0)).toDF("id", "lon", "lat")
     val sites = (0 until 60).map(i =>
       (s"s$i", (i * 41 % 300) / 100.0, (i * 29 % 300) / 100.0)).toDF("sid", "plon", "plat")
-    val ringPlans = scala.collection.mutable.ArrayBuffer[String]()
-    // materialize = a recording local checkpoint: each ring round's plan
-    // is only visible as the snapshot it becomes
-    val recording: DataFrame => DataFrame = { df =>
-      ringPlans += df.queryExecution.executedPlan.toString
-      df.localCheckpoint(false)
+    val lw = GeoExpressions.wkbPoint(col("lon"), col("lat"))
+    val rw = GeoExpressions.wkbPoint(col("plon"), col("plat"))
+    for ((k, out) <- Seq(
+        1 -> GridNearestJoin.nearest(probes, sites, lw, rw, tieBreak = Some(col("sid"))),
+        3 -> GridNearestJoin.knearest(probes, sites, lw, rw, k = 3, tieBreak = Some(col("sid"))))) {
+      out.count() shouldBe 200 * k
+      val plan = out.queryExecution.executedPlan.toString
+      withClue(s"k=$k: $plan") {
+        plan should include("PartitionedSpatialJoin")
+        plan should not include "ObjectHashAggregate"
+        plan should not include "SortAggregate"
+      }
     }
-    def run(fallbackBelow: Long, mat: DataFrame => DataFrame) = GridNearestJoin.nearest(
-      probes, sites,
-      GeoExpressions.wkbPoint(col("lon"), col("lat")),
-      GeoExpressions.wkbPoint(col("plon"), col("plat")),
-      cellDeg = 0.5, tieBreak = Some(col("sid")), initialHorizon = 1,
-      fallbackBelow = fallbackBelow, fallbackPairs = 0L, materialize = mat)
-    def hashAggregated(plan: String): Unit = withClue(plan) {
-      plan.linesIterator.exists(_.matches(".*(?<!Object)HashAggregate\\(.*")) shouldBe true
-      plan should not include "ObjectHashAggregate"
-      plan should not include "SortAggregate"
-    }
-    run(fallbackBelow = 0L, recording).count() shouldBe 200 // rings only
-    val rounds = ringPlans.filter(_.contains("Aggregate"))
-    rounds should not be empty
-    rounds.foreach(hashAggregated)
-    val fallback = run(fallbackBelow = Long.MaxValue, GridNearestJoin.LocalMaterialize)
-    fallback.count() shouldBe 200
-    hashAggregated(fallback.queryExecution.executedPlan.toString)
   }
 }

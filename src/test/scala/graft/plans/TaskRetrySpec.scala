@@ -87,6 +87,41 @@ class TaskRetrySpec extends AnyFlatSpec with Matchers {
     retried shouldBe clean
     clean should not be empty
   }
+
+  it should "grid nearest: identical rows when every exec stage retries its first attempt" in {
+    // the condition fails the first attempt of partition 0 in every stage
+    // that evaluates it: the home search, the forwarded search and the
+    // final merge; the left input's stage fails once as well
+    val fail = udf { (sid: Long) =>
+      val tc = TaskContext.get()
+      if (tc != null && tc.partitionId() == 0 && tc.attemptNumber() == 0 &&
+          TaskRetrySpec.fired.add("gridNearest#" + tc.stageId()))
+        throw new RuntimeException("injected first-attempt failure [gridNearest]")
+      sid >= 0L
+    }
+    val probes = (0 until 300).map { i => // one cluster far from every site
+      val far = i % 10 == 0
+      (i.toLong, (i * 37 % 300) / 100.0 + (if (far) 20.0 else 0.0), (i * 53 % 300) / 100.0)
+    }.toDF("pid", "lon", "lat").repartition(4)
+    val sites = (0 until 60).map(i =>
+      (i.toLong, (i * 41 % 300) / 100.0, (i * 29 % 300) / 100.0)).toDF("sid", "plon", "plat")
+    def run(left: DataFrame, k: Int, withFault: Boolean): Seq[String] = canon(
+      graft.join.GridNearestJoin.knearest(left, sites,
+        graft.functions.GeoExpressions.wkbPoint(col("lon"), col("lat")),
+        graft.functions.GeoExpressions.wkbPoint(col("plon"), col("plat")),
+        k = k, tieBreak = Some(col("sid")),
+        condition = if (withFault) Some(fail(col("sid"))) else None))
+    for (k <- Seq(1, 3)) withClue(s"k=$k: ") {
+      val clean = run(probes, k, withFault = false)
+      TaskRetrySpec.fired.clear()
+      val retried = run(faulted(probes, "gridNearestInput"), k, withFault = true)
+      // the input's stage and the exec's three condition stages
+      TaskRetrySpec.fired.asScala.count(_.startsWith("gridNearest#")) shouldBe 3
+      TaskRetrySpec.fired.asScala.exists(_.startsWith("gridNearestInput#")) shouldBe true
+      retried shouldBe clean
+      clean should have size 300 * k
+    }
+  }
 }
 
 object TaskRetrySpec {

@@ -6,10 +6,10 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkTestKit.spark
-import graft.plans.BroadcastSpatialJoinExec
+import graft.plans.{BroadcastSpatialJoinExec, PartitionedSpatialJoinExec}
 
-/** The SQL metrics of the broadcast spatial exec, pinned on fixed
-  * fixtures whose counts are worked out by hand below. */
+/** The SQL metrics of both spatial execs, pinned on fixed fixtures whose
+  * counts are worked out by hand below. */
 class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
 
   import spark.implicits._
@@ -70,5 +70,45 @@ class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
     cond("candidates") shouldBe 4
     cond("refines") shouldBe 0
     cond("numOutputRows") shouldBe 3
+  }
+
+  behavior of "PartitionedSpatialJoinExec metrics"
+
+  it should "count leaves, replicated rows, candidates, forwarded probes and output rows" in {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.GeoExpressions
+    import graft.join.GridNearestJoin
+    // two leaves (shuffle width 2): the sites' x centres 0, 1, 10, 11 cut
+    // at x = 10, so site 3 sits on the split line and goes to both
+    // leaves (1 replicated row) but counts only in x >= 10
+    val sites = Seq((1L, 0.0, 0.0), (2L, 1.0, 0.0), (3L, 10.0, 0.0), (4L, 11.0, 0.0))
+      .toDF("sid", "slon", "slat")
+    // probe 1 resolves at home (site 1 at 0.2 < 9.8 to the split); probe
+    // 2's home best is site 2 at 8 >= its clearance 1, so it is forwarded
+    // and takes site 3 at 1; probe 3 sits where no site is: its home best
+    // (site 4, 44.3) reaches the other leaf, which has nothing that close
+    val probes = Seq((1L, 0.2, 0.0), (2L, 9.0, 0.0), (3L, 30.0, 40.0)).toDF("pid", "lon", "lat")
+    val df = GridNearestJoin.nearest(probes, sites,
+      GeoExpressions.wkbPoint(col("lon"), col("lat")),
+      GeoExpressions.wkbPoint(col("slon"), col("slat")), tieBreak = Some(col("sid")))
+    val key = "spark.sql.shuffle.partitions" // read when the exec runs
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    val rows = try df.collect() finally spark.conf.set(key, prev)
+    rows.map(r => (r.getAs[Long]("pid"), r.getAs[Long]("sid"))).toSet shouldBe
+      Set((1L, 1L), (2L, 3L), (3L, 4L))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val m = helper.collectFirst(df.queryExecution.executedPlan) {
+      case e: PartitionedSpatialJoinExec => e.metrics.map { case (k, v) => k -> v.value }
+    }.get
+    m("leaves") shouldBe 2
+    m("replicatedRows") shouldBe 1
+    // home searches: probe 1 takes site 1 (1); probe 2 passes over
+    // site 3's uncounted copy to site 2 (2); probe 3 takes site 4 (1).
+    // Forwarded: probe 2 takes site 3 (1); probe 3 finds no row within
+    // its bound (0)
+    m("candidates") shouldBe 5
+    m("forwardedProbes") shouldBe 2
+    m("numOutputRows") shouldBe 3
   }
 }
