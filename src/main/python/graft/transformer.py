@@ -54,9 +54,6 @@ _PARAMS = {
     "numPartitions": ("external dataset repartition count; no repartition "
                       "if empty", "setNumPartitions", ""),
     # grid-strategy extensions (beyond the reference's 12-param surface)
-    "gridCellDeg": ("grid cell size in degrees for broadcast='none' "
-                    "relation predicates (nearest ignores it); empty = "
-                    "density-derived", "setGridCellDeg", ""),
     "gridKnn": ("grid nearest: k for k-nearest — up to k ranked rows per "
                 "input row plus a trailing knn_rank column; empty/1 = "
                 "plain nearest; requires predicate=nearest and "

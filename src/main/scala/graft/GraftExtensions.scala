@@ -20,8 +20,9 @@ import graft.functions._
  * text_simhash(tokens), md5_simhash(tokens), vector_dot(a, b),
  * simhash_buckets(vec, p, t), wkb_from_wkt(wkt), wkb_point(lon, lat),
  * st_distance(l, r), geodesic_meters(l, r), st_relates(l, r,
- * 'within'|...), grid_cells(wkb, cellDeg, expandMeters),
- * ring_cells(cell, lo, hi), and the aggregate bounded_topk_set(expr, k).
+ * 'within'|...), word_grams(text, n), run_digests(text, k),
+ * winnow_digests(text, k, w), md5_lower64(s), z_value(buckets, bits),
+ * and the aggregate bounded_topk_set(expr, k).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -34,12 +35,6 @@ object GraftExtensions {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(
       s"$fn expects a literal int argument, got $other")
-  }
-  private def doubleArg(e: Expression, fn: String): Double = e match {
-    case Literal(v, t) if t.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
-      v.toString.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal numeric argument, got $other")
   }
   private def stringArg(e: Expression, fn: String): String = e match {
     case Literal(v: UTF8String, StringType) => v.toString
@@ -72,9 +67,6 @@ object GraftExtensions {
       (es: Seq[Expression]) => GeodesicMeters(es(0), es(1))),
     ("st_relates", "st_relates(l, r, 'within'|'contains'|'intersects'|'overlaps')",
       (es: Seq[Expression]) => StRelates(es(0), es(1), stringArg(es(2), "st_relates"))),
-    ("grid_cells", "grid_cells(wkb, cellDeg, expandMeters) - overlapped grid cell ids",
-      (es: Seq[Expression]) => GridCells(es(0),
-        doubleArg(es(1), "grid_cells"), doubleArg(es(2), "grid_cells"))),
     ("text_simhash", "text_simhash(tokens) - 64-bit document SimHash fingerprint",
       (es: Seq[Expression]) => TextSimhash(es(0))),
     ("vector_dot", "vector_dot(a, b) - sequential-fold dot product of double arrays",
@@ -84,9 +76,6 @@ object GraftExtensions {
         intArg(es(1), "simhash_buckets"), intArg(es(2), "simhash_buckets"))),
     ("md5_simhash", "md5_simhash(tokens) - 64-bit SimHash over md5 token hashes (oracle-replayable)",
       (es: Seq[Expression]) => Md5Simhash(es(0))),
-    ("ring_cells", "ring_cells(cell, lo, hi) - annulus grid cell ids (lo < Chebyshev <= hi)",
-      (es: Seq[Expression]) => RingCells(es(0),
-        intArg(es(1), "ring_cells"), intArg(es(2), "ring_cells"))),
     ("winnow_digests", "winnow_digests(text, k, w) - winnowing fingerprint (pos, digest) structs",
       (es: Seq[Expression]) => WinnowDigests(es(0),
         intArg(es(1), "winnow_digests"), intArg(es(2), "winnow_digests"))),

@@ -1,20 +1,19 @@
 package graft.join
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.DatasetBridge
-import org.apache.spark.sql.types.LongType
 
 import graft.functions.GeoExpressions
-import graft.plans.{PartitionedSpatialJoinExec, PartitionedSpatialJoinPlan, SpatialJoinStrategy}
+import graft.plans.PartitionedSpatialJoinExec
+import graft.spatial.{SpatialJoinMode, SpatialPredicate}
 
 /**
  * Nearest-neighbour join without broadcasting either side — the 100 TB
  * path for `nearest` (the broadcast kernel needs one side in every
  * executor's memory; this needs neither).
  *
- * One lazy Catalyst plan ([[graft.plans.PartitionedSpatialJoinPlan]]):
+ * One lazy Catalyst plan ([[graft.plans.PartitionedSpatialJoinPlan]]),
+ * the operator [[GridSpatialJoin]] builds for the relation predicates:
  * building the DataFrame starts no job. At execution the right side is
  * cut into spatial leaves sampled from its envelopes, both sides shuffle
  * once into them, each leaf indexes its right rows in a flat packed
@@ -50,17 +49,15 @@ object GridNearestJoin {
     * `spark.sparkContext.setCheckpointDir(...)` to be set. */
   val ReliableMaterialize: DataFrame => DataFrame = _.checkpoint(false)
 
-  /** Density-derived grid cell size for the relation predicates'
-    * cell join ([[GridSpatialJoin]]): one cheap (column-pruned,
-    * map-side-combined) agg over the candidate side computes its
-    * envelope-center extent, count, AND mean per-geometry envelope size,
-    * and the cell is sized so a cell holds ~2 rows (TargetRowsPerCell).
-    * The mean geometry extent is a lower bound on the cell: a non-point
-    * right side binned to cells finer than its geometries would explode
-    * each geometry into (extent/cell)² bin rows — the floor keeps the
-    * per-geometry fan-out O(1). Degenerate sides (empty or a single
-    * geometry) get 1 degree; the result is clamped to [0.001, 45]
-    * degrees. Starts one job, described `grid.autoCellDeg`. */
+  /** A density-derived grid cell size over the candidate side: one
+    * cheap (column-pruned, map-side-combined) agg computes its
+    * envelope-center extent, count and mean per-geometry envelope size,
+    * and the cell is sized so a cell holds ~2 rows (TargetRowsPerCell),
+    * floored at the mean geometry extent. Degenerate sides (empty or a
+    * single geometry) get 1 degree; the result is clamped to [0.001, 45]
+    * degrees. Starts one job, described `grid.autoCellDeg`. No library
+    * code calls it: both grid joins cut their leaves at execution.
+    * Harness-only, removed by ROADMAP item 2's benchmark PR. */
   def autoCellDeg(right: DataFrame, rightWkb: Column): Double = {
     val e = GeoExpressions.stEnvelope(rightWkb)
     val cx = (element_at(e, 1) + element_at(e, 3)) / 2.0d
@@ -119,10 +116,10 @@ object GridNearestJoin {
       parseJoinType(joinType))
   }
 
-  private def parseJoinType(joinType: String): Boolean =
+  private def parseJoinType(joinType: String): SpatialJoinMode =
     joinType.trim.toLowerCase match {
-      case "inner" => false
-      case "left" | "left_outer" | "leftouter" => true
+      case "inner" => SpatialJoinMode.Inner
+      case "left" | "left_outer" | "leftouter" => SpatialJoinMode.LeftOuter
       case other => throw new IllegalArgumentException(
         s"joinType must be inner or left, got `$other`")
     }
@@ -134,35 +131,7 @@ object GridNearestJoin {
       rankCol: Option[String],
       tieBreak: Option[Column],
       condition: Option[Column],
-      leftOuter: Boolean): DataFrame = {
-    val dup = left.columns.toSet.intersect(right.columns.toSet)
-    require(dup.isEmpty, s"column names must be disjoint, both sides have: ${dup.mkString(", ")}")
-    // the working columns carry the __g_ prefix and are added with
-    // withColumn — a same-named user column would be silently
-    // overwritten: collide loudly
-    val reservedClash = (left.columns ++ right.columns).filter(_.startsWith("__g_"))
-    require(reservedClash.isEmpty,
-      s"column names ${reservedClash.mkString(", ")} are reserved " +
-        "(__g_ prefix) by the grid nearest join")
-
-    val spark = left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val lw = "__g_lwkb"; val rw = "__g_rwkb"; val tb = "__g_tb"
-    val l = left.withColumn(lw, leftWkb)
-    val r0 = right.withColumn(rw, rightWkb)
-    // default tie-break = WKB bytes (deterministic; pass an explicit
-    // orderable column to control tie order, e.g. a right-side key)
-    val r = r0.withColumn(tb, tieBreak.getOrElse(col(rw).cast("string")))
-    val split = condition.map(c => PairCondition.bind(spark, c, l.schema, r.schema))
-
-    SpatialJoinStrategy.register(spark)
-    val lp = l.queryExecution.analyzed
-    val rp = r.queryExecution.analyzed
-    def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, name: String) =
-      plan.output.find(_.name == name).get
-    val rank = rankCol.map(AttributeReference(_, LongType, nullable = false)())
-    val plan = PartitionedSpatialJoinPlan(lp, rp, attr(lp, lw), attr(rp, rw),
-      attr(rp, tb) +: right.columns.toSeq.map(attr(rp, _)), k, split, leftOuter, rank)
-    DatasetBridge.ofRows(spark, plan)
-      .select((left.columns ++ right.columns).map(col).toIndexedSeq ++ rankCol.map(col): _*)
-  }
+      mode: SpatialJoinMode): DataFrame =
+    GridSpatialJoin.plan(left, right, leftWkb, rightWkb, SpatialPredicate.Nearest, k, rankCol,
+      tieBreak, condition, mode, None)
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, RepartitionOperation, Sort, Window}
 
 /**
- * Mid-scale balance guard shared by the bucket/cell equi-join operators
- * ([[GridSpatialJoin]], [[RangeJoin]]).
+ * Mid-scale balance guard of the bucket equi-join operator
+ * ([[RangeJoin]]).
  *
  * When one join side is small enough that Catalyst will BROADCAST it,
  * the equi-join introduces no exchange, so the whole explode -> join ->
@@ -71,7 +71,7 @@ private[graft] object JoinLayout {
     * sitting on far fewer partitions than the session target gets
     * spread before per-row-expensive pipelines — a single small file
     * otherwise runs the whole downstream chain on one core (the
-    * GridSpatialJoin round-5 lesson, generalized). Costs one plan
+    * lesson of the removed grid cell join, generalized). Costs one plan
     * inspection + an RDD-lineage partition count (no job). */
   private[graft] def spreadIfDegenerate(df: DataFrame): DataFrame = {
     val scanShaped = df.queryExecution.optimizedPlan.collectFirst {

@@ -6,8 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.types.StructType
 
-import scala.util.Try
-
 /**
  * Generalized extra join condition: an arbitrary Spark SQL boolean
  * expression over `left.<col>` / `right.<col>`, where `left` is the
@@ -69,8 +67,8 @@ object PairCondition {
   }
 
   /** Rewrite `left.x` / `right.y` references with the given renamers —
-    * used by the grid path, where the condition becomes a plain Catalyst
-    * filter over the joined row instead of a pair evaluator. */
+    * used by the grid path, which then binds the condition over its two
+    * frames ([[bind]]). */
   def rewriteSides(condition: String, leftRef: String => String,
       rightRef: String => String): String =
     replaceSideRefs(condition)(m =>
@@ -116,31 +114,6 @@ object PairCondition {
       case e: Exception => throw new IllegalArgumentException(
         s"unknown extra condition `$cond`: ${e.getMessage}", e)
     }
-
-  /** The grid kernels' view of [[split]]: the moved parts as by-name
-    * Columns over the two frames (plain, disjoint column names by the
-    * grid kernels' contract). A condition that fails to resolve is not
-    * factored. */
-  def factor(spark: org.apache.spark.sql.SparkSession, cond: Column,
-      leftSchema: StructType, rightSchema: StructType): Factored = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.graft.ColumnBridge
-    // resolved attrs -> by-name columns, keeping the analyzer's casts.
-    // Quoted: UnresolvedAttribute(name) would parse dots as path
-    // separators, so a column named "u.k" could re-resolve to a struct
-    // FIELD u.k
-    def toColumn(e: Expression): Column =
-      ColumnBridge.column(e.transformUp {
-        case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-      })
-    Try(split(spark, cond, leftSchema, rightSchema)._1).fold(_ => Unfactored, s =>
-      Factored(
-        equiKeys = s.equiKeys.map(k => (toColumn(k.left), toColumn(k.right))),
-        leftOnly = s.leftOnly.map(toColumn),
-        rightOnly = s.rightOnly.map(toColumn),
-        fusable = s.fusable))
-  }
 
   /**
    * The one factoring of an extra join condition, shared by both
@@ -201,8 +174,8 @@ object PairCondition {
       (hasL, hasR)
     }
     def movable(e: Expression): Boolean = e.deterministic && neverThrows(e)
-    // both kernels compare key values of one type per key (struct
-    // equality on the grid, boxed equality in the broadcast index)
+    // both kernels compare key values of one type per key (boxed
+    // equality in the index, graft.plans.IndexedCondition)
     def key(a: Expression, b: Expression, nullSafe: Boolean): Option[EquiKey] =
       if (!movable(a) || !movable(b) || a.dataType != b.dataType) None
       else (sides(a), sides(b)) match {
@@ -225,8 +198,8 @@ object PairCondition {
       equiKeys = keyed.flatten,
       leftOnly = lOnly.reduceOption(And),
       rightOnly = rOnly.reduceOption(And),
-      residual = rest.filterNot(e => lOnly.contains(e) || rOnly.contains(e)).reduceOption(And),
-      fusable = cs.forall(movable)), childOutput)
+      residual = rest.filterNot(e => lOnly.contains(e) || rOnly.contains(e)).reduceOption(And)),
+      childOutput)
   }
 
   /** One equality conjunct moved into a join key: `left = right`, or
@@ -243,49 +216,18 @@ object PairCondition {
    *
    * The parts are pure SUPERSET restrictions: a pair passes `condition`
    * exactly when it is key-equal under SQL semantics, passes both side
-   * filters and passes the residual. Composing the keys into one struct
-   * join key (the grid kernels) treats null fields as equal
-   * (struct(null) = struct(null) is TRUE) where SQL `=` never holds on
-   * null, so a caller that joins on the struct must still evaluate the
-   * FULL condition per candidate pair; `<=>` keys match struct
-   * equality exactly.
-   *
-   * @param fusable whether the condition may gate an expensive refine
-   *                as a [[graft.functions.GatedAnd]]: fusing runs it on
-   *                every candidate pair, so every conjunct must be
-   *                movable (deterministic and throw-free)
+   * filters and passes the residual.
    */
   final case class Split(
       condition: Expression,
       equiKeys: Seq[EquiKey],
       leftOnly: Option[Expression],
       rightOnly: Option[Expression],
-      residual: Option[Expression],
-      fusable: Boolean) {
+      residual: Option[Expression]) {
     def map(f: Expression => Expression): Split = Split(f(condition),
       equiKeys.map(k => k.copy(left = f(k.left), right = f(k.right))),
-      leftOnly.map(f), rightOnly.map(f), residual.map(f), fusable)
+      leftOnly.map(f), rightOnly.map(f), residual.map(f))
   }
-
-  /**
-   * The grid kernels' Column view of a [[Split]], built by [[factor]].
-   *
-   * @param equiKeys  (left key, right key) pairs from `leftExpr = rightExpr`
-   *                  and `<=>` conjuncts
-   * @param leftOnly  AND of the left-only conjuncts: pre-filters probes on
-   *                  an INNER join
-   * @param rightOnly AND of the right-only conjuncts (e.g. a literal
-   *                  IN-list): pre-filters the candidate side
-   * @param fusable   see [[Split]]
-   */
-  final case class Factored(
-      equiKeys: Seq[(Column, Column)],
-      leftOnly: Option[Column],
-      rightOnly: Option[Column],
-      fusable: Boolean)
-
-  /** No condition, or one that does not resolve: nothing to factor. */
-  val Unfactored: Factored = Factored(Nil, None, None, fusable = false)
 
   /**
    * Conservative static throw-safety: true only when evaluating `e`

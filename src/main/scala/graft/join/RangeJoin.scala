@@ -4,10 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Range (interval) join — the 1-D sibling of [[GridSpatialJoin]]: every
- * (point row, interval row) pair with `lo <= v <= hi` (inclusive,
- * SQL-BETWEEN semantics), without a cartesian product and without
- * broadcasting either side.
+ * Range (interval) join: every (point row, interval row) pair with
+ * `lo <= v <= hi` (inclusive, SQL-BETWEEN semantics), without a
+ * cartesian product and without broadcasting either side.
  *
  * Algorithm (bucket PBSM):
  *  1. points map to the single fixed-width bucket containing their
@@ -223,9 +222,8 @@ object RangeJoin {
    * cannot be read off any single bucket's left join — it is the
    * absence of a match in EVERY bucket plus the wide channel. The
    * operator therefore tags the left side with a synthetic row id and
-   * `localCheckpoint`s it (ids must be stable across the two uses —
-   * the [[GridSpatialJoin]] left-join discipline), runs the inner
-   * join, and anti-joins the ids: one materialization of the left +
+   * `localCheckpoint`s it (ids must be stable across the two uses),
+   * runs the inner join, and anti-joins the ids: one materialization of the left +
    * one id-keyed anti shuffle is the price of outer semantics on a
    * both-sides-explode join. Left rows with null/inverted bounds are
    * misses by definition (they never enter the inner join).

@@ -90,7 +90,7 @@ object SpatialJoinStrategy extends SparkStrategy {
     case p: PartitionedSpatialJoinPlan =>
       PartitionedSpatialJoinExec(
         planLater(p.left), planLater(p.right),
-        p.leftWkb, p.rightWkb, p.tieOrder, p.k, p.condition, p.leftOuter,
+        p.leftWkb, p.rightWkb, p.predicate, p.tieOrder, p.k, p.condition, p.mode,
         p.rankAttr) :: Nil
     case _ => Nil
   }

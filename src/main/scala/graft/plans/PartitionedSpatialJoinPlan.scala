@@ -9,21 +9,31 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, UnsafeRowSerializer}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{DoubleType, LongType}
-import org.locationtech.jts.geom.Envelope
+import org.locationtech.jts.geom.{Envelope, Geometry}
 
 import graft.join.PairCondition
-import graft.spatial.GeoKit
+import graft.spatial.{GeoKit, SpatialJoinMode, SpatialPredicate}
 
 /**
- * Catalyst-native k-nearest join with neither side broadcast: for each
- * left row, the k right rows nearest to it (JTS `Geometry.distance`)
- * that pass the condition, in (distance, `tieOrder`) order. Output:
- * left.output ++ right.output (++ `rankAttr`, the 1-based rank). A
- * left-outer join keeps a left row without a match (null or empty
- * geometry included) once, with the right side and the rank nulled.
+ * Catalyst-native spatial join with neither side broadcast, for every
+ * predicate (graft.spatial.SpatialPredicate).
  *
- * @param tieOrder  right attributes that order rows at equal distance,
- *                  ascending, nulls first
+ * `nearest`: for each left row, the k right rows nearest to it (JTS
+ * `Geometry.distance`) that pass the condition, in (distance,
+ * `tieOrder`) order, with `rankAttr` the 1-based rank. The relation
+ * predicates and `withindist`: every right row that `left op right`
+ * holds for and that passes the condition, refined as the broadcast
+ * kernel refines it ([[SpatialProbe.matches]]).
+ *
+ * Output by `mode` (graft.spatial.SpatialJoinMode), as the broadcast
+ * plan's: Inner = left.output ++ right.output (++ `rankAttr`); LeftOuter
+ * keeps a left row without a match (null or empty geometry included)
+ * once, with the right side and the rank nulled; Semi/Anti = left.output
+ * only, the rows with (without) a match. Nearest joins inner or left.
+ *
+ * @param tieOrder  nearest only: right attributes that order rows at
+ *                  equal distance, ascending, nulls first
+ * @param k         nearest only: rows per left row
  * @param condition the extra condition's split (graft.join.PairCondition),
  *                  bound over left.output ++ right.output
  */
@@ -32,17 +42,23 @@ case class PartitionedSpatialJoinPlan(
     right: LogicalPlan,
     leftWkb: Attribute,
     rightWkb: Attribute,
+    predicate: SpatialPredicate,
     tieOrder: Seq[Attribute],
     k: Int,
     condition: Option[PairCondition.Split],
-    leftOuter: Boolean,
+    mode: SpatialJoinMode,
     rankAttr: Option[AttributeReference])
   extends BinaryNode {
 
   require(k >= 1, s"k must be >= 1, got $k")
+  require(predicate == SpatialPredicate.Nearest || (k == 1 && rankAttr.isEmpty),
+    "k and the rank column are for nearest only")
+  require(predicate != SpatialPredicate.Nearest ||
+    mode == SpatialJoinMode.Inner || mode == SpatialJoinMode.LeftOuter,
+    s"nearest joins inner or left, got ${mode.name}")
 
   override def output: Seq[Attribute] =
-    PartitionedSpatialJoinPlan.output(left.output, right.output, leftOuter, rankAttr)
+    PartitionedSpatialJoinPlan.output(left.output, right.output, mode, rankAttr)
 
   // the probe consumes whole child rows (the condition is ordinal-bound),
   // so column pruning must not reshape the children
@@ -54,16 +70,19 @@ case class PartitionedSpatialJoinPlan(
 }
 
 object PartitionedSpatialJoinPlan {
-  private[plans] def output(left: Seq[Attribute], right: Seq[Attribute], leftOuter: Boolean,
-      rankAttr: Option[AttributeReference]): Seq[Attribute] =
-    if (leftOuter) left ++ right.map(_.withNullability(true)) ++ rankAttr.map(_.withNullability(true))
-    else left ++ right ++ rankAttr
+  private[plans] def output(left: Seq[Attribute], right: Seq[Attribute], mode: SpatialJoinMode,
+      rankAttr: Option[AttributeReference]): Seq[Attribute] = mode match {
+    case SpatialJoinMode.Semi | SpatialJoinMode.Anti => left
+    case SpatialJoinMode.LeftOuter =>
+      left ++ right.map(_.withNullability(true)) ++ rankAttr.map(_.withNullability(true))
+    case SpatialJoinMode.Inner => left ++ right ++ rankAttr
+  }
 }
 
 /**
  * The physical operator of [[PartitionedSpatialJoinPlan]]: one lazy plan
- * whose work all runs in `doExecute`, as Simba's kNN join (SIGMOD 2016)
- * and REPOSE (ICDE 2021) bound it, partition by partition:
+ * whose work all runs in `doExecute`, partition by partition, as REPOSE
+ * (ICDE 2021) and Simba's kNN join (SIGMOD 2016) bound it:
  *
  *  1. Leaves. One job samples the centres of the right envelopes and
  *     cuts KD leaves from them ([[SpatialLeaves]]): at most
@@ -71,43 +90,55 @@ object PartitionedSpatialJoinPlan {
  *     holding an equal share of the sample, so a dense cluster splits.
  *     The leaves tile the plane, so no result depends on the sample.
  *  2. One shuffle per side: a right row goes to every leaf its envelope
- *     meets, a left row to the leaf of its envelope centre (its home).
- *  3. Per leaf, the right rows sorted by `tieOrder` are indexed in one
- *     [[FlatSpatialIndex]] (equi keys hashed as in the broadcast exec,
- *     [[IndexedCondition]]), so row index order is tie order, and
- *     [[SpatialProbe.nearestK]] gives each probe its first k passing
- *     rows. A probe is resolved when its k-th distance is strictly below
- *     the clearance from its envelope to the leaf's sides: every right
- *     row not counted here lies that far out.
- *  4. Every other probe is forwarded once, to the leaves whose box lies
- *     within its k-th distance (all of them when it has fewer than k
- *     hits), and searched there up to that distance.
- *  5. The final pass re-probes each home leaf and merges each forwarded
- *     probe's hits by (distance, `tieOrder`).
+ *     meets. A left row's home is the leaf of its envelope centre.
+ *  3. Per leaf, the right rows (sorted by `tieOrder` for nearest, so row
+ *     index order is tie order) are indexed in one [[FlatSpatialIndex]],
+ *     equi keys hashed as in the broadcast exec ([[IndexedCondition]]).
+ *
+ * A relation or `withindist` probe goes to every leaf its search box
+ * ([[SpatialProbe.searchBox]]: its envelope, grown by the radius for
+ * `withindist`) meets, and each leaf probes it with
+ * [[SpatialProbe.matches]], the broadcast kernel's refine and condition
+ * order. One job stage for an inner join. For left, semi and anti, the
+ * leaves other than the home send the ids of the probes they matched
+ * to the home leaf, which decides each probe once.
+ *
+ * A nearest probe goes to its home leaf, where [[SpatialProbe.nearestK]]
+ * gives its first k passing rows. It is resolved there when its k-th
+ * distance is strictly below the clearance from its envelope to the
+ * leaf's sides; every other probe is forwarded once, to the leaves whose
+ * box lies within its k-th distance (all of them when it has fewer than
+ * k hits), and searched there up to that distance. The final pass
+ * re-probes each home leaf and merges the forwarded hits by (distance,
+ * `tieOrder`).
  *
  * A right row replicated to several leaves counts once per probe, in its
  * reference leaf: the leaf that owns the point of the row's envelope
- * nearest to the probe's envelope. That point is in the row's envelope,
- * so the row is in that leaf, and it is no farther from the probe than
- * the row is, so a probe that the row could reach searches that leaf.
- * Genuinely identical right rows are distinct rows and count separately.
+ * nearest to the probe's box (its envelope for nearest, its search box
+ * otherwise). Where the two boxes overlap, that is the point (max of the
+ * minX values, max of the minY values). The point is in the row's
+ * envelope, so the row is in that leaf; a nearest probe that the row
+ * could reach searches that leaf, and a relation probe reaches it
+ * because the point is in its search box. Genuinely identical right
+ * rows are distinct rows and count separately.
  */
 case class PartitionedSpatialJoinExec(
     left: SparkPlan,
     right: SparkPlan,
     leftWkb: Attribute,
     rightWkb: Attribute,
+    predicate: SpatialPredicate,
     tieOrder: Seq[Attribute],
     k: Int,
     condition: Option[PairCondition.Split],
-    leftOuter: Boolean,
+    mode: SpatialJoinMode,
     rankAttr: Option[AttributeReference])
   extends BinaryExecNode {
 
   import PartitionedSpatialJoinExec._
 
   override def output: Seq[Attribute] =
-    PartitionedSpatialJoinPlan.output(left.output, right.output, leftOuter, rankAttr)
+    PartitionedSpatialJoinPlan.output(left.output, right.output, mode, rankAttr)
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): PartitionedSpatialJoinExec =
@@ -115,13 +146,19 @@ case class PartitionedSpatialJoinExec(
 
   /** `leaves` is taken on the driver; the rest add up over tasks.
     * `replicatedRows` counts right-row copies beyond each row's first
-    * leaf, `candidates` the (probe, right row) pairs the home and
-    * forwarded searches examined, and `forwardedProbes` the forwarded
-    * (probe, leaf) searches. */
+    * leaf, and `forwardedProbes` the (probe, leaf) searches away from a
+    * probe's home leaf. `candidates` and `refines` are [[SpatialProbe]]'s
+    * counters over a nearest probe's home and forwarded searches, and
+    * over every (probe, leaf) search of a relation join (a left join
+    * searches a probe away from home twice: whether it matches, then
+    * its rows). A candidate is a row that counts in the leaf, so an
+    * inner relation join's candidates and refines equal the broadcast
+    * kernel's. */
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "leaves" -> SQLMetrics.createMetric(sparkContext, "number of leaves"),
     "replicatedRows" -> SQLMetrics.createMetric(sparkContext, "number of replicated right rows"),
     "candidates" -> SQLMetrics.createMetric(sparkContext, "number of candidates"),
+    "refines" -> SQLMetrics.createMetric(sparkContext, "number of refines"),
     "forwardedProbes" -> SQLMetrics.createMetric(sparkContext, "number of forwarded probes"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
@@ -179,7 +216,11 @@ case class PartitionedSpatialJoinExec(
     val rightWidth = right.output.length
     val rightTypes = right.output.map(a => (a.dataType, a.nullable))
     val kk = k
-    val outer = leftOuter
+    val pred = predicate
+    val nearest = pred == SpatialPredicate.Nearest
+    val joinMode = mode
+    // rows without geometry that the output keeps, unmatched
+    val keepsUnmatched = mode == SpatialJoinMode.LeftOuter || mode == SpatialJoinMode.Anti
     val withRank = rankAttr.isDefined
     // a probe record is the left row ++ (probe id, search bound); the
     // condition's right references move past those two fields
@@ -187,11 +228,12 @@ case class PartitionedSpatialJoinExec(
     val split = condition.map(_.map(_.transform {
       case b: BoundReference if b.ordinal >= leftWidth => b.copy(ordinal = b.ordinal + 2)
     }))
-    val ordering = new LazilyGeneratedOrdering(tieOrder.map(a =>
-      SortOrder(BoundReference(ordinal(right.output, a), a.dataType, a.nullable), Ascending)))
+    val ordering = if (tieOrder.isEmpty) None else Some(new LazilyGeneratedOrdering(tieOrder.map(a =>
+      SortOrder(BoundReference(ordinal(right.output, a), a.dataType, a.nullable), Ascending))))
     val outTypes = output.map(a => (a.dataType, a.nullable))
     val replicated = metrics("replicatedRows")
     val candidates = metrics("candidates")
+    val refines = metrics("refines")
     val forwarded = metrics("forwardedProbes")
     val numOutputRows = metrics("numOutputRows")
 
@@ -219,8 +261,10 @@ case class PartitionedSpatialJoinExec(
       }
     }, rightWidth)
 
-    // left rows, stamped with a probe id, to their home leaf; an outer
-    // join's rows without geometry ride along to be emitted unmatched
+    // left rows, stamped with a probe id: a nearest probe to its home
+    // leaf, any other to every leaf its search box meets; rows without
+    // geometry that the output keeps ride to one leaf, to be emitted
+    // unmatched
     val leftByLeaf = shuffled(left.execute().mapPartitionsWithIndex { (p, it) =>
       val rec = UnsafeProjection.create(
         (left.output.indices.map(i => BoundReference(i, left.output(i).dataType, left.output(i).nullable)) :+
@@ -228,19 +272,27 @@ case class PartitionedSpatialJoinExec(
           BoundReference(leftWidth + 1, DoubleType, nullable = false)).toSeq)
       val extra = new GenericInternalRow(2)
       val joined = new JoinedRow
+      val to = scala.collection.mutable.ArrayBuffer[Int]()
+      var copies = 0L
+      TaskContext.get().addTaskCompletionListener[Unit](_ => forwarded += copies)
       var ordinalInPartition = 0L
       it.flatMap { row =>
         val id = (p.toLong << 32) | ordinalInPartition
         ordinalInPartition += 1
         val e = envelopeOf(row, lIdx)
-        val home =
-          if (e != null) cut.leafOf((e.getMinX + e.getMaxX) / 2, (e.getMinY + e.getMaxY) / 2)
-          else if (outer) (id % n).toInt
-          else -1
-        if (home < 0) Iterator.empty
+        to.clear()
+        if (e == null) { if (keepsUnmatched) to += (id % n).toInt }
+        else if (nearest) to += homeOf(cut, e)
+        else {
+          val b = SpatialProbe.searchBox(e, pred)
+          cut.meeting(b.getMinX, b.getMinY, b.getMaxX, b.getMaxY)(to += _)
+          copies += to.length - 1
+        }
+        if (to.isEmpty) Iterator.empty
         else {
           extra.setLong(0, id); extra.setDouble(1, Double.PositiveInfinity)
-          Iterator.single((home, rec(joined(row, extra)): InternalRow))
+          val u = rec(joined(row, extra))
+          to.iterator.map(j => (j, u: InternalRow))
         }
       }
     }, recWidth)
@@ -252,7 +304,72 @@ case class PartitionedSpatialJoinExec(
       Iterator.single((j, it.map(_.copy()).toArray)), preservesPartitioning = true)
     def leafOf(rights: Iterator[(Int, Array[InternalRow])]): Leaf = {
       val (id, rows) = rights.next()
-      new Leaf(id, cut, rows, rIdx, ordering, split, kk, recWidth, rightWidth)
+      val leaf = new Leaf(id, cut, rows, rIdx, ordering, split, kk, recWidth, rightWidth)
+      TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+        candidates += leaf.probe.candidates
+        refines += leaf.probe.refines
+      }
+      leaf
+    }
+    // the output row of a probe record and a right row (null for a
+    // semi/anti row, or a row nulled by an outer join), past the
+    // record's probe id and bound
+    def emitter(): (InternalRow, InternalRow) => InternalRow = {
+      val out = UnsafeProjection.create(outTypes.indices.map { i =>
+        val src = if (i < leftWidth) i else i + 2
+        BoundReference(src, outTypes(i)._1, outTypes(i)._2)
+      })
+      val joined = new JoinedRow
+      (rec, r) => { numOutputRows += 1; out(if (r == null) rec else joined(rec, r)) }
+    }
+
+    if (!nearest) {
+      // the relation predicates: each leaf refines the probes it received;
+      // for left, semi and anti, the other leaves first send the home leaf
+      // the ids of the probes they matched
+      val matchedElsewhere: RDD[InternalRow] =
+        if (joinMode == SpatialJoinMode.Inner || n == 1) null
+        else shuffled(leftByLeaf.zipPartitions(leafRights) { (probes, rights) =>
+          val leaf = leafOf(rights)
+          val idOf = UnsafeProjection.create(Seq(BoundReference(leftWidth, LongType, nullable = false)))
+          probes.flatMap { rec =>
+            val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
+            if (g == null || leaf.isHome(g) || !leaf.related(rec, g, pred).hasNext) Iterator.empty
+            else Iterator.single((homeOf(cut, g.getEnvelopeInternal), idOf(rec): InternalRow))
+          }
+        }, 1)
+
+      def relate(probes: Iterator[InternalRow], rights: Iterator[(Int, Array[InternalRow])],
+          marks: Iterator[InternalRow]): Iterator[InternalRow] = {
+        val leaf = leafOf(rights)
+        val matched = new java.util.HashSet[Long]()
+        marks.foreach(m => matched.add(m.getLong(0)))
+        val emit = emitter()
+        val nullRight = new GenericInternalRow(rightWidth)
+        probes.flatMap { rec =>
+          val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
+          // a record without geometry reached its one leaf only
+          val home = g == null || leaf.isHome(g)
+          def hits = leaf.related(rec, g, pred)
+          def found = matched.contains(rec.getLong(leftWidth)) || hits.hasNext
+          joinMode match {
+            case SpatialJoinMode.Inner => hits.map(i => emit(rec, leaf.rows(i)))
+            case SpatialJoinMode.LeftOuter =>
+              val h = hits
+              if (home && !h.hasNext && !matched.contains(rec.getLong(leftWidth)))
+                Iterator.single(emit(rec, nullRight))
+              else h.map(i => emit(rec, leaf.rows(i)))
+            case SpatialJoinMode.Semi =>
+              if (home && found) Iterator.single(emit(rec, null)) else Iterator.empty
+            case SpatialJoinMode.Anti =>
+              if (home && !found) Iterator.single(emit(rec, null)) else Iterator.empty
+          }
+        }
+      }
+
+      return if (matchedElsewhere == null)
+        leftByLeaf.zipPartitions(leafRights)((probes, rights) => relate(probes, rights, Iterator.empty))
+      else leftByLeaf.zipPartitions(leafRights, matchedElsewhere)(relate)
     }
 
     val hits: RDD[InternalRow] =
@@ -260,7 +377,9 @@ case class PartitionedSpatialJoinExec(
       else {
         // probes not resolved in their home leaf, to every leaf they reach
         val forwards = shuffled(leftByLeaf.zipPartitions(leafRights) { (probes, rights) =>
-          val leaf = leafOf(rights)
+          // uncounted: the final pass repeats this home search and counts it
+          val (id, rows) = rights.next()
+          val leaf = new Leaf(id, cut, rows, rIdx, ordering, split, kk, recWidth, rightWidth)
           probes.flatMap { rec =>
             val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
             val targets = leaf.forwardTargets(rec, g)
@@ -281,13 +400,11 @@ case class PartitionedSpatialJoinExec(
               rightTypes.indices.map(j => BoundReference(2 + j, rightTypes(j)._1, rightTypes(j)._2))).toSeq)
           val head = new GenericInternalRow(2)
           val joined = new JoinedRow
-          TaskContext.get().addTaskCompletionListener[Unit](_ => candidates += leaf.probe.candidates)
           probes.flatMap { rec =>
             forwarded += 1
             val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
             val found = leaf.search(rec, g, rec.getDouble(leftWidth + 1))
-            val e = g.getEnvelopeInternal
-            val home = cut.leafOf((e.getMinX + e.getMaxX) / 2, (e.getMinY + e.getMaxY) / 2)
+            val home = homeOf(cut, g.getEnvelopeInternal)
             val id = rec.getLong(leftWidth)
             (0 until math.max(0, found)).iterator.map { h =>
               head.setLong(0, id); head.setDouble(1, leaf.dists(h))
@@ -300,7 +417,6 @@ case class PartitionedSpatialJoinExec(
     def finish(probes: Iterator[InternalRow], rights: Iterator[(Int, Array[InternalRow])],
         forwardedHits: Iterator[InternalRow]): Iterator[InternalRow] = {
       val leaf = leafOf(rights)
-      TaskContext.get().addTaskCompletionListener[Unit](_ => candidates += leaf.probe.candidates)
       // forwarded hits by probe id, as (distance, right row)
       val more = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Double, InternalRow)]]()
       val rightOf = UnsafeProjection.create(rightTypes.indices.map(j =>
@@ -309,23 +425,16 @@ case class PartitionedSpatialJoinExec(
         more.computeIfAbsent(h.getLong(0), _ => scala.collection.mutable.ArrayBuffer())
           .append((h.getDouble(1), rightOf(h).copy()))
       }
-      val out = UnsafeProjection.create(outTypes.indices.map { i =>
-        val src = if (i < leftWidth) i else i + 2 // past the probe id and bound
-        BoundReference(src, outTypes(i)._1, outTypes(i)._2)
-      })
+      val emitRow = emitter()
       val nullRight = new GenericInternalRow(rightWidth)
       val rank = new GenericInternalRow(1)
-      val joined = new JoinedRow
       val withRankRow = new JoinedRow
-      def emit(rec: InternalRow, r: InternalRow, pos: Int): InternalRow = {
-        numOutputRows += 1
-        val base = joined(rec, r)
-        if (!withRank) out(base)
+      def emit(rec: InternalRow, r: InternalRow, pos: Int): InternalRow =
+        if (!withRank) emitRow(rec, r)
         else {
           if (pos < 0) rank.setNullAt(0) else rank.setLong(0, pos + 1L)
-          out(withRankRow(base, rank))
+          emitRow(rec, withRankRow(r, rank))
         }
-      }
       probes.flatMap { rec =>
         val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
         val found = if (g == null) 0 else math.max(0, leaf.search(rec, g, Double.PositiveInfinity))
@@ -333,10 +442,10 @@ case class PartitionedSpatialJoinExec(
         val ranked: IndexedSeq[InternalRow] =
           if (extra == null) (0 until found).map(h => leaf.rows(leaf.found(h)))
           else ((0 until found).map(h => (leaf.dists(h), leaf.rows(leaf.found(h)))) ++ extra)
-            .sortWith { (a, b) => a._1 < b._1 || (a._1 == b._1 && ordering.lt(a._2, b._2)) }
+            .sortWith { (a, b) => a._1 < b._1 || (a._1 == b._1 && ordering.exists(_.lt(a._2, b._2))) }
             .take(kk).map(_._2)
         if (ranked.isEmpty) {
-          if (outer) Iterator.single(emit(rec, nullRight, -1)) else Iterator.empty
+          if (keepsUnmatched) Iterator.single(emit(rec, nullRight, -1)) else Iterator.empty
         } else ranked.iterator.zipWithIndex.map { case (r, pos) => emit(rec, r, pos) }
       }
     }
@@ -368,6 +477,10 @@ object PartitionedSpatialJoinExec {
       }
     }
 
+  /** The home leaf of a probe with envelope `e`: the leaf of its centre. */
+  private[plans] def homeOf(cut: SpatialLeaves, e: Envelope): Int =
+    cut.leafOf((e.getMinX + e.getMaxX) / 2, (e.getMinY + e.getMaxY) / 2)
+
   /** Run `body` with `desc` as the Spark job description of the jobs it
     * starts, then restore the caller's description. */
   private[graft] def described[T](sc: SparkContext, desc: String)(body: => T): T = {
@@ -386,16 +499,17 @@ object PartitionedSpatialJoinExec {
 }
 
 /**
- * One leaf's right rows, sorted by the tie order and indexed, and the
- * searches a probe record runs against them. A search counts a row only
- * in its reference leaf (see [[PartitionedSpatialJoinExec]]).
+ * One leaf's right rows, indexed (sorted by the tie order first, when
+ * there is one), and the searches a probe record runs against them. A
+ * search counts a row only in its reference leaf (see
+ * [[PartitionedSpatialJoinExec]]).
  */
 private[plans] final class Leaf(
     id: Int, cut: SpatialLeaves, val rows: Array[InternalRow], rIdx: Int,
-    ordering: LazilyGeneratedOrdering, split: Option[PairCondition.Split], k: Int,
+    ordering: Option[LazilyGeneratedOrdering], split: Option[PairCondition.Split], k: Int,
     recWidth: Int, rightWidth: Int) {
 
-  java.util.Arrays.sort(rows, ordering)
+  ordering.foreach(java.util.Arrays.sort(rows, _))
   private val index = FlatSpatialIndex(rows.length, i =>
     if (rows(i).isNullAt(rIdx)) null else rows(i).getBinary(rIdx))
   val probe = new SpatialProbe(index)
@@ -407,31 +521,50 @@ private[plans] final class Leaf(
   /** The distance bound that [[forwardTargets]] gave its probe. */
   var bound: Double = Double.PositiveInfinity
 
-  /** The rows `rec` (geometry `g`) counts here, at most `bound` away,
-    * into [[found]]/[[dists]]; how many, or -1 when no right row in any
-    * leaf can pass the condition with it. */
-  def search(rec: InternalRow, g: org.locationtech.jts.geom.Geometry, bound: Double): Int = {
-    val tree = indexed.tree(rec)
-    if (tree == null) return -1
-    if (g == null) return 0
-    val e = g.getEnvelopeInternal
-    val pMinX = e.getMinX; val pMinY = e.getMinY; val pMaxX = e.getMaxX; val pMaxY = e.getMaxY
+  /** Whether this is the home leaf of a probe with geometry `g`. */
+  def isHome(g: Geometry): Boolean =
+    PartitionedSpatialJoinExec.homeOf(cut, g.getEnvelopeInternal) == id
+
+  /** Whether row i counts here for a probe whose box is (pMinX, pMinY,
+    * pMaxX, pMaxY): this leaf owns the point of the row's box nearest to
+    * the probe's box. */
+  private def counted(pMinX: Double, pMinY: Double, pMaxX: Double, pMaxY: Double): Int => Boolean = {
     val boxes = index.rtree.boxes
-    val cand = indexed.candidate(rec)
-    // the reference leaf of row i: the owner of the point of the row's
-    // box nearest to the probe's box
-    def counted(i: Int): Boolean = {
+    i => {
       val b = index.entry(i) << 2
       val qx = nearestIn(pMinX, pMaxX, boxes(b), boxes(b + 2))
       val qy = nearestIn(pMinY, pMaxY, boxes(b + 1), boxes(b + 3))
       cut.leafOf(qx, qy) == id
     }
-    probe.nearestK(g, i => counted(i) && cand(i), k, bound, found, dists, tree)
+  }
+
+  /** The rows `rec` (geometry `g`, null for none) matches under the
+    * relation or withindist `predicate` and that count here, in
+    * ascending row order, lazily. */
+  def related(rec: InternalRow, g: Geometry, predicate: SpatialPredicate): Iterator[Int] = {
+    val tree = indexed.tree(rec)
+    if (tree == null || g == null) return Iterator.empty
+    val b = SpatialProbe.searchBox(g.getEnvelopeInternal, predicate)
+    probe.matches(g, predicate, indexed.candidate(rec), needDist = false, tree,
+      counted(b.getMinX, b.getMinY, b.getMaxX, b.getMaxY)).map(_._1)
+  }
+
+  /** The rows `rec` (geometry `g`) counts here, at most `bound` away,
+    * into [[found]]/[[dists]]; how many, or -1 when no right row in any
+    * leaf can pass the condition with it. */
+  def search(rec: InternalRow, g: Geometry, bound: Double): Int = {
+    val tree = indexed.tree(rec)
+    if (tree == null) return -1
+    if (g == null) return 0
+    val e = g.getEnvelopeInternal
+    val owned = counted(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
+    val cand = indexed.candidate(rec)
+    probe.nearestK(g, i => owned(i) && cand(i), k, bound, found, dists, tree)
   }
 
   /** The other leaves the probe must search, after its home search here;
     * sets [[bound]] to its k-th distance plus a tolerance. */
-  def forwardTargets(rec: InternalRow, g: org.locationtech.jts.geom.Geometry): Seq[Int] = {
+  def forwardTargets(rec: InternalRow, g: Geometry): Seq[Int] = {
     if (g == null || cut.count == 1) return Nil
     val n = search(rec, g, Double.PositiveInfinity)
     if (n < 0) return Nil

@@ -205,33 +205,28 @@ final class SpatialProbe(index: FlatSpatialIndex) {
     * `tree`'s rows (the whole index by default); `condEval` vetoes
     * candidate indices; distance is 0 when neither the predicate nor
     * `needDist` requires it. Relation and withindist matches come in
-    * ascending row order. */
+    * ascending row order. Only rows that `owned` keeps are candidates:
+    * the partitioned exec counts each row in one leaf only. */
   def matches(g: Geometry, predicate: SpatialPredicate, condEval: Int => Boolean,
-      needDist: Boolean, tree: PackedRTree = index.rtree): Iterator[(Int, Int)] = {
+      needDist: Boolean, tree: PackedRTree = index.rtree,
+      owned: Int => Boolean = SpatialProbe.AlwaysTrue): Iterator[(Int, Int)] = {
     if (g == null || tree.isEmpty) return Iterator.empty
+    val box = SpatialProbe.searchBox(g.getEnvelopeInternal, predicate)
+    def candidatesIn: Array[Int] = {
+      val found = tree.search(box.getMinX, box.getMinY, box.getMaxX, box.getMaxY)
+      if (owned eq SpatialProbe.AlwaysTrue) found else found.filter(owned)
+    }
     predicate match {
       case SpatialPredicate.Nearest =>
-        nearestMatch(g, condEval, tree) match {
+        val cond = if (owned eq SpatialProbe.AlwaysTrue) condEval else (i: Int) => owned(i) && condEval(i)
+        nearestMatch(g, cond, tree) match {
           case -1 => Iterator.empty
           case i => Iterator.single((i, if (needDist) new Metres(g)(i) else 0))
         }
       case wd: SpatialPredicate.WithinDist =>
-        val env = g.getEnvelopeInternal
-        // coarse, strictly over-approximating prefilter: latitude by the
-        // minimum meridian arc (~110574 m/deg); longitude by a*cos(phi) at
-        // the latitude band edge (+2x excursion margin). ~3x tighter than
-        // the reference's flat 1 deg = 35 km, never under-selecting.
-        val latDeg = wd.meters / 110500.0
-        val phiMax = math.min(89.9,
-          math.max(math.abs(env.getMinY), math.abs(env.getMaxY)) + 2 * latDeg)
-        val cosPhi = math.cos(math.toRadians(phiMax))
-        val lonDeg =
-          if (cosPhi <= 1e-6) 360.0
-          else wd.meters / (Geodesic.SemiMajorA * cosPhi * math.Pi / 180.0)
         val limit = wd.meters.toInt
         val metres = new Metres(g)
-        hits(tree.search(env.getMinX - lonDeg, env.getMinY - latDeg,
-          env.getMaxX + lonDeg, env.getMaxY + latDeg), { i =>
+        hits(candidatesIn, { i =>
           if (!condEval(i)) -1
           else {
             refines += 1
@@ -240,9 +235,8 @@ final class SpatialProbe(index: FlatSpatialIndex) {
           }
         })
       case rel =>
-        val env = g.getEnvelopeInternal
         val metres = if (needDist) new Metres(g) else null
-        hits(tree.search(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY), { i =>
+        hits(candidatesIn, { i =>
           refines += 1
           if (rel.relates(g, index.geom(i)) && condEval(i)) (if (needDist) metres(i) else 0)
           else -1
@@ -538,6 +532,29 @@ object SpatialProbe {
   /** The condition of a join without one: the exec passes this function
     * when nothing is left to check per candidate. */
   val AlwaysTrue: Int => Boolean = _ => true
+
+  /** The box a probe with envelope `env` searches under `predicate`:
+    * the envelope itself, or for `withindist` the envelope grown by the
+    * radius. The growth is latitude-aware and strictly over-approximating:
+    * in latitude by the radius over the minimum meridian arc (~110574 m
+    * per degree), in longitude by the radius over a·cos φ, with φ the
+    * band's poleward edge plus twice the latitude growth (the whole
+    * longitude range where cos φ vanishes). So it never drops a pair the
+    * exact geodesic refine would keep. Both kernels search with it, and the partitioned exec routes
+    * a probe to every leaf it meets. */
+  def searchBox(env: Envelope, predicate: SpatialPredicate): Envelope = predicate match {
+    case SpatialPredicate.WithinDist(meters) if meters > 0 =>
+      val latDeg = meters / 110500.0
+      val phiMax = math.min(89.9,
+        math.max(math.abs(env.getMinY), math.abs(env.getMaxY)) + 2 * latDeg)
+      val cosPhi = math.cos(math.toRadians(phiMax))
+      val lonDeg =
+        if (cosPhi <= 1e-6) 360.0
+        else meters / (Geodesic.SemiMajorA * cosPhi * math.Pi / 180.0)
+      new Envelope(env.getMinX - lonDeg, env.getMaxX + lonDeg,
+        env.getMinY - latDeg, env.getMaxY + latDeg)
+    case _ => env
+  }
 
   /** Rows the condition may reject before nearest scans linearly. */
   val ScanAfter = 128

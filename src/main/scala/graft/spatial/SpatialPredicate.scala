@@ -10,16 +10,15 @@ import org.locationtech.jts.geom.{Geometry, Location, Point, Polygon}
  * catch-all fallback, and `withindist` matched before `within` (reference:
  * src/main/scala/me/valik/spatial/SpatialJoin.scala:48-56). The radius of
  * `withindist N` is the number after the first space. Both kernels
- * prefilter `withindist` with a latitude-aware envelope expansion
- * (`SpatialProbe.matches`, `GeoExpressions.expandedBounds`): metres over
- * the minimum meridian arc in latitude, over a·cos φ at the band edge in
- * longitude. It can only over-select, never under-select, before the
- * exact geodesic refine. `WithinDist.degrees` keeps the reference's flat
+ * prefilter `withindist` with one latitude-aware envelope expansion
+ * (`SpatialProbe.searchBox`): metres over the minimum meridian arc in
+ * latitude, over a·cos φ at the band edge in longitude. It can only
+ * over-select, never under-select, before the exact geodesic refine. `WithinDist.degrees` keeps the reference's flat
  * 1° ≈ 35 km conversion (SpatialJoin.scala:63-80); no kernel uses it.
  *
- * `relates` is the one exact refine both kernels call (the broadcast
- * kernel through `SpatialProbe`, the grid kernel and SQL `st_relates`
- * through `GeoExpressions.computeRelates`). `within`/`contains` of one
+ * `relates` is the one exact refine both kernels call (through
+ * `SpatialProbe`), and SQL `st_relates` through
+ * `GeoExpressions.computeRelates`. `within`/`contains` of one
  * point and one polygon skip the DE-9IM relate: the point is labelled
  * by one ray-crossing pass over the shell and holes
  * (`SimplePointInAreaLocator`), the same per-ring rule relate's

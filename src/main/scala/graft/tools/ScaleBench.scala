@@ -285,7 +285,7 @@ object ScaleBench {
       val base = graft.join.GridSpatialJoin.join(
         l, r, wkb("lon", "lat"), GeoExpressions.wkbFromWkt(rectWkt),
         graft.spatial.SpatialPredicate.Intersects,
-        cellDeg = 4.0, extraCondition = if (late) None else Some(band))
+        extraCondition = if (late) None else Some(band))
       if (late) base.where(band) else base
     }
 
@@ -847,8 +847,8 @@ object ScaleBench {
           joinType = "left")
           .where(col("s_suppkey").isNull || col("s_suppkey") >= 0)
           .select("c_custkey", "s_suppkey")),
-      // left-outer grid withindist: inner cell-join plan + the id
-      // snapshot and anti-join the outer contract costs; rows >= |left|
+      // left-outer grid withindist: each probe's home leaf decides its
+      // null row from the ids the other leaves matched; rows >= |left|
       "j2_withindist_left_grid" -> (() => {
         supEq(f).createOrReplaceTempView("scale_j2l_sup")
         new BroadcastSpatialJoin().setDataset("scale_j2l_sup")

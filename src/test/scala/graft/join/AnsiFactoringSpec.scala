@@ -59,30 +59,23 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
     PairCondition.neverThrows(In(i, Seq(Literal(1), Literal(2)))) shouldBe true
   }
 
-  behavior of "PairCondition.factor"
+  behavior of "PairCondition.bind"
 
   it should "factor `%` keys on bigint columns under ANSI" in {
     import org.apache.spark.sql.types._
     spark.conf.get("spark.sql.ansi.enabled") shouldBe "true" // Spark 4 default
     val ls = StructType(Seq(StructField("c_custkey", LongType)))
     val rs = StructType(Seq(StructField("s_suppkey", LongType)))
-    PairCondition.factor(spark, expr("s_suppkey % 4 = c_custkey % 5"), ls, rs)
+    PairCondition.bind(spark, expr("s_suppkey % 4 = c_custkey % 5"), ls, rs)
       .equiKeys.size shouldBe 1
   }
 
   behavior of "grid kernels under ANSI with a throwing key on a never-paired row"
 
-  // NOTE on GridSpatialJoin: the cell kernel applies the full condition
-  // as a `.where` over the cell equi-join, and Catalyst ITSELF extracts
-  // `castExpr = attr` conjuncts into join keys evaluated frame-wide
-  // during shuffle partitioning — plain `l.join(r, cell).where(cond)`
-  // throws under ANSI on a malformed never-paired row EXACTLY like the
-  // factored plan did. PairCondition.factor's ANSI gate keeps the engine's
-  // own factoring from being the one introducing the eager eval, but
-  // observable behavior matches stock Spark either way, so there is no
-  // completion to assert. The grid nearest kernel below is different:
-  // it evaluates the condition per candidate, in distance order, so the
-  // unfactored path genuinely evaluates it on reachable candidates only.
+  // Both grid joins run the partitioned exec, which evaluates the
+  // condition per candidate pair, as the broadcast kernel does: the
+  // unfactored path evaluates it on reachable candidates only, so the
+  // factored path must not reach further.
 
   it should "complete on GridNearestJoin (expanding-ring kernel)" in {
     spark.conf.get("spark.sql.ansi.enabled") shouldBe "true" // Spark 4 default
@@ -103,6 +96,26 @@ class AnsiFactoringSpec extends AnyFlatSpec with Matchers {
       GeoExpressions.wkbPoint(col("lon"), col("lat")),
       GeoExpressions.wkbPoint(col("plon"), col("plat")),
       condition = Some(expr("CAST(pcode AS INT) = code")))
+      .select("id", "poi_id")
+      .collect().map(x => (x.getString(0), x.getString(1))).toSet
+    got shouldBe Set(("a", "p1"), ("b", "p2"))
+  }
+
+  it should "complete on GridSpatialJoin (withindist)" in {
+    spark.conf.get("spark.sql.ansi.enabled") shouldBe "true" // Spark 4 default
+    // the same bad right row, 7000 km from every probe: never a candidate
+    // within 100 km, so the condition never casts its code
+    val l = Seq(("a", 0.1, 0.1, 1), ("b", 0.2, 0.3, 2)).toDF("id", "lon", "lat", "code")
+    val r = Seq(
+      ("p1", 0.15, 0.12, "1"),
+      ("p2", 0.22, 0.28, "2"),
+      ("badp", 50.0, 50.0, "xx")).toDF("poi_id", "plon", "plat", "pcode")
+    val got = GridSpatialJoin.join(
+      l, r,
+      GeoExpressions.wkbPoint(col("lon"), col("lat")),
+      GeoExpressions.wkbPoint(col("plon"), col("plat")),
+      SpatialPredicate.WithinDist(100000),
+      extraCondition = Some(expr("CAST(pcode AS INT) = code")))
       .select("id", "poi_id")
       .collect().map(x => (x.getString(0), x.getString(1))).toSet
     got shouldBe Set(("a", "p1"), ("b", "p2"))

@@ -32,7 +32,8 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     try body finally spark.conf.set(key, prev)
   }
 
-  private def run(predicate: String, mode: String, dist: Boolean = false): Set[String] = {
+  private def run(predicate: String, mode: String, dist: Boolean = false,
+      joinType: String = "inner"): Set[String] = {
     val input = pts(40, "i")
     val data = pts(25, "d").toDF("poi_id", "lon", "lat")
     data.createOrReplaceTempView(s"grid_poi_${predicate.takeWhile(_.isLetter)}_$mode")
@@ -40,27 +41,68 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
       .setDataset(s"grid_poi_${predicate.takeWhile(_.isLetter)}_$mode")
       .setDatasetPoint("lon, lat").setInputPoint("lon, lat")
       .setDataColumns("poi_id").setPredicate(predicate).setBroadcast(mode)
+      .setJoinType(joinType)
     val out = if (dist) t.setDistColAlias("dm") else t
     out.transform(input)
       .collect().map(r => r.mkString("|")).toSet
   }
 
+  /** Each join type and a grid join cut into one and into seven leaves
+    * (the leaf count follows the shuffle width, read at execution):
+    * `check(joinType, leaves)` compares the two kernels. */
+  private def joinTypesAndLeaves(check: (String, Int) => Unit): Unit =
+    for (jt <- Seq("inner", "left", "semi", "anti"); leaves <- Seq(1, 7))
+      withClue(s"joinType=$jt leaves=$leaves: ") { check(jt, leaves) }
+
+  private def existence(joinType: String) = joinType == "semi" || joinType == "anti"
+
   it should "match the broadcast kernel on withindist (+ distance column)" in {
     run("withindist 80000", "none", dist = true) shouldBe
       run("withindist 80000", "dataset", dist = true)
+    joinTypesAndLeaves { (jt, leaves) =>
+      val dist = !existence(jt)
+      withLeaves(leaves)(run("withindist 80000", "none", dist, jt)) shouldBe
+        run("withindist 80000", "dataset", dist, jt)
+    }
+  }
+
+  it should "match the broadcast kernel on withindist near the pole and the antimeridian" in {
+    // latitude 89: the search box spans every longitude; longitude
+    // +-179.9: probes and sites on both sides of the antimeridian. Both
+    // kernels search in plain longitude, so a pair across +-180 matches
+    // in neither: this pins that the two kernels agree, not that such a
+    // pair matches
+    val rnd = new scala.util.Random(23)
+    def near(n: Int, p: String) = (0 until n).map { i =>
+      val (lon, lat) =
+        if (i % 2 == 0) (rnd.nextDouble() * 360 - 180, 88.5 + rnd.nextDouble() * 1.2)
+        else (if (i % 4 == 1) 179.9 else -179.9) + rnd.nextDouble() * 0.08 - 0.04 ->
+          (rnd.nextDouble() * 2 - 1)
+      (s"$p$i", lon, lat)
+    }
+    val input = near(60, "i").toDF("id", "lon", "lat")
+    near(40, "d").toDF("poi_id", "lon", "lat").createOrReplaceTempView("grid_poi_edges")
+    def go(mode: String, jt: String) = {
+      val t = new BroadcastSpatialJoin().setDataset("grid_poi_edges")
+        .setDatasetPoint("lon, lat").setInputPoint("lon, lat")
+        .setDataColumns("poi_id").setPredicate("withindist 80000").setBroadcast(mode)
+        .setJoinType(jt)
+      (if (existence(jt)) t else t.setDistColAlias("dm"))
+        .transform(input).collect().map(_.mkString("|")).toSet
+    }
+    go("dataset", "inner") should not be empty
+    joinTypesAndLeaves { (jt, leaves) =>
+      withLeaves(leaves)(go("none", jt)) shouldBe go("dataset", jt)
+    }
   }
 
   it should "spread a single-partition side when the other side broadcasts" in {
     // the degenerate mid-scale layout: a 1-partition (single small file)
-    // left against a broadcastable right puts the ENTIRE explode->join->
-    // refine pipeline on one core if the left keeps the scan layout (no
-    // join-owned exchange exists in the broadcast regime). The guard
-    // must repartition the scan-shaped left; measured 57 s -> 3 s on a
-    // 42M-pair probe. Constructed with a 1-slice range, not coalesce(1):
-    // Catalyst's Repartition(shuffle = false) IS a RepartitionOperation,
-    // so a user coalesce reads as an explicit layout choice that the
-    // guard deliberately leaves alone (see JoinLayout's scaladoc) — only
-    // a genuine scan layout may be spread.
+    // left against a small right side. Kept on one task, the whole
+    // probe -> refine pipeline would run on one core; the partitioned
+    // exec shuffles the left rows to the right side's leaves, so the
+    // join runs as wide as the leaves. Constructed with a 1-slice range,
+    // a genuine scan layout.
     import org.apache.spark.sql.functions._
     import graft.functions.GeoExpressions
     import graft.spatial.SpatialPredicate
@@ -73,7 +115,7 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
       left, right,
       GeoExpressions.wkbPoint(col("llon"), col("llat")),
       GeoExpressions.wkbPoint(col("rlon"), col("rlat")),
-      SpatialPredicate.WithinDist(40000), cellDeg = 1.0)
+      SpatialPredicate.WithinDist(40000))
     out.count() should be > 0L
     // the executed probe side must run wider than the 1-partition scan
     out.rdd.getNumPartitions should be > 1
@@ -83,13 +125,17 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     val input = pts(40, "i")
     val data = pts(25, "d").toDF("poi_id", "lon", "lat")
     data.createOrReplaceTempView("grid_poi_cond")
-    def go(mode: String) = new BroadcastSpatialJoin()
+    def go(mode: String, jt: String = "inner") = new BroadcastSpatialJoin()
       .setDataset("grid_poi_cond")
       .setDatasetPoint("lon, lat").setInputPoint("lon, lat")
       .setDataColumns("poi_id").setPredicate("withindist 120000")
       .setJoinCondition("right.poi_id != left.id").setBroadcast(mode)
+      .setJoinType(jt)
       .transform(input).collect().map(_.mkString("|")).toSet
     go("none") shouldBe go("dataset")
+    joinTypesAndLeaves { (jt, leaves) =>
+      withLeaves(leaves)(go("none", jt)) shouldBe go("dataset", jt)
+    }
   }
 
   it should "match the broadcast kernel on polygon predicates" in {
@@ -98,15 +144,21 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     val data = pts(25, "d").toDF("poi_id", "lon", "lat").selectExpr("poi_id",
       "concat('POLYGON((', lon-0.4, ' ', lat-0.3, ',', lon+0.4, ' ', lat-0.3, ',', lon, ' ', lat+0.4, ',', lon-0.4, ' ', lat-0.3, '))') as wkt")
     data.createOrReplaceTempView("grid_poi_poly")
-    def go(mode: String, pred: String) = new BroadcastSpatialJoin()
+    def go(mode: String, pred: String, jt: String = "inner") = new BroadcastSpatialJoin()
       .setDataset("grid_poi_poly")
       .setDatasetWKT("wkt").setInputPoint("lon, lat")
       .setDataColumns("poi_id").setPredicate(pred).setBroadcast(mode)
+      .setJoinType(jt)
       .transform(input).collect().map(_.mkString("|")).toSet
     // point within polygon (iterated = input under broadcast=dataset)
     go("none", "within") shouldBe go("dataset", "within")
     go("none", "within").nonEmpty shouldBe true
     go("none", "intersects") shouldBe go("dataset", "intersects")
+    for (pred <- Seq("within", "intersects")) withClue(s"$pred: ") {
+      joinTypesAndLeaves { (jt, leaves) =>
+        withLeaves(leaves)(go("none", pred, jt)) shouldBe go("dataset", pred, jt)
+      }
+    }
   }
 
   it should "match the broadcast kernel on nearest (expanding-ring grid search)" in {
@@ -430,65 +482,46 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     }
   }
 
-  it should "split a pathologically hot cell via AQE skew-join" in {
-    // the one untested scale scenario of the cell equi-join: EVERY right
-    // row in one grid cell (a mega-city candidate table) joined by many
-    // left rows in the same cell — one join key owns the whole shuffle.
-    // At 100 TB neither side broadcasts, so pin that with broadcast off,
-    // AQE's OptimizeSkewedJoin splits the hot key's partition into
-    // mapper-range chunks (replicating the other side) instead of
-    // running one giant task, and the results stay exact.
+  it should "spread a hot spot over more than one leaf and equal brute force" in {
+    // EVERY right row inside one 1-degree square (a mega-city candidate
+    // table) joined by many left rows in the same square. The leaves are
+    // cut from the right rows' own sample, so the hot spot splits: the
+    // work spreads over more than one leaf and task, and the results
+    // stay exact
     import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import graft.functions.GeoExpressions
+    import graft.plans.PartitionedSpatialJoinExec
     import graft.spatial.SpatialPredicate
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> conf.getOption(k)).toMap
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      // toy-size the skew thresholds (defaults are 256 MB / 64 MB)
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32k")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
-      // all coordinates inside ONE 1-degree cell; left rows padded so the
-      // hot partition clears the (lowered) byte thresholds
-      val left = (0 until 3000).map { i =>
-        (s"L$i", 0.1 + (i % 50) * 0.015, 0.1 + (i / 50) * 0.012, "x" * 200)
-      }.toDF("lid", "llon", "llat", "pad")
-      val right = (0 until 120).map { i =>
-        (s"R$i", 0.15 + (i % 12) * 0.06, 0.15 + (i / 12) * 0.07)
-      }.toDF("rid", "rlon", "rlat")
-      val out = GridSpatialJoin.join(
-        left, right,
+    val left = (0 until 3000).map { i =>
+      (s"L$i", 0.1 + (i % 50) * 0.015, 0.1 + (i / 50) * 0.012, "x" * 200)
+    }.toDF("lid", "llon", "llat", "pad")
+    val right = (0 until 120).map { i =>
+      (s"R$i", 0.15 + (i % 12) * 0.06, 0.15 + (i / 12) * 0.07)
+    }.toDF("rid", "rlon", "rlat")
+    val out = GridSpatialJoin.join(
+      left, right,
+      GeoExpressions.wkbPoint(col("llon"), col("llat")),
+      GeoExpressions.wkbPoint(col("rlon"), col("rlat")),
+      SpatialPredicate.WithinDist(30000))
+      .select("lid", "rid")
+    val rows = out.collect()
+    // exactness first: equals the brute-force refine
+    val brute = left.crossJoin(right)
+      .where(GeoExpressions.geodesicMeters(
         GeoExpressions.wkbPoint(col("llon"), col("llat")),
-        GeoExpressions.wkbPoint(col("rlon"), col("rlat")),
-        SpatialPredicate.WithinDist(30000), cellDeg = 1.0)
-        .select("lid", "rid")
-      val rows = out.collect()
-      // exactness first: equals the brute-force refine
-      val brute = left.crossJoin(right)
-        .where(GeoExpressions.geodesicMeters(
-          GeoExpressions.wkbPoint(col("llon"), col("llat")),
-          GeoExpressions.wkbPoint(col("rlon"), col("rlat"))) <= 30000)
-        .select("lid", "rid").collect()
-      rows.map(r => (r.getString(0), r.getString(1))).toSet shouldBe
-        brute.map(r => (r.getString(0), r.getString(1))).toSet
-      rows.length should be > 0
-      // and the executed plan must show the skew split engaged
-      val plan = out.queryExecution.executedPlan.toString
-      withClue(plan.linesIterator.filter(_.contains("Join")).mkString("\n")) {
-        plan should include("skew=true")
-      }
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
+        GeoExpressions.wkbPoint(col("rlon"), col("rlat"))) <= 30000)
+      .select("lid", "rid").collect()
+    rows.map(r => (r.getString(0), r.getString(1))).toSet shouldBe
+      brute.map(r => (r.getString(0), r.getString(1))).toSet
+    rows.length shouldBe brute.length
+    rows.length should be > 0
+    // and the work spread: more than one leaf, output from more than one task
+    val leaves = new AdaptiveSparkPlanHelper {}.collectFirst(out.queryExecution.executedPlan) {
+      case e: PartitionedSpatialJoinExec => e.metrics("leaves").value
+    }.get
+    leaves should be > 1L
+    out.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ > 0) should be > 1
   }
 
   it should "fall back to an exhaustive pass for isolated points" in {
@@ -503,32 +536,5 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
       .transform(input)
     out.select("id", "poi_id").collect().map(r => (r.getString(0), r.getString(1))).toSet shouldBe
       Set(("i0", "far"), ("i1", "far"))
-  }
-
-  it should "reject a zero, negative or non-finite cellDeg in both grid kernels" in {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.GeoExpressions
-    import graft.spatial.SpatialPredicate
-    // such a cell clamps every row into one boundary cell, which would
-    // silently turn the grid into an exhaustive pass
-    val l = pts(4, "i")
-    val r = pts(3, "d").toDF("poi_id", "plon", "plat")
-    val lw = GeoExpressions.wkbPoint(col("lon"), col("lat"))
-    val rw = GeoExpressions.wkbPoint(col("plon"), col("plat"))
-    for (bad <- Seq(0.0, -1.0, Double.NaN, Double.PositiveInfinity)) withClue(s"cellDeg=$bad: ") {
-      an[IllegalArgumentException] should be thrownBy
-        GridSpatialJoin.join(l, r, lw, rw, SpatialPredicate.Intersects, cellDeg = bad)
-    }
-    // the transformer rejects a bad gridCellDeg on both grid paths, also
-    // for nearest, which cuts its own leaves and ignores the cell size
-    r.createOrReplaceTempView("grid_poi_badcell")
-    for (pred <- Seq("nearest", "intersects"); bad <- Seq("0", "-1", "NaN", "Infinity"))
-      withClue(s"$pred gridCellDeg=$bad: ") {
-        an[IllegalArgumentException] should be thrownBy
-          new BroadcastSpatialJoin().setDataset("grid_poi_badcell")
-            .setDatasetPoint("plon, plat").setInputPoint("lon, lat")
-            .setDataColumns("poi_id").setBroadcast("none").setPredicate(pred)
-            .setGridCellDeg(bad).transform(l)
-      }
   }
 }

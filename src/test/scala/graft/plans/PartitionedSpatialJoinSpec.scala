@@ -15,10 +15,10 @@ import graft.functions.GeoExpressions
 import graft.join.GridNearestJoin
 import graft.transformer.BroadcastSpatialJoin
 
-/** The partitioned nearest exec behind `broadcast = none`: when it starts
-  * jobs and how they are described, and results on inputs that stress the
-  * leaves (one coordinate for every site, geometries across leaf boxes,
-  * an empty right side, a right-only conjunct). */
+/** The partitioned exec behind `broadcast = none`: when it starts jobs
+  * and how they are described, and nearest results on inputs that stress
+  * the leaves (one coordinate for every site, geometries across leaf
+  * boxes, an empty right side, a right-only conjunct). */
 class PartitionedSpatialJoinSpec extends AnyFlatSpec with Matchers {
 
   import spark.implicits._
@@ -78,7 +78,19 @@ class PartitionedSpatialJoinSpec extends AnyFlatSpec with Matchers {
         running.head shouldBe "PartitionedSpatialJoinExec: sample right envelopes"
         running.tail should not be empty
         running.tail.distinct shouldBe Seq(caller)
-        // the relation predicates' eager cell-size job is described too
+      } finally sc.setLocalProperty("spark.job.description", null)
+    }
+  }
+
+  it should "describe the harness-only autoCellDeg job and restore the caller's description" in {
+    // no library code sizes grid cells any more; the benchmark harness
+    // still times GridNearestJoin.autoCellDeg, an eager job of its own
+    val sc = spark.sparkContext
+    val sites = (0 until 40).map(i =>
+      (s"s$i", (i * 41 % 300) / 100.0, (i * 29 % 300) / 100.0)).toDF("sid", "plon", "plat")
+    for (caller <- Seq("caller job", null)) withClue(s"caller=$caller: ") {
+      sc.setLocalProperty("spark.job.description", caller)
+      try {
         val (cell, sized) = jobDescriptions(GridNearestJoin.autoCellDeg(sites, rw))
         cell should be > 0.0
         sized.distinct shouldBe Seq("grid.autoCellDeg")
@@ -99,6 +111,28 @@ class PartitionedSpatialJoinSpec extends AnyFlatSpec with Matchers {
       val (out, jobs) = jobDescriptions(t.transform(input))
       jobs shouldBe empty
       out.count() shouldBe (if (knn.isEmpty) 30 else 90)
+    }
+  }
+
+  it should "start no job inside transform() for broadcast = none relation predicates, every join type" in {
+    val input = (0 until 30).map(i => (s"i$i", i * 0.1, i * 0.07)).toDF("id", "lon", "lat")
+    val sites = (0 until 12).map(i => (s"d$i", i * 0.3, i * 0.2)).toDF("poi_id", "lon", "lat")
+    sites.createOrReplaceTempView("partitioned_no_job_sites")
+    sites.selectExpr("poi_id",
+      "concat('POLYGON((', lon-0.4, ' ', lat-0.3, ',', lon+0.4, ' ', lat-0.3, ',', lon, ' ', lat+0.4, ',', lon-0.4, ' ', lat-0.3, '))') as wkt")
+      .createOrReplaceTempView("partitioned_no_job_zones")
+    for (pred <- Seq("within", "intersects", "withindist 80000");
+         jt <- Seq("inner", "left", "semi", "anti")) withClue(s"$pred joinType=$jt: ") {
+      val t = new BroadcastSpatialJoin().setInputPoint("lon, lat")
+        .setDataColumns("poi_id").setPredicate(pred).setBroadcast("none").setJoinType(jt)
+      val onSites =
+        if (pred.startsWith("withindist")) t.setDataset("partitioned_no_job_sites").setDatasetPoint("lon, lat")
+        else t.setDataset("partitioned_no_job_zones").setDatasetWKT("wkt")
+      val (out, jobs) = jobDescriptions(onSites.transform(input))
+      jobs shouldBe empty
+      val rows = out.count()
+      if (jt == "left") rows should be >= 30L
+      else if (jt != "inner") rows should be <= 30L
     }
   }
 

@@ -300,7 +300,7 @@ class BroadcastSpatialJoinSpec extends AnyFlatSpec with Matchers {
       "distanceColumnAlias", "datasetWKT", "datasetPoint", "inputWKT", "inputPoint",
       "numPartitions",
       // extensions
-      "gridCellDeg", "gridKnn", "joinType")
+      "gridKnn", "joinType")
   }
 
   it should "reject invalid parameter combinations" in {

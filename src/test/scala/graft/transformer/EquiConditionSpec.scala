@@ -137,10 +137,10 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "factor identically on the partitioned GRID strategy (nearest + knn + withindist)" in {
-    // the grid kernel composes the keys into its cell join + turns the
-    // exhaustive fallback into a hash join (GridNearestJoin run's
-    // __g_ekey); the flat-formulation twin cannot factor — row sets
-    // must match across both strategies and every predicate
+    // each grid leaf hashes the keys into per-key sub-trees, as the
+    // broadcast index does (graft.plans.IndexedCondition); the
+    // flat-formulation twin cannot factor — row sets must match across
+    // both strategies and every predicate
     pois.createOrReplaceTempView("eq_poi_g")
     def run(mode: String, pred: String, cond: String, jt: String = "inner",
         knn: Int = 0): Seq[String] = {
@@ -158,7 +158,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
       g shouldBe run("none", pred, flat, jt)          // grid == unfactorable grid
       g shouldBe run("dataset", pred, factorable, jt) // grid == broadcast kernel
     }
-    // kNN through the same ring machinery
+    // kNN through the same operator
     run("none", "nearest", factorable, knn = 2) shouldBe
       run("none", "nearest", flat, knn = 2)
   }
@@ -270,7 +270,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     // only deterministic, throw-free conjuncts move, whatever the ANSI
     // setting (graft.join.AnsiFactoringSpec)
     def keys(c: org.apache.spark.sql.Column) =
-      graft.join.PairCondition.factor(spark, c, ls, rs).equiKeys
+      graft.join.PairCondition.bind(spark, c, ls, rs).equiKeys
     keys(col("b") % 4 === col("a") % 5).size shouldBe 1
     keys(col("a") === col("b") && col("b") % 2 === col("a") % 2).size shouldBe 2
     // residual-only / straddling / non-equi conjuncts extract nothing
@@ -287,7 +287,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     // single-sided extraction: left-only and right-only conjuncts split
     // out; straddling/constant/nondeterministic ones never move
     def sideOnly(c: org.apache.spark.sql.Column) = {
-      val f = graft.join.PairCondition.factor(spark, c, ls, rs)
+      val f = graft.join.PairCondition.bind(spark, c, ls, rs)
       (f.leftOnly, f.rightOnly)
     }
     val (lo1, ro1) = sideOnly(col("a").isin(1, 2) && col("b") > 3 && col("a") === col("b"))

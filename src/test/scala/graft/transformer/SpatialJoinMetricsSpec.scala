@@ -111,4 +111,56 @@ class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
     m("forwardedProbes") shouldBe 2
     m("numOutputRows") shouldBe 3
   }
+
+  it should "count leaves, replicated rows, candidates, refines and output rows of a within join" in {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.GeoExpressions
+    import graft.join.GridSpatialJoin
+    import graft.spatial.SpatialPredicate
+    // two leaves (shuffle width 2): the zones' x centres 1, 5, 11, 19
+    // cut at x = 11. Zone 3 spans x 9..13, so it goes to both leaves (1
+    // replicated row); zone 4 is a triangle
+    val zones = Seq(
+      1L -> "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))",
+      2L -> "POLYGON ((4 0, 6 0, 6 2, 4 2, 4 0))",
+      3L -> "POLYGON ((9 0, 13 0, 13 2, 9 2, 9 0))",
+      4L -> "POLYGON ((18 0, 20 0, 18 2, 18 0))").toDF("zid", "wkt")
+    // probe 1 is in zone 1 and probe 2 in zone 3, both in leaf x < 11;
+    // probe 3 is in zone 3 in leaf x >= 11; probe 4 sits on the split
+    // line inside zone 3, so it is searched in both leaves, and zone 3
+    // counts in x >= 11 only (1 forwarded probe); probe 5 meets no box;
+    // probe 6 is in zone 4's box but not in the triangle
+    val points = Seq((1L, 1.0, 1.0), (2L, 10.0, 1.0), (3L, 12.0, 1.0), (4L, 11.0, 1.5),
+      (5L, 30.0, 30.0), (6L, 19.8, 1.8)).toDF("pid", "lon", "lat")
+    val df = GridSpatialJoin.join(points, zones,
+      GeoExpressions.wkbPoint(col("lon"), col("lat")), GeoExpressions.wkbFromWkt(col("wkt")),
+      SpatialPredicate.Within)
+    val key = "spark.sql.shuffle.partitions" // read when the exec runs
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    val rows = try df.collect() finally spark.conf.set(key, prev)
+    rows.map(r => (r.getAs[Long]("pid"), r.getAs[Long]("zid"))).toSet shouldBe
+      Set((1L, 1L), (2L, 3L), (3L, 3L), (4L, 3L))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val m = helper.collectFirst(df.queryExecution.executedPlan) {
+      case e: PartitionedSpatialJoinExec => e.metrics.map { case (k, v) => k -> v.value }
+    }.get
+    m("leaves") shouldBe 2
+    m("replicatedRows") shouldBe 1
+    m("forwardedProbes") shouldBe 1
+    // one candidate each for probes 1, 2, 3, 6 and for probe 4 in
+    // x >= 11 (its x < 11 copy of zone 3 is not counted there); every
+    // candidate is refined
+    m("candidates") shouldBe 5
+    m("refines") shouldBe 5
+    m("numOutputRows") shouldBe 4
+    // the broadcast kernel examines the same pairs
+    zones.createOrReplaceTempView("metrics_leaf_zones")
+    val b = metricsOf(new BroadcastSpatialJoin()
+      .setDataset("metrics_leaf_zones").setDatasetPoint("").setDatasetWKT("wkt")
+      .setInputPoint("lon, lat").setDataColumns("zid")
+      .setBroadcast("dataset").setPredicate("within")
+      .transform(points))
+    (b("candidates"), b("refines"), b("numOutputRows")) shouldBe (5L, 5L, 4L)
+  }
 }
