@@ -12,9 +12,10 @@ import graft.spatial.{SpatialJoinMode, SpatialPredicate}
  * path for `nearest` (the broadcast kernel needs one side in every
  * executor's memory; this needs neither).
  *
- * One lazy Catalyst plan ([[graft.plans.PartitionedSpatialJoinPlan]]),
- * the operator [[GridSpatialJoin]] builds for the relation predicates:
- * building the DataFrame starts no job. At execution the right side is
+ * One lazy Catalyst plan on the partitioned kernel of
+ * [[graft.plans.SpatialJoinPlan]], built as every spatial join is
+ * ([[graft.plans.SpatialJoinPlan.build]]), as [[GridSpatialJoin]] builds
+ * the relation predicates: building the DataFrame starts no job. At execution the right side is
  * cut into spatial leaves sampled from its envelopes, both sides shuffle
  * once into them, each leaf indexes its right rows in a flat packed
  * R-tree, and a probe that its own leaf cannot settle is searched once
@@ -25,7 +26,7 @@ import graft.spatial.{SpatialJoinMode, SpatialPredicate}
  * Distance is the JTS coordinate-space (degree) distance — the ordering
  * of the broadcast kernel. Among right rows at equal distance, the one
  * with the smaller (tieBreak, right columns) wins (default tie-break:
- * the right WKB bytes), so right-side columns must be orderable types
+ * the right WKB bytes, unsigned), so right-side columns must be orderable types
  * (no map columns); rows equal on all of it are identical in the output,
  * and genuinely duplicated right rows still give distinct output rows.
  *
@@ -41,13 +42,6 @@ object GridNearestJoin {
 
   /** Rows per cell that [[autoCellDeg]] sizes the grid for. */
   private val TargetRowsPerCell = 2.0
-
-  /** Session-local materializer: fast, but blocks die with executors. */
-  val LocalMaterialize: DataFrame => DataFrame = _.localCheckpoint(false)
-
-  /** Cluster-reliable materializer — survives executor loss; requires
-    * `spark.sparkContext.setCheckpointDir(...)` to be set. */
-  val ReliableMaterialize: DataFrame => DataFrame = _.checkpoint(false)
 
   /** A density-derived grid cell size over the candidate side: one
     * cheap (column-pruned, map-side-combined) agg computes its
@@ -91,7 +85,8 @@ object GridNearestJoin {
       tieBreak: Option[Column] = None,
       condition: Option[Column] = None,
       joinType: String = "inner"): DataFrame =
-    run(left, right, leftWkb, rightWkb, 1, None, tieBreak, condition, parseJoinType(joinType))
+    GridSpatialJoin.plan(left, right, leftWkb, rightWkb, SpatialPredicate.Nearest, 1, None,
+      tieBreak, condition, parseJoinType(joinType), None)
 
   /** Bounded k-nearest-neighbour join (k >= 1): up to k output rows per
     * left row, ordered by (distance, tieBreak, right columns), with a
@@ -112,8 +107,8 @@ object GridNearestJoin {
     require(k >= 1, s"k must be >= 1, got $k")
     require(!(left.columns ++ right.columns).contains(rankCol),
       s"rank column `$rankCol` collides with an input column")
-    run(left, right, leftWkb, rightWkb, k, Some(rankCol), tieBreak, condition,
-      parseJoinType(joinType))
+    GridSpatialJoin.plan(left, right, leftWkb, rightWkb, SpatialPredicate.Nearest, k, Some(rankCol),
+      tieBreak, condition, parseJoinType(joinType), None)
   }
 
   private def parseJoinType(joinType: String): SpatialJoinMode =
@@ -123,15 +118,4 @@ object GridNearestJoin {
       case other => throw new IllegalArgumentException(
         s"joinType must be inner or left, got `$other`")
     }
-
-  private def run(
-      left: DataFrame, right: DataFrame,
-      leftWkb: Column, rightWkb: Column,
-      k: Int,
-      rankCol: Option[String],
-      tieBreak: Option[Column],
-      condition: Option[Column],
-      mode: SpatialJoinMode): DataFrame =
-    GridSpatialJoin.plan(left, right, leftWkb, rightWkb, SpatialPredicate.Nearest, k, rankCol,
-      tieBreak, condition, mode, None)
 }

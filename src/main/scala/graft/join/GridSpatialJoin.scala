@@ -1,14 +1,9 @@
 package graft.join
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.DatasetBridge
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.GeoExpressions
-import graft.plans.{PartitionedSpatialJoinPlan, SpatialJoinStrategy}
+import graft.plans.SpatialJoinPlan
 import graft.spatial.{SpatialJoinMode, SpatialPredicate}
 
 /**
@@ -16,9 +11,10 @@ import graft.spatial.{SpatialJoinMode, SpatialPredicate}
  * 100 TB path (the broadcast kernel needs one side in every executor's
  * memory; this needs neither).
  *
- * One lazy Catalyst plan ([[graft.plans.PartitionedSpatialJoinPlan]]),
- * the operator [[GridNearestJoin]] builds for nearest: building the
- * DataFrame starts no job. At execution the right side is cut into
+ * One lazy Catalyst plan on the partitioned kernel of
+ * [[graft.plans.SpatialJoinPlan]], built as every spatial join is
+ * ([[graft.plans.SpatialJoinPlan.build]]), as [[GridNearestJoin]] builds
+ * nearest: building the DataFrame starts no job. At execution the right side is cut into
  * spatial leaves sampled from its envelopes; a right row goes to every
  * leaf its envelope meets, a left row to every leaf its search box meets
  * (its envelope, grown by the `withindist` radius), and each leaf
@@ -40,7 +36,8 @@ object GridSpatialJoin {
    * @param extraCondition optional extra join condition over the two sides'
    *                     columns, checked per candidate pair as the
    *                     broadcast kernel checks it
-   * @param distanceCol  if set, append geodesic centroid metres (Int)
+   * @param distanceCol  if set, append geodesic centroid metres (Int),
+   *                     computed by the join where it emits a pair
    * @param joinType     "inner" (default), "left" (keep match-less left
    *                     rows — null geometry included — with right
    *                     columns + distance nulled), "semi" (left rows
@@ -64,10 +61,8 @@ object GridSpatialJoin {
     plan(left, right, leftWkb, rightWkb, predicate, 1, None, None, extraCondition, mode, distanceCol)
   }
 
-  /** The plan both grid entry points build: the two sides with their WKB
-    * (and, for nearest, the tie-break) as working columns, the condition
-    * bound over them, projected back to the callers' columns (+ distance,
-    * + rank). */
+  /** Both grid entry points: the join of `left` and `right` on the
+    * partitioned kernel, as left.* ++ right.* (+ distance, + rank). */
   private[join] def plan(
       left: DataFrame, right: DataFrame,
       leftWkb: Column, rightWkb: Column,
@@ -80,36 +75,9 @@ object GridSpatialJoin {
       distanceCol: Option[String]): DataFrame = {
     val dup = left.columns.toSet.intersect(right.columns.toSet)
     require(dup.isEmpty, s"column names must be disjoint, both sides have: ${dup.mkString(", ")}")
-    // the working columns carry the __g_ prefix and are added with
-    // withColumn — a same-named user column would be silently
-    // overwritten: collide loudly
-    val reservedClash = (left.columns ++ right.columns).filter(_.startsWith("__g_"))
-    require(reservedClash.isEmpty,
-      s"column names ${reservedClash.mkString(", ")} are reserved " +
-        "(__g_ prefix) by the grid spatial joins")
-
-    val spark = left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val lw = "__g_lwkb"; val rw = "__g_rwkb"; val tb = "__g_tb"
-    val nearest = predicate == SpatialPredicate.Nearest
-    val l = left.withColumn(lw, leftWkb)
-    val r0 = right.withColumn(rw, rightWkb)
-    // nearest's default tie-break = WKB bytes (deterministic; pass an
-    // explicit orderable column to control tie order, e.g. a right-side key)
-    val r = if (nearest) r0.withColumn(tb, tieBreak.getOrElse(col(rw).cast("string"))) else r0
-    val split = condition.map(c => PairCondition.bind(spark, c, l.schema, r.schema))
-
-    SpatialJoinStrategy.register(spark)
-    val lp = l.queryExecution.analyzed
-    val rp = r.queryExecution.analyzed
-    def attr(plan: LogicalPlan, name: String) = plan.output.find(_.name == name).get
-    val tieOrder = if (nearest) attr(rp, tb) +: right.columns.toSeq.map(attr(rp, _)) else Nil
-    val rank = rankCol.map(AttributeReference(_, LongType, nullable = false)())
-    val joined = DatasetBridge.ofRows(spark, PartitionedSpatialJoinPlan(lp, rp,
-      attr(lp, lw), attr(rp, rw), predicate, tieOrder, k, split, mode, rank))
-    val existence = mode == SpatialJoinMode.Semi || mode == SpatialJoinMode.Anti
-    val withDist = distanceCol.fold(joined)(name =>
-      joined.withColumn(name, GeoExpressions.geodesicMeters(col(lw), col(rw))))
-    withDist.select((left.columns.toSeq ++ (if (existence) Nil else right.columns.toSeq) ++
-      distanceCol ++ rankCol).map(col): _*)
+    val j = SpatialJoinPlan.build(left, right, leftWkb, rightWkb, predicate,
+      (l, r) => condition.map(PairCondition.bind(left.sparkSession, _, l, r)), mode, distanceCol,
+      partitioned = true, k, rankCol, tieBreak.toSeq)
+    j.df.select((j.left ++ j.right ++ j.distance ++ j.rank).map(ColumnBridge.column): _*)
   }
 }

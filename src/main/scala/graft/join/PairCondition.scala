@@ -66,17 +66,9 @@ object PairCondition {
       refs.collect { case ("right", c) => c }.distinct)
   }
 
-  /** Rewrite `left.x` / `right.y` references with the given renamers —
-    * used by the grid path, which then binds the condition over its two
-    * frames ([[bind]]). */
-  def rewriteSides(condition: String, leftRef: String => String,
-      rightRef: String => String): String =
-    replaceSideRefs(condition)(m =>
-      if (m.group(1).equalsIgnoreCase("left")) leftRef(m.group(2)) else rightRef(m.group(2)))
-
-  /** Compile on the driver for the broadcast kernel: the [[Split]] of the
-    * condition, every part bound over the concatenated (left ++ right)
-    * row. None for an empty condition string. */
+  /** Compile a transformer condition string on the driver: the
+    * [[Split]] of the condition, every part bound over the concatenated
+    * (left ++ right) row. None for an empty condition string. */
   def compile(
       spark: SparkSession,
       condition: String,
@@ -143,7 +135,7 @@ object PairCondition {
     // RuntimeReplaceable nodes (between, ilike, ...) only run through their
     // replacement, and the replacement may use With/CommonExpressionRef
     // (subexpression sharing) — normally optimizer rules substitute both;
-    // the broadcast kernel interprets the expression directly, so inline
+    // the kernels interpret the expression directly, so inline
     // them here
     val condExpr = analyzed.transformDown {
       case r: RuntimeReplaceable => r.replacement

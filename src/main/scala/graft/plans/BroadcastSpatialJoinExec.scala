@@ -2,106 +2,23 @@ package graft.plans
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.execution.{SQLExecution, SparkStrategy}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
 import graft.join.PairCondition
 import graft.spatial.SpatialPredicate
 
 /**
- * Catalyst-native broadcast spatial join: a custom logical node + planner
- * strategy + physical operator, so the transformer's output is ONE plan
- * end-to-end — no RDD drop-out, no `createDataFrame` barrier (the
- * reference's architecture re-enters SQL with an opaque RDD scan, hiding
- * everything from the optimizer; SURVEY §4).
- *
- * Left = iterated side (streamed, partitioning preserved), right =
- * broadcast side (collected once; the driver indexes its geometries in
- * one flat packed R-tree, graft.plans.FlatSpatialIndex, and broadcasts it
- * with the collected rows).
- * Output by `mode` (graft.spatial.SpatialJoinMode): Inner/LeftOuter =
- * left.output ++ right.output (++ distance) — LeftOuter keeps
- * match-less left rows (null geometry included) with the right side +
- * distance nulled under the standard outer nullability widening;
- * Semi/Anti = left.output ONLY (existence filter — no distance).
- * `condition` is the extra condition's split (graft.join.PairCondition),
- * every part pre-bound over the concatenated (left ++ right) row.
+ * The broadcast kernel of [[SpatialJoinPlan]]. Left = iterated side
+ * (streamed, partitioning preserved), right = broadcast side (collected
+ * once; the driver indexes its geometries in one flat packed R-tree,
+ * graft.plans.FlatSpatialIndex, and broadcasts it with the collected
+ * rows). Output as the logical node's; the distance is filled in where a
+ * row is emitted.
  */
-case class BroadcastSpatialJoinPlan(
-    left: LogicalPlan,
-    right: LogicalPlan,
-    leftWkb: Attribute,
-    rightWkb: Attribute,
-    predicate: SpatialPredicate,
-    condition: Option[PairCondition.Split], // bound over left.output ++ right.output
-    distAttr: Option[AttributeReference],
-    mode: graft.spatial.SpatialJoinMode = graft.spatial.SpatialJoinMode.Inner)
-  extends BinaryNode {
-
-  import graft.spatial.SpatialJoinMode._
-  require(!(distAttr.isDefined && (mode == Semi || mode == Anti)),
-    "semi/anti spatial joins emit the left schema only — no distance column")
-
-  override def output: Seq[Attribute] =
-    BroadcastSpatialJoinPlan.output(left.output, right.output, distAttr, mode)
-
-  // the probe consumes whole child rows (the condition is ordinal-bound),
-  // so column pruning must not reshape the children
-  override def references: AttributeSet = AttributeSet(left.output ++ right.output)
-
-  override protected def withNewChildrenInternal(
-      newLeft: LogicalPlan, newRight: LogicalPlan): BroadcastSpatialJoinPlan =
-    copy(left = newLeft, right = newRight)
-}
-
-object BroadcastSpatialJoinPlan {
-
-  /** Output of the logical node and its exec, by join mode (see the
-    * class doc). */
-  private[plans] def output(left: Seq[Attribute], right: Seq[Attribute],
-      distAttr: Option[AttributeReference], mode: graft.spatial.SpatialJoinMode): Seq[Attribute] = {
-    import graft.spatial.SpatialJoinMode._
-    mode match {
-      case Semi | Anti => left
-      case LeftOuter => left ++ right.map(_.withNullability(true)) ++ distAttr.toSeq
-      case Inner => left ++ right ++ distAttr.toSeq
-    }
-  }
-}
-
-/** Sentinel standing in for a null `<=>` key component — one instance
-  * per JVM, so build-side and probe-side nulls hash-match inside each
-  * executor's partitioned index. */
-private[plans] object NullSafeKey
-
-/** Planner strategy, installed via `spark.experimental.extraStrategies`:
-  * the transformer registers it on its session before building a plan. */
-object SpatialJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case p: BroadcastSpatialJoinPlan =>
-      BroadcastSpatialJoinExec(
-        planLater(p.left), planLater(p.right),
-        p.leftWkb, p.rightWkb, p.predicate, p.condition, p.distAttr,
-        p.mode) :: Nil
-    case p: PartitionedSpatialJoinPlan =>
-      PartitionedSpatialJoinExec(
-        planLater(p.left), planLater(p.right),
-        p.leftWkb, p.rightWkb, p.predicate, p.tieOrder, p.k, p.condition, p.mode,
-        p.rankAttr) :: Nil
-    case _ => Nil
-  }
-
-  /** Registers the strategy on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(this)) spark.experimental.extraStrategies = cur :+ this
-  }
-}
-
 case class BroadcastSpatialJoinExec(
     left: SparkPlan,
     right: SparkPlan,
@@ -116,7 +33,7 @@ case class BroadcastSpatialJoinExec(
   import graft.spatial.SpatialJoinMode._
 
   override def output: Seq[Attribute] =
-    BroadcastSpatialJoinPlan.output(left.output, right.output, distAttr, mode)
+    SpatialJoinPlan.output(left.output, right.output, mode, distAttr, None)
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): BroadcastSpatialJoinExec =

@@ -5,6 +5,11 @@ import org.apache.spark.sql.catalyst.expressions.{And, Expression, GenericIntern
 
 import graft.join.PairCondition
 
+/** Sentinel standing in for a null `<=>` key component — one instance
+  * per JVM, so build-side and probe-side nulls hash-match inside each
+  * executor's partitioned index. */
+private[plans] object NullSafeKey
+
 /**
  * One task's view of an extra join condition (graft.join.PairCondition)
  * over one [[FlatSpatialIndex]], shared by both spatial execs.

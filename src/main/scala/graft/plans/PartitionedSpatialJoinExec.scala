@@ -3,86 +3,32 @@ package graft.plans
 import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, BoundReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, UnsafeRowSerializer}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import org.locationtech.jts.geom.{Envelope, Geometry}
 
 import graft.join.PairCondition
 import graft.spatial.{GeoKit, SpatialJoinMode, SpatialPredicate}
 
 /**
- * Catalyst-native spatial join with neither side broadcast, for every
- * predicate (graft.spatial.SpatialPredicate).
+ * The partitioned kernel of [[SpatialJoinPlan]], for every predicate
+ * (graft.spatial.SpatialPredicate), with neither side broadcast.
  *
  * `nearest`: for each left row, the k right rows nearest to it (JTS
  * `Geometry.distance`) that pass the condition, in (distance,
  * `tieOrder`) order, with `rankAttr` the 1-based rank. The relation
  * predicates and `withindist`: every right row that `left op right`
  * holds for and that passes the condition, refined as the broadcast
- * kernel refines it ([[SpatialProbe.matches]]).
+ * kernel refines it ([[SpatialProbe.matches]]). Output as the logical
+ * node's (nearest joins inner or left); the distance is filled in where
+ * a row is emitted.
  *
- * Output by `mode` (graft.spatial.SpatialJoinMode), as the broadcast
- * plan's: Inner = left.output ++ right.output (++ `rankAttr`); LeftOuter
- * keeps a left row without a match (null or empty geometry included)
- * once, with the right side and the rank nulled; Semi/Anti = left.output
- * only, the rows with (without) a match. Nearest joins inner or left.
- *
- * @param tieOrder  nearest only: right attributes that order rows at
- *                  equal distance, ascending, nulls first
- * @param k         nearest only: rows per left row
- * @param condition the extra condition's split (graft.join.PairCondition),
- *                  bound over left.output ++ right.output
- */
-case class PartitionedSpatialJoinPlan(
-    left: LogicalPlan,
-    right: LogicalPlan,
-    leftWkb: Attribute,
-    rightWkb: Attribute,
-    predicate: SpatialPredicate,
-    tieOrder: Seq[Attribute],
-    k: Int,
-    condition: Option[PairCondition.Split],
-    mode: SpatialJoinMode,
-    rankAttr: Option[AttributeReference])
-  extends BinaryNode {
-
-  require(k >= 1, s"k must be >= 1, got $k")
-  require(predicate == SpatialPredicate.Nearest || (k == 1 && rankAttr.isEmpty),
-    "k and the rank column are for nearest only")
-  require(predicate != SpatialPredicate.Nearest ||
-    mode == SpatialJoinMode.Inner || mode == SpatialJoinMode.LeftOuter,
-    s"nearest joins inner or left, got ${mode.name}")
-
-  override def output: Seq[Attribute] =
-    PartitionedSpatialJoinPlan.output(left.output, right.output, mode, rankAttr)
-
-  // the probe consumes whole child rows (the condition is ordinal-bound),
-  // so column pruning must not reshape the children
-  override def references: AttributeSet = AttributeSet(left.output ++ right.output)
-
-  override protected def withNewChildrenInternal(
-      newLeft: LogicalPlan, newRight: LogicalPlan): PartitionedSpatialJoinPlan =
-    copy(left = newLeft, right = newRight)
-}
-
-object PartitionedSpatialJoinPlan {
-  private[plans] def output(left: Seq[Attribute], right: Seq[Attribute], mode: SpatialJoinMode,
-      rankAttr: Option[AttributeReference]): Seq[Attribute] = mode match {
-    case SpatialJoinMode.Semi | SpatialJoinMode.Anti => left
-    case SpatialJoinMode.LeftOuter =>
-      left ++ right.map(_.withNullability(true)) ++ rankAttr.map(_.withNullability(true))
-    case SpatialJoinMode.Inner => left ++ right ++ rankAttr
-  }
-}
-
-/**
- * The physical operator of [[PartitionedSpatialJoinPlan]]: one lazy plan
- * whose work all runs in `doExecute`, partition by partition, as REPOSE
- * (ICDE 2021) and Simba's kNN join (SIGMOD 2016) bound it:
+ * One lazy plan whose work all runs in `doExecute`, partition by
+ * partition, as REPOSE (ICDE 2021) and Simba's kNN join (SIGMOD 2016)
+ * bound it:
  *
  *  1. Leaves. One job samples the centres of the right envelopes and
  *     cuts KD leaves from them ([[SpatialLeaves]]): at most
@@ -132,13 +78,14 @@ case class PartitionedSpatialJoinExec(
     k: Int,
     condition: Option[PairCondition.Split],
     mode: SpatialJoinMode,
+    distAttr: Option[AttributeReference],
     rankAttr: Option[AttributeReference])
   extends BinaryExecNode {
 
   import PartitionedSpatialJoinExec._
 
   override def output: Seq[Attribute] =
-    PartitionedSpatialJoinPlan.output(left.output, right.output, mode, rankAttr)
+    SpatialJoinPlan.output(left.output, right.output, mode, distAttr, rankAttr)
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): PartitionedSpatialJoinExec =
@@ -221,6 +168,7 @@ case class PartitionedSpatialJoinExec(
     val joinMode = mode
     // rows without geometry that the output keeps, unmatched
     val keepsUnmatched = mode == SpatialJoinMode.LeftOuter || mode == SpatialJoinMode.Anti
+    val withDist = distAttr.isDefined
     val withRank = rankAttr.isDefined
     // a probe record is the left row ++ (probe id, search bound); the
     // condition's right references move past those two fields
@@ -311,16 +259,28 @@ case class PartitionedSpatialJoinExec(
       }
       leaf
     }
-    // the output row of a probe record and a right row (null for a
-    // semi/anti row, or a row nulled by an outer join), past the
-    // record's probe id and bound
-    def emitter(): (InternalRow, InternalRow) => InternalRow = {
+    // the output row of a probe record and a right row, past the
+    // record's probe id and bound, with the pair's metres and the row's
+    // 0-based rank; rank NoRight for a row without a right side (an
+    // outer join's unmatched row, or a semi or anti row)
+    def emitter(): (InternalRow, InternalRow, Int, Int) => InternalRow = {
       val out = UnsafeProjection.create(outTypes.indices.map { i =>
         val src = if (i < leftWidth) i else i + 2
         BoundReference(src, outTypes(i)._1, outTypes(i)._2)
       })
       val joined = new JoinedRow
-      (rec, r) => { numOutputRows += 1; out(if (r == null) rec else joined(rec, r)) }
+      val withTail = new JoinedRow
+      val nullRight = new GenericInternalRow(rightWidth)
+      val tail = new GenericInternalRow((if (withDist) 1 else 0) + (if (withRank) 1 else 0))
+      (rec, r, metres, pos) => {
+        numOutputRows += 1
+        if (withDist) { if (pos == NoRight) tail.setNullAt(0) else tail.setInt(0, metres) }
+        if (withRank) {
+          val t = if (withDist) 1 else 0
+          if (pos == NoRight) tail.setNullAt(t) else tail.setLong(t, pos + 1L)
+        }
+        out(joined(rec, withTail(if (pos == NoRight) nullRight else r, tail)))
+      }
     }
 
     if (!nearest) {
@@ -334,7 +294,8 @@ case class PartitionedSpatialJoinExec(
           val idOf = UnsafeProjection.create(Seq(BoundReference(leftWidth, LongType, nullable = false)))
           probes.flatMap { rec =>
             val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
-            if (g == null || leaf.isHome(g) || !leaf.related(rec, g, pred).hasNext) Iterator.empty
+            if (g == null || leaf.isHome(g) || !leaf.related(rec, g, pred, needDist = false).hasNext)
+              Iterator.empty
             else Iterator.single((homeOf(cut, g.getEnvelopeInternal), idOf(rec): InternalRow))
           }
         }, 1)
@@ -345,24 +306,24 @@ case class PartitionedSpatialJoinExec(
         val matched = new java.util.HashSet[Long]()
         marks.foreach(m => matched.add(m.getLong(0)))
         val emit = emitter()
-        val nullRight = new GenericInternalRow(rightWidth)
         probes.flatMap { rec =>
           val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
           // a record without geometry reached its one leaf only
           val home = g == null || leaf.isHome(g)
-          def hits = leaf.related(rec, g, pred)
+          def hits = leaf.related(rec, g, pred, withDist)
           def found = matched.contains(rec.getLong(leftWidth)) || hits.hasNext
+          def rows(h: Iterator[(Int, Int)]) = h.map { case (i, d) => emit(rec, leaf.rows(i), d, 0) }
           joinMode match {
-            case SpatialJoinMode.Inner => hits.map(i => emit(rec, leaf.rows(i)))
+            case SpatialJoinMode.Inner => rows(hits)
             case SpatialJoinMode.LeftOuter =>
               val h = hits
               if (home && !h.hasNext && !matched.contains(rec.getLong(leftWidth)))
-                Iterator.single(emit(rec, nullRight))
-              else h.map(i => emit(rec, leaf.rows(i)))
+                Iterator.single(emit(rec, null, 0, NoRight))
+              else rows(h)
             case SpatialJoinMode.Semi =>
-              if (home && found) Iterator.single(emit(rec, null)) else Iterator.empty
+              if (home && found) Iterator.single(emit(rec, null, 0, NoRight)) else Iterator.empty
             case SpatialJoinMode.Anti =>
-              if (home && !found) Iterator.single(emit(rec, null)) else Iterator.empty
+              if (home && !found) Iterator.single(emit(rec, null, 0, NoRight)) else Iterator.empty
           }
         }
       }
@@ -391,62 +352,61 @@ case class PartitionedSpatialJoinExec(
             }
           }
         }, recWidth)
-        // the forwarded searches' hits, (probe id, distance) ++ right row,
-        // back to the probe's home leaf
+        // the forwarded searches' hits, (probe id, distance, metres) ++
+        // right row, back to the probe's home leaf
         shuffled(forwards.zipPartitions(leafRights) { (probes, rights) =>
           val leaf = leafOf(rights)
-          val hit = UnsafeProjection.create(
-            (BoundReference(0, LongType, nullable = false) +: BoundReference(1, DoubleType, nullable = false) +:
-              rightTypes.indices.map(j => BoundReference(2 + j, rightTypes(j)._1, rightTypes(j)._2))).toSeq)
-          val head = new GenericInternalRow(2)
+          val hit = UnsafeProjection.create((Seq(BoundReference(0, LongType, nullable = false),
+            BoundReference(1, DoubleType, nullable = false), BoundReference(2, IntegerType, nullable = false)) ++
+            rightTypes.indices.map(j => BoundReference(3 + j, rightTypes(j)._1, rightTypes(j)._2))).toSeq)
+          val head = new GenericInternalRow(3)
           val joined = new JoinedRow
           probes.flatMap { rec =>
             forwarded += 1
             val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
             val found = leaf.search(rec, g, rec.getDouble(leftWidth + 1))
+            val metres = if (withDist) leaf.probe.metres(g) else null
             val home = homeOf(cut, g.getEnvelopeInternal)
             val id = rec.getLong(leftWidth)
             (0 until math.max(0, found)).iterator.map { h =>
+              val i = leaf.found(h)
               head.setLong(0, id); head.setDouble(1, leaf.dists(h))
-              (home, hit(joined(head, leaf.rows(leaf.found(h)))): InternalRow)
+              head.setInt(2, if (metres == null) 0 else metres(i))
+              (home, hit(joined(head, leaf.rows(i))): InternalRow)
             }
           }
-        }, 2 + rightWidth)
+        }, 3 + rightWidth)
       }
 
     def finish(probes: Iterator[InternalRow], rights: Iterator[(Int, Array[InternalRow])],
         forwardedHits: Iterator[InternalRow]): Iterator[InternalRow] = {
       val leaf = leafOf(rights)
-      // forwarded hits by probe id, as (distance, right row)
-      val more = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Double, InternalRow)]]()
+      // forwarded hits by probe id, as (distance, right row, metres)
+      val more = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Double, InternalRow, Int)]]()
       val rightOf = UnsafeProjection.create(rightTypes.indices.map(j =>
-        BoundReference(2 + j, rightTypes(j)._1, rightTypes(j)._2)).toSeq)
+        BoundReference(3 + j, rightTypes(j)._1, rightTypes(j)._2)).toSeq)
       forwardedHits.foreach { h =>
         more.computeIfAbsent(h.getLong(0), _ => scala.collection.mutable.ArrayBuffer())
-          .append((h.getDouble(1), rightOf(h).copy()))
+          .append((h.getDouble(1), rightOf(h).copy(), h.getInt(2)))
       }
-      val emitRow = emitter()
-      val nullRight = new GenericInternalRow(rightWidth)
-      val rank = new GenericInternalRow(1)
-      val withRankRow = new JoinedRow
-      def emit(rec: InternalRow, r: InternalRow, pos: Int): InternalRow =
-        if (!withRank) emitRow(rec, r)
-        else {
-          if (pos < 0) rank.setNullAt(0) else rank.setLong(0, pos + 1L)
-          emitRow(rec, withRankRow(r, rank))
-        }
+      val emit = emitter()
       probes.flatMap { rec =>
         val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
         val found = if (g == null) 0 else math.max(0, leaf.search(rec, g, Double.PositiveInfinity))
+        val metres = if (withDist && found > 0) leaf.probe.metres(g) else null
+        val here = (0 until found).map { h =>
+          val i = leaf.found(h)
+          (leaf.dists(h), leaf.rows(i), if (metres == null) 0 else metres(i))
+        }
         val extra = more.get(rec.getLong(leftWidth))
-        val ranked: IndexedSeq[InternalRow] =
-          if (extra == null) (0 until found).map(h => leaf.rows(leaf.found(h)))
-          else ((0 until found).map(h => (leaf.dists(h), leaf.rows(leaf.found(h)))) ++ extra)
+        val ranked =
+          if (extra == null) here
+          else (here ++ extra)
             .sortWith { (a, b) => a._1 < b._1 || (a._1 == b._1 && ordering.exists(_.lt(a._2, b._2))) }
-            .take(kk).map(_._2)
+            .take(kk)
         if (ranked.isEmpty) {
-          if (keepsUnmatched) Iterator.single(emit(rec, nullRight, -1)) else Iterator.empty
-        } else ranked.iterator.zipWithIndex.map { case (r, pos) => emit(rec, r, pos) }
+          if (keepsUnmatched) Iterator.single(emit(rec, null, 0, NoRight)) else Iterator.empty
+        } else ranked.iterator.zipWithIndex.map { case ((_, r, d), pos) => emit(rec, r, d, pos) }
       }
     }
 
@@ -457,6 +417,9 @@ case class PartitionedSpatialJoinExec(
 }
 
 object PartitionedSpatialJoinExec {
+
+  /** The rank an emitted row without a right side carries. */
+  private val NoRight = -1
 
   /** Right envelope centres sampled to cut the leaves. */
   private val SampleSize = 20000
@@ -539,14 +502,16 @@ private[plans] final class Leaf(
   }
 
   /** The rows `rec` (geometry `g`, null for none) matches under the
-    * relation or withindist `predicate` and that count here, in
-    * ascending row order, lazily. */
-  def related(rec: InternalRow, g: Geometry, predicate: SpatialPredicate): Iterator[Int] = {
+    * relation or withindist `predicate` and that count here, with their
+    * metres (as [[SpatialProbe.matches]] gives them), in ascending row
+    * order, lazily. */
+  def related(rec: InternalRow, g: Geometry, predicate: SpatialPredicate,
+      needDist: Boolean): Iterator[(Int, Int)] = {
     val tree = indexed.tree(rec)
     if (tree == null || g == null) return Iterator.empty
     val b = SpatialProbe.searchBox(g.getEnvelopeInternal, predicate)
-    probe.matches(g, predicate, indexed.candidate(rec), needDist = false, tree,
-      counted(b.getMinX, b.getMinY, b.getMaxX, b.getMaxY)).map(_._1)
+    probe.matches(g, predicate, indexed.candidate(rec), needDist, tree,
+      counted(b.getMinX, b.getMinY, b.getMaxX, b.getMaxY))
   }
 
   /** The rows `rec` (geometry `g`) counts here, at most `bound` away,

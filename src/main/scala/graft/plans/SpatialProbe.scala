@@ -221,24 +221,24 @@ final class SpatialProbe(index: FlatSpatialIndex) {
         val cond = if (owned eq SpatialProbe.AlwaysTrue) condEval else (i: Int) => owned(i) && condEval(i)
         nearestMatch(g, cond, tree) match {
           case -1 => Iterator.empty
-          case i => Iterator.single((i, if (needDist) new Metres(g)(i) else 0))
+          case i => Iterator.single((i, if (needDist) metres(g)(i) else 0))
         }
       case wd: SpatialPredicate.WithinDist =>
         val limit = wd.meters.toInt
-        val metres = new Metres(g)
+        val m = metres(g)
         hits(candidatesIn, { i =>
           if (!condEval(i)) -1
           else {
             refines += 1
-            val d = metres(i) // exact refine
+            val d = m(i) // exact refine
             if (d <= limit) d else -1
           }
         })
       case rel =>
-        val metres = if (needDist) new Metres(g) else null
+        val m = if (needDist) metres(g) else null
         hits(candidatesIn, { i =>
           refines += 1
-          if (rel.relates(g, index.geom(i)) && condEval(i)) (if (needDist) metres(i) else 0)
+          if (rel.relates(g, index.geom(i)) && condEval(i)) (if (needDist) m(i) else 0)
           else -1
         })
     }
@@ -268,6 +268,10 @@ final class SpatialProbe(index: FlatSpatialIndex) {
     }
   }
 
+  /** Whole geodesic metres from the centroid of `g` to an indexed row's,
+    * by row index: the distance column of both kernels. */
+  def metres(g: Geometry): Int => Int = new Metres(g)
+
   /** Whole geodesic metres from the probe's centroid to row `i`'s, as
     * `Geodesic.centroidDistance`: an indexed point is its own centroid
     * (JTS sums it onto 0.0, which turns -0.0 into 0.0). */
@@ -287,14 +291,26 @@ final class SpatialProbe(index: FlatSpatialIndex) {
   private var heapRef = new Array[Int](64)
   private var heapSize = 0
 
+  // the k = 1 search's result slot
+  private val nearestRow = new Array[Int](1)
+  private val nearestDist = new Array[Double](1)
+
+  /** Index of the nearest (JTS `Geometry.distance`) row of `tree` (the
+    * whole index by default) passing the condition, or -1; among rows at
+    * the same distance the smallest index wins: [[nearestK]] with k = 1. */
+  def nearestMatch(g: Geometry, condEval: Int => Boolean, tree: PackedRTree = index.rtree): Int =
+    if (nearestK(g, condEval, 1, Double.PositiveInfinity, nearestRow, nearestDist, tree) == 0) -1
+    else nearestRow(0)
+
   /**
-   * Index of the nearest (JTS `Geometry.distance`) row of `tree` (the
-   * whole index by default) passing the condition, or -1; among rows at
-   * the same distance the smallest index wins.
+   * The first `k` rows of `tree` that pass the condition, in (distance,
+   * row index) order, no farther than `maxDist`. Writes their row
+   * indices to `rows` and their distances to `dists` and returns how
+   * many there are.
    *
    * One best-first traversal (Hjaltason and Samet, "Distance browsing in
    * spatial databases", TODS 1999) yields the rows in (distance, row
-   * index) order, so the first row that passes the condition is the
+   * index) order, so the first k rows that pass the condition are the
    * answer, ties included. The order is exact because every entry
    * enters the heap at a lower bound of the distances it stands for, a
    * row is re-queued at its exact distance when its entry pops, and at
@@ -310,62 +326,8 @@ final class SpatialProbe(index: FlatSpatialIndex) {
    *    segment distances.
    * A probe whose condition has rejected [[SpatialProbe.ScanAfter]] rows
    * (a rare condition, or one no row satisfies) switches to one
-   * condition-first linear scan of the tree, so a never-matching probe
-   * costs O(n) and not O(n log n) of heap work.
-   */
-  def nearestMatch(g: Geometry, condEval: Int => Boolean, tree: PackedRTree = index.rtree): Int = {
-    if (g == null || tree.isEmpty) return -1
-    val env = g.getEnvelopeInternal
-    val pointProbe = g.isInstanceOf[Point]
-    val slack =
-      if (pointProbe && !index.hasShapes) 0.0
-      else SpatialProbe.Slack * (1.0 + math.max(index.scale, math.max(
-        math.max(math.abs(env.getMinX), math.abs(env.getMaxX)),
-        math.max(math.abs(env.getMinY), math.abs(env.getMaxY)))))
-    val qMinX = env.getMinX; val qMinY = env.getMinY
-    val qMaxX = env.getMaxX; val qMaxY = env.getMaxY
-    val boxes = tree.boxes
-    heapSize = 0
-    var start = tree.ids(tree.root) // the root's children
-    var rejected = 0
-    while (start >= 0) {
-      // queue the children of one node at their bounds
-      val end = tree.childEnd(start)
-      var e = start
-      while (e < end) {
-        val b = e << 2
-        val dx = gap(qMinX, qMaxX, boxes(b), boxes(b + 2))
-        val dy = gap(qMinY, qMaxY, boxes(b + 1), boxes(b + 3))
-        push(math.max(0.0, lowerHypot(dx, dy) - slack), -1 - e)
-        e += 1
-      }
-      // pop until a passing row or the next node to open
-      start = -1
-      while (start < 0 && heapSize > 0) {
-        val ref = heapRef(0)
-        pop()
-        if (ref >= 0) {
-          candidates += 1
-          if (condEval(ref)) return ref
-          rejected += 1
-          if (rejected >= SpatialProbe.ScanAfter) return scan(tree, g, condEval)
-        } else {
-          val entry = -1 - ref
-          if (entry >= tree.numItems) start = tree.ids(entry)
-          else push(distanceTo(g, tree.ids(entry)), tree.ids(entry))
-        }
-      }
-    }
-    -1
-  }
-
-  /**
-   * The first `k` rows of `tree` that pass the condition, in (distance,
-   * row index) order, no farther than `maxDist`: [[nearestMatch]]'s
-   * traversal run on until the k-th passing row. Writes their row
-   * indices to `rows` and their distances to `dists` and returns how
-   * many there are. Past [[SpatialProbe.ScanAfter]] rejections, one
-   * condition-first scan of the tree gives the same rows.
+   * condition-first linear scan of the tree, which gives the same rows,
+   * so a never-matching probe costs O(n) and not O(n log n) of heap work.
    */
   def nearestK(g: Geometry, condEval: Int => Boolean, k: Int, maxDist: Double,
       rows: Array[Int], dists: Array[Double], tree: PackedRTree): Int = {
@@ -469,23 +431,6 @@ final class SpatialProbe(index: FlatSpatialIndex) {
   private def distanceTo(g: Geometry, i: Int): Double = g match {
     case p: Point if index.isPoint(i) => Math.hypot(p.getX - index.x(i), p.getY - index.y(i))
     case _ => g.distance(index.geom(i))
-  }
-
-  /** Condition first, then distance, over every row of `tree`. */
-  private def scan(tree: PackedRTree, g: Geometry, condEval: Int => Boolean): Int = {
-    var bestDist = Double.MaxValue
-    var bestIdx = -1
-    var e = 0
-    while (e < tree.numItems) {
-      val i = tree.ids(e)
-      candidates += 1
-      if (condEval(i)) {
-        val d = distanceTo(g, i)
-        if (d < bestDist || (d == bestDist && i < bestIdx)) { bestDist = d; bestIdx = i }
-      }
-      e += 1
-    }
-    bestIdx
   }
 
   @inline private def before(k1: Double, r1: Int, k2: Double, r2: Int): Boolean =

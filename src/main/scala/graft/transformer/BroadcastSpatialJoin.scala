@@ -1,6 +1,7 @@
 package graft.transformer
 
-import graft.join.{GridNearestJoin, GridSpatialJoin, PairCondition}
+import graft.join.PairCondition
+import graft.plans.SpatialJoinPlan
 import graft.spatial.{GeomSpec, SpatialPredicate}
 import graft.toolbox.StringToolbox._
 import org.apache.spark.ml.Transformer
@@ -9,6 +10,7 @@ import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, I
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataTypes, StructField, StructType}
 
 import scala.util.Try
@@ -39,6 +41,17 @@ import scala.util.Try
  * anything-else meaning the external dataset); the other side is iterated;
  * predicate evaluates `iterated op broadcast`; `nearest` yields exactly one
  * row per iterated row.
+ *
+ * Every `broadcast` value builds the join the same way, with
+ * graft.plans.SpatialJoinPlan.build: one logical node whose kernel the
+ * value picks — the broadcast exec for "input"/"external", the
+ * partitioned exec for "none"/"grid", either for "auto". Columns are
+ * bound by attribute, so the input and the external dataset may share
+ * column names (and names like the kernels' working columns), and the
+ * kernel fills in the distance column. Under the partitioned kernel
+ * `nearest` breaks distance ties by the selected data columns, then the
+ * remaining external columns, where the broadcast kernel takes the
+ * smallest row index.
  */
 class BroadcastSpatialJoin(override val uid: String)
     extends Transformer with DefaultParamsWritable {
@@ -345,144 +358,44 @@ class BroadcastSpatialJoin(override val uid: String)
     show(input, "input")
     show(cfg.externalDF, "dataset")
 
-    if (cfg.gridMode) return gridTransform(spark, input, cfg)
-
+    // orientation: `left` is the iterated side — the external dataset
+    // when the input is broadcast, else the input (the partitioned
+    // kernel takes broadcast=dataset's)
     val (iterDF, iterSpec, bcDF, bcSpec) =
       if (cfg.broadcastInput) (cfg.externalDF, cfg.externalSpec, input, cfg.inputSpec)
       else (input, cfg.inputSpec, cfg.externalDF, cfg.externalSpec)
-
-    // Catalyst-native path: the custom BroadcastSpatialJoinPlan keeps the
-    // whole transform in one plan — no RDD drop-out, no createDataFrame
-    // barrier (fixes the reference's opaque-scan re-entry, SURVEY §4)
-    val lwName = "__graft_wkb_l"
-    val rwName = "__graft_wkb_r"
-    val leftD = iterDF.withColumn(lwName, wkbColOf(iterSpec))
-    val rightD = bcDF.withColumn(rwName, wkbColOf(bcSpec))
-    val condition = PairCondition.compile(spark, cfg.conditionSql, leftD.schema, rightD.schema)
-
-    graft.plans.SpatialJoinStrategy.register(spark)
-    val lp = leftD.queryExecution.analyzed
-    val rp0 = rightD.queryExecution.analyzed
-    // self-join safety: when both sides stem from the same plan their
-    // attributes share exprIds and downstream by-attribute resolution
-    // would collapse onto one side — re-alias the right side with fresh
-    // exprIds (ordinal-bound condition is unaffected: positions match)
-    val rp: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-      if (lp.outputSet.intersect(rp0.outputSet).isEmpty) rp0
-      else org.apache.spark.sql.catalyst.plans.logical.Project(
-        rp0.output.map(a =>
-          org.apache.spark.sql.catalyst.expressions.Alias(a, a.name)()), rp0)
-    val lAttr = lp.output.find(_.name == lwName).get
-    val rAttr = rp.output.find(_.name == rwName).get
-    val needDistance = cfg.distanceAlias.nonEmpty
-    val distAttr =
-      if (needDistance)
-        Some(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-          cfg.distanceAlias, DataTypes.IntegerType, nullable = cfg.joinMode == graft.spatial.SpatialJoinMode.LeftOuter)())
-      else None
-
-    val plan = graft.plans.BroadcastSpatialJoinPlan(
-      lp, rp, lAttr, rAttr, cfg.spatialPredicate, condition, distAttr,
-      mode = cfg.joinMode)
-    val joinedDF = org.apache.spark.sql.graft.DatasetBridge.ofRows(spark, plan)
+    // partitioned nearest breaks distance ties by the data columns
+    val j = SpatialJoinPlan.build(iterDF, bcDF, wkbColOf(iterSpec), wkbColOf(bcSpec),
+      cfg.spatialPredicate, PairCondition.compile(spark, cfg.conditionSql, _, _), cfg.joinMode,
+      Some(cfg.distanceAlias).filter(_.nonEmpty), partitioned = cfg.gridMode, k = cfg.knn,
+      rank = if (cfg.knn > 1) Some("knn_rank") else None,
+      tieBreak = cfg.dataCols.distinct.map(F.col))
 
     // final projection BY ATTRIBUTE (names may repeat across the sides):
-    // input columns ++ alias-renamed selected external columns ++ distance
-    val (inputOut, extOut) =
-      if (cfg.broadcastInput) (rp.output.filterNot(_.exprId == rAttr.exprId), lp.output)
-      else (lp.output.filterNot(_.exprId == lAttr.exprId), rp.output)
+    // input columns ++ alias-renamed selected external columns ++
+    // distance ++ rank; semi/anti joins emit the input columns only
+    val (inputOut, extOut) = if (cfg.broadcastInput) (j.right, j.left) else (j.left, j.right)
     def extAttr(name: String) = extOut.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"dataColumns column `$name` not found in external dataset"))
     import graft.spatial.SpatialJoinMode.{Anti, Semi}
-    val existence = cfg.joinMode == Semi || cfg.joinMode == Anti
-    // semi/anti plans emit the left (= input) output only — project just
-    // the input columns (the wkb helper dropped)
-    val outCols =
-      if (existence) inputOut.map(a => org.apache.spark.sql.graft.ColumnBridge.column(a))
-      else inputOut.map(a => org.apache.spark.sql.graft.ColumnBridge.column(a)) ++
-        cfg.dataCols.zip(cfg.aliases).map { case (n, a) =>
-          org.apache.spark.sql.graft.ColumnBridge.column(extAttr(n)).as(a) } ++
-        distAttr.map(a => org.apache.spark.sql.graft.ColumnBridge.column(a))
-    val result = joinedDF.select(outCols.toIndexedSeq: _*)
+    val data =
+      if (cfg.joinMode == Semi || cfg.joinMode == Anti) Nil
+      else cfg.dataCols.zip(cfg.aliases).map { case (n, a) => ColumnBridge.column(extAttr(n)).as(a) }
+    val result = j.df.select(
+      (inputOut.map(ColumnBridge.column) ++ data ++ (j.distance ++ j.rank).map(ColumnBridge.column)): _*)
     show(result, "join result")
     result
   }
 
   /** GeomSpec → WKB column (same coercions as the reference's per-row
-    * matrix: lon/lat cast to double, WKT parsed null-safe); `rename` maps
-    * the spec's column names onto the frame's. */
-  private def wkbColOf(spec: GeomSpec,
-      rename: String => String = identity): org.apache.spark.sql.Column = {
+    * matrix: lon/lat cast to double, WKT parsed null-safe). */
+  private def wkbColOf(spec: GeomSpec): org.apache.spark.sql.Column = {
     import graft.functions.GeoExpressions
     spec match {
-      case GeomSpec.WktCol(w) => GeoExpressions.wkbFromWkt(F.col(rename(w)))
+      case GeomSpec.WktCol(w) => GeoExpressions.wkbFromWkt(F.col(w))
       case GeomSpec.PointCols(lon, lat) =>
-        GeoExpressions.wkbPoint(F.col(rename(lon)).cast("double"), F.col(rename(lat)).cast("double"))
+        GeoExpressions.wkbPoint(F.col(lon).cast("double"), F.col(lat).cast("double"))
     }
-  }
-
-  /** Partitioned join (broadcast="none"): neither side collected, one
-    * lazy Catalyst plan end-to-end, so building it starts no job.
-    * Orientation matches broadcast=dataset: predicate is
-    * `input op external`, condition `left` = input, `right` = external.
-    * Every predicate runs the one partitioned operator
-    * (graft.plans.PartitionedSpatialJoinExec), through
-    * graft.join.GridNearestJoin for nearest (ties break by the external
-    * side's column values rather than the broadcast kernel's row index)
-    * and graft.join.GridSpatialJoin for the rest. */
-  private def gridTransform(spark: SparkSession, input: DataFrame, cfg: JoinConfig): DataFrame = {
-    val pref = "__r_"
-    val ext = cfg.externalDF.columns.foldLeft(cfg.externalDF)((d, c) =>
-      d.withColumnRenamed(c, pref + c))
-
-    val extraCond: Option[org.apache.spark.sql.Column] = {
-      val trimmedCond = cfg.conditionSql.trim
-      if (trimmedCond.isEmpty) None
-      else try Some(F.expr(PairCondition.rewriteSides(trimmedCond,
-        l => s"`$l`", r => s"`$pref$r`")))
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"Spatial join transformer error: unknown extra condition `$trimmedCond`: ${e.getMessage}", e)
-      }
-    }
-
-    val inputWkb = wkbColOf(cfg.inputSpec)
-    val extWkb = wkbColOf(cfg.externalSpec, pref + _)
-
-    val needDistance = cfg.distanceAlias.nonEmpty
-    val joined = cfg.spatialPredicate match {
-      case SpatialPredicate.Nearest =>
-        // key-only deterministic tie-break: the grid join orders right rows
-        // by the tie-break field and then the full right-side payload, so
-        // determinism holds even when dataColumns is not unique
-        val tb = F.struct(cfg.dataCols.distinct.map(n => F.col(pref + n)): _*)
-        val base =
-          if (cfg.knn == 1)
-            GridNearestJoin.nearest(input, ext, inputWkb, extWkb,
-              tieBreak = Some(tb), condition = extraCond,
-              joinType = cfg.joinMode.name)
-          else
-            GridNearestJoin.knearest(input, ext, inputWkb, extWkb,
-              k = cfg.knn, rankCol = "knn_rank",
-              tieBreak = Some(tb), condition = extraCond)
-        if (!needDistance) base
-        else base.withColumn(cfg.distanceAlias,
-          graft.functions.GeoExpressions.geodesicMeters(inputWkb, extWkb))
-      case _ =>
-        GridSpatialJoin.join(input, ext, inputWkb, extWkb,
-          cfg.spatialPredicate, extraCond,
-          if (needDistance) Some(cfg.distanceAlias) else None,
-          joinType = cfg.joinMode.name)
-    }
-
-    import graft.spatial.SpatialJoinMode.{Anti, Semi}
-    val outCols: Seq[org.apache.spark.sql.Column] =
-      if (cfg.joinMode == Semi || cfg.joinMode == Anti) input.columns.map(F.col).toSeq
-      else input.columns.map(F.col).toSeq ++
-        cfg.dataCols.zip(cfg.aliases).map { case (n, a) => F.col(pref + n).as(a) } ++
-        (if (needDistance) Seq(F.col(cfg.distanceAlias)) else Nil) ++
-        (if (cfg.knn > 1) Seq(F.col("knn_rank")) else Nil)
-    joined.select(outCols: _*)
   }
 }
 

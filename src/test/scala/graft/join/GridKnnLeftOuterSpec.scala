@@ -104,14 +104,14 @@ class GridKnnLeftOuterSpec extends AnyFlatSpec with Matchers {
     got shouldBe Set(("a", null, null), ("b", null, null))
   }
 
-  it should "reject reserved __g_-prefixed user columns loudly" in {
+  it should "pass __g_-prefixed user columns through untouched" in {
+    // the working columns are bound by exprId, so no name is reserved
     val l = Seq(("a", 1.0, 1.0, 7)).toDF("id", "lon", "lat", "__g_cell")
     val r = Seq(("d", 1.0, 1.0)).toDF("poi_id", "plon", "plat")
-    val e = intercept[IllegalArgumentException] {
-      GridNearestJoin.nearest(l, r,
-        GeoExpressions.wkbPoint(col("lon"), col("lat")),
-        GeoExpressions.wkbPoint(col("plon"), col("plat")))
-    }
-    e.getMessage should include("reserved")
+    val out = GridNearestJoin.nearest(l, r,
+      GeoExpressions.wkbPoint(col("lon"), col("lat")),
+      GeoExpressions.wkbPoint(col("plon"), col("plat")))
+    out.columns.toSeq shouldBe Seq("id", "lon", "lat", "__g_cell", "poi_id", "plon", "plat")
+    out.collect().map(_.toSeq).toSeq shouldBe Seq(Seq("a", 1.0, 1.0, 7, "d", 1.0, 1.0))
   }
 }

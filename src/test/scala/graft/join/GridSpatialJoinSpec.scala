@@ -96,6 +96,42 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     }
   }
 
+  it should "match the broadcast kernel on every predicate with shared column names" in {
+    // both sides carry lon, lat and wkt, the condition names both lat
+    // columns and the external lat is appended too: both kernels bind
+    // every column by attribute
+    def squares(n: Int, p: String, bigEvery: Int) = (0 until n).map { i =>
+      val lon = (i * 37 % 300) / 100.0; val lat = (i * 53 % 300) / 100.0
+      val h = if (i % bigEvery == 0) 0.35 else 0.08
+      val ring = Seq((lon - h, lat - h), (lon + h, lat - h), (lon + h, lat + h),
+        (lon - h, lat + h), (lon - h, lat - h))
+      (s"$p$i", lon, lat, ring.map { case (x, y) => s"$x $y" }.mkString("POLYGON((", ", ", "))"))
+    }
+    val input = squares(40, "i", 3).toDF("id", "lon", "lat", "wkt")
+    squares(25, "d", 2).toDF("poi_id", "lon", "lat", "wkt").createOrReplaceTempView("grid_poi_shared")
+    def go(mode: String, pred: String, jt: String) = {
+      val t = new BroadcastSpatialJoin().setDataset("grid_poi_shared")
+        .setDataColumns("poi_id, lat as poi_lat").setPredicate(pred).setBroadcast(mode)
+        .setJoinType(jt).setJoinCondition("right.lat <= left.lat + 1.0")
+      // nearest on the points: squares tie at distance 0, and the two
+      // kernels break ties differently
+      val geoms =
+        if (pred == "nearest") t.setInputPoint("lon, lat").setDatasetPoint("lon, lat")
+        else t.setInputWKT("wkt").setDatasetWKT("wkt")
+      (if (existence(jt)) geoms else geoms.setDistColAlias("dm"))
+        .transform(input).collect().map(_.mkString("|")).toSet
+    }
+    for (pred <- Seq("within", "contains", "intersects", "overlaps", "withindist 60000", "nearest"))
+      withClue(s"$pred: ") {
+        go("dataset", pred, "inner") should not be empty
+        joinTypesAndLeaves { (jt, leaves) =>
+          // nearest decorates rows: no semi or anti
+          if (pred != "nearest" || !existence(jt))
+            withLeaves(leaves)(go("none", pred, jt)) shouldBe go("dataset", pred, jt)
+        }
+      }
+  }
+
   it should "spread a single-partition side when the other side broadcasts" in {
     // the degenerate mid-scale layout: a 1-partition (single small file)
     // left against a small right side. Kept on one task, the whole

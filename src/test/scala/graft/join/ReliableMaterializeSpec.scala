@@ -11,9 +11,8 @@ import graft.functions.GeoExpressions
 /**
  * Executor-loss-survival story, integration-tested: the iterative
  * operators default to `localCheckpoint` snapshots (fast, but blocks die
- * with their executor); on a real cluster callers pass
- * [[GridNearestJoin.ReliableMaterialize]] (reliable `checkpoint` into a
- * checkpoint dir). This spec runs the clustering loop through the
+ * with their executor); on a real cluster callers pass a reliable
+ * `checkpoint` into a checkpoint dir (`_.checkpoint(false)`). This spec runs the clustering loop through the
  * reliable path end-to-end and pins result equality with the local path.
  */
 class ReliableMaterializeSpec extends AnyFlatSpec with Matchers {
@@ -40,7 +39,7 @@ class ReliableMaterializeSpec extends AnyFlatSpec with Matchers {
     val pairs = (0L until 30L).map(i => (i, i + 1)).toDF("doc_i", "doc_j")
     def run(mat: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
       graft.dedup.Dedup.clusterPairs(pairs, materialize = mat)
-    val reliable = run(GridNearestJoin.ReliableMaterialize)
+    val reliable = run(_.checkpoint(false))
     val local = run(_.localCheckpoint(false))
     reliable.collect().map(r => (r.getLong(0), r.getLong(1))).toSet shouldBe
       (0L to 30L).map(i => (i, 0L)).toSet

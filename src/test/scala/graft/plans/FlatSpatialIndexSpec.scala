@@ -205,6 +205,17 @@ class FlatSpatialIndexSpec extends AnyFlatSpec with Matchers {
     probe.refines shouldBe 0
   }
 
+  it should "return a passing row at infinite distance before and after the scan fallback" in {
+    // row 0's distance from the probe overflows to +Infinity; the other
+    // rows are nearer and fail the condition: 2 rejections stay on the
+    // best-first path, 299 pass ScanAfter and end in the linear scan
+    val q = gf.createPoint(new Coordinate(-1e308, 0.0))
+    for (n <- Seq(3, 300)) withClue(s"n=$n: ") {
+      val index = FlatSpatialIndex(n, i => computeWkbPoint(if (i == 0) 1e308 else -1e308, i.toDouble))
+      new SpatialProbe(index).nearestMatch(q, _ == 0) shouldBe 0
+    }
+  }
+
   "PackedRTree.search" should "return exactly the items whose box meets the query" in {
     for (seed <- 1 to 20; n <- Seq(0, 1, 15, 16, 17, 257, 1000)) {
       val r = new Random(seed)

@@ -643,6 +643,37 @@ class PlanAuditSpec extends AnyFlatSpec with Matchers {
     }
   }
 
+  behavior of "partitioned spatial join physical plans"
+
+  it should "compute the withindist distance inside the one partitioned exec" in {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val input = (0 until 40).map(i =>
+      (s"i$i", (i * 37 % 300) / 100.0, (i * 53 % 300) / 100.0)).toDF("id", "lon", "lat")
+    (0 until 25).map(i => (s"d$i", (i * 41 % 300) / 100.0, (i * 29 % 300) / 100.0))
+      .toDF("poi_id", "lon", "lat").createOrReplaceTempView("audit_poi_withindist")
+    val out = new BroadcastSpatialJoin().setDataset("audit_poi_withindist")
+      .setDatasetPoint("lon, lat").setInputPoint("lon, lat").setDataColumns("poi_id")
+      .setBroadcast("none").setPredicate("withindist 80000").setDistColAlias("dm")
+      .transform(input)
+    out.collect() should not be empty
+    val root = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val execs = root.collect { case e: PartitionedSpatialJoinExec => e }
+    withClue(root.toString) {
+      execs should have size 1
+      // every node above the exec: its ancestors
+      def above(p: SparkPlan): Seq[SparkPlan] =
+        if ((p eq execs.head) || p.find(_ eq execs.head).isEmpty) Nil
+        else p +: p.children.flatMap(above)
+      above(root).flatMap(_.expressions).map(_.toString)
+        .filter(e => e.contains("geodesic_meters") || e.contains("wkb_point")) shouldBe empty
+    }
+  }
+
   behavior of "grid nearest physical plans"
 
   it should "plan k = 1 and k = 3 as one partitioned exec with no object or sort aggregate" in {

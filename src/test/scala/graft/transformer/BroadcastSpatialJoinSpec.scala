@@ -293,6 +293,26 @@ class BroadcastSpatialJoinSpec extends AnyFlatSpec with Matchers {
     run("none") shouldBe Seq("i1")
   }
 
+  it should "keep user columns named like working columns, on both kernels" in {
+    import spark.implicits._
+    // an input and an external column named as a kernel's working
+    // column could be must keep their values and stay in the output
+    val input = Seq(("i1", 1.0, 1.0, "keep-l")).toDF("id", "lon", "lat", "__graft_wkb_l")
+    Seq(("d1", 1.1, 1.1, "keep-r")).toDF("poi_id", "plon", "plat", "__g_rwkb")
+      .createOrReplaceTempView("poi_working_names")
+    for (mode <- Seq("dataset", "none")) withClue(s"broadcast=$mode: ") {
+      val t = new BroadcastSpatialJoin().setDataset("poi_working_names")
+        .setDatasetPoint("plon, plat").setInputPoint("lon, lat")
+        .setDataColumns("poi_id, __g_rwkb").setBroadcast(mode)
+        .setPredicate("withindist 50000").setDistColAlias("dm")
+      val out = t.transform(input)
+      out.schema.fields.map(f => (f.name, f.dataType)).toSeq shouldBe
+        t.transformSchema(input.schema).fields.map(f => (f.name, f.dataType)).toSeq
+      out.collect().map(_.toSeq).toSeq shouldBe
+        Seq(Seq("i1", 1.0, 1.0, "keep-l", "d1", "keep-r", 15689))
+    }
+  }
+
   it should "expose the reference's 12 params plus the grid and join-type extensions" in {
     new BroadcastSpatialJoin().params.map(_.name).toSet shouldBe Set(
       // the reference transformer's surface

@@ -13,14 +13,18 @@ class SelfJoinSpec extends AnyFlatSpec with Matchers {
     val pts = Seq(("a", 1.0, 1.0), ("b", 1.2, 1.2), ("c", 5.0, 5.0))
       .toDF("id", "lon", "lat")
     pts.createOrReplaceTempView("selfjoin_pts")
-    val out = new BroadcastSpatialJoin()
-      .setDataset("selfjoin_pts")
-      .setDatasetPoint("lon, lat").setInputPoint("lon, lat")
-      .setDataColumns("id as nn_id")
-      .setBroadcast("dataset").setPredicate("nearest")
-      .setJoinCondition("right.id != left.id")
-      .transform(pts)
-    out.select("id", "nn_id").collect().map(r => (r.getString(0), r.getString(1))).toSet shouldBe
-      Set(("a", "b"), ("b", "a"), ("c", "b"))
+    // both kernels: the partitioned one re-aliases the right side as the
+    // broadcast one does
+    for (mode <- Seq("dataset", "none")) withClue(s"broadcast=$mode: ") {
+      val out = new BroadcastSpatialJoin()
+        .setDataset("selfjoin_pts")
+        .setDatasetPoint("lon, lat").setInputPoint("lon, lat")
+        .setDataColumns("id as nn_id")
+        .setBroadcast(mode).setPredicate("nearest")
+        .setJoinCondition("right.id != left.id")
+        .transform(pts)
+      out.select("id", "nn_id").collect().map(r => (r.getString(0), r.getString(1))).toSet shouldBe
+        Set(("a", "b"), ("b", "a"), ("c", "b"))
+    }
   }
 }

@@ -1,0 +1,90 @@
+#!/usr/bin/env python3
+"""A/B of one spatial-join benchmark workload between two checkouts.
+
+Usage:
+
+    python3 tools/perfbench_ab.py --parent DIR --change DIR --workload W --pairs N
+
+For seeds 1..N, runs `python3 perfbench/run.py --workload W --seed i
+--seconds S --trace 0` once in each checkout, switching which side runs
+first on each pair, and reads the last JSON line of each run. S and the
+end-to-end metrics are the `run_seconds` and `end_to_end` of the change's
+BENCHMARK.json. Prints every run, then per end-to-end metric both sides'
+q1/median/q3 and on how many pairs the change was better, and per side how
+many runs were correct and how many operations failed. Each checkout builds
+its own `target/` on its first run. Exits non-zero when a run gives no
+result line.
+"""
+
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+def benchmark_of(checkout):
+    """The run length and the (name, better) end-to-end metrics of BENCHMARK.json."""
+    with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    return bench["run_seconds"], [(m["name"], m["better"]) for m in bench["end_to_end"]]
+
+
+def run(checkout, workload, seed, seconds):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    res = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stdin=subprocess.DEVNULL,
+                         text=True)
+    lines = [line for line in res.stdout.split("\n") if line.strip()]
+    if res.returncode != 0 or not lines:
+        raise SystemExit(f"perfbench_ab: {checkout} seed {seed} failed (exit {res.returncode})")
+    return json.loads(lines[-1])
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--parent", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", required=True, type=int)
+    args = ap.parse_args()
+    if args.pairs < 1:
+        ap.error("--pairs must be at least 1")
+
+    sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
+    seconds, metrics = benchmark_of(sides["change"])
+    results = {"parent": [], "change": []}
+    for seed in range(1, args.pairs + 1):
+        order = ("parent", "change") if seed % 2 else ("change", "parent")
+        for side in order:
+            r = run(sides[side], args.workload, seed, seconds)
+            results[side].append(r)
+            print(f"seed {seed} {side:6} correct={r['correct']} failed={r['failed']}/{r['attempted']} "
+                  + " ".join(f"{k}={m['value']:.4g}" for k, m in sorted(r["metrics"].items())),
+                  flush=True)
+
+    print(f"\n{args.workload}, {args.pairs} pairs: parent q1/median/q3 -> change q1/median/q3, "
+          "change better")
+    for name, better in metrics:
+        p = [r["metrics"][name]["value"] for r in results["parent"]]
+        c = [r["metrics"][name]["value"] for r in results["change"]]
+        wins = sum((cv < pv) if better == "lower" else (cv > pv) for pv, cv in zip(p, c))
+        pq, cq = quartiles(p), quartiles(c)
+        print(f"  {name:13} " + "/".join(f"{x:.4g}" for x in pq) + " -> "
+              + "/".join(f"{x:.4g}" for x in cq) + f"  {wins}/{args.pairs}")
+    for side in ("parent", "change"):
+        rs = results[side]
+        print(f"  {side}: {sum(bool(r['correct']) for r in rs)}/{len(rs)} runs correct, "
+              f"{sum(r['failed'] for r in rs)} of {sum(r['attempted'] for r in rs)} operations failed")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
