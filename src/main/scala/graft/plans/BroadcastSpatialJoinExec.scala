@@ -1,11 +1,12 @@
 package graft.plans
 
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
 import graft.join.PairCondition
@@ -13,11 +14,25 @@ import graft.spatial.SpatialPredicate
 
 /**
  * The broadcast kernel of [[SpatialJoinPlan]]. Left = iterated side
- * (streamed, partitioning preserved), right = broadcast side (collected
- * once; the driver indexes its geometries in one flat packed R-tree,
- * graft.plans.FlatSpatialIndex, and broadcasts it with the collected
- * rows). Output as the logical node's; the distance is filled in where a
- * row is emitted.
+ * (streamed, partitioning preserved), right = broadcast side, shipped
+ * once per plan as primitive arrays:
+ *
+ *  1. One collect job packs the right rows where they are: each task
+ *     copies its rows' `UnsafeRow` bytes back to back into bounded byte
+ *     chunks ([[PackedRows]]). The driver keeps the chunks in partition
+ *     order, so row `i` is the `i`-th row `executeCollect` would give,
+ *     and nearest breaks ties on the same row; it builds no row object.
+ *  2. The driver indexes the rows' geometries, read through one reused
+ *     view row, in one flat packed R-tree ([[FlatSpatialIndex]]).
+ *  3. It broadcasts the rows and the index together. Neither holds a
+ *     per-row object, so serializing the broadcast copies a few large
+ *     arrays. Spark's `BroadcastExchangeExec` is not used: it decodes
+ *     every collected row on the driver.
+ *
+ * Each probe task reads right rows through its own reused views (one for
+ * the output, one for the condition, one for decoding a geometry). Output
+ * as the logical node's; the distance is filled in where a row is
+ * emitted.
  */
 case class BroadcastSpatialJoinExec(
     left: SparkPlan,
@@ -39,11 +54,17 @@ case class BroadcastSpatialJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): BroadcastSpatialJoinExec =
     copy(left = newLeft, right = newRight)
 
-  /** `indexBuildTime` and `indexedRows` are taken on the driver, once per
-    * plan; the rest add up over the probe tasks. `candidates` and
-    * `refines` are [[SpatialProbe]]'s counters. */
+  /** Taken on the driver, once per plan: `collectTime` (the collect job
+    * and gathering its chunks), `indexBuildTime`, `broadcastTime`,
+    * `dataSize` (the packed right rows' bytes) and `indexedRows`; the
+    * first three and `dataSize` as Spark's `BroadcastExchangeExec` names
+    * and keeps them. The rest add up over the probe tasks. `candidates`
+    * and `refines` are [[SpatialProbe]]'s counters. */
   override lazy val metrics: Map[String, SQLMetric] = Map(
+    "collectTime" -> SQLMetrics.createTimingMetric(sparkContext, "time to collect"),
     "indexBuildTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index build time"),
+    "broadcastTime" -> SQLMetrics.createTimingMetric(sparkContext, "time to broadcast"),
+    "dataSize" -> SQLMetrics.createSizeMetric(sparkContext, "data size"),
     "indexedRows" -> SQLMetrics.createMetric(sparkContext, "number of indexed rows"),
     "candidates" -> SQLMetrics.createMetric(sparkContext, "number of candidates"),
     "refines" -> SQLMetrics.createMetric(sparkContext, "number of refines"),
@@ -53,34 +74,52 @@ case class BroadcastSpatialJoinExec(
     * ([[IndexedCondition]]). */
   def hashKeys: Seq[PairCondition.EquiKey] = IndexedCondition.hashKeys(condition)
 
+  private def rightWkbIndex: Int = {
+    val i = right.output.indexWhere(_.exprId == rightWkb.exprId)
+    require(i >= 0, "right wkb attribute must be in child output")
+    i
+  }
+
   // collect + index + broadcast the right side once per physical plan —
   // Dataset caches its QueryExecution, so repeated actions on the same
   // transformed DataFrame reuse one broadcast instead of re-collecting
   // (the broadcast lives as long as the plan; ContextCleaner reclaims it
   // when the Dataset is garbage-collected, as with Spark's own
-  // BroadcastExchangeExec). The index is built here, on the driver, so
-  // executors only probe it.
-  @transient private lazy val packedBroadcast = {
-    val rIdx = right.output.indexWhere(_.exprId == rightWkb.exprId)
-    require(rIdx >= 0, "right wkb attribute must be in child output")
-    val rows = right.executeCollect()
+  // BroadcastExchangeExec)
+  @transient private[plans] lazy val packedBroadcast: Broadcast[(PackedRows, FlatSpatialIndex)] = {
+    val rIdx = rightWkbIndex
+    val types = right.output.map(_.dataType).toArray
     val t0 = System.nanoTime()
-    val index = FlatSpatialIndex(rows.length, { i =>
-      val r = rows(i)
+    val rows = PackedRows.concat(
+      right.execute().mapPartitions(it => Iterator.single(PackedRows.pack(it, types))).collect(),
+      types.length)
+    val t1 = System.nanoTime()
+    val view = new UnsafeRow(rows.numFields)
+    val index = FlatSpatialIndex(rows.numRows, { i =>
+      val r = rows.read(i, view)
       if (r.isNullAt(rIdx)) null else r.getBinary(rIdx)
     })
-    metrics("indexBuildTime") += System.nanoTime() - t0
+    val t2 = System.nanoTime()
+    val bc = sparkContext.broadcast((rows, index))
+    val t3 = System.nanoTime()
+    metrics("collectTime") += (t1 - t0) / 1000000
+    metrics("indexBuildTime") += t2 - t1
+    metrics("broadcastTime") += (t3 - t2) / 1000000
+    metrics("dataSize") += rows.sizeInBytes
     metrics("indexedRows") += index.size
     SQLMetrics.postDriverMetricUpdates(sparkContext,
       sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
-      Seq(metrics("indexBuildTime"), metrics("indexedRows")))
-    sparkContext.broadcast((rows, index))
+      Seq("collectTime", "indexBuildTime", "broadcastTime", "dataSize", "indexedRows").map(metrics))
+    bc
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
+  override protected def doExecute(): RDD[InternalRow] = probe(packedBroadcast)
+
+  /** The join of the left side against the right side in `bc`. */
+  private[plans] def probe(bc: Broadcast[(PackedRows, FlatSpatialIndex)]): RDD[InternalRow] = {
     val lIdx = left.output.indexWhere(_.exprId == leftWkb.exprId)
     require(lIdx >= 0, "left wkb attribute must be in child output")
-    val bc = packedBroadcast
+    val rIdx = rightWkbIndex
 
     val needDist = distAttr.isDefined
     val outAttrs = output
@@ -96,12 +135,15 @@ case class BroadcastSpatialJoinExec(
 
     left.execute().mapPartitions { it =>
       val (rows, index) = bc.value
-      val probe = new SpatialProbe(index)
+      val wkbView = new UnsafeRow(rows.numFields)
+      val probe = new SpatialProbe(index, i => rows.read(i, wkbView).getBinary(rIdx))
       TaskContext.get().addTaskCompletionListener[Unit] { _ =>
         candidatesMetric += probe.candidates
         refinesMetric += probe.refines
       }
-      val indexed = new IndexedCondition(cond, leftWidth, rightWidth, index, rows(_))
+      val condView = new UnsafeRow(rows.numFields)
+      val indexed = new IndexedCondition(cond, leftWidth, rightWidth, index, i => rows.read(i, condView))
+      val outView = new UnsafeRow(rows.numFields)
       val joined = new JoinedRow
       val joinedDist = new JoinedRow
       val distRow = new GenericInternalRow(1)
@@ -143,7 +185,7 @@ case class BroadcastSpatialJoinExec(
               if (outer && !hits.hasNext) Iterator.single(missRow(lrow))
               else hits.map { case (i, d) =>
                 numOutputRows += 1
-                val base = joined(lrow, rows(i))
+                val base = joined(lrow, rows.read(i, outView))
                 val full: InternalRow =
                   if (needDist) { distRow.setInt(0, d); joinedDist(base, distRow) }
                   else base

@@ -39,7 +39,8 @@ private[plans] object NullSafeKey
  *
  * @param split      the condition, bound over (left ++ right) rows of
  *                   `leftWidth` and `rightWidth` fields
- * @param rightRow   the right row of index row `i`
+ * @param rightRow   the right row of index row `i`; it may be a view
+ *                   that the next call moves, as it is only read at once
  */
 private[plans] final class IndexedCondition(
     split: Option[PairCondition.Split], leftWidth: Int, rightWidth: Int,

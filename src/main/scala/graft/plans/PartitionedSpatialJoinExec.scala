@@ -43,7 +43,8 @@ import graft.spatial.{GeoKit, SpatialJoinMode, SpatialPredicate}
  *
  * A relation or `withindist` probe goes to every leaf its search box
  * ([[SpatialProbe.searchBox]]: its envelope, grown by the radius for
- * `withindist`) meets, and each leaf probes it with
+ * `withindist`, plus its copy a turn away when it crosses ±180,
+ * [[SpatialProbe.wrappedBox]]) meets, and each leaf probes it with
  * [[SpatialProbe.matches]], the broadcast kernel's refine and condition
  * order. One job stage for an inner join. For left, semi and anti, the
  * leaves other than the home send the ids of the probes they matched
@@ -65,8 +66,10 @@ import graft.spatial.{GeoKit, SpatialJoinMode, SpatialPredicate}
  * minX values, max of the minY values). The point is in the row's
  * envelope, so the row is in that leaf; a nearest probe that the row
  * could reach searches that leaf, and a relation probe reaches it
- * because the point is in its search box. Genuinely identical right
- * rows are distinct rows and count separately.
+ * because the point is in its search box. A `withindist` box that
+ * crosses ±180 places a row by the first of its two boxes that the row's
+ * envelope meets. Genuinely identical right rows are distinct rows and
+ * count separately.
  */
 case class PartitionedSpatialJoinExec(
     left: SparkPlan,
@@ -234,6 +237,9 @@ case class PartitionedSpatialJoinExec(
         else {
           val b = SpatialProbe.searchBox(e, pred)
           cut.meeting(b.getMinX, b.getMinY, b.getMaxX, b.getMaxY)(to += _)
+          val w = SpatialProbe.wrappedBox(b, pred)
+          if (w != null)
+            cut.meeting(w.getMinX, w.getMinY, w.getMaxX, w.getMaxY)(j => if (!to.contains(j)) to += j)
           copies += to.length - 1
         }
         if (to.isEmpty) Iterator.empty
@@ -473,9 +479,10 @@ private[plans] final class Leaf(
     recWidth: Int, rightWidth: Int) {
 
   ordering.foreach(java.util.Arrays.sort(rows, _))
-  private val index = FlatSpatialIndex(rows.length, i =>
-    if (rows(i).isNullAt(rIdx)) null else rows(i).getBinary(rIdx))
-  val probe = new SpatialProbe(index)
+  private val wkbOf: Int => Array[Byte] = i =>
+    if (rows(i).isNullAt(rIdx)) null else rows(i).getBinary(rIdx)
+  private val index = FlatSpatialIndex(rows.length, wkbOf)
+  val probe = new SpatialProbe(index, wkbOf)
   private val indexed = new IndexedCondition(split, recWidth, rightWidth, index, rows(_))
 
   /** The last search's hits: row indices and distances, nearest first. */
@@ -488,15 +495,20 @@ private[plans] final class Leaf(
   def isHome(g: Geometry): Boolean =
     PartitionedSpatialJoinExec.homeOf(cut, g.getEnvelopeInternal) == id
 
-  /** Whether row i counts here for a probe whose box is (pMinX, pMinY,
-    * pMaxX, pMaxY): this leaf owns the point of the row's box nearest to
-    * the probe's box. */
-  private def counted(pMinX: Double, pMinY: Double, pMaxX: Double, pMaxY: Double): Int => Boolean = {
+  /** Whether row i counts here for a probe whose box is `p`: this leaf
+    * owns the point of the row's box nearest to `p`. With a second box
+    * `wrap` across ±180 (null for none), a row whose box misses `p` is
+    * placed by `wrap`, so a row both boxes meet still counts in one leaf. */
+  private def counted(p: Envelope, wrap: Envelope): Int => Boolean = {
     val boxes = index.rtree.boxes
     i => {
       val b = index.entry(i) << 2
-      val qx = nearestIn(pMinX, pMaxX, boxes(b), boxes(b + 2))
-      val qy = nearestIn(pMinY, pMaxY, boxes(b + 1), boxes(b + 3))
+      val q =
+        if (wrap == null || (p.getMaxX >= boxes(b) && p.getMinX <= boxes(b + 2) &&
+          p.getMaxY >= boxes(b + 1) && p.getMinY <= boxes(b + 3))) p
+        else wrap
+      val qx = nearestIn(q.getMinX, q.getMaxX, boxes(b), boxes(b + 2))
+      val qy = nearestIn(q.getMinY, q.getMaxY, boxes(b + 1), boxes(b + 3))
       cut.leafOf(qx, qy) == id
     }
   }
@@ -511,7 +523,7 @@ private[plans] final class Leaf(
     if (tree == null || g == null) return Iterator.empty
     val b = SpatialProbe.searchBox(g.getEnvelopeInternal, predicate)
     probe.matches(g, predicate, indexed.candidate(rec), needDist, tree,
-      counted(b.getMinX, b.getMinY, b.getMaxX, b.getMaxY))
+      counted(b, SpatialProbe.wrappedBox(b, predicate)))
   }
 
   /** The rows `rec` (geometry `g`) counts here, at most `bound` away,
@@ -521,8 +533,7 @@ private[plans] final class Leaf(
     val tree = indexed.tree(rec)
     if (tree == null) return -1
     if (g == null) return 0
-    val e = g.getEnvelopeInternal
-    val owned = counted(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
+    val owned = counted(g.getEnvelopeInternal, null)
     val cand = indexed.candidate(rec)
     probe.nearestK(g, i => owned(i) && cand(i), k, bound, found, dists, tree)
   }

@@ -18,7 +18,7 @@ final class PackedSpatialIndex[T](rows: Array[T], wkbs: Array[Array[Byte]]) {
 
   /** Every row's geometry, null where the row is not indexed.
     * Harness-only, removed by ROADMAP item 2's benchmark PR. */
-  lazy val geoms: Array[Geometry] = Array.tabulate(index.rowCount)(index.geom)
+  lazy val geoms: Array[Geometry] = Array.tabulate(index.rowCount)(i => index.geom(i, wkbs(_)))
 
   /** A JTS `STRtree` over [[geoms]], built on first use; nothing in the
     * library calls it. Harness-only, removed by ROADMAP item 2's
@@ -35,22 +35,24 @@ final class PackedSpatialIndex[T](rows: Array[T], wkbs: Array[Array[Byte]]) {
 
 /**
  * The geometry half of the broadcast index, in primitive arrays: a
- * [[PackedRTree]] over every indexed row's envelope, plus per row either
- * a 2-D point (its x/y are its item box, read straight from its 21-byte
- * WKB, so no JTS object is built for an indexed point) or the WKB of any
- * other geometry. The build decodes such a geometry once for its
- * envelope and drops it; a probe decodes it again when it first needs it
- * and then caches it in this JVM; the cache does not serialize.
+ * [[PackedRTree]] over every indexed row's envelope, and per row whether
+ * it is a 2-D point (its x/y are its item box, read straight from its
+ * 21-byte WKB, so no JTS object is built for an indexed point) or any
+ * other geometry. The index keeps no WKB: the rows it indexes do. The
+ * build decodes a non-point geometry once for its envelope and drops it;
+ * a probe decodes it again from its row's WKB when it first needs it
+ * ([[geom]]) and then caches it in this JVM; the cache does not
+ * serialize.
  *
  * @param leafOf per row, its item entry in `rtree`; -1 for a row that is
  *               not indexed (null or empty geometry)
- * @param shapes per row, the WKB of a non-point geometry; null when every
- *               indexed row is a point
+ * @param shaped per row, whether it is an indexed non-point geometry;
+ *               null when every indexed row is a point
  * @param scale  the largest finite coordinate magnitude in the index
  */
 final class FlatSpatialIndex private (
     leafOf: Array[Int],
-    shapes: Array[Array[Byte]],
+    shaped: Array[Boolean],
     val rtree: PackedRTree,
     val scale: Double) extends Serializable {
 
@@ -59,23 +61,24 @@ final class FlatSpatialIndex private (
   def rowCount: Int = leafOf.length
   /** Indexed rows: those with a non-null, non-empty geometry. */
   def size: Int = rtree.numItems
-  def hasShapes: Boolean = shapes != null
+  def hasShapes: Boolean = shaped != null
 
   /** Whether indexed row `i` is a point, with coordinates [[x]]/[[y]]. */
-  def isPoint(i: Int): Boolean = shapes == null || shapes(i) == null
+  def isPoint(i: Int): Boolean = shaped == null || !shaped(i)
   /** Indexed row `i`'s item entry in [[rtree]], which owns its box. */
   def entry(i: Int): Int = leafOf(i)
   def x(i: Int): Double = rtree.boxes(leafOf(i) << 2)
   def y(i: Int): Double = rtree.boxes((leafOf(i) << 2) + 1)
 
   /** Row `i`'s geometry, null when the row is not indexed. A point is
-    * built anew on each call; any other geometry decodes once. */
-  def geom(i: Int): Geometry =
+    * built anew on each call; any other geometry decodes once, from
+    * `wkbOf(i)`, the WKB the index was built from. */
+  def geom(i: Int, wkbOf: Int => Array[Byte]): Geometry =
     if (leafOf(i) < 0) null
     else if (isPoint(i)) GeoKit.point(x(i), y(i))
     else {
       var g = decoded.get(i)
-      if (g == null) { g = GeoKit.wkbToGeom(shapes(i)); decoded.lazySet(i, g) }
+      if (g == null) { g = GeoKit.wkbToGeom(wkbOf(i)); decoded.lazySet(i, g) }
       g
     }
 
@@ -125,7 +128,7 @@ object FlatSpatialIndex {
         b.point(i, GeoKit.readDouble(w, 5, be), GeoKit.readDouble(w, 13, be))
       } else {
         val g = GeoKit.wkbToGeom(w)
-        if (g != null) b.shape(i, w, g.getEnvelopeInternal)
+        if (g != null) b.shape(i, g.getEnvelopeInternal)
       }
       i += 1
     }
@@ -133,7 +136,7 @@ object FlatSpatialIndex {
   }
 
   private final class Builder(n: Int) {
-    private var shapes: Array[Array[Byte]] = _
+    private var shaped: Array[Boolean] = _
     private val boxes = new Array[Double](4 * n)
     private val rows = new Array[Int](n)
     private var m = 0
@@ -149,9 +152,9 @@ object FlatSpatialIndex {
     def point(i: Int, x: Double, y: Double): Unit =
       if (!x.isNaN && !y.isNaN) add(i, x, y, x, y)
 
-    def shape(i: Int, wkb: Array[Byte], env: Envelope): Unit = {
-      if (shapes == null) shapes = new Array[Array[Byte]](n)
-      shapes(i) = wkb
+    def shape(i: Int, env: Envelope): Unit = {
+      if (shaped == null) shaped = new Array[Boolean](n)
+      shaped(i) = true
       add(i, env.getMinX, env.getMinY, env.getMaxX, env.getMaxY)
     }
 
@@ -168,7 +171,7 @@ object FlatSpatialIndex {
       java.util.Arrays.fill(leafOf, -1)
       var e = 0
       while (e < tree.numItems) { leafOf(tree.ids(e)) = e; e += 1 }
-      new FlatSpatialIndex(leafOf, shapes, tree, scale)
+      new FlatSpatialIndex(leafOf, shaped, tree, scale)
     }
   }
 }
@@ -185,13 +188,21 @@ object FlatSpatialIndex {
  * index, by default the whole index and otherwise a key partition (see
  * [[FlatSpatialIndex.partitioned]]), which bounds every per-partition
  * operation by the partition, never the whole broadcast side.
+ *
+ * @param wkbOf the WKB of indexed row `i`, read when its geometry is not
+ *              a point and this JVM has not decoded it yet
  */
-final class SpatialProbe(index: FlatSpatialIndex) {
+final class SpatialProbe(index: FlatSpatialIndex, wkbOf: Int => Array[Byte]) {
+
+  /** The flat index of `wkbs`, reading its geometries back from them. */
+  def this(wkbs: Array[Array[Byte]]) = this(FlatSpatialIndex(wkbs.length, wkbs(_)), wkbs(_))
 
   /** Builds the flat index from `geoms`, re-encoded as WKB; `tree` is
     * not read. Harness-only, removed by ROADMAP item 2's benchmark PR. */
-  def this(geoms: Array[Geometry], tree: STRtree) =
-    this(FlatSpatialIndex(geoms.length, i => GeoKit.geomToWkb(geoms(i))))
+  def this(geoms: Array[Geometry], tree: STRtree) = this(geoms.map(GeoKit.geomToWkb))
+
+  /** Row `i`'s geometry, decoded from its row's WKB when not a point. */
+  private def geom(i: Int): Geometry = index.geom(i, wkbOf)
 
   /** (probe, indexed row) pairs examined: the rows whose box meets the
     * probe's search box, or that nearest took in distance order or
@@ -205,15 +216,21 @@ final class SpatialProbe(index: FlatSpatialIndex) {
     * `tree`'s rows (the whole index by default); `condEval` vetoes
     * candidate indices; distance is 0 when neither the predicate nor
     * `needDist` requires it. Relation and withindist matches come in
-    * ascending row order. Only rows that `owned` keeps are candidates:
-    * the partitioned exec counts each row in one leaf only. */
+    * ascending row order. A withindist search box that crosses ±180 is
+    * searched twice, as it is and shifted a turn to the other side
+    * ([[SpatialProbe.wrappedBox]]); a row in both searches counts once.
+    * Only rows that `owned` keeps are candidates: the partitioned exec
+    * counts each row in one leaf only. */
   def matches(g: Geometry, predicate: SpatialPredicate, condEval: Int => Boolean,
       needDist: Boolean, tree: PackedRTree = index.rtree,
       owned: Int => Boolean = SpatialProbe.AlwaysTrue): Iterator[(Int, Int)] = {
     if (g == null || tree.isEmpty) return Iterator.empty
     val box = SpatialProbe.searchBox(g.getEnvelopeInternal, predicate)
+    val wrap = SpatialProbe.wrappedBox(box, predicate)
     def candidatesIn: Array[Int] = {
-      val found = tree.search(box.getMinX, box.getMinY, box.getMaxX, box.getMaxY)
+      var found = tree.search(box.getMinX, box.getMinY, box.getMaxX, box.getMaxY)
+      if (wrap != null)
+        found = SpatialProbe.union(found, tree.search(wrap.getMinX, wrap.getMinY, wrap.getMaxX, wrap.getMaxY))
       if (owned eq SpatialProbe.AlwaysTrue) found else found.filter(owned)
     }
     predicate match {
@@ -238,7 +255,7 @@ final class SpatialProbe(index: FlatSpatialIndex) {
         val m = if (needDist) metres(g) else null
         hits(candidatesIn, { i =>
           refines += 1
-          if (rel.relates(g, index.geom(i)) && condEval(i)) (if (needDist) m(i) else 0)
+          if (rel.relates(g, geom(i)) && condEval(i)) (if (needDist) m(i) else 0)
           else -1
         })
     }
@@ -280,7 +297,7 @@ final class SpatialProbe(index: FlatSpatialIndex) {
     def apply(i: Int): Int =
       if (index.isPoint(i))
         math.round(Geodesic.inverseMeters(c.getY, c.getX, 0.0 + index.y(i), 0.0 + index.x(i))).toInt
-      else Geodesic.centroidDistance(g, index.geom(i))
+      else Geodesic.centroidDistance(g, geom(i))
   }
 
   // best-first search state: a binary min-heap of (key, ref). A ref >= 0
@@ -430,7 +447,7 @@ final class SpatialProbe(index: FlatSpatialIndex) {
     * as JTS 1.20's `Coordinate.distance`, without building either point. */
   private def distanceTo(g: Geometry, i: Int): Double = g match {
     case p: Point if index.isPoint(i) => Math.hypot(p.getX - index.x(i), p.getY - index.y(i))
-    case _ => g.distance(index.geom(i))
+    case _ => g.distance(geom(i))
   }
 
   @inline private def before(k1: Double, r1: Int, k2: Double, r2: Int): Boolean =
@@ -485,8 +502,10 @@ object SpatialProbe {
     * per degree), in longitude by the radius over a·cos φ, with φ the
     * band's poleward edge plus twice the latitude growth (the whole
     * longitude range where cos φ vanishes). So it never drops a pair the
-    * exact geodesic refine would keep. Both kernels search with it, and the partitioned exec routes
-    * a probe to every leaf it meets. */
+    * exact geodesic refine would keep, except across ±180: the box is in
+    * plain longitude, and [[wrappedBox]] gives its other half there. Both
+    * kernels search with it, and the partitioned exec routes a probe to
+    * every leaf it meets. */
   def searchBox(env: Envelope, predicate: SpatialPredicate): Envelope = predicate match {
     case SpatialPredicate.WithinDist(meters) if meters > 0 =>
       val latDeg = meters / 110500.0
@@ -499,6 +518,34 @@ object SpatialProbe {
       new Envelope(env.getMinX - lonDeg, env.getMaxX + lonDeg,
         env.getMinY - latDeg, env.getMaxY + latDeg)
     case _ => env
+  }
+
+  /** The second box a `withindist` search box crosses into at ±180: the
+    * box shifted by 360 degrees to the other side of the antimeridian,
+    * where the geodesic refine, which wraps longitude, still finds pairs.
+    * Null when the predicate is planar, the box stays inside ±180, or it
+    * spans a whole turn already. Both kernels search both boxes, and the
+    * partitioned exec routes a probe to every leaf either meets. */
+  def wrappedBox(box: Envelope, predicate: SpatialPredicate): Envelope = predicate match {
+    case _: SpatialPredicate.WithinDist
+        if box.getWidth < 360 && (box.getMaxX >= 180 || box.getMinX <= -180) =>
+      val shift = if (box.getMaxX >= 180) -360.0 else 360.0
+      new Envelope(box.getMinX + shift, box.getMaxX + shift, box.getMinY, box.getMaxY)
+    case _ => null
+  }
+
+  /** The distinct values of `a` and `b`, ascending. */
+  private def union(a: Array[Int], b: Array[Int]): Array[Int] = {
+    val all = java.util.Arrays.copyOf(a, a.length + b.length)
+    System.arraycopy(b, 0, all, a.length, b.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    var k = 0
+    while (k < all.length) {
+      if (n == 0 || all(k) != all(n - 1)) { all(n) = all(k); n += 1 }
+      k += 1
+    }
+    java.util.Arrays.copyOf(all, n)
   }
 
   /** Rows the condition may reject before nearest scans linearly. */

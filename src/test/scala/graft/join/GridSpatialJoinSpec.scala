@@ -68,10 +68,8 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
 
   it should "match the broadcast kernel on withindist near the pole and the antimeridian" in {
     // latitude 89: the search box spans every longitude; longitude
-    // +-179.9: probes and sites on both sides of the antimeridian. Both
-    // kernels search in plain longitude, so a pair across +-180 matches
-    // in neither: this pins that the two kernels agree, not that such a
-    // pair matches
+    // +-179.9: probes and sites on both sides of the antimeridian, so
+    // both kernels must search the box's copy across +-180 too
     val rnd = new scala.util.Random(23)
     def near(n: Int, p: String) = (0 until n).map { i =>
       val (lon, lat) =
@@ -80,19 +78,43 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
           (rnd.nextDouble() * 2 - 1)
       (s"$p$i", lon, lat)
     }
-    val input = near(60, "i").toDF("id", "lon", "lat")
-    near(40, "d").toDF("poi_id", "lon", "lat").createOrReplaceTempView("grid_poi_edges")
+    val probes = near(60, "i")
+    val sites = near(40, "d")
+    val input = probes.toDF("id", "lon", "lat")
+    sites.toDF("poi_id", "lon", "lat").createOrReplaceTempView("grid_poi_edges")
     def go(mode: String, jt: String) = {
       val t = new BroadcastSpatialJoin().setDataset("grid_poi_edges")
         .setDatasetPoint("lon, lat").setInputPoint("lon, lat")
         .setDataColumns("poi_id").setPredicate("withindist 80000").setBroadcast(mode)
         .setJoinType(jt)
-      (if (existence(jt)) t else t.setDistColAlias("dm"))
-        .transform(input).collect().map(_.mkString("|")).toSet
+      (if (existence(jt)) t else t.setDistColAlias("dm")).transform(input)
     }
-    go("dataset", "inner") should not be empty
+    // every pair within 80 km by the kernels' own geodesic refine, with
+    // whether it lies across +-180, and what each join type makes of
+    // them, as "id|poi_id|dm" or "id"
+    val pairs = for ((id, lon, lat) <- probes; (sid, slon, slat) <- sites;
+      d = math.round(graft.spatial.Geodesic.inverseMeters(lat, lon, slat, slon)).toInt
+      if d <= 80000) yield (id, sid, d, lon * slon < -100.0 * 100.0)
+    pairs.count(_._4) should be > 0
+    val matched = pairs.map(_._1).toSet
+    val unmatched = probes.map(_._1).toSet -- matched
+    def oracle(jt: String): Set[String] = jt match {
+      case "inner" => pairs.map { case (id, sid, d, _) => s"$id|$sid|$d" }.toSet
+      case "left" => oracle("inner") ++ unmatched.map(id => s"$id|null|null")
+      case "semi" => matched
+      case "anti" => unmatched
+    }
+    def got(df: DataFrame, jt: String): Set[String] =
+      (if (existence(jt)) df.select("id") else df.select("id", "poi_id", "dm"))
+        .collect().map(_.mkString("|")).toSet
+    def rows(df: DataFrame) = df.collect().map(_.mkString("|")).toSet
+    for (jt <- Seq("inner", "left", "semi", "anti")) withClue(s"joinType=$jt broadcast: ") {
+      got(go("dataset", jt), jt) shouldBe oracle(jt)
+    }
     joinTypesAndLeaves { (jt, leaves) =>
-      withLeaves(leaves)(go("none", jt)) shouldBe go("dataset", jt)
+      val grid = withLeaves(leaves)(go("none", jt))
+      withLeaves(leaves)(got(grid, jt)) shouldBe oracle(jt)
+      withLeaves(leaves)(rows(grid)) shouldBe rows(go("dataset", jt))
     }
   }
 

@@ -146,7 +146,7 @@ class FlatSpatialIndexSpec extends AnyFlatSpec with Matchers {
     val ref = new Reference(wkbs)
     val index = FlatSpatialIndex(n, wkbs(_))
     index.size shouldBe ref.geoms.count(_ != null)
-    val probe = new SpatialProbe(index)
+    val probe = new SpatialProbe(index, wkbs(_))
     val keyOf: Int => Any = i => if (i % 11 == 5) null else Integer.valueOf(i % 4)
     val parts = index.partitioned(keyOf)
     for (g <- probes(r, 40, polygonProbes); p <- predicates; (cn, c) <- conditions) {
@@ -181,8 +181,7 @@ class FlatSpatialIndexSpec extends AnyFlatSpec with Matchers {
     // rows 2, 4 and 7 all sit at the nearest coordinate
     val pts = Seq((0.0, 0.0), (9.0, 9.0), (5.0, 5.0), (1.0, 8.0),
       (5.0, 5.0), (8.0, 1.0), (9.0, 0.0), (5.0, 5.0))
-    val index = FlatSpatialIndex(pts.length, i => computeWkbPoint(pts(i)._1, pts(i)._2))
-    val probe = new SpatialProbe(index)
+    val probe = new SpatialProbe(pts.map { case (x, y) => computeWkbPoint(x, y) }.toArray)
     val q = gf.createPoint(new Coordinate(5.2, 5.2))
     probe.nearestMatch(q, SpatialProbe.AlwaysTrue) shouldBe 2
     probe.nearestMatch(q, i => i != 2) shouldBe 4
@@ -191,9 +190,8 @@ class FlatSpatialIndexSpec extends AnyFlatSpec with Matchers {
 
   it should "count what nearest examined, with and without the scan fallback" in {
     val n = 300
-    val index = FlatSpatialIndex(n, i => computeWkbPoint(i.toDouble, 0.0))
     val q = gf.createPoint(new Coordinate(-1.0, 0.0))
-    val probe = new SpatialProbe(index)
+    val probe = new SpatialProbe(Array.tabulate(n)(i => computeWkbPoint(i.toDouble, 0.0)))
     probe.nearestMatch(q, SpatialProbe.AlwaysTrue) shouldBe 0
     probe.candidates shouldBe 1
     // the row at index 10 is the 11th in distance order
@@ -211,8 +209,8 @@ class FlatSpatialIndexSpec extends AnyFlatSpec with Matchers {
     // best-first path, 299 pass ScanAfter and end in the linear scan
     val q = gf.createPoint(new Coordinate(-1e308, 0.0))
     for (n <- Seq(3, 300)) withClue(s"n=$n: ") {
-      val index = FlatSpatialIndex(n, i => computeWkbPoint(if (i == 0) 1e308 else -1e308, i.toDouble))
-      new SpatialProbe(index).nearestMatch(q, _ == 0) shouldBe 0
+      val wkbs = Array.tabulate(n)(i => computeWkbPoint(if (i == 0) 1e308 else -1e308, i.toDouble))
+      new SpatialProbe(wkbs).nearestMatch(q, _ == 0) shouldBe 0
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.transformer
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
@@ -16,14 +17,16 @@ class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
 
   behavior of "BroadcastSpatialJoinExec metrics"
 
-  /** Runs `df` once and returns its exec's metric values. */
-  private def metricsOf(df: DataFrame): Map[String, Long] = {
+  /** Runs `df` once and returns its exec. */
+  private def execOf(df: DataFrame): BroadcastSpatialJoinExec = {
     df.collect()
     val helper = new AdaptiveSparkPlanHelper {}
-    helper.collectFirst(df.queryExecution.executedPlan) {
-      case e: BroadcastSpatialJoinExec => e.metrics.map { case (k, m) => k -> m.value }
-    }.get
+    helper.collectFirst(df.queryExecution.executedPlan) { case e: BroadcastSpatialJoinExec => e }.get
   }
+
+  /** Runs `df` once and returns its exec's metric values. */
+  private def metricsOf(df: DataFrame): Map[String, Long] =
+    execOf(df).metrics.map { case (k, m) => k -> m.value }
 
   it should "count indexed rows, candidates, refines and output rows of a within join" in {
     Seq(
@@ -37,16 +40,26 @@ class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
     // zone 4's box but not the triangle: 6 candidates, 6 refines, 5 rows
     val points = Seq((1L, 0.75, 0.5), (2L, 1.5, 0.5), (3L, 3.0, 3.0), (4L, 5.5, 5.5),
       (5L, 0.25, 0.25), (6L, 11.8, 11.8)).toDF("pid", "lon", "lat")
-    val m = metricsOf(new BroadcastSpatialJoin()
+    val exec = execOf(new BroadcastSpatialJoin()
       .setDataset("metrics_zones").setDatasetPoint("").setDatasetWKT("wkt")
       .setInputPoint("lon, lat").setDataColumns("zid")
       .setBroadcast("dataset").setPredicate("within")
       .transform(points))
+    val m = exec.metrics.map { case (k, v) => k -> v.value }
     m("indexedRows") shouldBe 4
     m("candidates") shouldBe 6
     m("refines") shouldBe 6
     m("numOutputRows") shouldBe 5
     m("indexBuildTime") should be > 0L
+    // the driver-side steps, as Spark's BroadcastExchangeExec keeps them:
+    // milliseconds (set, even when they round to 0), and the bytes of the
+    // five packed right rows
+    exec.metrics("collectTime").isZero shouldBe false
+    exec.metrics("broadcastTime").isZero shouldBe false
+    m("dataSize") shouldBe exec.right.executeCollect()
+      .map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
+    Seq("collectTime", "broadcastTime", "dataSize").map(exec.metrics(_).metricType) shouldBe
+      Seq("timing", "timing", "size")
   }
 
   it should "count the rows nearest took in distance order, with and without a condition" in {

@@ -9,9 +9,11 @@ For seeds 1..N, runs `python3 perfbench/run.py --workload W --seed i
 --seconds S --trace 0` once in each checkout, switching which side runs
 first on each pair, and reads the last JSON line of each run. S and the
 end-to-end metrics are the `run_seconds` and `end_to_end` of the change's
-BENCHMARK.json. Prints every run, then per end-to-end metric both sides'
-q1/median/q3 and on how many pairs the change was better, and per side how
-many runs were correct and how many operations failed. Each checkout builds
+BENCHMARK.json. Records the host's one-minute load average (load1) just
+before each run. Prints every run with its load1, then per end-to-end
+metric both sides' q1/median/q3 and on how many pairs the change was
+better, and per side how many runs were correct, how many operations
+failed and the range of load1 its runs started at. Each checkout builds
 its own `target/` on its first run. Exits non-zero when a run gives no
 result line.
 """
@@ -64,9 +66,12 @@ def main():
     for seed in range(1, args.pairs + 1):
         order = ("parent", "change") if seed % 2 else ("change", "parent")
         for side in order:
+            load1 = os.getloadavg()[0]
             r = run(sides[side], args.workload, seed, seconds)
+            r["load1"] = load1
             results[side].append(r)
-            print(f"seed {seed} {side:6} correct={r['correct']} failed={r['failed']}/{r['attempted']} "
+            print(f"seed {seed} {side:6} load1={load1:.2f} "
+                  f"correct={r['correct']} failed={r['failed']}/{r['attempted']} "
                   + " ".join(f"{k}={m['value']:.4g}" for k, m in sorted(r["metrics"].items())),
                   flush=True)
 
@@ -81,8 +86,10 @@ def main():
               + "/".join(f"{x:.4g}" for x in cq) + f"  {wins}/{args.pairs}")
     for side in ("parent", "change"):
         rs = results[side]
+        loads = [r["load1"] for r in rs]
         print(f"  {side}: {sum(bool(r['correct']) for r in rs)}/{len(rs)} runs correct, "
-              f"{sum(r['failed'] for r in rs)} of {sum(r['attempted'] for r in rs)} operations failed")
+              f"{sum(r['failed'] for r in rs)} of {sum(r['attempted'] for r in rs)} operations failed, "
+              f"load1 {min(loads):.2f}-{max(loads):.2f}")
     return 0
 
 
