@@ -1109,7 +1109,7 @@ object Dedup {
     // snapshot the symmetrized edge list ONCE — every round re-reads it,
     // and leaving it lazy would re-run the (possibly expensive) pair
     // computation upstream once per round. Pre-partitioned by the join
-    // key `b` (see tools/PartProbe + PlanAuditSpec's preservation pin):
+    // key `b` (see PlanAuditSpec's preservation pin):
     // the snapshot's partitions are balanced by the key rather than
     // inheriting the upstream layout, and on AQE-off sessions
     // localCheckpoint preserves the partitioning so every round's

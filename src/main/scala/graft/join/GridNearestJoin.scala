@@ -78,7 +78,8 @@ object GridNearestJoin {
 
   /** The nearest right row per left row. `joinType = "left"` keeps
     * match-less left rows (null/empty left geometry, or every candidate
-    * vetoed by `condition`) with the right columns nulled. */
+    * vetoed by `condition`) with the right columns nulled; a nearest join
+    * is inner or left, so semi and anti are rejected. */
   def nearest(
       left: DataFrame, right: DataFrame,
       leftWkb: Column, rightWkb: Column,
@@ -86,7 +87,7 @@ object GridNearestJoin {
       condition: Option[Column] = None,
       joinType: String = "inner"): DataFrame =
     GridSpatialJoin.plan(left, right, leftWkb, rightWkb, SpatialPredicate.Nearest, 1, None,
-      tieBreak, condition, parseJoinType(joinType), None)
+      tieBreak, condition, SpatialJoinMode.parse(joinType), None)
 
   /** Bounded k-nearest-neighbour join (k >= 1): up to k output rows per
     * left row, ordered by (distance, tieBreak, right columns), with a
@@ -108,14 +109,6 @@ object GridNearestJoin {
     require(!(left.columns ++ right.columns).contains(rankCol),
       s"rank column `$rankCol` collides with an input column")
     GridSpatialJoin.plan(left, right, leftWkb, rightWkb, SpatialPredicate.Nearest, k, Some(rankCol),
-      tieBreak, condition, parseJoinType(joinType), None)
+      tieBreak, condition, SpatialJoinMode.parse(joinType), None)
   }
-
-  private def parseJoinType(joinType: String): SpatialJoinMode =
-    joinType.trim.toLowerCase match {
-      case "inner" => SpatialJoinMode.Inner
-      case "left" | "left_outer" | "leftouter" => SpatialJoinMode.LeftOuter
-      case other => throw new IllegalArgumentException(
-        s"joinType must be inner or left, got `$other`")
-    }
 }

@@ -76,7 +76,7 @@ object GridSpatialJoin {
     val dup = left.columns.toSet.intersect(right.columns.toSet)
     require(dup.isEmpty, s"column names must be disjoint, both sides have: ${dup.mkString(", ")}")
     val j = SpatialJoinPlan.build(left, right, leftWkb, rightWkb, predicate,
-      (l, r) => condition.map(PairCondition.bind(left.sparkSession, _, l, r)), mode, distanceCol,
+      (l, r) => condition.map(PairCondition.resolve(left.sparkSession, _, l, r)), mode, distanceCol,
       partitioned = true, k, rankCol, tieBreak.toSeq)
     j.df.select((j.left ++ j.right ++ j.distance ++ j.rank).map(ColumnBridge.column): _*)
   }

@@ -1,7 +1,7 @@
 package graft.join
 
 import org.apache.spark.sql.{Column, Row, functions => F}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSeq, BindReferences, EqualNullSafe, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualNullSafe, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.types.StructType
@@ -16,10 +16,12 @@ import org.apache.spark.sql.types.StructType
  * BroadcastSpatialJoin.scala:493-533, TODO at :509 asks for exactly this
  * generalization). Here the string is rewritten (`left.x` → `__l_x`),
  * analyzed by Catalyst against the two schemas (so implicit casts, e.g.
- * Int vs Long in `between`, resolve exactly as Spark SQL would), and bound
- * to a row-pair evaluator that runs inside the join kernel — per candidate
- * pair, before `nearest` selection, matching the reference's semantics
- * (its test :460-504 pins that the condition can divert a nearest match).
+ * Int vs Long in `between`, resolve exactly as Spark SQL would) and
+ * returned over the join's own column attributes, as Catalyst's `Join`
+ * holds its condition (graft.plans.SpatialJoinPlan). [[split]] factors
+ * it for the join kernels, which run it per candidate pair, before
+ * `nearest` selection, matching the reference's semantics (its test
+ * :460-504 pins that the condition can divert a nearest match).
  */
 object PairCondition {
 
@@ -67,25 +69,21 @@ object PairCondition {
   }
 
   /** Compile a transformer condition string on the driver: the
-    * [[Split]] of the condition, every part bound over the concatenated
-    * (left ++ right) row. None for an empty condition string. */
+    * condition over `left` ++ `right`, the two sides' columns in their
+    * frames' order (see [[resolve]]). None for an empty condition
+    * string. */
   def compile(
       spark: SparkSession,
       condition: String,
-      leftSchema: StructType,
-      rightSchema: StructType): Option[Split] = {
+      left: Seq[Attribute],
+      right: Seq[Attribute]): Option[Expression] = {
     val trimmed = condition.trim
     if (trimmed.isEmpty) None
     else {
       val rewritten = replaceSideRefs(trimmed)(m =>
         (if (m.group(1).equalsIgnoreCase("left")) "`__l_" else "`__r_") + m.group(2) + "`")
-      def prefixed(schema: StructType, p: String) =
-        StructType(schema.fields.map(f => f.copy(name = p + f.name)))
-      try {
-        val (parts, childOutput) = split(spark, F.expr(rewritten),
-          prefixed(leftSchema, "__l_"), prefixed(rightSchema, "__r_"))
-        Some(parts.map(BindReferences.bindReference(_, AttributeSeq(childOutput))))
-      } catch {
+      try Some(resolveOver(spark, F.expr(rewritten), left, right, "__l_", "__r_"))
+      catch {
         case e: IllegalArgumentException => throw e
         case e: Exception =>
           throw new IllegalArgumentException(
@@ -94,26 +92,58 @@ object PairCondition {
     }
   }
 
-  /** The [[Split]] of the Column `cond` over two frames with disjoint
-    * column names, every part bound over the concatenated
-    * (left ++ right) row, as [[compile]] binds it. */
-  def bind(spark: org.apache.spark.sql.SparkSession, cond: Column,
-      leftSchema: StructType, rightSchema: StructType): Split =
-    try {
-      val (parts, childOutput) = split(spark, cond, leftSchema, rightSchema)
-      parts.map(BindReferences.bindReference(_, AttributeSeq(childOutput)))
-    } catch {
+  /** The Column `cond` over two sides with disjoint column names,
+    * resolved as [[compile]] resolves a string: an expression over
+    * `left` ++ `right`. */
+  def resolve(spark: org.apache.spark.sql.SparkSession, cond: Column,
+      left: Seq[Attribute], right: Seq[Attribute]): Expression =
+    try resolveOver(spark, cond, left, right, "", "")
+    catch {
       case e: Exception => throw new IllegalArgumentException(
         s"unknown extra condition `$cond`: ${e.getMessage}", e)
     }
 
   /**
-   * The one factoring of an extra join condition, shared by both
-   * kernels. The Spark 4 Column API carries a lazy column-node tree whose
-   * catalyst shape only exists post-analysis, so `cond` is analyzed ONCE
-   * over an empty frame with the concatenated (disjoint-name) schema,
-   * implicit casts included. Returns the split and the analyzed
-   * left ++ right attributes it refers to.
+   * The Spark 4 Column API carries a lazy column-node tree whose catalyst
+   * shape only exists post-analysis, so `cond` is analyzed ONCE over an
+   * empty frame with the two sides' columns (names prefixed), implicit
+   * casts included; the frame's attributes are then replaced by
+   * `left` ++ `right`, position by position.
+   */
+  private def resolveOver(spark: org.apache.spark.sql.SparkSession, cond: Column,
+      left: Seq[Attribute], right: Seq[Attribute], leftPrefix: String, rightPrefix: String): Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeMap, CommonExpressionRef, RuntimeReplaceable, With}
+    import org.apache.spark.sql.types.StructField
+    def fields(attrs: Seq[Attribute], p: String) = attrs.map(a => StructField(p + a.name, a.dataType, a.nullable))
+    val frame = StructType(fields(left, leftPrefix) ++ fields(right, rightPrefix))
+    val empty = spark.asInstanceOf[SparkSession].createDataFrame(java.util.Collections.emptyList[Row](), frame)
+    val (analyzed, frameOutput) = empty.filter(cond).queryExecution.analyzed.collectFirst {
+      case f: logical.Filter => (f.condition, f.child.output)
+    }.getOrElse(throw new IllegalStateException("no Filter in analyzed plan"))
+    // RuntimeReplaceable nodes (between, ilike, ...) only run through their
+    // replacement, and the replacement may use With/CommonExpressionRef
+    // (subexpression sharing) — normally optimizer rules substitute both;
+    // the kernels interpret the expression directly, so inline
+    // them here
+    val byPosition = AttributeMap(frameOutput.zip(left ++ right))
+    analyzed.transformDown {
+      case r: RuntimeReplaceable => r.replacement
+    }.transformUp {
+      case w: With =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transformUp {
+          case ref: CommonExpressionRef if defs.contains(ref.id) => defs(ref.id)
+        }
+    }.transform {
+      case a: Attribute if byPosition.contains(a) => byPosition(a)
+    }
+  }
+
+  /**
+   * The one factoring of an extra join condition over `left` ++ `right`
+   * attributes, shared by both kernels: the planner strategy
+   * (graft.plans.SpatialJoinStrategy) runs it once per join against the
+   * outputs of its two children.
    *
    * Conjunct sides are detected by referenced attribute; a conjunct
    * straddling sides or referencing neither is never moved. Every moved
@@ -123,31 +153,9 @@ object PairCondition {
    * and its expressions statically [[neverThrows]]: an eager key
    * throwing on a row that never pairs would fail the query.
    */
-  private def split(spark: org.apache.spark.sql.SparkSession, cond: Column,
-      leftSchema: StructType, rightSchema: StructType): (Split, Seq[Attribute]) = {
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, CommonExpressionRef, EqualNullSafe, EqualTo, RuntimeReplaceable, With}
-    val session = spark.asInstanceOf[SparkSession]
-    val merged = StructType(leftSchema.fields ++ rightSchema.fields)
-    val empty = session.createDataFrame(java.util.Collections.emptyList[Row](), merged)
-    val (analyzed, childOutput) = empty.filter(cond).queryExecution.analyzed.collectFirst {
-      case f: logical.Filter => (f.condition, f.child.output)
-    }.getOrElse(throw new IllegalStateException("no Filter in analyzed plan"))
-    // RuntimeReplaceable nodes (between, ilike, ...) only run through their
-    // replacement, and the replacement may use With/CommonExpressionRef
-    // (subexpression sharing) — normally optimizer rules substitute both;
-    // the kernels interpret the expression directly, so inline
-    // them here
-    val condExpr = analyzed.transformDown {
-      case r: RuntimeReplaceable => r.replacement
-    }.transformUp {
-      case w: With =>
-        val defs = w.defs.map(d => d.id -> d.child).toMap
-        w.child.transformUp {
-          case ref: CommonExpressionRef if defs.contains(ref.id) => defs(ref.id)
-        }
-    }
-    val leftIds = childOutput.take(leftSchema.length).map(_.exprId).toSet
-    val rightIds = childOutput.drop(leftSchema.length).map(_.exprId).toSet
+  def split(condExpr: Expression, left: Seq[Attribute], right: Seq[Attribute]): Split = {
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet}
+    val (leftIds, rightIds) = (AttributeSet(left), AttributeSet(right))
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(a, b) => conjuncts(a) ++ conjuncts(b)
       case x => Seq(x)
@@ -157,9 +165,9 @@ object PairCondition {
     def sides(e: Expression): (Boolean, Boolean) = {
       var hasL = false; var hasR = false
       e.foreach {
-        case a: AttributeReference =>
-          if (leftIds(a.exprId)) hasL = true
-          else if (rightIds(a.exprId)) hasR = true
+        case a: Attribute =>
+          if (leftIds.contains(a)) hasL = true
+          else if (rightIds.contains(a)) hasR = true
           else { hasL = true; hasR = true }
         case _ =>
       }
@@ -185,13 +193,12 @@ object PairCondition {
     def sideOnly(side: (Boolean, Boolean)): Seq[Expression] =
       rest.filter(e => movable(e) && sides(e) == side)
     val (lOnly, rOnly) = (sideOnly((true, false)), sideOnly((false, true)))
-    (Split(
+    Split(
       condition = condExpr,
       equiKeys = keyed.flatten,
       leftOnly = lOnly.reduceOption(And),
       rightOnly = rOnly.reduceOption(And),
-      residual = rest.filterNot(e => lOnly.contains(e) || rOnly.contains(e)).reduceOption(And)),
-      childOutput)
+      residual = rest.filterNot(e => lOnly.contains(e) || rOnly.contains(e)).reduceOption(And))
   }
 
   /** One equality conjunct moved into a join key: `left = right`, or
@@ -215,11 +222,7 @@ object PairCondition {
       equiKeys: Seq[EquiKey],
       leftOnly: Option[Expression],
       rightOnly: Option[Expression],
-      residual: Option[Expression]) {
-    def map(f: Expression => Expression): Split = Split(f(condition),
-      equiKeys.map(k => k.copy(left = f(k.left), right = f(k.right))),
-      leftOnly.map(f), rightOnly.map(f), residual.map(f))
-  }
+      residual: Option[Expression])
 
   /**
    * Conservative static throw-safety: true only when evaluating `e`

@@ -70,8 +70,9 @@ case class BroadcastSpatialJoinExec(
     "refines" -> SQLMetrics.createMetric(sparkContext, "number of refines"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
-  /** The condition's equi keys the broadcast index hashes
-    * ([[IndexedCondition]]). */
+  /** The equi keys of the condition's factoring that the broadcast
+    * index hashes ([[IndexedCondition]]), over the children's
+    * attributes. */
   def hashKeys: Seq[PairCondition.EquiKey] = IndexedCondition.hashKeys(condition)
 
   private def rightWkbIndex: Int = {
@@ -129,8 +130,9 @@ case class BroadcastSpatialJoinExec(
     val numOutputRows = metrics("numOutputRows")
 
     val joinMode = mode
-    val leftWidth = left.output.length
-    val rightWidth = right.output.length
+    val leftAttrs = left.output
+    val rightAttrs = right.output
+    val rightWidth = rightAttrs.length
     val cond = condition
 
     left.execute().mapPartitions { it =>
@@ -142,7 +144,7 @@ case class BroadcastSpatialJoinExec(
         refinesMetric += probe.refines
       }
       val condView = new UnsafeRow(rows.numFields)
-      val indexed = new IndexedCondition(cond, leftWidth, rightWidth, index, i => rows.read(i, condView))
+      val indexed = new IndexedCondition(cond, leftAttrs, rightAttrs, index, i => rows.read(i, condView))
       val outView = new UnsafeRow(rows.numFields)
       val joined = new JoinedRow
       val joinedDist = new JoinedRow

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Expression, GenericInternalRow, JoinedRow, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BindReferences, Expression, JoinedRow, Predicate}
 
 import graft.join.PairCondition
 
@@ -37,13 +37,19 @@ private[plans] object NullSafeKey
  * right-filtered flat index. Only the residual and the unhashed keys
  * run per candidate.
  *
- * @param split      the condition, bound over (left ++ right) rows of
- *                   `leftWidth` and `rightWidth` fields
+ * Each part is bound to the task's rows by attribute: a left-only part
+ * over `left`, a right-only part over `right` and the per-candidate
+ * check over `left` ++ `right`.
+ *
+ * @param split      the condition's factoring over the join's children
+ * @param left       the probe rows' layout: the left child's attributes,
+ *                   then any fields the exec appends
+ * @param right      the right child's attributes
  * @param rightRow   the right row of index row `i`; it may be a view
  *                   that the next call moves, as it is only read at once
  */
 private[plans] final class IndexedCondition(
-    split: Option[PairCondition.Split], leftWidth: Int, rightWidth: Int,
+    split: Option[PairCondition.Split], left: Seq[Attribute], right: Seq[Attribute],
     index: FlatSpatialIndex, rightRow: Int => InternalRow) {
 
   private val keys = IndexedCondition.hashKeys(split)
@@ -54,15 +60,12 @@ private[plans] final class IndexedCondition(
     if (keyed.isEmpty) Some(c.condition)
     else (c.residual.toSeq ++ c.equiKeys.filterNot(keys.contains).map(_.conjunct))
       .reduceOption(And))
-  private def predicate(e: Option[Expression]) = e.map { x =>
-    val p = Predicate.create(x); p.initialize(0); p
+  private def predicate(e: Option[Expression], input: Seq[Attribute]) = e.map { x =>
+    val p = Predicate.create(x, input); p.initialize(0); p
   }
-  private val condPred = predicate(perCandidate)
-  private val leftPred = predicate(keyed.flatMap(_.leftOnly))
+  private val condPred = predicate(perCandidate, left ++ right)
+  private val leftPred = predicate(keyed.flatMap(_.leftOnly), left)
   private val joined = new JoinedRow
-  private val keyJoin = new JoinedRow
-  private val nullLeft = new GenericInternalRow(leftWidth)
-  private val nullRight = new GenericInternalRow(rightWidth)
 
   private def normKey(v: Any): Any = v match {
     case d: java.lang.Double if d.doubleValue() == 0.0 => java.lang.Double.valueOf(0.0)
@@ -85,15 +88,15 @@ private[plans] final class IndexedCondition(
   }
 
   private lazy val keyTrees = {
-    val rightPred = predicate(keyed.flatMap(_.rightOnly))
-    val rKeys = keys.map(_.right)
+    val rightPred = predicate(keyed.flatMap(_.rightOnly), right)
+    val rKeys = BindReferences.bindReferences(keys.map(_.right), right)
     index.partitioned { i =>
-      val jr = keyJoin(nullLeft, rightRow(i))
-      if (rightPred.exists(p => !p.eval(jr))) null
-      else keyOf(rKeys, jr)
+      val r = rightRow(i)
+      if (rightPred.exists(p => !p.eval(r))) null
+      else keyOf(rKeys, r)
     }
   }
-  private val lKeys = keys.map(_.left)
+  private val lKeys = BindReferences.bindReferences(keys.map(_.left), left)
 
   /** The tree `lrow` probes: the whole index, or its key partition
     * ([[PackedRTree.Empty]] when no right row of the index has the key);
@@ -101,16 +104,13 @@ private[plans] final class IndexedCondition(
     * conjunct fails, or a `=` key component is null). */
   def tree(lrow: InternalRow): PackedRTree =
     if (keyed.isEmpty) index.rtree
+    else if (leftPred.exists(p => !p.eval(lrow))) null
     else {
-      val lj = keyJoin(lrow, nullRight)
-      if (leftPred.exists(p => !p.eval(lj))) null
+      val k = keyOf(lKeys, lrow)
+      if (k == null) null
       else {
-        val k = keyOf(lKeys, lj)
-        if (k == null) null
-        else {
-          val t = keyTrees.get(k)
-          if (t == null) PackedRTree.Empty else t
-        }
+        val t = keyTrees.get(k)
+        if (t == null) PackedRTree.Empty else t
       }
     }
 

@@ -3,11 +3,11 @@ package graft.plans
 import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, BoundReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, UnsafeRowSerializer}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 import org.locationtech.jts.geom.{Envelope, Geometry}
 
 import graft.join.PairCondition
@@ -163,8 +163,8 @@ case class PartitionedSpatialJoinExec(
     val cut = leaves
     val n = cut.count
     val leftWidth = left.output.length
-    val rightWidth = right.output.length
-    val rightTypes = right.output.map(a => (a.dataType, a.nullable))
+    val rightAttrs = right.output
+    val rightWidth = rightAttrs.length
     val kk = k
     val pred = predicate
     val nearest = pred == SpatialPredicate.Nearest
@@ -173,15 +173,19 @@ case class PartitionedSpatialJoinExec(
     val keepsUnmatched = mode == SpatialJoinMode.LeftOuter || mode == SpatialJoinMode.Anti
     val withDist = distAttr.isDefined
     val withRank = rankAttr.isDefined
-    // a probe record is the left row ++ (probe id, search bound); the
-    // condition's right references move past those two fields
-    val recWidth = leftWidth + 2
-    val split = condition.map(_.map(_.transform {
-      case b: BoundReference if b.ordinal >= leftWidth => b.copy(ordinal = b.ordinal + 2)
-    }))
-    val ordering = if (tieOrder.isEmpty) None else Some(new LazilyGeneratedOrdering(tieOrder.map(a =>
-      SortOrder(BoundReference(ordinal(right.output, a), a.dataType, a.nullable), Ascending))))
-    val outTypes = output.map(a => (a.dataType, a.nullable))
+    // a probe record is the left row ++ (probe id, search bound); a
+    // forwarded hit is (probe id, distance, metres) ++ the right row. Both
+    // are bound by attribute, and so built here, on the driver
+    def field(name: String, dt: DataType) = AttributeReference(name, dt, nullable = false)()
+    val probeId = field("probe_id", LongType)
+    val recAttrs = left.output :+ probeId :+ field("bound", DoubleType)
+    val hitAttrs = Seq(probeId, field("distance", DoubleType), field("metres", IntegerType)) ++ rightAttrs
+    val split = condition
+    val ordering = if (tieOrder.isEmpty) None
+      else Some(new LazilyGeneratedOrdering(tieOrder.map(SortOrder(_, Ascending)), rightAttrs))
+    // the output is bound over a record ++ a right row ++ (metres, rank)
+    val outAttrs = output
+    val outLayout = recAttrs ++ outAttrs.drop(leftWidth)
     val replicated = metrics("replicatedRows")
     val candidates = metrics("candidates")
     val refines = metrics("refines")
@@ -195,7 +199,7 @@ case class PartitionedSpatialJoinExec(
 
     // right rows to every leaf their envelope meets
     val rightByLeaf = shuffled(right.execute().mapPartitions { it =>
-      val unsafe = UnsafeProjection.create(rightTypes.map(_._1).toArray)
+      val unsafe = UnsafeProjection.create(rightAttrs, rightAttrs)
       val to = scala.collection.mutable.ArrayBuffer[Int]()
       var copies = 0L
       TaskContext.get().addTaskCompletionListener[Unit](_ => replicated += copies)
@@ -217,10 +221,7 @@ case class PartitionedSpatialJoinExec(
     // geometry that the output keeps ride to one leaf, to be emitted
     // unmatched
     val leftByLeaf = shuffled(left.execute().mapPartitionsWithIndex { (p, it) =>
-      val rec = UnsafeProjection.create(
-        (left.output.indices.map(i => BoundReference(i, left.output(i).dataType, left.output(i).nullable)) :+
-          BoundReference(leftWidth, LongType, nullable = false) :+
-          BoundReference(leftWidth + 1, DoubleType, nullable = false)).toSeq)
+      val rec = UnsafeProjection.create(recAttrs, recAttrs)
       val extra = new GenericInternalRow(2)
       val joined = new JoinedRow
       val to = scala.collection.mutable.ArrayBuffer[Int]()
@@ -249,7 +250,7 @@ case class PartitionedSpatialJoinExec(
           to.iterator.map(j => (j, u: InternalRow))
         }
       }
-    }, recWidth)
+    }, recAttrs.length)
 
     // each leaf's right rows with the leaf's id: the partition index, read
     // where it is the shuffle's (a task may run several partitions, say
@@ -258,7 +259,7 @@ case class PartitionedSpatialJoinExec(
       Iterator.single((j, it.map(_.copy()).toArray)), preservesPartitioning = true)
     def leafOf(rights: Iterator[(Int, Array[InternalRow])]): Leaf = {
       val (id, rows) = rights.next()
-      val leaf = new Leaf(id, cut, rows, rIdx, ordering, split, kk, recWidth, rightWidth)
+      val leaf = new Leaf(id, cut, rows, rIdx, ordering, split, kk, recAttrs, rightAttrs)
       TaskContext.get().addTaskCompletionListener[Unit] { _ =>
         candidates += leaf.probe.candidates
         refines += leaf.probe.refines
@@ -270,10 +271,7 @@ case class PartitionedSpatialJoinExec(
     // 0-based rank; rank NoRight for a row without a right side (an
     // outer join's unmatched row, or a semi or anti row)
     def emitter(): (InternalRow, InternalRow, Int, Int) => InternalRow = {
-      val out = UnsafeProjection.create(outTypes.indices.map { i =>
-        val src = if (i < leftWidth) i else i + 2
-        BoundReference(src, outTypes(i)._1, outTypes(i)._2)
-      })
+      val out = UnsafeProjection.create(outAttrs, outLayout)
       val joined = new JoinedRow
       val withTail = new JoinedRow
       val nullRight = new GenericInternalRow(rightWidth)
@@ -297,7 +295,7 @@ case class PartitionedSpatialJoinExec(
         if (joinMode == SpatialJoinMode.Inner || n == 1) null
         else shuffled(leftByLeaf.zipPartitions(leafRights) { (probes, rights) =>
           val leaf = leafOf(rights)
-          val idOf = UnsafeProjection.create(Seq(BoundReference(leftWidth, LongType, nullable = false)))
+          val idOf = UnsafeProjection.create(Seq(probeId), recAttrs)
           probes.flatMap { rec =>
             val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
             if (g == null || leaf.isHome(g) || !leaf.related(rec, g, pred, needDist = false).hasNext)
@@ -346,7 +344,7 @@ case class PartitionedSpatialJoinExec(
         val forwards = shuffled(leftByLeaf.zipPartitions(leafRights) { (probes, rights) =>
           // uncounted: the final pass repeats this home search and counts it
           val (id, rows) = rights.next()
-          val leaf = new Leaf(id, cut, rows, rIdx, ordering, split, kk, recWidth, rightWidth)
+          val leaf = new Leaf(id, cut, rows, rIdx, ordering, split, kk, recAttrs, rightAttrs)
           probes.flatMap { rec =>
             val g = GeoKit.wkbToGeom(rec.getBinary(lIdx))
             val targets = leaf.forwardTargets(rec, g)
@@ -357,14 +355,12 @@ case class PartitionedSpatialJoinExec(
               targets.iterator.map(j => (j, f: InternalRow))
             }
           }
-        }, recWidth)
+        }, recAttrs.length)
         // the forwarded searches' hits, (probe id, distance, metres) ++
         // right row, back to the probe's home leaf
         shuffled(forwards.zipPartitions(leafRights) { (probes, rights) =>
           val leaf = leafOf(rights)
-          val hit = UnsafeProjection.create((Seq(BoundReference(0, LongType, nullable = false),
-            BoundReference(1, DoubleType, nullable = false), BoundReference(2, IntegerType, nullable = false)) ++
-            rightTypes.indices.map(j => BoundReference(3 + j, rightTypes(j)._1, rightTypes(j)._2))).toSeq)
+          val hit = UnsafeProjection.create(hitAttrs, hitAttrs)
           val head = new GenericInternalRow(3)
           val joined = new JoinedRow
           probes.flatMap { rec =>
@@ -381,7 +377,7 @@ case class PartitionedSpatialJoinExec(
               (home, hit(joined(head, leaf.rows(i))): InternalRow)
             }
           }
-        }, 3 + rightWidth)
+        }, hitAttrs.length)
       }
 
     def finish(probes: Iterator[InternalRow], rights: Iterator[(Int, Array[InternalRow])],
@@ -389,8 +385,7 @@ case class PartitionedSpatialJoinExec(
       val leaf = leafOf(rights)
       // forwarded hits by probe id, as (distance, right row, metres)
       val more = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Double, InternalRow, Int)]]()
-      val rightOf = UnsafeProjection.create(rightTypes.indices.map(j =>
-        BoundReference(3 + j, rightTypes(j)._1, rightTypes(j)._2)).toSeq)
+      val rightOf = UnsafeProjection.create(rightAttrs, hitAttrs)
       forwardedHits.foreach { h =>
         more.computeIfAbsent(h.getLong(0), _ => scala.collection.mutable.ArrayBuffer())
           .append((h.getDouble(1), rightOf(h).copy(), h.getInt(2)))
@@ -476,14 +471,14 @@ object PartitionedSpatialJoinExec {
 private[plans] final class Leaf(
     id: Int, cut: SpatialLeaves, val rows: Array[InternalRow], rIdx: Int,
     ordering: Option[LazilyGeneratedOrdering], split: Option[PairCondition.Split], k: Int,
-    recWidth: Int, rightWidth: Int) {
+    recAttrs: Seq[Attribute], rightAttrs: Seq[Attribute]) {
 
   ordering.foreach(java.util.Arrays.sort(rows, _))
   private val wkbOf: Int => Array[Byte] = i =>
     if (rows(i).isNullAt(rIdx)) null else rows(i).getBinary(rIdx)
   private val index = FlatSpatialIndex(rows.length, wkbOf)
   val probe = new SpatialProbe(index, wkbOf)
-  private val indexed = new IndexedCondition(split, recWidth, rightWidth, index, rows(_))
+  private val indexed = new IndexedCondition(split, recAttrs, rightAttrs, index, rows(_))
 
   /** The last search's hits: row indices and distances, nearest first. */
   val found = new Array[Int](k)

@@ -1,12 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, AttributeReference, AttributeSet, BoundReference}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, AttributeReference, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project, SupportsNonDeterministicExpression}
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graft.DatasetBridge
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.join.PairCondition
 import graft.spatial.{SpatialJoinMode, SpatialPredicate}
@@ -26,9 +26,15 @@ import graft.spatial.{SpatialJoinMode, SpatialPredicate}
  * widening; Semi/Anti = left.output only, the rows with (without) a
  * match.
  *
- * @param condition the extra condition's split (graft.join.PairCondition),
- *                  every part bound over the concatenated (left ++ right)
- *                  row
+ * The node reads the two WKB attributes, the tie order and the
+ * condition's attributes, and produces the distance and the rank, so
+ * Catalyst's column pruning drops every other child column that the
+ * output does not keep.
+ *
+ * @param condition the extra condition (graft.join.PairCondition) over
+ *                  the children's attributes, as Catalyst's `Join` holds
+ *                  its condition; the planner factors it
+ *                  ([[SpatialJoinStrategy]])
  * @param partitioned [[PartitionedSpatialJoinExec]] runs the join (neither
  *                  side is broadcast), else [[BroadcastSpatialJoinExec]]
  *                  (the right side is collected, indexed on the driver and
@@ -46,14 +52,14 @@ case class SpatialJoinPlan(
     leftWkb: Attribute,
     rightWkb: Attribute,
     predicate: SpatialPredicate,
-    condition: Option[PairCondition.Split],
+    condition: Option[Expression],
     mode: SpatialJoinMode,
     partitioned: Boolean,
     distAttr: Option[AttributeReference],
     tieOrder: Seq[Attribute] = Nil,
     k: Int = 1,
     rankAttr: Option[AttributeReference] = None)
-  extends BinaryNode {
+  extends BinaryNode with SupportsNonDeterministicExpression {
 
   import SpatialJoinMode._
   require(!(distAttr.isDefined && (mode == Semi || mode == Anti)),
@@ -69,9 +75,11 @@ case class SpatialJoinPlan(
   override def output: Seq[Attribute] =
     SpatialJoinPlan.output(left.output, right.output, mode, distAttr, rankAttr)
 
-  // the probe consumes whole child rows (the condition is ordinal-bound),
-  // so column pruning must not reshape the children
-  override def references: AttributeSet = AttributeSet(left.output ++ right.output)
+  override def producedAttributes: AttributeSet = AttributeSet(distAttr ++ rankAttr)
+
+  // the kernels evaluate the condition per candidate pair, as a Filter
+  // evaluates its condition per row
+  override def allowNonDeterministicExpression: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): SpatialJoinPlan =
@@ -112,8 +120,8 @@ object SpatialJoinPlan {
    * sides stem from one plan, the right side's columns are re-aliased
    * with fresh exprIds.
    *
-   * @param condition   the extra condition's split over the two frames'
-   *                    schemas, bound over their concatenation
+   * @param condition   the extra condition over the two frames' columns
+   *                    (their attributes, in the frames' order)
    * @param distance    the name of a distance column to append
    * @param partitioned the partitioned kernel, else the broadcast one
    * @param k           partitioned nearest: rows per left row
@@ -126,7 +134,7 @@ object SpatialJoinPlan {
       left: DataFrame, right: DataFrame,
       leftWkb: Column, rightWkb: Column,
       predicate: SpatialPredicate,
-      condition: (StructType, StructType) => Option[PairCondition.Split],
+      condition: (Seq[Attribute], Seq[Attribute]) => Option[Expression],
       mode: SpatialJoinMode,
       distance: Option[String],
       partitioned: Boolean,
@@ -147,18 +155,11 @@ object SpatialJoinPlan {
         (p, (a: Attribute) => m(a))
       }
     val rightCols = rightCols0.map(fresh)
-    // the condition binds over the callers' columns; its right references
-    // move past the left working columns
-    val leftWidth = leftCols.length
-    val shift = lp.output.length - leftWidth
-    val split = condition(left.schema, right.schema).map(_.map(_.transform {
-      case b: BoundReference if b.ordinal >= leftWidth => b.copy(ordinal = b.ordinal + shift)
-    }))
     val distAttr = distance.map(AttributeReference(_, IntegerType, nullable = false)())
     val rankAttr = rank.map(AttributeReference(_, LongType, nullable = false)())
     val ties = if (ties0.isEmpty) Seq(rw0) else ties0
-    val node = SpatialJoinPlan(lp, rp, lw, fresh(rw0), predicate, split, mode, partitioned,
-      distAttr, if (ranked) ties.map(fresh) ++ rightCols else Nil, k, rankAttr)
+    val node = SpatialJoinPlan(lp, rp, lw, fresh(rw0), predicate, condition(leftCols, rightCols),
+      mode, partitioned, distAttr, if (ranked) ties.map(fresh) ++ rightCols else Nil, k, rankAttr)
     SpatialJoinStrategy.register(spark)
     val out = node.output
     def in(attrs: Seq[Attribute]): Seq[Attribute] = {
@@ -186,13 +187,15 @@ object SpatialJoinPlan {
   * [[SpatialJoinPlan.build]] registers it on the session. */
 object SpatialJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case p: SpatialJoinPlan if p.partitioned =>
-      PartitionedSpatialJoinExec(planLater(p.left), planLater(p.right),
-        p.leftWkb, p.rightWkb, p.predicate, p.tieOrder, p.k, p.condition, p.mode,
-        p.distAttr, p.rankAttr) :: Nil
     case p: SpatialJoinPlan =>
-      BroadcastSpatialJoinExec(planLater(p.left), planLater(p.right),
-        p.leftWkb, p.rightWkb, p.predicate, p.condition, p.distAttr, p.mode) :: Nil
+      val split = p.condition.map(PairCondition.split(_, p.left.output, p.right.output))
+      if (p.partitioned)
+        PartitionedSpatialJoinExec(planLater(p.left), planLater(p.right),
+          p.leftWkb, p.rightWkb, p.predicate, p.tieOrder, p.k, split, p.mode,
+          p.distAttr, p.rankAttr) :: Nil
+      else
+        BroadcastSpatialJoinExec(planLater(p.left), planLater(p.right),
+          p.leftWkb, p.rightWkb, p.predicate, split, p.distAttr, p.mode) :: Nil
     case _ => Nil
   }
 

@@ -3,9 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Executes named queries through the noop sink and prints the FINAL
-  * (post-AQE) physical plan — `Plans` shows the initial plan only
-  * (`isFinalPlan=false`), which hides AQE coalescing decisions,
-  * runtime join-strategy changes and (missing) exchange reuse.
+  * (post-AQE) physical plan — the initial plan (`isFinalPlan=false`)
+  * hides AQE coalescing decisions, runtime join-strategy changes and
+  * (missing) exchange reuse.
   * Usage: runMain graft.tools.PlanRun [sfDir] q1 q2 ... */
 object PlanRun {
   def main(args: Array[String]): Unit = {

@@ -102,6 +102,14 @@ class GridKnnLeftOuterSpec extends AnyFlatSpec with Matchers {
       .select("id", "poi_id", "knn_rank")
       .collect().map(row).toSet
     got shouldBe Set(("a", null, null), ("b", null, null))
+    // a nearest join is inner or left: semi and anti are rejected
+    for (jt <- Seq("semi", "anti")) withClue(s"joinType=$jt: ") {
+      intercept[IllegalArgumentException] {
+        GridNearestJoin.nearest(input, data,
+          GeoExpressions.wkbPoint(col("lon"), col("lat")),
+          GeoExpressions.wkbPoint(col("plon"), col("plat")), joinType = jt)
+      }.getMessage should include ("inner or left")
+    }
   }
 
   it should "pass __g_-prefixed user columns through untouched" in {

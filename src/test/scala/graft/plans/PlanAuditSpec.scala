@@ -461,9 +461,8 @@ class PlanAuditSpec extends AnyFlatSpec with Matchers {
     // AQE-OFF sessions that makes every
     // per-round join read the snapshot exchange-free (localCheckpoint's
     // LogicalRDD keeps outputPartitioning); under AQE — the default —
-    // the snapshot side is re-planned with its own exchange each round
-    // (probed exhaustively across lazy/eager and explicit-N in
-    // tools/PartProbe). Pin BOTH behaviors: a Spark upgrade that drops
+    // the snapshot side is re-planned with its own exchange each round.
+    // Pin BOTH behaviors: a Spark upgrade that drops
     // the AQE-off preservation silently re-shuffles big static snapshots
     // every round on clusters that disable AQE, and one that STARTS
     // preserving under AQE means the operators' comments (and possibly

@@ -12,9 +12,10 @@ import graft.SparkTestKit.spark
  * conjunct hash-partitions the index, making never-matching probes O(1)
  * instead of O(|right|) — the round-12 sf10 find. These specs pin that
  * the FACTORED path is row-identical to the same condition expressed in
- * shapes the factoring cannot touch (`!=` twice, reversed operand order,
- * residual conjuncts, nulls, ties), across inner/left/semi/anti, and that
- * the executed plan really hashes the keys it should.
+ * shapes the factoring cannot touch (one straddling `x - y = 0`, reversed
+ * operand order, residual conjuncts, nulls, ties), across
+ * inner/left/semi/anti, and that the executed plan really hashes the keys
+ * it should and leaves those twins unhashed.
  */
 class EquiConditionSpec extends AnyFlatSpec with Matchers {
 
@@ -53,11 +54,11 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
       bsj("eq_poi_a").setBroadcast("dataset").setPredicate("nearest")
         .setJoinCondition(cond)
         .transform(input).collect().map(_.mkString("|")).sorted.toSeq
-    // `=` factors; `not !=` + null guard is the same predicate but
-    // cannot factor (no EqualTo conjunct) — the flat kernel's answer
+    // `=` factors; `x - y = 0` + null guard is the same predicate but
+    // cannot factor (one straddling side) — the flat kernel's answer
     val factored = run("right.cat = left.ccat")
     val flat = run(
-      "right.cat is not null and left.ccat is not null and not (right.cat != left.ccat)")
+      "right.cat is not null and left.ccat is not null and right.cat - left.ccat = 0")
     factored shouldBe flat
     // tie inside category 0 resolves to the smaller poi_id (min-index
     // rule survives partitioning)
@@ -76,7 +77,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     for ((jt, pred) <- Seq("inner" -> "nearest", "left" -> "nearest",
         "semi" -> "withindist 2000000", "anti" -> "withindist 2000000")) {
       run(jt, "right.cat = left.ccat", pred) shouldBe run(jt,
-        "right.cat is not null and left.ccat is not null and not (right.cat != left.ccat)",
+        "right.cat is not null and left.ccat is not null and right.cat - left.ccat = 0",
         pred)
     }
     // left outer: cid 13 (key 3: no pois) and cid 14 (null key) miss
@@ -94,7 +95,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     // equi conjunct + residual range: factored result == flat result
     val factored = run("right.cat = left.ccat and right.poi_id < 5")
     val flat = run(
-      "right.cat is not null and left.ccat is not null and not (right.cat != left.ccat) and right.poi_id < 5")
+      "right.cat is not null and left.ccat is not null and right.cat - left.ccat = 0 and right.poi_id < 5")
     factored shouldBe flat
     // id 6 (tie, but >= 5) must lose to id 0 via the residual
     factored.filter(_.startsWith("10|")).head.split("\\|")(4) shouldBe "0"
@@ -110,7 +111,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
         .setJoinCondition(cond)
         .transform(input).collect().map(_.mkString("|")).sorted.toSeq
     val factored = run("right.poi_id % 4 = left.cid % 5")
-    val flat = run("not (right.poi_id % 4 != left.cid % 5)")
+    val flat = run("right.poi_id % 4 - left.cid % 5 = 0")
     factored shouldBe flat
     factored.nonEmpty shouldBe true
   }
@@ -123,14 +124,14 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
         .setJoinCondition(cond)
         .transform(input).collect().map(_.mkString("|")).sorted.toSeq
     // both equalities factor (composite key); the two unfactorable
-    // rewrites below must agree: one with both as !=-nots, one mixed
+    // rewrites below must agree: one with both as `x - y = 0`, one mixed
     // (first factors, second stays residual)
     val both = run("right.cat = left.ccat and right.poi_id % 2 = left.cid % 2")
     val none = run(
-      "right.cat is not null and left.ccat is not null and not (right.cat != left.ccat) " +
-        "and not (right.poi_id % 2 != left.cid % 2)")
+      "right.cat is not null and left.ccat is not null and right.cat - left.ccat = 0 " +
+        "and right.poi_id % 2 - left.cid % 2 = 0")
     val mixed = run(
-      "right.cat = left.ccat and not (right.poi_id % 2 != left.cid % 2)")
+      "right.cat = left.ccat and right.poi_id % 2 - left.cid % 2 = 0")
     both shouldBe none
     both shouldBe mixed
     both.nonEmpty shouldBe true
@@ -151,7 +152,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     }
     val factorable = "right.cat = left.ccat and right.poi_id < 5"
     val flat =
-      "right.cat is not null and left.ccat is not null and not (right.cat != left.ccat) and right.poi_id < 5"
+      "right.cat is not null and left.ccat is not null and right.cat - left.ccat = 0 and right.poi_id < 5"
     for ((pred, jt) <- Seq(("nearest", "inner"), ("nearest", "left"),
         ("withindist 2000000", "inner"))) {
       val g = run("none", pred, factorable, jt)
@@ -161,6 +162,20 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     // kNN through the same operator
     run("none", "nearest", factorable, knn = 2) shouldBe
       run("none", "nearest", flat, knn = 2)
+    // a nondeterministic residual plans and runs on both kernels
+    for (mode <- Seq("dataset", "none"))
+      run(mode, "nearest", factorable + " and rand() < 2.0") shouldBe run(mode, "nearest", factorable)
+    // a condition on an external column that dataColumns leaves out: the
+    // join reads `cat`, the output does not carry it, whichever kernel runs
+    def poiOnly(mode: String): Seq[String] = new BroadcastSpatialJoin()
+      .setDataset("eq_poi_g").setDatasetPoint("plon, plat").setInputPoint("lon, lat")
+      .setDataColumns("poi_id").setBroadcast(mode).setPredicate("nearest")
+      .setJoinCondition(factorable)
+      .transform(input).collect().map(_.mkString("|")).sorted.toSeq
+    val external = poiOnly("dataset")
+    external should not be empty
+    external shouldBe poiOnly("none")
+    external shouldBe poiOnly("auto")
   }
 
   it should "factor null-safe equality (<=>) with null keys MATCHING null rows" in {
@@ -196,14 +211,14 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     // always-false left-referencing disjunct so nothing can factor
     val inCond = "right.cat in (0, 1) and right.cat = left.ccat"
     val inTwin = "(right.cat in (0, 1) or left.cid < -100) and " +
-      "right.cat is not null and left.ccat is not null and not (right.cat != left.ccat)"
+      "right.cat is not null and left.ccat is not null and right.cat - left.ccat = 0"
     // right-only WITHOUT any equi key (single-bucket filtered index)
     val onlyCond = "right.cat in (0, 1)"
     val onlyTwin = "right.cat in (0, 1) or left.cid < -100"
     // left-only guard: probes with ccat >= 2 short-circuit to no-match
     val leftCond = "left.ccat < 2 and right.cat = left.ccat"
     val leftTwin = "(left.ccat < 2 or right.poi_id < -100) and " +
-      "right.cat is not null and left.ccat is not null and not (right.cat != left.ccat)"
+      "right.cat is not null and left.ccat is not null and right.cat - left.ccat = 0"
     for ((c, t) <- Seq(inCond -> inTwin, onlyCond -> onlyTwin, leftCond -> leftTwin);
         jt <- Seq("inner", "left")) {
       run("dataset", c, jt) shouldBe run("dataset", t, jt)
@@ -246,14 +261,14 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
       // cid 12: neither is factored, so neither is ever evaluated there
       val factoredR = run("cast(right.big as int) = left.ccat")
       val flatR = run(
-        "right.big is not null and not (cast(right.big as int) != left.ccat)")
+        "right.big is not null and cast(right.big as int) - left.ccat = 0")
       factoredR shouldBe flatR
       factoredR.size shouldBe 2
       val factoredL = run("right.poi_id = cast(left.ccat as int)")
       // cid 10/11's casts are fine and DO match poi 0/1; cid 12's cast
       // would throw but that probe row has no spatial candidate
       val flatL = run(
-        "left.ccat is not null and not (right.poi_id != cast(left.ccat as int))")
+        "left.ccat is not null and right.poi_id - cast(left.ccat as int) = 0")
       factoredL shouldBe flatL
       factoredL.size shouldBe 2
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
@@ -265,12 +280,15 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     // silently extracts NOTHING and every agreement test above still
     // passes (round-12 found exactly that); pin extraction directly
     import org.apache.spark.sql.types._
-    val ls = StructType(Seq(StructField("a", LongType), StructField("x", DoubleType)))
-    val rs = StructType(Seq(StructField("b", LongType), StructField("y", DoubleType)))
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes
+    import graft.join.PairCondition
+    val ls = toAttributes(StructType(Seq(StructField("a", LongType), StructField("x", DoubleType))))
+    val rs = toAttributes(StructType(Seq(StructField("b", LongType), StructField("y", DoubleType))))
+    def factored(c: org.apache.spark.sql.Column) =
+      PairCondition.split(PairCondition.resolve(spark, c, ls, rs), ls, rs)
     // only deterministic, throw-free conjuncts move, whatever the ANSI
     // setting (graft.join.AnsiFactoringSpec)
-    def keys(c: org.apache.spark.sql.Column) =
-      graft.join.PairCondition.bind(spark, c, ls, rs).equiKeys
+    def keys(c: org.apache.spark.sql.Column) = factored(c).equiKeys
     keys(col("b") % 4 === col("a") % 5).size shouldBe 1
     keys(col("a") === col("b") && col("b") % 2 === col("a") % 2).size shouldBe 2
     // residual-only / straddling / non-equi conjuncts extract nothing
@@ -287,7 +305,7 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     // single-sided extraction: left-only and right-only conjuncts split
     // out; straddling/constant/nondeterministic ones never move
     def sideOnly(c: org.apache.spark.sql.Column) = {
-      val f = graft.join.PairCondition.bind(spark, c, ls, rs)
+      val f = factored(c)
       (f.leftOnly, f.rightOnly)
     }
     val (lo1, ro1) = sideOnly(col("a").isin(1, 2) && col("b") > 3 && col("a") === col("b"))
@@ -326,5 +344,12 @@ class EquiConditionSpec extends AnyFlatSpec with Matchers {
     hashKeys("right.poi_id % 4 = left.cid % 5").size shouldBe 1
     // a down-cast can throw under ANSI: never hashed
     hashKeys("cast(right.big as int) = left.ccat") shouldBe empty
+    // the unfactorable twins above: the condition is optimized with the
+    // plan, and the optimizer rewrites `not (x != y)` into `x = y`, which
+    // hashes; a straddling `x - y = 0` reaches the exec as it was written
+    hashKeys("not (right.poi_id % 4 != left.cid % 5)").size shouldBe 1
+    hashKeys("right.poi_id % 4 - left.cid % 5 = 0") shouldBe empty
+    hashKeys("right.poi_id is not null and left.ccat is not null and " +
+      "right.poi_id - left.ccat = 0") shouldBe empty
   }
 }

@@ -1,12 +1,14 @@
 package graft.transformer
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkTestKit.spark
+import graft.functions.GeoExpressions
 import graft.plans.{BroadcastSpatialJoinExec, PartitionedSpatialJoinExec}
 
 /** The SQL metrics of both spatial execs, pinned on fixed fixtures whose
@@ -58,6 +60,15 @@ class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
     exec.metrics("broadcastTime").isZero shouldBe false
     m("dataSize") shouldBe exec.right.executeCollect()
       .map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
+    // the node reads the WKB, not the WKT it was built from: Catalyst
+    // prunes `wkt` below the exec, and the packed rows are smaller than
+    // rows that keep it
+    exec.right.output.map(_.name) should not contain "wkt"
+    val unpruned = spark.table("metrics_zones")
+      .select(col("zid"), col("wkt"), GeoExpressions.wkbFromWkt(col("wkt")))
+      .queryExecution.executedPlan.executeCollect()
+      .map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
+    m("dataSize") should be < unpruned
     Seq("collectTime", "broadcastTime", "dataSize").map(exec.metrics(_).metricType) shouldBe
       Seq("timing", "timing", "size")
   }
@@ -67,11 +78,14 @@ class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
     ((1 to 5).map(i => (i.toLong, i - 1.0, 0.0)) :+ ((6L, Double.NaN, 0.0)))
       .toDF("sid", "slon", "slat").createOrReplaceTempView("metrics_sites")
     val probes = Seq((1L, 0.1, 0.0), (2L, 2.2, 0.0), (3L, 3.9, 0.0)).toDF("pid", "lon", "lat")
-    def nearest(cond: String) = metricsOf(new BroadcastSpatialJoin()
+    def nearestExec(cond: String) = execOf(new BroadcastSpatialJoin()
       .setDataset("metrics_sites").setDatasetPoint("slon, slat")
       .setInputPoint("lon, lat").setDataColumns("sid")
       .setBroadcast("dataset").setPredicate("nearest").setJoinCondition(cond)
       .transform(probes))
+    def nearest(cond: String) = nearestExec(cond).metrics.map { case (k, m) => k -> m.value }
+    // the coordinates are read once, into the WKB: pruned below the exec
+    nearestExec("").right.output.map(_.name) should contain noneOf ("slon", "slat")
     val plain = nearest("")
     plain("indexedRows") shouldBe 5
     plain("candidates") shouldBe 3 // each probe's first row passes
@@ -88,8 +102,6 @@ class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
   behavior of "PartitionedSpatialJoinExec metrics"
 
   it should "count leaves, replicated rows, candidates, forwarded probes and output rows" in {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.GeoExpressions
     import graft.join.GridNearestJoin
     // two leaves (shuffle width 2): the sites' x centres 0, 1, 10, 11 cut
     // at x = 10, so site 3 sits on the split line and goes to both
@@ -126,8 +138,6 @@ class SpatialJoinMetricsSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "count leaves, replicated rows, candidates, refines and output rows of a within join" in {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.GeoExpressions
     import graft.join.GridSpatialJoin
     import graft.spatial.SpatialPredicate
     // two leaves (shuffle width 2): the zones' x centres 1, 5, 11, 19

@@ -11,9 +11,15 @@ first on each pair, and reads the last JSON line of each run. S and the
 end-to-end metrics are the `run_seconds` and `end_to_end` of the change's
 BENCHMARK.json. Records the host's one-minute load average (load1) just
 before each run. Prints every run with its load1, then per end-to-end
-metric both sides' q1/median/q3 and on how many pairs the change was
-better, and per side how many runs were correct, how many operations
-failed and the range of load1 its runs started at. Each checkout builds
+metric both sides' q1/median/q3, on how many pairs the change was
+better, and the change of the median (relative to the parent's median)
+beside the metric's `bound`. A metric is marked `WORSE` when its median
+moved the wrong way by more than the bound, and `unresolved` when the
+parent's own q1-q3 spread (relative to its median) is wider than the
+bound, so that the runs cannot tell a change within the bound from
+noise, unless every run of the change reads better than every run of
+the parent. Then per side it prints how many runs were correct, how many
+operations failed and the range of load1 its runs started at. Each checkout builds
 its own `target/` on its first run. Exits non-zero when a run gives no
 result line.
 """
@@ -26,10 +32,10 @@ import subprocess
 import sys
 
 def benchmark_of(checkout):
-    """The run length and the (name, better) end-to-end metrics of BENCHMARK.json."""
+    """The run length and the (name, better, bound) end-to-end metrics of BENCHMARK.json."""
     with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
-    return bench["run_seconds"], [(m["name"], m["better"]) for m in bench["end_to_end"]]
+    return bench["run_seconds"], [(m["name"], m["better"], m["bound"]) for m in bench["end_to_end"]]
 
 
 def run(checkout, workload, seed, seconds):
@@ -48,6 +54,24 @@ def quartiles(xs):
         return xs[0], xs[0], xs[0]
     q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q2, q3
+
+
+def verdict(parent, change, better, bound):
+    """The relative change of the median and its marks: `WORSE` past the
+    bound, `unresolved` when the parent's q1-q3 spread is wider than the
+    bound and not every run of the change beats every run of the parent."""
+    q1, median, q3 = quartiles(parent)
+    if median == 0:
+        return float("nan"), ["unresolved"]
+    moved = (quartiles(change)[1] - median) / abs(median)
+    worse = moved if better == "lower" else -moved
+    all_better = max(change) < min(parent) if better == "lower" else min(change) > max(parent)
+    marks = []
+    if worse > bound:
+        marks.append("WORSE")
+    if (q3 - q1) / abs(median) > bound and not all_better:
+        marks.append("unresolved")
+    return moved, marks or ["ok"]
 
 
 def main():
@@ -76,14 +100,16 @@ def main():
                   flush=True)
 
     print(f"\n{args.workload}, {args.pairs} pairs: parent q1/median/q3 -> change q1/median/q3, "
-          "change better")
-    for name, better in metrics:
+          "change better, median change (bound), verdict")
+    for name, better, bound in metrics:
         p = [r["metrics"][name]["value"] for r in results["parent"]]
         c = [r["metrics"][name]["value"] for r in results["change"]]
         wins = sum((cv < pv) if better == "lower" else (cv > pv) for pv, cv in zip(p, c))
         pq, cq = quartiles(p), quartiles(c)
+        moved, marks = verdict(p, c, better, bound)
         print(f"  {name:13} " + "/".join(f"{x:.4g}" for x in pq) + " -> "
-              + "/".join(f"{x:.4g}" for x in cq) + f"  {wins}/{args.pairs}")
+              + "/".join(f"{x:.4g}" for x in cq) + f"  {wins}/{args.pairs}"
+              + f"  {moved:+.1%} ({bound:.0%})  {', '.join(marks)}")
     for side in ("parent", "change"):
         rs = results[side]
         loads = [r["load1"] for r in rs]
