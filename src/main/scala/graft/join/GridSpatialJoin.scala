@@ -75,9 +75,12 @@ object GridSpatialJoin {
       distanceCol: Option[String]): DataFrame = {
     val dup = left.columns.toSet.intersect(right.columns.toSet)
     require(dup.isEmpty, s"column names must be disjoint, both sides have: ${dup.mkString(", ")}")
+    // nearest's tie order: the tie-break (the right WKB by default), then
+    // every right column
+    val ties = tieBreak.getOrElse(rightWkb) +: right.queryExecution.analyzed.output.map(ColumnBridge.column)
     val j = SpatialJoinPlan.build(left, right, leftWkb, rightWkb, predicate,
       (l, r) => condition.map(PairCondition.resolve(left.sparkSession, _, l, r)), mode, distanceCol,
-      partitioned = true, k, rankCol, tieBreak.toSeq)
+      partitioned = true, k, rankCol, ties)
     j.df.select((j.left ++ j.right ++ j.distance ++ j.rank).map(ColumnBridge.column): _*)
   }
 }

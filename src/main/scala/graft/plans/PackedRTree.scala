@@ -48,7 +48,8 @@ final class PackedRTree private (
       var e = start
       while (e < end) {
         val b = e << 2
-        if (maxX >= boxes(b) && maxY >= boxes(b + 1) && minX <= boxes(b + 2) && minY <= boxes(b + 3)) {
+        // `&`, not `&&`: one branch per entry, not four hard-to-predict ones
+        if ((maxX >= boxes(b)) & (maxY >= boxes(b + 1)) & (minX <= boxes(b + 2)) & (minY <= boxes(b + 3))) {
           if (e < numItems) {
             if (n == out.length) out = java.util.Arrays.copyOf(out, n * 2)
             out(n) = ids(e); n += 1

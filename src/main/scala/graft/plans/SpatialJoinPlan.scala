@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, AttributeReference, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, AttributeReference, AttributeSet, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project, SupportsNonDeterministicExpression}
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
@@ -112,9 +112,10 @@ object SpatialJoinPlan {
    * The one builder of a spatial join: `left op right` as one
    * [[SpatialJoinPlan]].
    *
-   * The WKB columns (and the tie-break) are resolved over their frames:
+   * The WKB columns (and the tie order) are resolved over their frames:
    * a column of the frame is used in place, any other expression is
-   * appended as a working column. Everything is bound by exprId, so a
+   * appended as a working column, once however often it is given (a tie
+   * order may name the right WKB). Everything is bound by exprId, so a
    * working column never replaces or shadows a column of the callers,
    * whatever its name, and the sides may share column names. When both
    * sides stem from one plan, the right side's columns are re-aliased
@@ -126,9 +127,11 @@ object SpatialJoinPlan {
    * @param partitioned the partitioned kernel, else the broadcast one
    * @param k           partitioned nearest: rows per left row
    * @param rank        partitioned nearest: the name of a rank column
-   * @param tieBreak    partitioned nearest: columns of `right` that order
-   *                    rows at equal distance, before all of the right
-   *                    columns; empty = the right WKB
+   * @param tieOrder    partitioned nearest (required there): the whole
+   *                    order of `right`'s rows at equal distance,
+   *                    ascending, nulls first; rows equal under it are
+   *                    ranked in no set order, so a caller names every
+   *                    column its output shows, or a key
    */
   def build(
       left: DataFrame, right: DataFrame,
@@ -140,11 +143,12 @@ object SpatialJoinPlan {
       partitioned: Boolean,
       k: Int = 1,
       rank: Option[String] = None,
-      tieBreak: Seq[Column] = Nil): SpatialJoin = {
+      tieOrder: Seq[Column] = Nil): SpatialJoin = {
     val spark = left.sparkSession.asInstanceOf[SparkSession]
     val ranked = partitioned && predicate == SpatialPredicate.Nearest
+    require(!ranked || tieOrder.nonEmpty, "the partitioned nearest join needs a tie order")
     val (lp, leftCols, Seq(lw)) = withColumns(left, Seq(leftWkb))
-    val (rp0, rightCols0, rw0 +: ties0) = withColumns(right, rightWkb +: (if (ranked) tieBreak else Nil))
+    val (rp0, rightCols0, rw0 +: ties) = withColumns(right, rightWkb +: (if (ranked) tieOrder else Nil))
     // self-join: downstream by-attribute resolution would collapse the
     // sides onto one another
     val (rp, fresh) =
@@ -157,9 +161,8 @@ object SpatialJoinPlan {
     val rightCols = rightCols0.map(fresh)
     val distAttr = distance.map(AttributeReference(_, IntegerType, nullable = false)())
     val rankAttr = rank.map(AttributeReference(_, LongType, nullable = false)())
-    val ties = if (ties0.isEmpty) Seq(rw0) else ties0
     val node = SpatialJoinPlan(lp, rp, lw, fresh(rw0), predicate, condition(leftCols, rightCols),
-      mode, partitioned, distAttr, if (ranked) ties.map(fresh) ++ rightCols else Nil, k, rankAttr)
+      mode, partitioned, distAttr, ties.map(fresh), k, rankAttr)
     SpatialJoinStrategy.register(spark)
     val out = node.output
     def in(attrs: Seq[Attribute]): Seq[Attribute] = {
@@ -175,9 +178,11 @@ object SpatialJoinPlan {
   private def withColumns(df: DataFrame, cols: Seq[Column]): (LogicalPlan, Seq[Attribute], Seq[Attribute]) =
     df.select(cols: _*).queryExecution.analyzed match {
       case Project(list, child) =>
-        val added = list.filterNot(e => e.isInstanceOf[Attribute] && child.outputSet.contains(e.toAttribute))
-        (if (added.isEmpty) child else Project(child.output ++ added, child),
-          child.output, list.map(_.toAttribute))
+        // an expression given again stands for its first working column
+        def body(e: NamedExpression): Expression = e match { case Alias(c, _) => c; case _ => e }
+        val attrs = list.map(e => list.find(f => body(f).semanticEquals(body(e))).get.toAttribute)
+        val added = list.filter(e => !child.outputSet.contains(e.toAttribute) && attrs.contains(e.toAttribute))
+        (if (added.isEmpty) child else Project(child.output ++ added, child), child.output, attrs)
       case other => throw new IllegalArgumentException(
         s"spatial join columns must be row-wise expressions, got ${other.nodeName}")
     }

@@ -2,10 +2,10 @@ package graft.plans
 
 import java.util.concurrent.atomic.AtomicReferenceArray
 
-import org.locationtech.jts.geom.{Envelope, Geometry, Point}
+import org.locationtech.jts.geom.{Envelope, Geometry, Location, Point}
 import org.locationtech.jts.index.strtree.STRtree
 
-import graft.spatial.{GeoKit, Geodesic, SpatialPredicate}
+import graft.spatial.{GeoKit, Geodesic, PolygonWkb, SpatialPredicate}
 
 /**
  * A [[FlatSpatialIndex]] over collected rows and their WKB, as the
@@ -69,6 +69,14 @@ final class FlatSpatialIndex private (
   def entry(i: Int): Int = leafOf(i)
   def x(i: Int): Double = rtree.boxes(leafOf(i) << 2)
   def y(i: Int): Double = rtree.boxes((leafOf(i) << 2) + 1)
+
+  /** Whether indexed row `i`'s box, its geometry's envelope, covers
+    * (x, y); false for a NaN ordinate. */
+  def covers(i: Int, x: Double, y: Double): Boolean = {
+    val b = leafOf(i) << 2
+    val boxes = rtree.boxes
+    x >= boxes(b) && y >= boxes(b + 1) && x <= boxes(b + 2) && y <= boxes(b + 3)
+  }
 
   /** Row `i`'s geometry, null when the row is not indexed. A point is
     * built anew on each call; any other geometry decodes once, from
@@ -180,7 +188,11 @@ object FlatSpatialIndex {
  * Row-representation-agnostic probe kernel over a [[FlatSpatialIndex]]:
  * nearest, withindist (latitude-aware strictly over-approximating
  * envelope prefilter + exact geodesic refine), and the JTS relation
- * predicates. Semantics pinned by the reference's 16 golden tests (see
+ * predicates. A point probe `within` a row that is not a point is
+ * refined on the row's WKB ([[graft.spatial.PolygonWkb]]), so the row's
+ * polygon is never decoded; a row that is not a plain closed 2-D
+ * polygon falls back to `SpatialPredicate.relates` on the decoded
+ * geometry. Semantics pinned by the reference's 16 golden tests (see
  * graft.transformer.BroadcastSpatialJoinSpec).
  *
  * One probe serves one thread: it owns the nearest search's heap and the
@@ -253,12 +265,31 @@ final class SpatialProbe(index: FlatSpatialIndex, wkbOf: Int => Array[Byte]) {
         })
       case rel =>
         val m = if (needDist) metres(g) else null
+        val related = relation(rel, g)
         hits(candidatesIn, { i =>
           refines += 1
-          if (rel.relates(g, geom(i)) && condEval(i)) (if (needDist) m(i) else 0)
+          if (related(i) && condEval(i)) (if (needDist) m(i) else 0)
           else -1
         })
     }
+  }
+
+  /** `rel.relates(g, row i)`, by row. A point within a row that is not a
+    * point is refined on the row's WKB ([[PolygonWkb.locate]]), so no JTS
+    * polygon is built: the row's item box is the envelope test, and a row
+    * that is not a plain polygon is decoded and handed to `relates`, as
+    * every other pair is. */
+  private def relation(rel: SpatialPredicate, g: Geometry): Int => Boolean = (rel, g) match {
+    case (SpatialPredicate.Within, p: Point) if !p.isEmpty =>
+      val x = p.getX
+      val y = p.getY
+      i =>
+        if (index.isPoint(i)) rel.relates(g, geom(i))
+        else index.covers(i, x, y) && (PolygonWkb.locate(x, y, wkbOf(i)) match {
+          case PolygonWkb.NotPlain => rel.relates(g, geom(i))
+          case loc => loc == Location.INTERIOR
+        })
+    case _ => i => rel.relates(g, geom(i))
   }
 
   /** The candidate rows in ascending order, each kept when `refine`

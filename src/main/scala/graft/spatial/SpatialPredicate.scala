@@ -26,7 +26,13 @@ import org.locationtech.jts.geom.{Geometry, Location, Point, Polygon}
  * answers. Relate throws `TopologyException` on many invalid polygons
  * (self-crossing shells, crossing holes); for a point and one polygon
  * the locator answers instead. Every other pair of geometry types,
- * `MultiPolygon` included, still goes through JTS relate.
+ * `MultiPolygon` included, still goes through JTS relate. The kernels
+ * reach `within` of a point probe and an indexed polygon row without
+ * decoding the row: `SpatialProbe` runs the same locate on the row's WKB
+ * bytes ([[PolygonWkb]]) and calls `relates` only for a row that is not
+ * a plain closed 2-D polygon (a multipolygon, EWKB with a SRID, Z or M
+ * ordinates, an open ring or one of fewer than 4 points, a non-finite
+ * ordinate), so both paths give one answer.
  */
 sealed trait SpatialPredicate extends Serializable {
   /** Exact relation test, `left op right` where left is the iterated side. */

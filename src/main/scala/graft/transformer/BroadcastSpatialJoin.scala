@@ -364,12 +364,15 @@ class BroadcastSpatialJoin(override val uid: String)
     val (iterDF, iterSpec, bcDF, bcSpec) =
       if (cfg.broadcastInput) (cfg.externalDF, cfg.externalSpec, input, cfg.inputSpec)
       else (input, cfg.inputSpec, cfg.externalDF, cfg.externalSpec)
-    // partitioned nearest breaks distance ties by the data columns
-    val j = SpatialJoinPlan.build(iterDF, bcDF, wkbColOf(iterSpec), wkbColOf(bcSpec),
+    // partitioned nearest breaks distance ties by the data columns, then
+    // the right WKB: rows equal under both give equal output rows, the
+    // distance included, so no other right column is read
+    val bcWkb = wkbColOf(bcSpec)
+    val j = SpatialJoinPlan.build(iterDF, bcDF, wkbColOf(iterSpec), bcWkb,
       cfg.spatialPredicate, PairCondition.compile(spark, cfg.conditionSql, _, _), cfg.joinMode,
       Some(cfg.distanceAlias).filter(_.nonEmpty), partitioned = cfg.gridMode, k = cfg.knn,
       rank = if (cfg.knn > 1) Some("knn_rank") else None,
-      tieBreak = cfg.dataCols.distinct.map(F.col))
+      tieOrder = cfg.dataCols.distinct.map(F.col) :+ bcWkb)
 
     // final projection BY ATTRIBUTE (names may repeat across the sides):
     // input columns ++ alias-renamed selected external columns ++

@@ -1,8 +1,12 @@
 package graft.spatial
 
+import java.nio.{ByteBuffer, ByteOrder}
+
 import scala.util.{Failure, Success, Try}
 
-import org.locationtech.jts.geom.{Coordinate, Geometry, Point, Polygon, TopologyException}
+import org.locationtech.jts.algorithm.locate.SimplePointInAreaLocator
+import org.locationtech.jts.geom.{Coordinate, Geometry, Location, Point, Polygon, TopologyException}
+import org.locationtech.jts.io.{ByteOrderValues, WKBWriter}
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -13,7 +17,10 @@ import org.scalatest.matchers.should.Matchers
  * too) and as `MultiPolygon`s, probed at vertices, edge midpoints, hole
  * centres, snapped grid points, random spots, `POINT EMPTY` and NaN
  * ordinates, it must answer exactly what JTS relate answers wherever
- * relate answers.
+ * relate answers. The WKB refine the kernels run for a point within a
+ * polygon row (`PolygonWkb.locate`, through `SpatialProbe`) must answer
+ * exactly what `SimplePointInAreaLocator` answers, and hand every shape
+ * it does not read to JTS.
  */
 class RefineSpec extends AnyFlatSpec with Matchers {
 
@@ -136,5 +143,92 @@ class RefineSpec extends AnyFlatSpec with Matchers {
     an[TopologyException] should be thrownBy p.within(bad)
     Within.relates(p, bad) shouldBe true
     Contains.relates(bad, p) shouldBe true
+  }
+
+  private def wkb(g: Geometry, order: Int): Array[Byte] = new WKBWriter(2, order).write(g)
+
+  /** Whether the probe kernel finds `p` within the one indexed row `w`. */
+  private def probeWithin(p: Point, w: Array[Byte]): Boolean =
+    new graft.plans.SpatialProbe(Array(w))
+      .matches(p, Within, graft.plans.SpatialProbe.AlwaysTrue, needDist = false).hasNext
+
+  "PolygonWkb.locate" should "equal SimplePointInAreaLocator on the seeded polygons, in both byte orders" in {
+    var compared = 0; var inside = 0; var boundary = 0; var selfCrossing = 0
+    for (seed <- 1 to 40) {
+      val rnd = new java.util.Random(seed)
+      for (kind <- 0 to 3) {
+        val shell = shellOf(kind, rnd)
+        val poly = polygon(shell, holesOf(shell, rnd))
+        if (kind == 2 && !poly.isValid) selfCrossing += 1
+        val be = wkb(poly, ByteOrderValues.BIG_ENDIAN)
+        val le = wkb(poly, ByteOrderValues.LITTLE_ENDIAN)
+        for (p <- probesOf(poly, rnd) if !p.isEmpty) {
+          val c = p.getCoordinate
+          val want = SimplePointInAreaLocator.locate(c, poly)
+          withClue(s"p=$p poly=$poly: ") {
+            PolygonWkb.locate(c.x, c.y, be) shouldBe want
+            PolygonWkb.locate(c.x, c.y, le) shouldBe want
+            probeWithin(p, le) shouldBe Within.relates(p, poly)
+          }
+          compared += 1
+          if (want == Location.INTERIOR) inside += 1
+          if (want == Location.BOUNDARY) boundary += 1
+        }
+      }
+    }
+    compared should be > 10000
+    inside should be > 2000
+    boundary should be > 1000
+    selfCrossing should be > 0
+  }
+
+  /** A polygon's WKB written by hand: `rings` as given, open or short
+    * ones included, under the type word `typeWord`. */
+  private def handWkb(order: ByteOrder, typeWord: Int, rings: Seq[Seq[(Double, Double)]]): Array[Byte] = {
+    val b = ByteBuffer.allocate(9 + rings.map(r => 4 + 16 * r.length).sum).order(order)
+    b.put((if (order == ByteOrder.BIG_ENDIAN) 0 else 1).toByte).putInt(typeWord).putInt(rings.length)
+    rings.foreach { r => b.putInt(r.length); r.foreach { case (x, y) => b.putDouble(x).putDouble(y) } }
+    b.array()
+  }
+
+  it should "hand every shape it does not read to JTS, which answers" in {
+    val sq = Seq((0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0))
+    val plain = polygon(sq.init, Seq(square(2, 2, 0.5)))
+    val zPoly = gf.createPolygon(sq.map { case (x, y) => new Coordinate(x, y, 7) }.toArray)
+    val withSrid = gf.createPolygon(ring(sq.init)); withSrid.setSRID(4326)
+    val multi = gf.createMultiPolygon(Array(plain, polygon(square(10, 10, 1), Nil)))
+    val shapes = Seq(
+      "multipolygon" -> wkb(multi, ByteOrderValues.LITTLE_ENDIAN),
+      "EWKB with SRID" -> new WKBWriter(2, ByteOrderValues.LITTLE_ENDIAN, true).write(withSrid),
+      "Z coordinate" -> new WKBWriter(3, ByteOrderValues.BIG_ENDIAN).write(zPoly),
+      "open ring" -> handWkb(ByteOrder.LITTLE_ENDIAN, 3, Seq(sq.init)),
+      "3-point ring" -> handWkb(ByteOrder.BIG_ENDIAN, 3, Seq(Seq((0.0, 0.0), (4.0, 0.0), (0.0, 4.0)))),
+      "POLYGON EMPTY" -> wkb(gf.createPolygon(), ByteOrderValues.LITTLE_ENDIAN),
+      "NaN ordinate" -> handWkb(ByteOrder.LITTLE_ENDIAN, 3,
+        Seq(Seq((0.0, 0.0), (4.0, Double.NaN), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)))),
+      "NaN in a hole" -> handWkb(ByteOrder.BIG_ENDIAN, 3,
+        Seq(sq, Seq((1.0, 1.0), (2.0, 1.0), (Double.NaN, 2.0), (1.0, 1.0)))))
+    val probes = Seq(pt(1, 1), pt(2, 2), pt(0.5, 3), pt(4, 2), pt(0, 0), pt(5, 5), pt(10, 10), pt(1.5, 1))
+    var insideSomewhere = 0
+    for ((name, w) <- shapes) withClue(s"$name: ") {
+      val g = GeoKit.wkbToGeom(w)
+      for (p <- probes) {
+        PolygonWkb.locate(p.getX, p.getY, w) shouldBe PolygonWkb.NotPlain
+        val want = g != null && Within.relates(p, g)
+        if (want) insideSomewhere += 1
+        withClue(s"p=$p: ") { probeWithin(p, w) shouldBe want }
+      }
+    }
+    insideSomewhere should be > 10
+    // and the same polygon, plain, is read
+    PolygonWkb.locate(1, 1, wkb(plain, ByteOrderValues.LITTLE_ENDIAN)) shouldBe Location.INTERIOR
+    PolygonWkb.locate(2, 2, handWkb(ByteOrder.BIG_ENDIAN, 3, Seq(sq))) shouldBe Location.INTERIOR
+  }
+
+  it should "not read past a truncated buffer" in {
+    val w = wkb(polygon(square(2, 2, 1), Nil), ByteOrderValues.LITTLE_ENDIAN)
+    for (n <- 0 until w.length)
+      PolygonWkb.locate(2, 2, java.util.Arrays.copyOf(w, n)) shouldBe PolygonWkb.NotPlain
+    PolygonWkb.locate(2, 2, null) shouldBe PolygonWkb.NotPlain
   }
 }
