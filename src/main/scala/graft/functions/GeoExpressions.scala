@@ -8,7 +8,7 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.spatial.{GeoKit, Geodesic, SpatialPredicate}
+import graft.spatial.{GeoKit, Geodesic, PlainWkt, SpatialPredicate}
 
 /**
  * WKB-geometry Catalyst expressions: the transformer lifts each side's
@@ -52,28 +52,21 @@ object GeoExpressions {
 
   // --- static helpers shared by eval and generated code -----------------
 
+  /** The WKB of `wkt`, null for an empty geometry. Plain 2-D point and
+    * polygon text is written straight to WKB ([[PlainWkt]]); any other
+    * text goes through JTS, whose answer stands. */
   def computeWkbFromWkt(wkt: UTF8String): Array[Byte] = {
-    val g = GeoKit.wktToGeom(wkt.toString)
-    if (g == null) null else GeoKit.geomToWkb(g)
+    val plain = PlainWkt.toWkb(wkt)
+    if (plain != null) plain
+    else {
+      val g = GeoKit.wktToGeom(wkt.toString)
+      if (g == null) null else GeoKit.geomToWkb(g)
+    }
   }
 
-  /** The 21 bytes `GeoKit.geomToWkb(GeoKit.point(lon, lat))` writes,
-    * built in place (the writer twin of `isPointWkb`/`readDouble`):
-    * byte order 0 = big-endian, type 1 = Point, then x and y as
-    * `doubleToLongBits` (NaN canonical, as JTS writes it). */
-  def computeWkbPoint(lon: Double, lat: Double): Array[Byte] = {
-    val b = new Array[Byte](21)
-    b(4) = 1
-    writeDouble(b, 5, lon)
-    writeDouble(b, 13, lat)
-    b
-  }
-
-  @inline private def writeDouble(b: Array[Byte], off: Int, v: Double): Unit = {
-    var bits = java.lang.Double.doubleToLongBits(v)
-    var i = off + 7
-    while (i >= off) { b(i) = bits.toByte; bits >>>= 8; i -= 1 }
-  }
+  /** The 21 bytes `GeoKit.geomToWkb(GeoKit.point(lon, lat))` writes
+    * ([[GeoKit.pointWkb]]). */
+  def computeWkbPoint(lon: Double, lat: Double): Array[Byte] = GeoKit.pointWkb(lon, lat)
 
   /** The relation predicates, indexed by the ordinal generated code carries. */
   private val Relations: Array[SpatialPredicate] = Array(SpatialPredicate.Within,
@@ -137,8 +130,11 @@ case class WkbFromWkt(child: Expression) extends UnaryExpression with ExpectsInp
   override def nullable: Boolean = true
   override def nullSafeEval(v: Any): Any =
     GeoExpressions.computeWkbFromWkt(v.asInstanceOf[UTF8String])
+  // null for an empty geometry, as in eval: set isNull, as StEnvelope does
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GeoExpressions.computeWkbFromWkt($c)")
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.functions.GeoExpressions.computeWkbFromWkt($c);
+      if (${ev.value} == null) { ${ev.isNull} = true; }""")
   override protected def withNewChildInternal(n: Expression): WkbFromWkt = copy(child = n)
   override def prettyName: String = "wkb_from_wkt"
 }

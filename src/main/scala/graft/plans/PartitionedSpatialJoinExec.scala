@@ -1,5 +1,7 @@
 package graft.plans
 
+import java.util.function.IntFunction
+
 import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -474,7 +476,7 @@ private[plans] final class Leaf(
     recAttrs: Seq[Attribute], rightAttrs: Seq[Attribute]) {
 
   ordering.foreach(java.util.Arrays.sort(rows, _))
-  private val wkbOf: Int => Array[Byte] = i =>
+  private val wkbOf: IntFunction[Array[Byte]] = i =>
     if (rows(i).isNullAt(rIdx)) null else rows(i).getBinary(rIdx)
   private val index = FlatSpatialIndex(rows.length, wkbOf)
   val probe = new SpatialProbe(index, wkbOf)

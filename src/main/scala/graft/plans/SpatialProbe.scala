@@ -1,6 +1,7 @@
 package graft.plans
 
 import java.util.concurrent.atomic.AtomicReferenceArray
+import java.util.function.IntFunction
 
 import org.locationtech.jts.geom.{Envelope, Geometry, Location, Point}
 import org.locationtech.jts.index.strtree.STRtree
@@ -81,7 +82,7 @@ final class FlatSpatialIndex private (
   /** Row `i`'s geometry, null when the row is not indexed. A point is
     * built anew on each call; any other geometry decodes once, from
     * `wkbOf(i)`, the WKB the index was built from. */
-  def geom(i: Int, wkbOf: Int => Array[Byte]): Geometry =
+  def geom(i: Int, wkbOf: IntFunction[Array[Byte]]): Geometry =
     if (leafOf(i) < 0) null
     else if (isPoint(i)) GeoKit.point(x(i), y(i))
     else {
@@ -125,8 +126,9 @@ final class FlatSpatialIndex private (
 object FlatSpatialIndex {
 
   /** Indexes `n` rows, row `i` having the WKB `wkbOf(i)` (null for a
-    * null geometry). */
-  def apply(n: Int, wkbOf: Int => Array[Byte]): FlatSpatialIndex = {
+    * null geometry). `wkbOf` is an `IntFunction`, whose `apply` takes the
+    * row index as an `Int`: a Scala `Int => Array[Byte]` boxes it. */
+  def apply(n: Int, wkbOf: IntFunction[Array[Byte]]): FlatSpatialIndex = {
     val b = new Builder(n)
     var i = 0
     while (i < n) {
@@ -204,7 +206,7 @@ object FlatSpatialIndex {
  * @param wkbOf the WKB of indexed row `i`, read when its geometry is not
  *              a point and this JVM has not decoded it yet
  */
-final class SpatialProbe(index: FlatSpatialIndex, wkbOf: Int => Array[Byte]) {
+final class SpatialProbe(index: FlatSpatialIndex, wkbOf: IntFunction[Array[Byte]]) {
 
   /** The flat index of `wkbs`, reading its geometries back from them. */
   def this(wkbs: Array[Array[Byte]]) = this(FlatSpatialIndex(wkbs.length, wkbs(_)), wkbs(_))

@@ -1,6 +1,7 @@
 package graft.spatial
 
-import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory, PrecisionModel}
+import org.locationtech.jts.geom.{Coordinate, CoordinateXY, Geometry, GeometryFactory, PrecisionModel}
+import org.locationtech.jts.geom.impl.CoordinateArraySequence
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
 
 /**
@@ -54,10 +55,23 @@ object GeoKit {
     * distance 0 from everything, so it must never reach a kernel. */
   def wkbToGeom(wkb: Array[Byte]): Geometry =
     if (wkb == null || wkb.isEmpty) null
+    else if (isPointWkb(wkb)) pointOfWkb(wkb)
     else {
       val g = tlWkbReader.get().read(wkb)
       if (g.isEmpty) null else g
     }
+
+  /** The point `WKBReader` reads from a 2-D point WKB ([[isPointWkb]]),
+    * decoded in place: one `CoordinateXY` in a `CoordinateArraySequence`
+    * of dimension 2, with the factory's SRID; null for a NaN ordinate,
+    * which the reader reads as `POINT EMPTY`. */
+  private def pointOfWkb(wkb: Array[Byte]): Geometry = {
+    val be = wkb(0) == 0
+    val x = readDouble(wkb, 5, be)
+    val y = readDouble(wkb, 13, be)
+    if (x.isNaN || y.isNaN) null
+    else factory.createPoint(new CoordinateArraySequence(Array[Coordinate](new CoordinateXY(x, y)), 2, 0))
+  }
 
   /** True for the 21-byte WKB of a 2-D point (byte order, type 1, x, y),
     * in either byte order; false for SRID-flagged, Z/M and other types. */
@@ -78,6 +92,25 @@ object GeoKit {
       while (i >= off) { bits = (bits << 8) | (b(i) & 0xffL); i -= 1 }
     }
     java.lang.Double.longBitsToDouble(bits)
+  }
+
+  /** The 21 bytes `geomToWkb(point(x, y))` writes, built in place (the
+    * writer twin of [[isPointWkb]]): byte order 0 = big-endian, type 1 =
+    * Point, then x and y ([[writeDouble]]). */
+  def pointWkb(x: Double, y: Double): Array[Byte] = {
+    val b = new Array[Byte](21)
+    b(4) = 1
+    writeDouble(b, 5, x)
+    writeDouble(b, 13, y)
+    b
+  }
+
+  /** Writes `v` big-endian at `off`, as `doubleToLongBits` (NaN canonical,
+    * as JTS's `WKBWriter` writes it): the writer twin of [[readDouble]]. */
+  @inline def writeDouble(b: Array[Byte], off: Int, v: Double): Unit = {
+    var bits = java.lang.Double.doubleToLongBits(v)
+    var i = off + 7
+    while (i >= off) { b(i) = bits.toByte; bits >>>= 8; i -= 1 }
   }
 
   // Per-thread direct-mapped parse cache for PAIRWISE hot paths

@@ -67,4 +67,25 @@ class EmptyGeometrySpec extends AnyFlatSpec with Matchers {
     left - 9L shouldBe inner
     run("eg_dist_g", "none", "inner", dist = true) shouldBe inner
   }
+
+  // A parquet scan runs `wkb_from_wkt` in generated code (a local
+  // relation evaluates it interpreted): an empty geometry's null WKB must
+  // be a null value there too, not a null array written into the row.
+  it should "drop POLYGON EMPTY, blank and null WKT read from parquet, on both kernels" in {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-wkt").toString
+    Seq(("i1", "POINT (1 1)"), ("i2", "POLYGON EMPTY"), ("i3", ""), ("i4", null))
+      .toDF("id", "wkt").write.parquet(s"$dir/input")
+    Seq(("z1", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"), ("z2", "POLYGON EMPTY"), ("z3", ""),
+      ("z4", null)).toDF("zid", "zwkt").write.parquet(s"$dir/zones")
+    spark.read.parquet(s"$dir/zones").createOrReplaceTempView("eg_parquet_zones")
+    val input = spark.read.parquet(s"$dir/input")
+    for (mode <- Seq("external", "none")) withClue(s"broadcast=$mode: ") {
+      new BroadcastSpatialJoin()
+        .setDataset("eg_parquet_zones").setDatasetPoint("").setDatasetWKT("zwkt")
+        .setInputPoint("").setInputWKT("wkt").setDataColumns("zid")
+        .setBroadcast(mode).setPredicate("within")
+        .transform(input).select("id", "zid").as[(String, String)].collect()
+        .toSeq shouldBe Seq(("i1", "z1"))
+    }
+  }
 }

@@ -3,7 +3,7 @@
 
 Usage:
 
-    python3 tools/perfbench_profile.py --checkout DIR --workload W --seed N
+    python3 tools/perfbench_profile.py --checkout DIR --workload W --seed N [--threads PREFIX]
 
 Builds DIR's library and harness as `perfbench/run.py` does (without a
 recording), then runs `python3 perfbench/run.py --workload W --seed N
@@ -22,12 +22,15 @@ flags go in through `JAVA_TOOL_OPTIONS`:
   exits, taking the chunks with it.
 
 Reads the recording's `jdk.ExecutionSample` events with the JDK's `jfr`
-tool and prints, over the samples of the executor threads (`Executor task
-launch worker ...`): the top self frames (the method on top of the stack)
-and the inclusive share of every `graft.*` method (the samples with the
-method anywhere on the stack). Then the run's own result line. The
-recording stays at `--jfr` (by default in a new temporary directory) for
-`jfr print` or JDK Mission Control.
+tool and prints, over the samples of the threads whose name starts with
+`--threads` (by default the executor threads, `Executor task launch worker
+...`): the top self frames (the method on top of the stack) and the
+inclusive share of every `graft.*` method (the samples with the method
+anywhere on the stack). Then the run's own result line. The broadcast
+kernel indexes its collected right side and broadcasts it on the driver's
+`main` thread, not on an executor thread: `--threads main` shows that
+part. The recording stays at `--jfr` (by default in a new temporary
+directory) for `jfr print` or JDK Mission Control.
 """
 
 import argparse
@@ -97,25 +100,25 @@ def samples(jfr):
         raise SystemExit(f"perfbench_profile: jfr print failed on {jfr}")
 
 
-def report(jfr, top):
+def report(jfr, top, prefix):
     total = 0
     self_count = collections.Counter()
     inclusive = collections.Counter()
     threads = 0
     for thread, frames in samples(jfr):
         threads += 1
-        if not thread or not thread.startswith(EXECUTOR_THREAD) or not frames:
+        if not thread or not thread.startswith(prefix) or not frames:
             continue
         total += 1
         self_count[frames[0]] += 1
         inclusive.update({f for f in frames if f.startswith("graft.")})
-    print(f"samples: {threads} in all, {total} on executor threads")
+    print(f"samples: {threads} in all, {total} on threads named '{prefix}...'")
     if total == 0:
         return
-    print(f"\ntop {top} self frames (share of executor samples):")
+    print(f"\ntop {top} self frames (share of those samples):")
     for method, n in self_count.most_common(top):
         print(f"  {n / total:6.1%}  {n:6d}  {method}")
-    print(f"\ngraft.* inclusive (share of executor samples):")
+    print(f"\ngraft.* inclusive (share of those samples):")
     for method, n in inclusive.most_common(top):
         print(f"  {n / total:6.1%}  {n:6d}  {method}")
 
@@ -127,6 +130,9 @@ def main():
     ap.add_argument("--seed", required=True, type=int)
     ap.add_argument("--seconds", type=int, help="run length; default: BENCHMARK.json's run_seconds")
     ap.add_argument("--top", type=int, default=25, help="rows per table (default 25)")
+    ap.add_argument("--threads", default=EXECUTOR_THREAD,
+                    help=f"report the threads whose name starts with this (default '{EXECUTOR_THREAD}'; "
+                         "'main' for the driver's index build and broadcast)")
     ap.add_argument("--jfr", help="where to write the recording (default: a new temporary directory)")
     args = ap.parse_args()
     checkout = os.path.abspath(args.checkout)
@@ -145,7 +151,7 @@ def main():
     finally:
         shutil.rmtree(repository, ignore_errors=True)
     print(f"recording: {jfr}")
-    report(jfr, args.top)
+    report(jfr, args.top, args.threads)
     print(f"\nrun: correct={result['correct']} attempted={result['attempted']} "
           f"failed={result['failed']}")
     print(json.dumps(result["metrics"], sort_keys=True))
