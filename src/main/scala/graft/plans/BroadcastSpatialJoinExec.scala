@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
 import graft.join.PairCondition
@@ -29,10 +28,11 @@ import graft.spatial.SpatialPredicate
  *     arrays. Spark's `BroadcastExchangeExec` is not used: it decodes
  *     every collected row on the driver.
  *
- * Each probe task reads right rows through its own reused views (one for
- * the output, one for the condition, one for decoding a geometry). Output
- * as the logical node's; the distance is filled in where a row is
- * emitted.
+ * Each probe task joins its left rows against the whole right side in
+ * one [[Leaf]], the leaf join the partitioned exec runs per KD leaf:
+ * every probe is at home, nearest is k = 1 with no forwarded hits, and
+ * the left rows carry no probe id. Output as the logical node's; the
+ * distance is filled in where a row is emitted.
  */
 case class BroadcastSpatialJoinExec(
     left: SparkPlan,
@@ -44,8 +44,6 @@ case class BroadcastSpatialJoinExec(
     distAttr: Option[AttributeReference],
     mode: graft.spatial.SpatialJoinMode = graft.spatial.SpatialJoinMode.Inner)
   extends BinaryExecNode {
-
-  import graft.spatial.SpatialJoinMode._
 
   override def output: Seq[Attribute] =
     SpatialJoinPlan.output(left.output, right.output, mode, distAttr, None)
@@ -59,7 +57,7 @@ case class BroadcastSpatialJoinExec(
     * `dataSize` (the packed right rows' bytes) and `indexedRows`; the
     * first three and `dataSize` as Spark's `BroadcastExchangeExec` names
     * and keeps them. The rest add up over the probe tasks. `candidates`
-    * and `refines` are [[SpatialProbe]]'s counters. */
+    * and `refines` are the [[Leaf]]'s [[SpatialProbe]] counters. */
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "collectTime" -> SQLMetrics.createTimingMetric(sparkContext, "time to collect"),
     "indexBuildTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index build time"),
@@ -95,11 +93,7 @@ case class BroadcastSpatialJoinExec(
       right.execute().mapPartitions(it => Iterator.single(PackedRows.pack(it, types))).collect(),
       types.length)
     val t1 = System.nanoTime()
-    val view = new UnsafeRow(rows.numFields)
-    val index = FlatSpatialIndex(rows.numRows, { i =>
-      val r = rows.read(i, view)
-      if (r.isNullAt(rIdx)) null else r.getBinary(rIdx)
-    })
+    val index = Leaf.index(rows, rIdx)
     val t2 = System.nanoTime()
     val bc = sparkContext.broadcast((rows, index))
     val t3 = System.nanoTime()
@@ -116,86 +110,19 @@ case class BroadcastSpatialJoinExec(
 
   override protected def doExecute(): RDD[InternalRow] = probe(packedBroadcast)
 
-  /** The join of the left side against the right side in `bc`. */
+  /** The join of the left side against the right side in `bc`: one
+    * [[Leaf]] per task over the whole right side, every probe at home. */
   private[plans] def probe(bc: Broadcast[(PackedRows, FlatSpatialIndex)]): RDD[InternalRow] = {
     val lIdx = left.output.indexWhere(_.exprId == leftWkb.exprId)
     require(lIdx >= 0, "left wkb attribute must be in child output")
-    val rIdx = rightWkbIndex
-
-    val needDist = distAttr.isDefined
-    val outAttrs = output
-    val pred = predicate
-    val candidatesMetric = metrics("candidates")
-    val refinesMetric = metrics("refines")
-    val numOutputRows = metrics("numOutputRows")
-
-    val joinMode = mode
-    val leftAttrs = left.output
-    val rightAttrs = right.output
-    val rightWidth = rightAttrs.length
-    val cond = condition
-
+    val join = LeafJoin(left.output, left.output.length, lIdx, right.output, rightWkbIndex,
+      predicate, condition, mode, 1, None, output, distAttr.isDefined, withRank = false,
+      metrics("candidates"), metrics("refines"), metrics("numOutputRows"))
+    val nearest = predicate == SpatialPredicate.Nearest
     left.execute().mapPartitions { it =>
       val (rows, index) = bc.value
-      val wkbView = new UnsafeRow(rows.numFields)
-      val probe = new SpatialProbe(index, i => rows.read(i, wkbView).getBinary(rIdx))
-      TaskContext.get().addTaskCompletionListener[Unit] { _ =>
-        candidatesMetric += probe.candidates
-        refinesMetric += probe.refines
-      }
-      val condView = new UnsafeRow(rows.numFields)
-      val indexed = new IndexedCondition(cond, leftAttrs, rightAttrs, index, i => rows.read(i, condView))
-      val outView = new UnsafeRow(rows.numFields)
-      val joined = new JoinedRow
-      val joinedDist = new JoinedRow
-      val distRow = new GenericInternalRow(1)
-      val proj = UnsafeProjection.create(outAttrs, outAttrs)
-      def hitsOf(lrow: InternalRow): Iterator[(Int, Int)] = {
-        val tree = indexed.tree(lrow)
-        if (tree == null) Iterator.empty
-        else probe.matches(graft.spatial.GeoKit.wkbToGeom(lrow.getBinary(lIdx)),
-          pred, indexed.candidate(lrow), needDist, tree)
-      }
-
-      joinMode match {
-        // existence filters: emit the LEFT row alone. hasNext, never
-        // isEmpty — isEmpty would consume the iterator's first element.
-        // A null-geometry row has no match: dropped by semi, kept by anti
-        case Semi =>
-          it.filter(lrow => !lrow.isNullAt(lIdx) && hitsOf(lrow).hasNext)
-            .map { lrow => numOutputRows += 1; proj(lrow) }
-        case Anti =>
-          it.filter(lrow => lrow.isNullAt(lIdx) || !hitsOf(lrow).hasNext)
-            .map { lrow => numOutputRows += 1; proj(lrow) }
-
-        case _ =>
-          val outer = joinMode == LeftOuter
-          // all-null right payload (+ null distance) for left-outer
-          // misses — GenericInternalRow slots default to null
-          val nullRight = new GenericInternalRow(rightWidth)
-          val nullDist = new GenericInternalRow(1)
-          def missRow(lrow: InternalRow): InternalRow = {
-            numOutputRows += 1
-            val base = joined(lrow, nullRight)
-            proj(if (needDist) joinedDist(base, nullDist) else base)
-          }
-          it.flatMap { lrow =>
-            if (lrow.isNullAt(lIdx)) {
-              if (outer) Iterator.single(missRow(lrow)) else Iterator.empty
-            } else {
-              val hits = hitsOf(lrow)
-              if (outer && !hits.hasNext) Iterator.single(missRow(lrow))
-              else hits.map { case (i, d) =>
-                numOutputRows += 1
-                val base = joined(lrow, rows.read(i, outView))
-                val full: InternalRow =
-                  if (needDist) { distRow.setInt(0, d); joinedDist(base, distRow) }
-                  else base
-                proj(full)
-              }
-            }
-          }
-      }
+      val leaf = new Leaf(join, 0, SpatialLeaves.Whole, rows, index).counted()
+      if (nearest) leaf.nearest(it, null) else leaf.relate(it, null)
     }
   }
 }

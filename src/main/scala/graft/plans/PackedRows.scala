@@ -12,8 +12,10 @@ import org.apache.spark.unsafe.Platform
  * made of primitive arrays only, so serializing it is a bulk copy with no
  * per-row object, and no array nears the 2 GB limit. Row `i` is read
  * through a caller's reused [[UnsafeRow]] view that points into its
- * chunk ([[read]]); nothing is copied out. The broadcast kernel ships its
- * right side in this form ([[BroadcastSpatialJoinExec]]).
+ * chunk ([[read]]); nothing is copied out. Both kernels hold their
+ * right side in this form: the broadcast kernel ships it
+ * ([[BroadcastSpatialJoinExec]]), and each partitioned leaf packs its
+ * shuffled rows ([[PartitionedSpatialJoinExec]]).
  *
  * @param chunks   the rows' bytes
  * @param ends     per chunk, the end offset of each of its rows; a row

@@ -234,7 +234,8 @@ final class SpatialProbe(index: FlatSpatialIndex, wkbOf: IntFunction[Array[Byte]
     * searched twice, as it is and shifted a turn to the other side
     * ([[SpatialProbe.wrappedBox]]); a row in both searches counts once.
     * Only rows that `owned` keeps are candidates: the partitioned exec
-    * counts each row in one leaf only. */
+    * counts each row in one leaf only. The nearest branch is harness- and
+    * test-only: both execs search nearest through [[nearestK]]. */
   def matches(g: Geometry, predicate: SpatialPredicate, condEval: Int => Boolean,
       needDist: Boolean, tree: PackedRTree = index.rtree,
       owned: Int => Boolean = SpatialProbe.AlwaysTrue): Iterator[(Int, Int)] = {
@@ -347,7 +348,8 @@ final class SpatialProbe(index: FlatSpatialIndex, wkbOf: IntFunction[Array[Byte]
 
   /** Index of the nearest (JTS `Geometry.distance`) row of `tree` (the
     * whole index by default) passing the condition, or -1; among rows at
-    * the same distance the smallest index wins: [[nearestK]] with k = 1. */
+    * the same distance the smallest index wins: [[nearestK]] with k = 1.
+    * Harness- and test-only: the execs call [[nearestK]]. */
   def nearestMatch(g: Geometry, condEval: Int => Boolean, tree: PackedRTree = index.rtree): Int =
     if (nearestK(g, condEval, 1, Double.PositiveInfinity, nearestRow, nearestDist, tree) == 0) -1
     else nearestRow(0)

@@ -2,13 +2,11 @@ package graft.spatial
 
 import org.locationtech.jts.geom.{Coordinate, CoordinateXY, Geometry, GeometryFactory, PrecisionModel}
 import org.locationtech.jts.geom.impl.CoordinateArraySequence
-import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
+import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader}
 
 /**
  * JTS plumbing: per-thread factories/readers (JTS reader objects are not
- * thread-safe and not serializable), WKT/WKB codecs, and the lon/lat
- * coercion matrix the reference pins
- * (reference: src/main/scala/me/valik/spark/geometry/DatasetGeometry.scala:90-96).
+ * thread-safe and not serializable) and WKT/WKB codecs.
  *
  * CRS is fixed to WGS84 / SRID 4326
  * (reference: DatasetGeometry.scala:35,54-59).
@@ -30,9 +28,6 @@ object GeoKit {
   private val tlWkbWriter = new ThreadLocal[WKBWriter] {
     override def initialValue(): WKBWriter = new WKBWriter()
   }
-  private val tlWktWriter = new ThreadLocal[WKTWriter] {
-    override def initialValue(): WKTWriter = new WKTWriter()
-  }
 
   def factory: GeometryFactory = tlFactory.get()
 
@@ -46,8 +41,6 @@ object GeoKit {
       val g = tlWktReader.get().read(wkt)
       if (g == null || g.isEmpty) null else g
     }
-
-  def geomToWkt(g: Geometry): String = if (g == null) null else tlWktWriter.get().write(g)
 
   /** WKB → Geometry; null input and empty geometries → null, as in
     * [[wktToGeom]]. A lon/lat point with a NaN ordinate encodes to a WKB
@@ -152,16 +145,6 @@ object GeoKit {
 
   def geomToWkb(g: Geometry): Array[Byte] =
     if (g == null) null else tlWkbWriter.get().write(g)
-
-  /** Lon/lat value coercion: Double, Float, String, Int, else toString
-    * (reference: DatasetGeometry.scala:90-96). */
-  def anyToDouble(v: Any): Double = v match {
-    case a: Double => a
-    case a: Float  => a.toDouble
-    case a: String => a.toDouble
-    case a: Int    => a.toDouble
-    case a         => a.toString.toDouble
-  }
 
   def point(lon: Double, lat: Double): Geometry =
     factory.createPoint(new Coordinate(lon, lat))

@@ -1,41 +1,28 @@
 package graft.spatial
 
-import org.apache.spark.sql.Row
-import org.locationtech.jts.geom.Geometry
-
 /**
  * How a DataFrame side encodes its geometry: either a WKT string column or
  * a (lon, lat) point column pair — exactly one per side (reference:
  * src/main/scala/me/valik/spark/geometry/DatasetGeometry.scala:82-120 and
  * the checkParams rule at BroadcastSpatialJoin.scala:190-199).
  *
- * Instances are small serializable specs; geometry materialization happens
- * per row on executors via thread-local JTS factories (GeoKit), never on
- * the driver for the iterated side.
+ * Instances are small serializable specs; the transformer turns each
+ * into a WKB column (lon/lat cast to double, WKT parsed null-safe).
  */
 sealed trait GeomSpec extends Serializable {
-  /** Build the row's geometry; may return null (null/empty WKT). */
-  def geometry(row: Row): Geometry
   /** Column names the spec reads. */
   def columnNames: Seq[String]
 }
 
 object GeomSpec {
 
-  /** Point from (lon, lat) columns, with the reference's coercion matrix. */
+  /** Point from (lon, lat) columns. */
   final case class PointCols(lon: String, lat: String) extends GeomSpec {
-    def geometry(row: Row): Geometry = {
-      val lonV = row.get(row.fieldIndex(lon))
-      val latV = row.get(row.fieldIndex(lat))
-      if (lonV == null || latV == null) null
-      else GeoKit.point(GeoKit.anyToDouble(lonV), GeoKit.anyToDouble(latV))
-    }
     def columnNames: Seq[String] = Seq(lon, lat)
   }
 
   /** Geometry parsed from a WKT string column; null/empty → null geometry. */
   final case class WktCol(wkt: String) extends GeomSpec {
-    def geometry(row: Row): Geometry = GeoKit.wktToGeom(row.getAs[String](wkt))
     def columnNames: Seq[String] = Seq(wkt)
   }
 }

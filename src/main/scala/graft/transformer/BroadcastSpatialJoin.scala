@@ -390,8 +390,8 @@ class BroadcastSpatialJoin(override val uid: String)
     result
   }
 
-  /** GeomSpec → WKB column (same coercions as the reference's per-row
-    * matrix: lon/lat cast to double, WKT parsed null-safe). */
+  /** GeomSpec → WKB column: lon/lat cast to double, WKT parsed
+    * null-safe. */
   private def wkbColOf(spec: GeomSpec): org.apache.spark.sql.Column = {
     import graft.functions.GeoExpressions
     spec match {

@@ -595,4 +595,92 @@ class GridSpatialJoinSpec extends AnyFlatSpec with Matchers {
     out.select("id", "poi_id").collect().map(r => (r.getString(0), r.getString(1))).toSet shouldBe
       Set(("i0", "far"), ("i1", "far"))
   }
+
+  /** A row of the brute-force table: id, lon, lat, WKT, weight, group. */
+  private type Rec = (String, Option[Double], Option[Double], String, Int, Int)
+
+  it should "equal a brute-force nested loop on every predicate, join type, distance and condition" in {
+    // both kernels share one leaf join, so each is checked against a
+    // nested loop over JTS and Geodesic, not against the other. Every
+    // side holds a null row, a POLYGON EMPTY row and a NaN lon/lat row;
+    // seeded coordinates give no two sites the same distance from a probe
+    import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory}
+    import org.locationtech.jts.io.WKTReader
+    import graft.spatial.Geodesic
+    val rnd = new scala.util.Random(15)
+    def side(n: Int, p: String, h: Double): Seq[Rec] = (0 until n).map { i =>
+      // a few rows near +-180, on both sides of it, for withindist
+      val (x, y) =
+        if (i % 7 == 3) ((if (i % 2 == 0) 179.7 else -179.7) + rnd.nextDouble() * 0.2 - 0.1, rnd.nextDouble())
+        else (rnd.nextDouble() * 3, rnd.nextDouble() * 3)
+      val r = h * (0.5 + rnd.nextDouble())
+      val wkt = if (i % 3 == 0) s"POINT ($x $y)" else Seq((x - r, y - r), (x + r, y - r), (x + r, y + r),
+        (x - r, y + r), (x - r, y - r)).map { case (a, b) => s"$a $b" }.mkString("POLYGON ((", ", ", "))")
+      (s"$p$i", Some(x), Some(y), wkt, i * 7 % 23, i % 3): Rec
+    } ++ Seq[Rec]((s"${p}null", None, None, null, 1, 1),
+      (s"${p}empty", Some(Double.NaN), Some(Double.NaN), "POLYGON EMPTY", 2, 2),
+      (s"${p}nan", Some(Double.NaN), Some(0.5), "POINT (1 1)", 3, 0))
+    val probes = side(30, "i", 0.3)
+    val sites = side(24, "d", 0.5)
+    val input = probes.toDF("id", "lon", "lat", "wkt", "w", "g")
+    sites.toDF("poi_id", "lon", "lat", "wkt", "w", "g").createOrReplaceTempView("grid_poi_brute")
+    val condition = "right.g = left.g AND right.w < left.w + 12"
+    def passes(l: Rec, r: Rec) = r._6 == l._6 && r._5 < l._5 + 12
+
+    val gf = new GeometryFactory()
+    def geom(r: Rec, wkt: Boolean): Geometry =
+      if (wkt) Option(r._4).map(new WKTReader(gf).read).filterNot(_.isEmpty).orNull
+      else if (r._2.forall(_.isNaN) || r._3.forall(_.isNaN)) null
+      else gf.createPoint(new Coordinate(r._2.get, r._3.get))
+    // per predicate: (input WKT?, dataset WKT?, left op right)
+    val preds: Seq[(String, Boolean, Boolean, (Geometry, Geometry) => Boolean)] = Seq(
+      ("within", false, true, (l, r) => l.within(r)),
+      ("contains", true, false, (l, r) => l.contains(r)),
+      ("intersects", true, true, (l, r) => l.intersects(r)),
+      ("withindist 80000", false, false, (l, r) => Geodesic.centroidDistance(l, r) <= 80000),
+      ("nearest", false, false, null))
+    var crossing = 0
+    for ((pred, inWkt, dsWkt, op) <- preds; cond <- Seq(false, true)) {
+      // the oracle: each probe's (site, metres) pairs
+      val pairs: Map[String, Seq[(String, Int)]] = probes.map { l =>
+        val gl = geom(l, inWkt)
+        val ok = sites.filter(r => geom(r, dsWkt) != null && gl != null && (!cond || passes(l, r)))
+        val hit =
+          if (op != null) ok.filter(r => op(gl, geom(r, dsWkt)))
+          else ok.sortBy(r => gl.distance(geom(r, dsWkt))).take(1)
+        if (pred.startsWith("withindist")) crossing += hit.count(r => l._2.get * r._2.get < -100.0 * 100.0)
+        l._1 -> hit.map(r => (r._1, Geodesic.centroidDistance(gl, geom(r, dsWkt))))
+      }.toMap
+      val joinTypes = if (op == null) Seq("inner", "left") else Seq("inner", "left", "semi", "anti")
+      for (jt <- joinTypes; dist <- if (existence(jt)) Seq(false) else Seq(false, true)) {
+        val want: Set[String] = jt match {
+          case "semi" => pairs.filter(_._2.nonEmpty).keySet
+          case "anti" => pairs.filter(_._2.isEmpty).keySet
+          case _ => pairs.toSeq.flatMap { case (id, hs) =>
+            val rows = hs.map { case (sid, d) => s"$id|$sid" + (if (dist) s"|$d" else "") }
+            if (rows.isEmpty && jt == "left") Seq(s"$id|null" + (if (dist) "|null" else "")) else rows
+          }.toSet
+        }
+        withClue(s"$pred joinType=$jt cond=$cond oracle: ")(want should not be empty)
+        def go(mode: String): Set[String] = {
+          val t = new BroadcastSpatialJoin().setDataset("grid_poi_brute")
+            .setDataColumns("poi_id").setPredicate(pred).setBroadcast(mode).setJoinType(jt)
+          val geoms = (if (inWkt) t.setInputWKT("wkt") else t.setInputPoint("lon, lat"))
+          val all = if (dsWkt) geoms.setDatasetWKT("wkt") else geoms.setDatasetPoint("lon, lat")
+          val withCond = if (cond) all.setJoinCondition(condition) else all
+          val cols = if (existence(jt)) Seq("id") else Seq("id", "poi_id") ++ (if (dist) Seq("dm") else Nil)
+          (if (dist) withCond.setDistColAlias("dm") else withCond).transform(input)
+            .select(cols.head, cols.tail: _*).collect().map(_.mkString("|")).toSet
+        }
+        withClue(s"$pred joinType=$jt dist=$dist cond=$cond broadcast=external: ") {
+          go("external") shouldBe want
+        }
+        for (leaves <- Seq(1, 7))
+          withClue(s"$pred joinType=$jt dist=$dist cond=$cond broadcast=none leaves=$leaves: ") {
+            withLeaves(leaves)(go("none")) shouldBe want
+          }
+      }
+    }
+    crossing should be > 0 // withindist pairs across +-180
+  }
 }

@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
-"""A/B of one spatial-join benchmark workload between two checkouts.
+"""A/B of spatial-join benchmark workloads between two checkouts.
 
 Usage:
 
-    python3 tools/perfbench_ab.py --parent DIR --change DIR --workload W --pairs N
+    python3 tools/perfbench_ab.py --parent DIR --change DIR --workload W[,W...] --pairs N
 
-For seeds 1..N, runs `python3 perfbench/run.py --workload W --seed i
---seconds S --trace 0` once in each checkout, switching which side runs
-first on each pair, and reads the last JSON line of each run. S and the
+For seeds 1..N and each workload W, runs `python3 perfbench/run.py
+--workload W --seed i --seconds S --trace 0` once in each checkout,
+switching which side runs first on each pair, and reads the last JSON
+line of each run. Several workloads run interleaved: pair i runs every
+workload's pair i before pair i+1 starts, so drift of the host's speed
+spreads over all of them. One summary block is printed per workload. S and the
 end-to-end metrics are the `run_seconds` and `end_to_end` of the change's
 BENCHMARK.json. Records the host's one-minute load average (load1) just
 before each run. Prints every run with its load1, then per end-to-end
@@ -78,7 +81,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, help="checkout of the change")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True, help="a workload, or a comma list of them")
     ap.add_argument("--pairs", required=True, type=int)
     args = ap.parse_args()
     if args.pairs < 1:
@@ -86,20 +89,32 @@ def main():
 
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     seconds, metrics = benchmark_of(sides["change"])
-    results = {"parent": [], "change": []}
+    workloads = [w.strip() for w in args.workload.split(",") if w.strip()]
+    if not workloads:
+        ap.error("--workload names no workload")
+    results = {w: {"parent": [], "change": []} for w in workloads}
     for seed in range(1, args.pairs + 1):
         order = ("parent", "change") if seed % 2 else ("change", "parent")
-        for side in order:
-            load1 = os.getloadavg()[0]
-            r = run(sides[side], args.workload, seed, seconds)
-            r["load1"] = load1
-            results[side].append(r)
-            print(f"seed {seed} {side:6} load1={load1:.2f} "
-                  f"correct={r['correct']} failed={r['failed']}/{r['attempted']} "
-                  + " ".join(f"{k}={m['value']:.4g}" for k, m in sorted(r["metrics"].items())),
-                  flush=True)
+        for workload in workloads:
+            for side in order:
+                load1 = os.getloadavg()[0]
+                r = run(sides[side], workload, seed, seconds)
+                r["load1"] = load1
+                results[workload][side].append(r)
+                print(f"{workload} seed {seed} {side:6} load1={load1:.2f} "
+                      f"correct={r['correct']} failed={r['failed']}/{r['attempted']} "
+                      + " ".join(f"{k}={m['value']:.4g}" for k, m in sorted(r["metrics"].items())),
+                      flush=True)
+    for workload in workloads:
+        summarize(workload, results[workload], metrics, args.pairs)
+    return 0
 
-    print(f"\n{args.workload}, {args.pairs} pairs: parent q1/median/q3 -> change q1/median/q3, "
+
+def summarize(workload, results, metrics, pairs):
+    """Prints one workload's block: per end-to-end metric both sides'
+    quartiles, the change's wins and verdict, then per side its correct
+    runs, failed operations and load1 range."""
+    print(f"\n{workload}, {pairs} pairs: parent q1/median/q3 -> change q1/median/q3, "
           "change better, median change (bound), verdict")
     for name, better, bound in metrics:
         p = [r["metrics"][name]["value"] for r in results["parent"]]
@@ -108,7 +123,7 @@ def main():
         pq, cq = quartiles(p), quartiles(c)
         moved, marks = verdict(p, c, better, bound)
         print(f"  {name:13} " + "/".join(f"{x:.4g}" for x in pq) + " -> "
-              + "/".join(f"{x:.4g}" for x in cq) + f"  {wins}/{args.pairs}"
+              + "/".join(f"{x:.4g}" for x in cq) + f"  {wins}/{pairs}"
               + f"  {moved:+.1%} ({bound:.0%})  {', '.join(marks)}")
     for side in ("parent", "change"):
         rs = results[side]
@@ -116,7 +131,6 @@ def main():
         print(f"  {side}: {sum(bool(r['correct']) for r in rs)}/{len(rs)} runs correct, "
               f"{sum(r['failed'] for r in rs)} of {sum(r['attempted'] for r in rs)} operations failed, "
               f"load1 {min(loads):.2f}-{max(loads):.2f}")
-    return 0
 
 
 if __name__ == "__main__":
